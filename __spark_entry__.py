@@ -5,6 +5,12 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 ``oracle_sql()[name]`` via DuckDB (row-count + schema + order-insensitive
 value-hash → CORRECTNESS_r{N}.json).
 
+``queries()`` lists every registry query stalest first: by the latest
+round whose ``CORRECTNESS_r{N}.json`` holds a green row for it, with
+never-green queries first and ties in registration order. So the first
+50 entries, the window the driver checks, are always the queries that
+have gone longest without a green row.
+
 The real inventory lives in ``youtube_scraper_db_spark.registry`` — one
 named query per implemented operator from SURVEY.md §2, each exercising
 the engine's operator library.

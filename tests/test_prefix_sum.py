@@ -12,18 +12,23 @@ from youtube_scraper_db_spark.operators.prefix_sum import distributed_cumsum
 
 
 def test_cumsum_matches_sequential(spark):
-    rng = random.Random(17)
-    rows = [(i, rng.randint(-5, 20)) for i in range(500)]
-    rng.shuffle(rows)
-    df = spark.createDataFrame(rows, "k long, v long")
-    got = {
-        r.k: r.cs
-        for r in distributed_cumsum(df, "k", "v", out_col="cs", num_partitions=7).collect()
-    }
-    acc = 0
-    for k, v in sorted(rows):
-        acc += v
-        assert got[k] == acc, f"at k={k}"
+    # 20000 rows are more than the range shuffle's bound sample takes, so
+    # each execution of that shuffle draws its own bounds.
+    for n_rows, n_parts in ((500, 7), (20000, 2)):
+        rng = random.Random(17)
+        rows = [(i, rng.randint(-5, 20)) for i in range(n_rows)]
+        rng.shuffle(rows)
+        df = spark.createDataFrame(rows, "k long, v long")
+        got = {
+            r.k: r.cs
+            for r in distributed_cumsum(
+                df, "k", "v", out_col="cs", num_partitions=n_parts
+            ).collect()
+        }
+        acc = 0
+        for k, v in sorted(rows):
+            acc += v
+            assert got[k] == acc, f"at k={k} ({n_rows} rows)"
 
 
 def test_cumsum_no_single_partition_exchange(spark):

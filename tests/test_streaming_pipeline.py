@@ -80,17 +80,24 @@ def test_stale_work_set(spark, videos):
 def test_fetch_stage_retry_and_failure(spark):
     from pyspark.sql import types as T
 
-    schema = T.StructType([T.StructField("view_count", T.LongType())])
+    # ``title`` is non-nullable, as in ``schemas.VIDEOS``: a failed fetch
+    # still yields its row of NULLs.
+    schema = T.StructType([
+        T.StructField("view_count", T.LongType()),
+        T.StructField("title", T.StringType(), False),
+    ])
 
     def fetcher(vid: str) -> dict:
         if vid == "bad":
             raise RuntimeError("always down")
-        return {"view_count": len(vid)}
+        return {"view_count": len(vid), "title": vid.upper()}
 
     ids = spark.createDataFrame([("ok12345",), ("bad",)], "video_id string")
     rows = {r.video_id: r for r in fetch_stage(ids, fetcher, schema).collect()}
     assert rows["ok12345"].fetch_ok and rows["ok12345"].view_count == 7
+    assert rows["ok12345"].title == "OK12345"
     assert not rows["bad"].fetch_ok and rows["bad"].view_count is None
+    assert rows["bad"].title is None
 
 
 def test_refresh_pipeline_end_to_end(spark, playlists, playlist_videos, videos):

@@ -99,11 +99,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         df.createOrReplaceTempView(name)
 
 
-def write_table(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Persist a table as parquet (snappy)."""
-    df.write.mode(mode).parquet(path)
-
-
 def evolve_schema(old: DataFrame, new: DataFrame) -> DataFrame:
     """Additive schema evolution (S16): union tolerating columns present on
     only one side — the Spark analogue of ``ALTER TABLE ADD COLUMN`` at

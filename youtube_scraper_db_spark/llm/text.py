@@ -267,11 +267,3 @@ def scrub_pii(col: Column | str) -> Column:
     (emails first, so their digit fragments can't half-match as phones)."""
     no_email = F.regexp_replace(_c(col), EMAIL_RE, "[EMAIL]")
     return F.regexp_replace(no_email, PHONE_RE, "[PHONE]")
-
-
-def min_shingle_fingerprint(col: Column | str, k: int = 3) -> Column:
-    """Winnowing-style fingerprint: lexicographic min of per-shingle md5
-    hex digests — one stable representative hash per document; NULL for
-    texts shorter than ``k`` tokens."""
-    sh = shingles(col, k)
-    return F.array_min(F.transform(sh, lambda s: F.md5(s.cast("binary"))))

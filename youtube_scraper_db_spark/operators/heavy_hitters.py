@@ -336,41 +336,3 @@ def mg_sliding_heavy_hitters(
             F.col("n_total").cast("long").alias("n_total"),
         )
     )
-
-
-def mg_sliding_oracle_sql(
-    table: str, ts_col: str, key: str, k: int, width: int, grain: str = "day"
-) -> str:
-    """DuckDB replay: the output is EXACT (candidate superset +
-    recount), so the oracle is the plain per-window GROUP BY + integer
-    threshold — no summary-content replay needed."""
-    return f"""
-    WITH ends AS (
-      -- key-not-null matches the engine: its window ends come from the
-      -- leaf count table (null keys dropped), so a grain bucket whose
-      -- keys are ALL null has no window end on either side
-      SELECT DISTINCT date_trunc('{grain}', {ts_col}) AS wend FROM {table}
-      WHERE {ts_col} IS NOT NULL AND {key} IS NOT NULL
-    ),
-    lk AS (
-      SELECT date_trunc('{grain}', {ts_col}) AS leaf,
-             CAST({key} AS VARCHAR) AS kk, COUNT(*) AS cnt
-      FROM {table} WHERE {key} IS NOT NULL AND {ts_col} IS NOT NULL
-      GROUP BY 1, 2
-    ),
-    wc AS (
-      SELECT ends.wend, lk.kk, SUM(lk.cnt) AS cnt
-      FROM ends JOIN lk
-        ON lk.leaf BETWEEN ends.wend - INTERVAL {width - 1} {grain}
-                       AND ends.wend
-      GROUP BY ends.wend, lk.kk
-    ),
-    tot AS (
-      SELECT wend, SUM(cnt) AS n_total FROM wc GROUP BY wend
-    )
-    SELECT CAST(wc.wend AS TIMESTAMP) AS wend, wc.kk AS {key},
-           CAST(wc.cnt AS BIGINT) AS cnt,
-           CAST(tot.n_total AS BIGINT) AS n_total
-    FROM wc JOIN tot ON tot.wend = wc.wend
-    WHERE wc.cnt * {k} > tot.n_total
-    """

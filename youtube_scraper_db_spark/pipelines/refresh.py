@@ -67,12 +67,16 @@ def fetch_stage(
     ``fetcher(id) -> dict`` runs executor-side with per-id retry and
     exponential backoff; a fetch that still fails yields a row of NULLs
     plus ``fetch_ok = False`` so downstream can count failures (A10)
-    instead of losing rows. The stage is map-only: parallelism = input
-    partitions, no shuffle.
+    instead of losing rows, so every ``result_schema`` field is output as
+    nullable. The stage is map-only: parallelism = input partitions, no
+    shuffle.
     """
     out_schema = T.StructType(
         [T.StructField(id_col, T.StringType(), False)]
-        + [f for f in result_schema.fields]
+        + [
+            T.StructField(f.name, f.dataType, True, f.metadata)
+            for f in result_schema.fields
+        ]
         + [T.StructField("fetch_ok", T.BooleanType(), False)]
     )
     field_names = [f.name for f in result_schema.fields]

@@ -55,9 +55,3 @@ def first_deterministic(col: Column | str) -> Column:
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.min(c)
-
-
-def empty_to_null(col: Column | str) -> Column:
-    """NULLIF(TRIM(col), '') — blank-title fallback helper (ref gui_app.py:44)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.nullif(F.trim(c), F.lit(""))
