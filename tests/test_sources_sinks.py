@@ -154,13 +154,11 @@ def test_transcript_body_edge_cases(spark, tmp_path):
     assert lb.transcript.strip() == "actual body"  # headers not in body
 
 
-def test_jsonl_roundtrip_adversarial_strings(spark):
+def test_jsonl_roundtrip_adversarial_strings(spark, tmp_path):
     """Spark's line-delimited JSON writer must survive content that
     stresses the format: embedded quotes, backslashes, tabs, unicode,
     and the empty string. (Literal newlines are escaped as \\n inside
     the JSON string, so line-delimited framing is safe.)"""
-    import tempfile
-
     rows = [
         (1, 'he said "hi" and left'),
         (2, "back\\slash and tab\there"),
@@ -170,19 +168,17 @@ def test_jsonl_roundtrip_adversarial_strings(spark):
         (6, "{looks: like, json: true}"),
     ]
     df = spark.createDataFrame(rows, "id long, text string")
-    out = tempfile.mkdtemp(prefix="sg_jsonl_t_")
+    out = str(tmp_path / "jsonl")
     df.write.mode("overwrite").json(out)
     back = spark.read.schema("id long, text string").json(out)
     got = {r.id: r.text for r in back.collect()}
     assert got == dict(rows)
 
 
-def test_csv_roundtrip_hostile_content(spark):
+def test_csv_roundtrip_hostile_content(spark, tmp_path):
     """RFC-4180 dialect (quote-doubling, multiLine for embedded
     newlines) must survive commas, quotes, unicode and line breaks —
     the testdata corpus is benign, so the dialect is pinned here."""
-    import tempfile
-
     rows = [
         (1, 'comma, inside "quoted, field"'),
         (2, 'just "quotes" everywhere ""'),
@@ -191,7 +187,7 @@ def test_csv_roundtrip_hostile_content(spark):
         (5, "trailing space "),
     ]
     df = spark.createDataFrame(rows, "id long, text string")
-    out = tempfile.mkdtemp(prefix="sg_csv_t_")
+    out = str(tmp_path / "csv")
     dialect = dict(
         header=True,
         quote='"',
@@ -209,13 +205,12 @@ def test_csv_roundtrip_hostile_content(spark):
     assert got == dict(rows)
 
 
-def test_orc_roundtrip_types(spark):
+def test_orc_roundtrip_types(spark, tmp_path):
     import datetime as dt
-    import tempfile
 
     rows = [(1, "a", 1.5, dt.date(2024, 1, 2)), (2, None, None, None)]
     df = spark.createDataFrame(rows, "id long, s string, x double, d date")
-    out = tempfile.mkdtemp(prefix="sg_orc_t_")
+    out = str(tmp_path / "orc")
     df.write.mode("overwrite").orc(out)
     back = spark.read.schema("id long, s string, x double, d date").orc(out)
     assert sorted(map(tuple, back.collect())) == sorted(rows)

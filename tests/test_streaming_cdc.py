@@ -34,3 +34,28 @@ def test_cdc_stream_converges_to_batch_merge(spark, tmp_path):
     # the loop really advanced version-by-version (3 files → 3+ commits)
     versions = [d for d in os.listdir(table_root) if d.startswith("v")]
     assert len(versions) >= 4  # v0 seed + one per non-empty batch
+
+
+def test_restart_resumes_from_committed_version(spark, tmp_path):
+    base = spark.createDataFrame([(1, "a0")], "k long, v string")
+    staged = str(tmp_path / "staged")
+    table_root, ckpt = str(tmp_path / "tbl"), str(tmp_path / "ckpt")
+
+    def stream():
+        return (
+            spark.readStream.schema("k long, v string")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(staged + "/*/")
+        )
+
+    spark.createDataFrame([(1, "a1")], "k long, v string").coalesce(
+        1
+    ).write.parquet(os.path.join(staged, "b_0.parquet"))
+    run_upsert_stream(stream(), base, ["k"], table_root, ckpt)
+    # restart: the checkpoint skips the first batch, so re-seeding the
+    # table from ``base`` would lose its update
+    spark.createDataFrame([(2, "b1")], "k long, v string").coalesce(
+        1
+    ).write.parquet(os.path.join(staged, "b_1.parquet"))
+    final = run_upsert_stream(stream(), base, ["k"], table_root, ckpt)
+    assert sorted(map(tuple, final.collect())) == [(1, "a1"), (2, "b1")]

@@ -25,7 +25,6 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -35,6 +34,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from youtube_scraper_db_spark.io import read_table  # noqa: E402
 from youtube_scraper_db_spark.registry import REGISTRY  # noqa: E402
 from youtube_scraper_db_spark.session import get_spark  # noqa: E402
+from youtube_scraper_db_spark.streaming.drain import scratch_dir  # noqa: E402
 
 EVENT_QUERIES = [
     "event_daily_rollup",
@@ -347,7 +347,7 @@ SKEW_QUERIES = [
 
 
 def build_scaled(spark, sf_dir: str, factor: int) -> str:
-    out = tempfile.mkdtemp(prefix=f"sg_scale_x{factor}_")
+    out = scratch_dir(f"sg_scale_x{factor}_")
     ev = read_table(spark, sf_dir, "events")
     ev_max_id = ev.agg(F.max("event_id")).first()[0] + 1
     ev_max_user = ev.agg(F.max("user_id")).first()[0] + 1
@@ -468,8 +468,8 @@ def build_skew_pair(spark, sf_dir: str, factor: int) -> tuple[str, str]:
     by a deterministic hash — reassigned to ONE hot key). Volume and
     schema are identical; only the key distribution differs, so
     time(skewed)/time(uniform) isolates the skew handling itself."""
-    uni = tempfile.mkdtemp(prefix=f"sg_skewU_x{factor}_")
-    skw = tempfile.mkdtemp(prefix=f"sg_skewS_x{factor}_")
+    uni = scratch_dir(f"sg_skewU_x{factor}_")
+    skw = scratch_dir(f"sg_skewS_x{factor}_")
 
     def mx(df, col):
         return df.agg(F.max(col)).first()[0] + 1

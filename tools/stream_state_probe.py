@@ -36,7 +36,6 @@ import datetime as dt
 import os
 import shutil
 import sys
-import tempfile
 import time
 import uuid
 
@@ -47,6 +46,7 @@ from pyspark.sql import DataFrame, functions as F  # noqa: E402
 from youtube_scraper_db_spark.io import read_table, read_table_stream  # noqa: E402
 from youtube_scraper_db_spark.session import get_spark  # noqa: E402
 from youtube_scraper_db_spark.streaming.dedup import dedup_stream  # noqa: E402
+from youtube_scraper_db_spark.streaming.drain import scratch_dir  # noqa: E402
 from youtube_scraper_db_spark.streaming.joins import correlate_streams  # noqa: E402
 from youtube_scraper_db_spark.streaming.sessions import sessionize_stream  # noqa: E402
 
@@ -60,7 +60,7 @@ ROCKS = "spark.sql.streaming.stateStore.rocksdb."
 def build_scaled_events(spark, sf_dir: str, factor: int) -> str:
     """events replicated ×factor with offset user/event ids — key
     cardinality grows with volume, per-key event density constant."""
-    out = tempfile.mkdtemp(prefix=f"sg_stream_x{factor}_")
+    out = scratch_dir(f"sg_stream_x{factor}_")
     ev = read_table(spark, sf_dir, "events")
     max_id = ev.agg(F.max("event_id")).first()[0] + 1
     max_user = ev.agg(F.max("user_id")).first()[0] + 1
@@ -111,7 +111,7 @@ def run_stateful(
     and return (wall_s, peak_state_rows, peak_state_mem_bytes,
     out_rows)."""
     saved = _probe_confs(spark, partitions)
-    ckpt = tempfile.mkdtemp(prefix=f"sg_ckpt_{name}_")
+    ckpt = scratch_dir(f"sg_ckpt_{name}_")
     sink = f"probe_{name}_{uuid.uuid4().hex[:8]}"
     t0 = time.time()
     q = (

@@ -65,6 +65,7 @@ from .sources.transcript_files import read_transcript_files
 from .streaming.dedup import dedup_stream
 from .streaming.enrich import enrich_stream
 from .streaming.inbox import read_inbox_stream
+from .streaming.drain import drain, scratch_dir, staged_stream
 from .streaming.joins import correlate_streams
 from .functions.scalars import (
     context_snippet,
@@ -4073,10 +4074,9 @@ def _run_stream(
     PLANNED concurrently on the same session would observe the narrowed
     shuffle width. The memory-sink output is materialized (persist +
     count), then the sink's temp view is dropped and the checkpoint dir
-    removed, so repeated calls (bench runs every gate twice) do not
-    accumulate driver tables or /tmp state."""
+    (a ``scratch_dir``) removed, so repeated calls (bench runs every gate
+    twice) do not accumulate driver tables or checkpoint state."""
     import shutil
-    import tempfile
     import uuid
 
     from pyspark import StorageLevel
@@ -4123,7 +4123,7 @@ def _run_stream(
     old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     old_provider = spark.conf.get(provider_key, None)
     old_rocks = {k: spark.conf.get(k, None) for k in rocks_opts}
-    ckpt = tempfile.mkdtemp(prefix="sg_ckpt_")
+    ckpt = scratch_dir("sg_ckpt_")
     qname = f"mem_{uuid.uuid4().hex[:10]}"
     if state_partitions:
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
@@ -4339,11 +4339,9 @@ def partitioned_orders_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     DIRECTORY level (PartitionFilters, zero data files of other statuses
     opened), and the surviving rows hash-match the unpartitioned
     filter."""
-    import tempfile
-
     ensure_utc(spark)
     o = _t(spark, sf_dir, "orders")
-    path = tempfile.mkdtemp(prefix="sg_part_")
+    path = scratch_dir("sg_part_")
     write_partitioned(
         o.select("o_orderkey", "o_custkey", "o_totalprice", "o_orderstatus"),
         path,
@@ -4369,11 +4367,9 @@ def compacted_docs_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     incremental upserts / stream sinks), compact to scan-sized files via
     the versioned-commit path, read the new version back. Content must be
     byte-identical to the source — compaction is layout-only."""
-    import tempfile
-
     ensure_utc(spark)
     d = _t(spark, sf_dir, "documents").select("doc_id", "lang", "source", "n_chars")
-    ar = Archive(spark, tempfile.mkdtemp(prefix="sg_arch_"))
+    ar = Archive(spark, scratch_dir("sg_arch_"))
     ar.commit("documents", d.repartition(16))
     ar.compact("documents", target_file_bytes=64 * 1024 * 1024)
     return ar.table("documents")
@@ -4551,7 +4547,6 @@ def _write_transcript_inbox(spark: SparkSession, sf_dir: str) -> str:
     follows. Verified: no testdata document contains header-like lines,
     carriage returns, or empty text at any scale factor."""
     import os
-    import tempfile
 
     rows = (
         _t(spark, sf_dir, "documents")
@@ -4559,7 +4554,7 @@ def _write_transcript_inbox(spark: SparkSession, sf_dir: str) -> str:
         .select("doc_id", "text")
         .collect()
     )
-    inbox = tempfile.mkdtemp(prefix="sg_inbox_")
+    inbox = scratch_dir("sg_inbox_")
     exts = ("txt", "srt", "vtt")
     for r in rows:
         fname = f"doc{r.doc_id}.{exts[r.doc_id % 3]}"
@@ -4656,7 +4651,6 @@ def playlists_json_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     parsed output hash-matches the originating nation rows."""
     import json
     import os
-    import tempfile
 
     ensure_utc(spark)
     rows = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name").collect()
@@ -4667,7 +4661,7 @@ def playlists_json_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFra
     ]
     records.append({"id": "", "title": "dropped: blank id"})
     records.append({"playlist_id": "PLnotitle"})
-    path = os.path.join(tempfile.mkdtemp(prefix="sg_pl_"), "playlists.json")
+    path = os.path.join(scratch_dir("sg_pl_"), "playlists.json")
     with open(path, "w") as f:
         json.dump(records, f)
     return read_playlists_json(spark, path).select("playlist_id", "title", "url")
@@ -5218,12 +5212,10 @@ def jsonl_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions — always pass the schema on the read side). Content must
     survive byte-exact, including unicode and whitespace inside
     ``text``."""
-    import tempfile
-
     ensure_utc(spark)
     cols = ["doc_id", "text", "lang", "source"]
     d = _t(spark, sf_dir, "documents").select(*cols)
-    out = tempfile.mkdtemp(prefix="sg_jsonl_")
+    out = scratch_dir("sg_jsonl_")
     d.write.mode("overwrite").json(out)
     return spark.read.schema(
         "doc_id long, text string, lang string, source string"
@@ -5468,8 +5460,6 @@ def csv_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     default to trimming unquoted field edges, which silently corrupts
     text payloads with leading/trailing spaces (pinned hostile in
     tests/test_sources_sinks.py)."""
-    import tempfile
-
     ensure_utc(spark)
     dialect = dict(
         header=True,
@@ -5480,7 +5470,7 @@ def csv_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cols = ["doc_id", "text", "lang", "source"]
     d = _t(spark, sf_dir, "documents").select(*cols)
-    out = tempfile.mkdtemp(prefix="sg_csv_")
+    out = scratch_dir("sg_csv_")
     d.write.mode("overwrite").options(**dialect).csv(out)
     # NOTE: multiLine stays OFF — a multiLine CSV read is not splittable
     # (whole file per task), the scale-killer variant. Newline-free text
@@ -5509,12 +5499,10 @@ def orc_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly. At 100 TB the operational difference from the text formats
     is that ORC stripes carry min/max indexes — a filter on the read
     side prunes stripes, the same story as parquet row groups."""
-    import tempfile
-
     ensure_utc(spark)
     cols = ["doc_id", "text", "lang", "source", "n_chars"]
     d = _t(spark, sf_dir, "documents").select(*cols)
-    out = tempfile.mkdtemp(prefix="sg_orc_")
+    out = scratch_dir("sg_orc_")
     d.write.mode("overwrite").orc(out)
     return (
         spark.read.schema(
@@ -5607,7 +5595,6 @@ def stream_sessionized_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(active users), not O(events) — the scale contract for
     applyInPandasWithState."""
     import datetime as dt
-    import tempfile
 
     from .streaming.sessions import sessionize_stream
 
@@ -5622,7 +5609,7 @@ def stream_sessionized_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentinels = (
         ev.select("user_id").distinct().withColumn("ts", F.lit(sentinel_ts))
     )
-    staged = tempfile.mkdtemp(prefix="sg_sess_")
+    staged = scratch_dir("sg_sess_")
     ev.unionByName(sentinels).write.mode("overwrite").parquet(staged)
     stream = spark.readStream.schema("user_id long, ts timestamp").parquet(staged)
     sessions = sessionize_stream(
@@ -5869,28 +5856,16 @@ def stream_cdc_upsert_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the streaming/batch agreement contract for keyed mutation. The
     update feed is one-row-per-key (merge batches commute), so the
     equality holds for ANY micro-batch layout."""
-    import tempfile
-
     from .streaming.cdc import run_upsert_stream
 
     ensure_utc(spark)
     cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"]
     old, new = _orders_split(spark, sf_dir)
-    staged = tempfile.mkdtemp(prefix="sg_cdc_src_")
-    new.select(*cols).repartition(4).write.mode("overwrite").parquet(staged)
-    updates = (
-        spark.readStream.schema(
-            "o_orderkey long, o_custkey long, o_orderstatus string, "
-            "o_orderpriority string"
+    table_root = scratch_dir("sg_cdc_tbl_")
+    with staged_stream(new.select(*cols), 4) as (updates, ckpt):
+        final = run_upsert_stream(
+            updates, old.select(*cols), ["o_orderkey"], table_root, ckpt
         )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-    table_root = tempfile.mkdtemp(prefix="sg_cdc_tbl_")
-    ckpt = tempfile.mkdtemp(prefix="sg_cdc_ckpt_")
-    final = run_upsert_stream(
-        updates, old.select(*cols), ["o_orderkey"], table_root, ckpt
-    )
     return final.select(*cols)
 
 
@@ -6082,12 +6057,10 @@ def jsonl_gzip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelism (number of part files) fixes read-side parallelism.
     Land .jsonl.gz into parquet+snappy/zstd (splittable, columnar) as
     step one of any 100 TB ingest."""
-    import tempfile
-
     ensure_utc(spark)
     cols = ["doc_id", "text", "lang"]
     d = _t(spark, sf_dir, "documents").select(*cols)
-    out = tempfile.mkdtemp(prefix="sg_jgz_")
+    out = scratch_dir("sg_jgz_")
     d.write.mode("overwrite").option("compression", "gzip").json(out)
     return (
         spark.read.schema("doc_id long, text string, lang string")
@@ -6225,7 +6198,6 @@ def stream_window_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     sink does not support checkpoint recovery)."""
     import datetime as dt
     import os
-    import tempfile
 
     ensure_utc(spark)
     T0 = dt.datetime(2024, 1, 1, 10, 0, 0)
@@ -6233,15 +6205,15 @@ def stream_window_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     def at(minutes: int) -> dt.datetime:
         return T0 + dt.timedelta(minutes=minutes)
 
-    staged = tempfile.mkdtemp(prefix="sg_late_")
-    ckpt = tempfile.mkdtemp(prefix="sg_late_ck_")
+    staged = scratch_dir("sg_late_")
+    ckpt = scratch_dir("sg_late_ck_")
     spark.createDataFrame(
         [("A", at(10)), ("A", at(20)), ("W", at(120))], "k string, ts timestamp"
     ).coalesce(1).write.parquet(os.path.join(staged, "b1"))
 
     emitted: list[tuple] = []
 
-    def drain() -> None:
+    def run_once() -> None:
         stream = spark.readStream.schema("k string, ts timestamp").parquet(
             staged + "/*"
         )
@@ -6251,23 +6223,19 @@ def stream_window_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count("*").alias("n"))
             .select(F.col("win.start").alias("win_start"), "n")
         )
-        q = (
-            counts.writeStream.foreachBatch(
-                lambda df, _bid: emitted.extend(
-                    (r.win_start, r.n) for r in df.collect()
-                )
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        drain(
+            counts,
+            lambda df, _bid: emitted.extend(
+                (r.win_start, r.n) for r in df.collect()
+            ),
+            ckpt,
         )
-        q.awaitTermination()
 
-    drain()
+    run_once()
     spark.createDataFrame(
         [("A", at(40)), ("B", at(5))], "k string, ts timestamp"
     ).coalesce(1).write.parquet(os.path.join(staged, "b2"))
-    drain()
+    run_once()
     return spark.createDataFrame(emitted, "win_start timestamp, n long")
 
 
@@ -6418,7 +6386,6 @@ def stream_outer_correlated_pairs(spark: SparkSession, sf_dir: str) -> DataFrame
     from the output. Same O(rate × window) state bound as the inner
     gate."""
     import datetime as dt
-    import tempfile
 
     ensure_utc(spark)
     ev = _t(spark, sf_dir, "events").select(
@@ -6428,7 +6395,7 @@ def stream_outer_correlated_pairs(spark: SparkSession, sf_dir: str) -> DataFrame
     far = max_ts + dt.timedelta(days=30)
 
     def staged(event_type: str, anchor_user: int, prefix: str) -> str:
-        d = tempfile.mkdtemp(prefix=prefix)
+        d = scratch_dir(prefix)
         anchor = spark.createDataFrame(
             [(-1, anchor_user, far)],
             "event_id long, user_id long, ts timestamp",
@@ -6487,7 +6454,6 @@ def stream_full_outer_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     null-extend, so both eviction paths carry real weight in the
     hash."""
     import datetime as dt
-    import tempfile
 
     ensure_utc(spark)
     ev = _t(spark, sf_dir, "events").select(
@@ -6497,7 +6463,7 @@ def stream_full_outer_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     far = max_ts + dt.timedelta(days=30)
 
     def staged(event_type: str, anchor_user: int) -> str:
-        d = tempfile.mkdtemp(prefix=f"sg_fo_{event_type}_")
+        d = scratch_dir(f"sg_fo_{event_type}_")
         anchor = spark.createDataFrame(
             [(-1, anchor_user, far)],
             "event_id long, user_id long, ts timestamp",
@@ -6701,8 +6667,6 @@ def custom_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-class relation. Hash-matched against the documents rows the
     files were rendered from; video_id recovered from the synthesized
     URL, so filename sanitization stays out of the comparison."""
-    import tempfile
-
     from .sinks.render_text import write_transcript_files
     from .sources.transcript_datasource import register
 
@@ -6717,7 +6681,7 @@ def custom_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("text").alias("transcript"),
         )
     )
-    out = tempfile.mkdtemp(prefix="sg_dsrc_")
+    out = scratch_dir("sg_dsrc_")
     write_transcript_files(d, out)
     register(spark)
     back = spark.read.format("transcript_text").load(out)
@@ -7825,12 +7789,10 @@ def xml_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     sparse elements. The interchange-format family is now parquet /
     JSON / JSONL(+gzip) / CSV / ORC / XML / custom-datasource —
     every hand-off format a scraped-corpus consumer asks for."""
-    import tempfile
-
     ensure_utc(spark)
     cols = ["doc_id", "text", "lang", "source"]
     d = _t(spark, sf_dir, "documents").select(*cols)
-    out = tempfile.mkdtemp(prefix="sg_xml_")
+    out = scratch_dir("sg_xml_")
     d.write.mode("overwrite").format("xml").option("rootTag", "docs").option(
         "rowTag", "doc"
     ).save(out)
@@ -8517,8 +8479,6 @@ def custom_source_stream_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     all 100 — exactly-once file accounting across restarts, the
     contract a production inbox needs. Emitted rows are captured via
     foreachBatch (memory sink doesn't recover checkpoints)."""
-    import tempfile
-
     from .sinks.render_text import write_transcript_files
     from .sources.transcript_datasource import register
 
@@ -8535,32 +8495,27 @@ def custom_source_stream_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("text").alias("transcript"),
         )
     )
-    out = tempfile.mkdtemp(prefix="sg_dsrc_stream_")
-    ckpt = tempfile.mkdtemp(prefix="sg_dsrc_ck_")
+    out = scratch_dir("sg_dsrc_stream_")
+    ckpt = scratch_dir("sg_dsrc_ck_")
     emitted: list[tuple] = []
 
-    def drain() -> None:
-        stream = spark.readStream.format("transcript_text").load(out)
-        q = (
-            stream.writeStream.foreachBatch(
-                lambda df, _bid: emitted.extend(
-                    (r.url, r.title, r.body) for r in df.collect()
-                )
-            )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+    def run_once() -> None:
+        drain(
+            spark.readStream.format("transcript_text").load(out),
+            lambda df, _bid: emitted.extend(
+                (r.url, r.title, r.body) for r in df.collect()
+            ),
+            ckpt,
         )
-        q.awaitTermination()
 
     write_transcript_files(
         docs.filter(F.col("doc_id") < 50).drop("doc_id"), out
     )
-    drain()
+    run_once()
     write_transcript_files(
         docs.filter(F.col("doc_id") >= 50).drop("doc_id"), out
     )
-    drain()
+    run_once()
     back = spark.createDataFrame(
         emitted, "url string, title string, body string"
     )
@@ -8596,11 +8551,10 @@ def stream_update_mode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     low-cardinality keys (the docstring contract) and windowed+
     watermarked aggregation is the unbounded-key path."""
     import os
-    import tempfile
 
     ensure_utc(spark)
     ev = _t(spark, sf_dir, "events").select("event_id", "event_type")
-    staged = tempfile.mkdtemp(prefix="sg_upd_")
+    staged = scratch_dir("sg_upd_")
     for i in range(4):
         ev.filter(F.pmod(F.col("event_id"), F.lit(4)) == i).coalesce(
             1
@@ -8609,7 +8563,7 @@ def stream_update_mode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "maxFilesPerTrigger", "1"
     ).parquet(staged + "/*")
     counts = stream.groupBy("event_type").agg(F.count("*").alias("n"))
-    ckpt = tempfile.mkdtemp(prefix="sg_upd_ck_")
+    ckpt = scratch_dir("sg_upd_ck_")
     latest: dict[str, tuple[int, int]] = {}
 
     def absorb(df, bid: int) -> None:
@@ -10056,8 +10010,6 @@ def bpe_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-stability of the persisted model, not just row counts. Ref:
     parity N/A (§2.12); persistence protocol cites ref
     add_transcripts.py:199-204 via archive.py."""
-    import tempfile
-
     ensure_utc(spark)
     from .archive import Archive
     from .llm import bpe as llm_bpe
@@ -10068,7 +10020,7 @@ def bpe_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(i + 1, l, r, int(c)) for i, (l, r, c) in enumerate(merges)],
         "merge_rank int, lhs string, rhs string, pair_count long",
     )
-    ar = Archive(spark, tempfile.mkdtemp(prefix="sg_tokart_bpe_"))
+    ar = Archive(spark, scratch_dir("sg_tokart_bpe_"))
     version = ar.save_table("bpe_model", art)
     loaded = ar.table("bpe_model")
     loaded_merges = [
@@ -10109,8 +10061,6 @@ def unigram_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes count-persistence sufficient), then both models Viterbi-
     tokenize the held-out slice and must agree document-for-document.
     Same checksum/versioning contract as ``bpe_artifact_roundtrip``."""
-    import tempfile
-
     ensure_utc(spark)
     from .archive import Archive
     from .llm import unigram as llm_unigram
@@ -10123,7 +10073,7 @@ def unigram_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(r["piece"], int(r["piece_count"])) for r in trained_rows],
         "piece string, piece_count long",
     )
-    ar = Archive(spark, tempfile.mkdtemp(prefix="sg_tokart_uni_"))
+    ar = Archive(spark, scratch_dir("sg_tokart_uni_"))
     version = ar.save_table("unigram_model", art)
     loaded = ar.table("unigram_model")
     cnts_t = {r["piece"]: int(r["piece_count"]) for r in trained_rows}
@@ -10203,8 +10153,6 @@ def wordpiece_artifact_roundtrip(
     in-session one. The oracle rebuilds the identical vocabulary from
     its train replay plus an alphabet CTE over the same word split, and
     hash-checks the piece checksum."""
-    import tempfile
-
     ensure_utc(spark)
     from .archive import Archive
     from .llm.bpe import word_vocab
@@ -10226,7 +10174,7 @@ def wordpiece_artifact_roundtrip(
     art = spark.createDataFrame(
         sorted((p,) for p in vocab_trained), "piece string"
     )
-    ar = Archive(spark, tempfile.mkdtemp(prefix="sg_tokart_wp_"))
+    ar = Archive(spark, scratch_dir("sg_tokart_wp_"))
     version = ar.save_table("wordpiece_model", art)
     loaded = ar.table("wordpiece_model")
     vocab_loaded = {r["piece"] for r in loaded.collect()}
@@ -10376,8 +10324,6 @@ def bigram_model_artifact_roundtrip(
     training aggregates — the model that scores next month's corpus is
     byte-stable, not just row-count-stable. Ref: parity N/A (§2.12);
     persistence protocol via archive.py save_table."""
-    import tempfile
-
     ensure_utc(spark)
     from .archive import Archive
 
@@ -10397,7 +10343,7 @@ def bigram_model_artifact_roundtrip(
     )
     uni = uni.localCheckpoint(eager=True)
     big = big.localCheckpoint(eager=True)
-    ar = Archive(spark, tempfile.mkdtemp(prefix="sg_lmart_bigram_"))
+    ar = Archive(spark, scratch_dir("sg_lmart_bigram_"))
     v_uni = ar.save_table("bigram_uni", uni)
     v_big = ar.save_table("bigram_big", big)
     uni_l, big_l = ar.table("bigram_uni"), ar.table("bigram_big")
@@ -11423,8 +11369,6 @@ def ivf_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     that gate this closes the daily-growth loop: reload last month's
     index, fold today's batch, search. Ref: parity N/A (§2.12);
     persistence via archive.py save_table."""
-    import tempfile
-
     ensure_utc(spark)
     from .archive import Archive
     from .functions.portable_hash import md5_halves
@@ -11438,7 +11382,7 @@ def ivf_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         llm_similarity.as_double("embedding").alias("cv"),
     )
     idx = llm_similarity.ivf_index(e, cdf)
-    ar = Archive(spark, tempfile.mkdtemp(prefix="sg_ivfart_"))
+    ar = Archive(spark, scratch_dir("sg_ivfart_"))
     v_c = ar.save_table("ivf_centroids", cdf)
     v_l = ar.save_table("ivf_lists", idx)
     cdf_l = ar.table("ivf_centroids")
@@ -11515,8 +11459,6 @@ def pq_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``recall_ok`` keeps the pq_ann_recall ≥8/10 contract. PQ's numpy
     internals aren't SQL-expressible, so the oracle pins the reduced
     scalars, like ``incremental_pq_equiv``."""
-    import tempfile
-
     ensure_utc(spark)
     from .archive import Archive
 
@@ -11526,7 +11468,7 @@ def pq_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     books = llm_similarity.pq_train_codebooks(e, k=32)
     codes = llm_similarity.pq_encode(e, books).localCheckpoint()
-    ar = Archive(spark, tempfile.mkdtemp(prefix="sg_pqart_"))
+    ar = Archive(spark, scratch_dir("sg_pqart_"))
     v_b = ar.save_table(
         "pq_books", llm_similarity.pq_books_table(spark, books)
     )
@@ -11740,8 +11682,6 @@ def trigram_model_artifact_roundtrip(
     null-safe over a full outer join, mismatches = 0. All three
     artifact checksums hash-check against the oracle's replay of the
     training aggregates. Ref: parity N/A (§2.12)."""
-    import tempfile
-
     ensure_utc(spark)
     from .archive import Archive
     from .functions.portable_hash import md5_halves
@@ -11759,7 +11699,7 @@ def trigram_model_artifact_roundtrip(
     uni = uni.localCheckpoint(eager=True)
     big = big.localCheckpoint(eager=True)
     tri = tri.localCheckpoint(eager=True)
-    ar = Archive(spark, tempfile.mkdtemp(prefix="sg_lmart_trigram_"))
+    ar = Archive(spark, scratch_dir("sg_lmart_trigram_"))
     v1 = ar.save_table("trigram_uni", uni)
     v2 = ar.save_table("trigram_big", big)
     v3 = ar.save_table("trigram_tri", tri)
@@ -11971,8 +11911,6 @@ def hll_artifact_fold_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact union rides along. This is the daily-rollup loop a 100 TB
     metrics store actually runs: load last month's 2^9-row sketch,
     fold today, save back — never a re-scan."""
-    import tempfile
-
     ensure_utc(spark)
     from .archive import Archive
     from .functions.portable_hash import md5_halves
@@ -11981,7 +11919,7 @@ def hll_artifact_fold_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_regs = op_sketches.hll_registers(
         ev.filter(F.col("event_id") % 2 == 0), "user_id", 9
     )
-    ar = Archive(spark, tempfile.mkdtemp(prefix="sg_skart_hll_"))
+    ar = Archive(spark, scratch_dir("sg_skart_hll_"))
     v = ar.save_table("hll_user_regs", base_regs)
     regs_l = ar.table("hll_user_regs")
     folded = op_sketches.hll_merge(
@@ -12041,8 +11979,6 @@ def cms_artifact_fold_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     full input directly (integer sum is associative). The saved table's
     canonical checksum replays in the oracle; the CMS overestimate
     guarantee rides along over the folded counters."""
-    import tempfile
-
     ensure_utc(spark)
     from .archive import Archive
     from .functions.portable_hash import md5_halves
@@ -12051,7 +11987,7 @@ def cms_artifact_fold_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_cnt = op_sketches.cms_counters(
         ev.filter(F.col("event_id") % 2 == 0), "user_id"
     )
-    ar = Archive(spark, tempfile.mkdtemp(prefix="sg_skart_cms_"))
+    ar = Archive(spark, scratch_dir("sg_skart_cms_"))
     v = ar.save_table("cms_user_counters", base_cnt)
     cnt_l = ar.table("cms_user_counters")
     # both counter tables are 16k cells and feed two consumers each
@@ -12154,8 +12090,6 @@ def bloom_artifact_fold_roundtrip(
     associative: ``merge_consistent`` exact). The probe report — the
     sketch's whole error surface, false positives included — and the
     saved table's canonical checksum all replay in the oracle."""
-    import tempfile
-
     ensure_utc(spark)
     from .archive import Archive
     from .functions.portable_hash import md5_halves
@@ -12165,7 +12099,7 @@ def bloom_artifact_fold_roundtrip(
     bits_a = op_sketches.bloom_bits(
         orders.filter(F.col("o_orderkey") % 2 == 0), "o_custkey"
     )
-    ar = Archive(spark, tempfile.mkdtemp(prefix="sg_skart_bloom_"))
+    ar = Archive(spark, scratch_dir("sg_skart_bloom_"))
     v = ar.save_table("bloom_cust_bits", bits_a)
     bits_l = ar.table("bloom_cust_bits")
     folded = op_sketches.bloom_merge(
@@ -12237,8 +12171,6 @@ def histogram_artifact_frozen_fold(
     oracle. This closes the sketch family's artifact story: the
     range-dependence that kept the histogram out of the plain fold trio
     is exactly what freezing the edges resolves."""
-    import tempfile
-
     ensure_utc(spark)
     from .archive import Archive
     from .functions.portable_hash import md5_halves
@@ -12262,7 +12194,7 @@ def histogram_artifact_frozen_fold(
         .groupBy("bin")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    ar = Archive(spark, tempfile.mkdtemp(prefix="sg_skart_hist_"))
+    ar = Archive(spark, scratch_dir("sg_skart_hist_"))
     v1 = ar.save_table("hist_edges", edges)
     v2 = ar.save_table("hist_bins", bins_base)
     edges_l = ar.table("hist_edges")
@@ -12359,8 +12291,6 @@ def heavy_hitter_artifact_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact recount over the full corpus decides, and the gate shares the
     batch oracle verbatim — the forever-running pipeline shape: load
     the summary, fold the day, recount on demand, save back."""
-    import tempfile
-
     ensure_utc(spark)
     from .archive import Archive
     from .operators.heavy_hitters import (
@@ -12378,7 +12308,7 @@ def heavy_hitter_artifact_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     s_base = mg_combine_summaries(
         mg_partition_summaries(base, "w", 32), "w", 32
     )
-    ar = Archive(spark, tempfile.mkdtemp(prefix="sg_skart_mg_"))
+    ar = Archive(spark, scratch_dir("sg_skart_mg_"))
     ar.save_table("mg_word_summary", s_base)
     s_loaded = ar.table("mg_word_summary")
     s_batch = mg_combine_summaries(
@@ -12592,8 +12522,6 @@ def minhash_index_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
     At 100 TB the index IS the product: signatures are computed once
     per doc ever, and dedup queries run against the stored band table,
     never a re-shingled corpus."""
-    import tempfile
-
     from .archive import Archive
 
     ensure_utc(spark)
@@ -12604,7 +12532,7 @@ def minhash_index_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
     bands = llm_dedup.minhash_band_table(
         sig, 32, 16, portable=True
     ).localCheckpoint(eager=True)
-    ar = Archive(spark, tempfile.mkdtemp(prefix="sg_mhart_"))
+    ar = Archive(spark, scratch_dir("sg_mhart_"))
     v_s = ar.save_table("mh_sigs", sig)
     v_b = ar.save_table("mh_bands", bands)
     sig_l = ar.table("mh_sigs")
@@ -12673,8 +12601,6 @@ def incremental_minhash_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     sym-diff against the rebuilt index riding along
     (``fold_consistent``) — the ``incremental_ivf_equiv`` device for
     the near-dup family."""
-    import tempfile
-
     from .archive import Archive
 
     ensure_utc(spark)
@@ -12685,7 +12611,7 @@ def incremental_minhash_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         base, "doc_id", "text", 32, 3, portable=True
     ).localCheckpoint(eager=True)
     bands_base = llm_dedup.minhash_band_table(sig_base, 32, 16, portable=True)
-    ar = Archive(spark, tempfile.mkdtemp(prefix="sg_mhfold_"))
+    ar = Archive(spark, scratch_dir("sg_mhfold_"))
     ar.save_table("mh_sigs", sig_base)
     ar.save_table("mh_bands", bands_base)
     # the frozen hash-family parameters the daily fold must reuse —
@@ -12753,8 +12679,6 @@ def stream_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the dedup-graph ingest loop: pair batches arrive
     continuously and the label store stays current without ever
     recomputing history."""
-    import tempfile
-
     from .streaming.cc import run_cc_stream
 
     ensure_utc(spark)
@@ -12762,18 +12686,11 @@ def stream_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = llm_dedup.jaccard_pairs(
         d, "doc_id", "text", k=3, threshold=0.4
     ).select("doc_a", "doc_b").localCheckpoint(eager=True)
-    staged = tempfile.mkdtemp(prefix="sg_ccs_src_")
-    pairs.repartition(4).write.mode("overwrite").parquet(staged)
-    updates = (
-        spark.readStream.schema("doc_a long, doc_b long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-    table_root = tempfile.mkdtemp(prefix="sg_ccs_tbl_")
-    ckpt = tempfile.mkdtemp(prefix="sg_ccs_ckpt_")
-    drained = run_cc_stream(
-        updates, "doc_a", "doc_b", table_root, ckpt
-    ).localCheckpoint(eager=True)
+    table_root = scratch_dir("sg_ccs_tbl_")
+    with staged_stream(pairs, 4) as (updates, ckpt):
+        drained = run_cc_stream(
+            updates, "doc_a", "doc_b", table_root, ckpt
+        ).localCheckpoint(eager=True)
     full = llm_cluster.connected_components(pairs, "doc_a", "doc_b")
     diff = (
         _msdiff_rows(drained, full)
@@ -12867,26 +12784,17 @@ def stream_lsh_ingest_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is THE corpus ingest loop: per-batch cost is one
     keyed join against the band store, and history is never
     re-shingled."""
-    import tempfile
-
     from .streaming.dedup import run_lsh_ingest_stream
 
     ensure_utc(spark)
     corpus = _cloned_docs(spark, sf_dir).select(
         F.col("doc_id").alias("doc"), "text"
     )
-    staged = tempfile.mkdtemp(prefix="sg_lshing_src_")
-    corpus.repartition(4).write.mode("overwrite").parquet(staged)
-    updates = (
-        spark.readStream.schema("doc long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-    index_root = tempfile.mkdtemp(prefix="sg_lshing_idx_")
-    ckpt = tempfile.mkdtemp(prefix="sg_lshing_ckpt_")
-    pairs, _sigs, _bands = run_lsh_ingest_stream(
-        updates, index_root, ckpt, 32, 16, 3, portable=True
-    )
+    index_root = scratch_dir("sg_lshing_idx_")
+    with staged_stream(corpus, 4) as (updates, ckpt):
+        pairs, _sigs, _bands = run_lsh_ingest_stream(
+            updates, index_root, ckpt, 32, 16, 3, portable=True
+        )
     pairs = pairs.localCheckpoint(eager=True)
     batch_pairs = llm_dedup.minhash_lsh_pairs(
         corpus, "doc", "text", num_hashes=32, bands=16, portable=True
@@ -13158,8 +13066,6 @@ def kmv_artifact_fold_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     today's batch without rescanning history. Saved-table checksum,
     both estimates, the identity witness, and the exact count all
     replay in the oracle."""
-    import tempfile
-
     ensure_utc(spark)
     from .archive import Archive
     from .functions.portable_hash import md5_halves
@@ -13168,7 +13074,7 @@ def kmv_artifact_fold_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _t(spark, sf_dir, "events")
     batch = F.col("event_id") % 4 == 0
     base_sk = op_kmv.kmv_sketch(ev.filter(~batch), "user_id", k)
-    ar = Archive(spark, tempfile.mkdtemp(prefix="sg_skart_kmv_"))
+    ar = Archive(spark, scratch_dir("sg_skart_kmv_"))
     v = ar.save_table("kmv_user_sketch", base_sk)
     loaded = ar.table("kmv_user_sketch")
     folded = op_kmv.kmv_merge(
@@ -13655,27 +13561,16 @@ def stream_kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-shot batch sketch hash-for-hash for ANY micro-batch layout —
     the gate emits the drained estimate beside the engine-side
     sym-diff witness and shares the batch gate's oracle verbatim."""
-    import tempfile
-
     from .streaming.kmv import run_kmv_stream
 
     ensure_utc(spark)
     k = 64
     ev = _t(spark, sf_dir, "events")
-    staged = tempfile.mkdtemp(prefix="sg_kmvs_src_")
-    ev.select("user_id").repartition(4).write.mode("overwrite").parquet(
-        staged
-    )
-    updates = (
-        spark.readStream.schema("user_id long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-    table_root = tempfile.mkdtemp(prefix="sg_kmvs_tbl_")
-    ckpt = tempfile.mkdtemp(prefix="sg_kmvs_ckpt_")
-    drained = run_kmv_stream(
-        updates, "user_id", k, table_root, ckpt
-    ).localCheckpoint(eager=True)
+    table_root = scratch_dir("sg_kmvs_tbl_")
+    with staged_stream(ev.select("user_id"), 4) as (updates, ckpt):
+        drained = run_kmv_stream(
+            updates, "user_id", k, table_root, ckpt
+        ).localCheckpoint(eager=True)
     direct = op_kmv.kmv_sketch(ev, "user_id", k)
     diff = (
         _msdiff_rows(drained, direct)
@@ -14091,8 +13986,6 @@ def trigram_index_artifact_roundtrip(
     index maintenance proven equivalent to rebuild, which is the daily
     ingest path of a 100 TB code/doc-search store. Saved-table
     checksum, posting count, match count all replay in the oracle."""
-    import tempfile
-
     ensure_utc(spark)
     from .archive import Archive
     from .functions.portable_hash import md5_halves
@@ -14101,7 +13994,7 @@ def trigram_index_artifact_roundtrip(
     d = _t(spark, sf_dir, "documents")
     batch = F.col("doc_id") % 4 == 0
     base_p = trigram_postings(d.filter(~batch), "doc_id", "text")
-    ar = Archive(spark, tempfile.mkdtemp(prefix="sg_trgidx_"))
+    ar = Archive(spark, scratch_dir("sg_trgidx_"))
     v = ar.save_table("trigram_postings", base_p)
     loaded = ar.table("trigram_postings")
     # distinct-union fold WITHOUT the distinct: trigram_postings is
@@ -14638,28 +14531,17 @@ def stream_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     history is never re-read — the live-dashboard version of "best
     price per size". Shares the batch gate's naive NOT-EXISTS oracle
     verbatim, with the engine-side sym-diff witness riding along."""
-    import tempfile
-
     ensure_utc(spark)
     from .streaming.skyline import run_skyline_stream
 
     part = _t(spark, sf_dir, "part").select(
         "p_partkey", "p_retailprice", "p_size"
     )
-    staged = tempfile.mkdtemp(prefix="sg_sky_src_")
-    part.repartition(4).write.mode("overwrite").parquet(staged)
-    updates = (
-        spark.readStream.schema(
-            "p_partkey long, p_retailprice double, p_size int"
-        )
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-    table_root = tempfile.mkdtemp(prefix="sg_sky_tbl_")
-    ckpt = tempfile.mkdtemp(prefix="sg_sky_ckpt_")
-    drained = run_skyline_stream(
-        updates, "p_retailprice", "p_size", table_root, ckpt
-    ).localCheckpoint(eager=True)
+    table_root = scratch_dir("sg_sky_tbl_")
+    with staged_stream(part, 4) as (updates, ckpt):
+        drained = run_skyline_stream(
+            updates, "p_retailprice", "p_size", table_root, ckpt
+        ).localCheckpoint(eager=True)
     direct = op_skyline.pareto_frontier(part, "p_retailprice", "p_size")
     diff = (
         _msdiff_rows(drained, direct)
@@ -14712,8 +14594,6 @@ def bm25_index_artifact_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``score_consistent`` — same fixed expression tree over identical
     integers, compared EXACTLY, no tolerance). Saved-artifact checksum,
     corpus counts, and the matched-doc count replay in the oracle."""
-    import tempfile
-
     ensure_utc(spark)
     from .archive import Archive
     from .functions.portable_hash import md5_halves
@@ -14742,7 +14622,7 @@ def bm25_index_artifact_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     tf_base, dl_base = tf_dl(d.filter(~batch_pred))
-    ar = Archive(spark, tempfile.mkdtemp(prefix="sg_bm25idx_"))
+    ar = Archive(spark, scratch_dir("sg_bm25idx_"))
     v = ar.save_table("bm25_tf", tf_base)
     ar.save_table("bm25_dl", dl_base)
     ar.save_table("bm25_df", df_of(tf_base))
@@ -14931,24 +14811,15 @@ def stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     sampler's replay VERBATIM; the engine-side sym-diff against the
     direct sample rides along. At 100 TB this is reservoir-at-ingest:
     O(k) state forever, no corpus re-read per refresh."""
-    import tempfile
-
     from .streaming.sample import run_weighted_sample_stream
 
     ensure_utc(spark)
     d = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    staged = tempfile.mkdtemp(prefix="sg_wsamp_src_")
-    d.repartition(4).write.mode("overwrite").parquet(staged)
-    updates = (
-        spark.readStream.schema("doc_id long, n_chars bigint")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-    table_root = tempfile.mkdtemp(prefix="sg_wsamp_tbl_")
-    ckpt = tempfile.mkdtemp(prefix="sg_wsamp_ckpt_")
-    drained = run_weighted_sample_stream(
-        updates, "doc_id", "n_chars", 64, table_root, ckpt
-    ).localCheckpoint(eager=True)
+    table_root = scratch_dir("sg_wsamp_tbl_")
+    with staged_stream(d, 4) as (updates, ckpt):
+        drained = run_weighted_sample_stream(
+            updates, "doc_id", "n_chars", 64, table_root, ckpt
+        ).localCheckpoint(eager=True)
     direct = llm_sampling.weighted_sample(d, "doc_id", "n_chars", 64)
     diff = (
         _msdiff_rows(drained, direct)
@@ -15453,8 +15324,6 @@ def stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     of stream-built vs batch-built search rides along. At 100 TB this
     is vector-store ingest: O(batch) work per batch, the historical
     corpus never re-assigned."""
-    import tempfile
-
     from .streaming.ann import run_ivf_ingest_stream
 
     ensure_utc(spark)
@@ -15466,18 +15335,9 @@ def stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") == 0).select(
         llm_similarity.as_double("embedding").alias("qv")
     )
-    staged = tempfile.mkdtemp(prefix="sg_ivf_src_")
-    e.select("vec_id", "embedding").repartition(4).write.mode(
-        "overwrite"
-    ).parquet(staged)
-    updates = (
-        spark.readStream.schema("vec_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-    index_root = tempfile.mkdtemp(prefix="sg_ivf_idx_")
-    ckpt = tempfile.mkdtemp(prefix="sg_ivf_ckpt_")
-    drained = run_ivf_ingest_stream(updates, cdf, index_root, ckpt)
+    index_root = scratch_dir("sg_ivf_idx_")
+    with staged_stream(e.select("vec_id", "embedding"), 4) as (updates, ckpt):
+        drained = run_ivf_ingest_stream(updates, cdf, index_root, ckpt)
     topk_stream = llm_similarity.ivf_search_index(
         drained, cdf, q, nprobe=4, k=10
     ).localCheckpoint(eager=True)
@@ -15635,8 +15495,6 @@ def nsw_index_artifact_roundtrip(
     incremental_nsw_equiv this closes the growth loop: reload last
     month's graph, fold today's batch cell-locally, search. Ref: parity
     N/A (§2.12); persistence via archive.py save_table."""
-    import tempfile
-
     ensure_utc(spark)
     from .archive import Archive
     from .functions.portable_hash import md5_halves as _md5h
@@ -15654,7 +15512,7 @@ def nsw_index_artifact_roundtrip(
     edges = llm_graph_ann.nsw_edges(e, m_neighbors=12).localCheckpoint(
         eager=True
     )
-    ar = Archive(spark, tempfile.mkdtemp(prefix="sg_nswart_"))
+    ar = Archive(spark, scratch_dir("sg_nswart_"))
     ar.save_table("nsw_edges", edges)
     edges_l = ar.table("nsw_edges").localCheckpoint(eager=True)
     topk_l = llm_graph_ann.nsw_search(edges_l, e, q, beam=32, hops=4)
@@ -15721,8 +15579,6 @@ def stream_nsw_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     full-build replay VERBATIM. Crash-replay: both writes are
     deterministic, so a replayed batch rewrites identical rows and a
     torn cell directory self-heals on the overwrite."""
-    import tempfile
-
     from .streaming.ann import run_nsw_ingest_stream
 
     ensure_utc(spark)
@@ -15730,21 +15586,10 @@ def stream_nsw_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") == 0).select(
         llm_similarity.as_double("embedding").alias("qv")
     )
-    staged = tempfile.mkdtemp(prefix="sg_nsw_src_")
-    e.select("vec_id", "embedding").repartition(4).write.mode(
-        "overwrite"
-    ).parquet(staged)
-    updates = (
-        spark.readStream.schema("vec_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-    drained = run_nsw_ingest_stream(
-        updates,
-        tempfile.mkdtemp(prefix="sg_nsw_idx_"),
-        tempfile.mkdtemp(prefix="sg_nsw_ckpt_"),
-        m_neighbors=12,
-    ).localCheckpoint(eager=True)
+    with staged_stream(e.select("vec_id", "embedding"), 4) as (updates, ckpt):
+        drained = run_nsw_ingest_stream(
+            updates, scratch_dir("sg_nsw_idx_"), ckpt, m_neighbors=12
+        ).localCheckpoint(eager=True)
     batch_built = llm_graph_ann.nsw_directed_edges(
         llm_graph_ann.nsw_bucketed(e), m_neighbors=12
     )
@@ -15789,8 +15634,6 @@ def stream_ivf_delete_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-ingested after deletion. Ref: parity N/A (§2.12); keyed-delete
     semantics modeled on the reference's stale-link removal
     (main_scraper.py:164-167), store-shaped."""
-    import tempfile
-
     from .streaming.ann import run_ivf_delete_stream, run_ivf_ingest_stream
 
     ensure_utc(spark)
@@ -15802,34 +15645,17 @@ def stream_ivf_delete_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") == 0).select(
         llm_similarity.as_double("embedding").alias("qv")
     )
-    staged = tempfile.mkdtemp(prefix="sg_ivfdel_src_")
+    index_root = scratch_dir("sg_ivfdel_idx_")
     # 2-batch ingest SETUP (multi-batch ingest itself is
     # stream_ivf_ingest's 4-batch gate — this gate pays for the DELETE
     # path: two tombstone batches + the rebuild witness)
-    e.select("vec_id", "embedding").repartition(2).write.mode(
-        "overwrite"
-    ).parquet(staged)
-    updates = (
-        spark.readStream.schema("vec_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-    index_root = tempfile.mkdtemp(prefix="sg_ivfdel_idx_")
-    run_ivf_ingest_stream(
-        updates, cdf, index_root, tempfile.mkdtemp(prefix="sg_ivfdel_ck1_")
-    )
-    dstaged = tempfile.mkdtemp(prefix="sg_ivfdel_dsrc_")
-    e.filter(F.col("vec_id") % 7 == 3).select("vec_id").repartition(
-        2
-    ).write.mode("overwrite").parquet(dstaged)
-    del_updates = (
-        spark.readStream.schema("vec_id long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(dstaged)
-    )
-    drained = run_ivf_delete_stream(
-        del_updates, index_root, tempfile.mkdtemp(prefix="sg_ivfdel_ck2_")
-    ).localCheckpoint(eager=True)
+    with staged_stream(e.select("vec_id", "embedding"), 2) as (updates, ckpt):
+        run_ivf_ingest_stream(updates, cdf, index_root, ckpt)
+    deleted = e.filter(F.col("vec_id") % 7 == 3).select("vec_id")
+    with staged_stream(deleted, 2) as (del_updates, ckpt):
+        drained = run_ivf_delete_stream(
+            del_updates, index_root, ckpt
+        ).localCheckpoint(eager=True)
     remaining = e.filter(F.col("vec_id") % 7 != 3)
     rebuilt = llm_similarity.ivf_index(remaining, cdf)
     key = lambda df: df.select(  # noqa: E731 — local comparator
@@ -15871,8 +15697,6 @@ def stream_nsw_delete_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     rides along). Per-batch cost ∝ touched-cell population: both log
     reads partition-prune to the touched cells. Contract: ids are not
     re-ingested after deletion."""
-    import tempfile
-
     from .streaming.ann import run_nsw_delete_stream, run_nsw_ingest_stream
 
     ensure_utc(spark)
@@ -15881,40 +15705,17 @@ def stream_nsw_delete_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") == 0).select(
         llm_similarity.as_double("embedding").alias("qv")
     )
-    staged = tempfile.mkdtemp(prefix="sg_nswdel_src_")
+    index_root = scratch_dir("sg_nswdel_idx_")
     # 2-batch ingest SETUP (multi-batch ingest itself is
     # stream_nsw_ingest's 4-batch gate — this gate pays for the DELETE
     # path: two tombstone batches + the rebuild witness)
-    e.select("vec_id", "embedding").repartition(2).write.mode(
-        "overwrite"
-    ).parquet(staged)
-    updates = (
-        spark.readStream.schema("vec_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-    index_root = tempfile.mkdtemp(prefix="sg_nswdel_idx_")
-    run_nsw_ingest_stream(
-        updates,
-        index_root,
-        tempfile.mkdtemp(prefix="sg_nswdel_ck1_"),
-        m_neighbors=12,
-    )
-    dstaged = tempfile.mkdtemp(prefix="sg_nswdel_dsrc_")
-    e.filter(F.col("vec_id") % 7 == 3).select(
-        "vec_id", "embedding"
-    ).repartition(2).write.mode("overwrite").parquet(dstaged)
-    del_updates = (
-        spark.readStream.schema("vec_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(dstaged)
-    )
-    drained = run_nsw_delete_stream(
-        del_updates,
-        index_root,
-        tempfile.mkdtemp(prefix="sg_nswdel_ck2_"),
-        m_neighbors=12,
-    ).localCheckpoint(eager=True)
+    with staged_stream(e.select("vec_id", "embedding"), 2) as (updates, ckpt):
+        run_nsw_ingest_stream(updates, index_root, ckpt, m_neighbors=12)
+    deleted = e.filter(F.col("vec_id") % 7 == 3).select("vec_id", "embedding")
+    with staged_stream(deleted, 2) as (del_updates, ckpt):
+        drained = run_nsw_delete_stream(
+            del_updates, index_root, ckpt, m_neighbors=12
+        ).localCheckpoint(eager=True)
     rebuilt = llm_graph_ann.nsw_directed_edges(
         llm_graph_ann.nsw_bucketed(remaining), m_neighbors=12
     )
@@ -15963,8 +15764,6 @@ def stream_lsh_delete_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     index's job. At 100 TB: a tombstone append + broadcast anti-join,
     history never re-shingled. Contract: doc ids are not re-ingested
     after deletion."""
-    import tempfile
-
     from .llm.dedup import lsh_pairs_from_index
     from .streaming.dedup import run_lsh_delete_stream, run_lsh_ingest_stream
 
@@ -15972,38 +15771,19 @@ def stream_lsh_delete_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = _cloned_docs(spark, sf_dir).select(
         F.col("doc_id").alias("doc"), "text"
     )
-    staged = tempfile.mkdtemp(prefix="sg_lshdel_src_")
+    index_root = scratch_dir("sg_lshdel_idx_")
     # 2-batch ingest SETUP (multi-batch ingest itself is
     # stream_lsh_ingest_dups' 4-batch gate — this gate pays for the
     # DELETE path: two tombstone batches + the live-vs-rebuild witness)
-    corpus.repartition(2).write.mode("overwrite").parquet(staged)
-    updates = (
-        spark.readStream.schema("doc long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged)
-    )
-    index_root = tempfile.mkdtemp(prefix="sg_lshdel_idx_")
-    run_lsh_ingest_stream(
-        updates,
-        index_root,
-        tempfile.mkdtemp(prefix="sg_lshdel_ck1_"),
-        32,
-        16,
-        3,
-        portable=True,
-    )
-    dstaged = tempfile.mkdtemp(prefix="sg_lshdel_dsrc_")
-    corpus.filter(F.col("doc") % 7 == 3).select("doc").repartition(
-        2
-    ).write.mode("overwrite").parquet(dstaged)
-    del_updates = (
-        spark.readStream.schema("doc long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(dstaged)
-    )
-    _pairs, sigs, bands = run_lsh_delete_stream(
-        del_updates, index_root, tempfile.mkdtemp(prefix="sg_lshdel_ck2_")
-    )
+    with staged_stream(corpus, 2) as (updates, ckpt):
+        run_lsh_ingest_stream(
+            updates, index_root, ckpt, 32, 16, 3, portable=True
+        )
+    deleted = corpus.filter(F.col("doc") % 7 == 3).select("doc")
+    with staged_stream(deleted, 2) as (del_updates, ckpt):
+        _pairs, sigs, bands = run_lsh_delete_stream(
+            del_updates, index_root, ckpt
+        )
     sigs = sigs.localCheckpoint(eager=True)
     bands = bands.localCheckpoint(eager=True)
     remaining = corpus.filter(F.col("doc") % 7 != 3)
@@ -16057,7 +15837,6 @@ def store_compaction_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity N/A (§2.12); the store lifecycle completes the reference's
     keyed-delete loop (main_scraper.py:164-167) at store scale."""
     import os as _os
-    import tempfile
 
     from .streaming.ann import (
         compact_ivf_store,
@@ -16075,30 +15854,12 @@ def store_compaction_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") == 0).select(
         llm_similarity.as_double("embedding").alias("qv")
     )
-    staged = tempfile.mkdtemp(prefix="sg_cmp_src_")
-    e.select("vec_id", "embedding").repartition(2).write.mode(
-        "overwrite"
-    ).parquet(staged)
-    index_root = tempfile.mkdtemp(prefix="sg_cmp_idx_")
-    run_ivf_ingest_stream(
-        spark.readStream.schema("vec_id long, embedding array<float>")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(staged),
-        cdf,
-        index_root,
-        tempfile.mkdtemp(prefix="sg_cmp_ck1_"),
-    )
-    dstaged = tempfile.mkdtemp(prefix="sg_cmp_dsrc_")
-    e.filter(F.col("vec_id") % 7 == 3).select("vec_id").repartition(
-        2
-    ).write.mode("overwrite").parquet(dstaged)
-    run_ivf_delete_stream(
-        spark.readStream.schema("vec_id long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(dstaged),
-        index_root,
-        tempfile.mkdtemp(prefix="sg_cmp_ck2_"),
-    )
+    index_root = scratch_dir("sg_cmp_idx_")
+    with staged_stream(e.select("vec_id", "embedding"), 2) as (updates, ckpt):
+        run_ivf_ingest_stream(updates, cdf, index_root, ckpt)
+    deleted = e.filter(F.col("vec_id") % 7 == 3).select("vec_id")
+    with staged_stream(deleted, 2) as (del_updates, ckpt):
+        run_ivf_delete_stream(del_updates, index_root, ckpt)
     compact_ivf_store(spark, index_root)
     logs_gone = not any(
         d.startswith(("b_", "d_")) for d in _os.listdir(index_root)

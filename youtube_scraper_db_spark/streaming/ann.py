@@ -32,6 +32,7 @@ import os
 from pyspark.sql import DataFrame
 
 from ..llm.similarity import ivf_index
+from .drain import drain
 
 _INDEX_SCHEMA = "vec_id long, v array<double>, vn double, cluster long"
 _TOMB_SCHEMA = "vec_id long"
@@ -105,13 +106,7 @@ def run_ivf_delete_stream(
             )
         )
 
-    q = (
-        del_updates.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(del_updates, apply_batch, checkpoint)
     return read_ivf_store(del_updates.sparkSession, index_root)
 
 
@@ -146,13 +141,7 @@ def run_ivf_ingest_stream(
             )
         )
 
-    q = (
-        emb_updates.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(emb_updates, apply_batch, checkpoint)
     return read_ivf_store(spark, index_root)
 
 
@@ -410,13 +399,7 @@ def run_nsw_ingest_stream(
             os.path.join(vec_dir, own)
         )
 
-    q = (
-        emb_updates.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(emb_updates, apply_batch, checkpoint)
     return read_nsw_store(spark, index_root)
 
 
@@ -524,11 +507,5 @@ def run_nsw_delete_stream(
             os.path.join(vec_dir, own)
         )
 
-    q = (
-        del_updates.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(del_updates, apply_batch, checkpoint)
     return read_nsw_store(spark, index_root)

@@ -36,6 +36,7 @@ import os
 from pyspark.sql import DataFrame
 
 from ..llm.cluster import fold_components
+from .drain import drain
 from .versioned import latest_committed_version
 
 
@@ -85,11 +86,5 @@ def run_cc_stream(
         )
         current["v"] = nxt
 
-    q = (
-        edge_updates.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(edge_updates, apply_batch, checkpoint)
     return _labels()

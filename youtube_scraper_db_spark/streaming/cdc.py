@@ -18,6 +18,12 @@ systems amortize it with partition-pruned rewrites (only partitions a
 batch touches — see operators/partitioning.py) or a log-structured
 format. The loop here isolates the STREAMING contract: the final table
 must equal the one-shot batch merge, whatever the micro-batch layout.
+
+Resume contract: a rerun against the same checkpoint and ``table_root``
+folds its new batches into the highest COMMITTED ``v{n}`` (versioned.py),
+not into ``base`` — the checkpoint skips batches already applied, so
+re-seeding from ``base`` would lose them. ``base`` is written as ``v0``
+only when nothing is committed yet.
 """
 
 from __future__ import annotations
@@ -28,6 +34,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 
 from ..operators.merge import merge_upsert
+from .drain import drain
+from .versioned import latest_committed_version
 
 
 def run_upsert_stream(
@@ -39,12 +47,13 @@ def run_upsert_stream(
 ) -> DataFrame:
     """Drain ``updates`` (a streaming DataFrame) into a versioned table
     seeded with ``base``, applying ``merge_upsert`` per micro-batch.
-    Returns the final table as a batch DataFrame."""
+    Returns the final table as a batch DataFrame. Resumes from the
+    highest committed version (see the module docstring)."""
     spark = updates.sparkSession
     os.makedirs(table_root, exist_ok=True)
-    v0 = os.path.join(table_root, "v0")
-    base.write.mode("overwrite").parquet(v0)
-    current = {"v": 0}
+    current = {"v": latest_committed_version(table_root)}
+    if current["v"] == 0:
+        base.write.mode("overwrite").parquet(os.path.join(table_root, "v0"))
 
     def apply_batch(batch_df: DataFrame, _batch_id: int) -> None:
         cur = spark.read.parquet(os.path.join(table_root, f"v{current['v']}"))
@@ -55,11 +64,5 @@ def run_upsert_stream(
         )
         current["v"] = nxt
 
-    q = (
-        updates.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(updates, apply_batch, checkpoint)
     return spark.read.parquet(os.path.join(table_root, f"v{current['v']}"))

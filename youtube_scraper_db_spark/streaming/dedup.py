@@ -19,6 +19,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from .drain import drain
+
 
 def dedup_stream(
     df: DataFrame,
@@ -185,13 +187,7 @@ def run_lsh_ingest_stream(
             os.path.join(band_dir, f"b_{batch_id}")
         )
 
-    q = (
-        doc_updates.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(doc_updates, apply_batch, checkpoint)
 
     return read_lsh_store(spark, index_root)
 
@@ -301,11 +297,5 @@ def run_lsh_delete_stream(
             "overwrite"
         ).parquet(os.path.join(tomb_dir, f"d_{batch_id}"))
 
-    q = (
-        del_updates.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(del_updates, apply_batch, checkpoint)
     return read_lsh_store(del_updates.sparkSession, index_root)

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from ..functions.scalars import has_timestamps
 from ..operators.merge import when_matched_keep_better
 from ..sources.transcript_files import parse_transcript_text
+from .drain import drain
 
 
 def read_inbox_stream(
@@ -74,10 +75,4 @@ def run_inbox_once(
     equivalent of the reference's single processing pass, with streaming
     checkpoint semantics (a re-run skips already-consumed files)."""
     stream = read_inbox_stream(spark, inbox_dir, clean_source=clean_source)
-    (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    drain(stream, apply_batch, checkpoint_dir)

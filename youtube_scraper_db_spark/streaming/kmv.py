@@ -28,6 +28,7 @@ import os
 from pyspark.sql import DataFrame
 
 from ..operators.kmv import kmv_merge, kmv_sketch
+from .drain import drain
 from .versioned import latest_committed_version
 
 
@@ -70,11 +71,5 @@ def run_kmv_stream(
         )
         current["v"] = nxt
 
-    q = (
-        updates.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(updates, apply_batch, checkpoint)
     return _sketch()

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..llm.sampling import weighted_sample, weighted_sample_grouped
+from .drain import drain
 from .versioned import latest_committed_version
 
 
@@ -78,13 +79,7 @@ def run_weighted_sample_stream(
         )
         current["v"] = nxt
 
-    q = (
-        updates.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(updates, apply_batch, checkpoint)
     final = _reservoir()
     if final is None:
         return _sample(updates.sparkSession.createDataFrame([], updates.schema))

@@ -36,6 +36,7 @@ import os
 from pyspark.sql import DataFrame
 
 from ..operators.skyline import pareto_frontier
+from .drain import drain
 from .versioned import latest_committed_version
 
 
@@ -79,11 +80,5 @@ def run_skyline_stream(
         )
         current["v"] = nxt
 
-    q = (
-        updates.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    drain(updates, apply_batch, checkpoint)
     return _frontier()

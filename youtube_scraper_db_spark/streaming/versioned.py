@@ -1,6 +1,7 @@
 """Versioned-table commit protocol shared by the streaming maintenance
-loops (kmv.py / skyline.py / cc.py): each micro-batch folds the stored
-state with the batch and writes the result to ``{table_root}/v{n+1}``.
+loops (cdc.py / kmv.py / skyline.py / cc.py / sample.py): each
+micro-batch folds the stored state with the batch and writes the result
+to ``{table_root}/v{n+1}``.
 
 The resume contract (round-11 ADVICE): a crash mid parquet write leaves
 a PARTIAL ``v{n}`` directory; adopting it as the resume point would fold
