@@ -240,13 +240,13 @@ def test_save_table_versioned_roundtrip(spark, archive):
         [(1, "t", "##a", 10), (2, "ta", "##b", 7)],
         "merge_rank int, lhs string, rhs string, pair_count long",
     )
-    assert archive.save_table("bpe_model", m1) == 1
+    assert archive.commit("bpe_model", m1) == 1
     got = archive.table("bpe_model").orderBy("merge_rank").collect()
     assert [(r.merge_rank, r.lhs, r.rhs, r.pair_count) for r in got] == [
         (1, "t", "##a", 10), (2, "ta", "##b", 7),
     ]
     m2 = m1.withColumn("pair_count", F.col("pair_count") + 1)
-    assert archive.save_table("bpe_model", m2) == 2
+    assert archive.commit("bpe_model", m2) == 2
     assert archive.table("bpe_model").agg(
         F.sum("pair_count")
     ).first()[0] == 19

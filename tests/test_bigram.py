@@ -175,8 +175,8 @@ def test_scores_from_persisted_model_tables(spark, tmp_path):
     pred = F.col("id") % 2 == 0
     uni, big = bigram_model_tables(df, "doc_id", "text", pred)
     ar = Archive(spark, str(tmp_path / "db"))
-    assert ar.save_table("bigram_uni", uni) == 1
-    assert ar.save_table("bigram_big", big) == 1
+    assert ar.commit("bigram_uni", uni) == 1
+    assert ar.commit("bigram_big", big) == 1
     direct = {tuple(r) for r in BG.bigram_doc_scores(
         df, "doc_id", "text", pred
     ).collect()}
@@ -253,7 +253,7 @@ def test_trigram_fold_and_artifact_roundtrip(spark, tmp_path):
 
     ar = Archive(spark, str(tmp_path / "db3"))
     for name, t in zip(("t_uni", "t_big", "t_tri"), md):
-        assert ar.save_table(name, t) == 1
+        assert ar.commit(name, t) == 1
     loaded = {
         tuple(r)
         for r in trigram_doc_scores_from_model(

@@ -8,6 +8,9 @@ import os
 
 from youtube_scraper_db_spark.llm.cluster import connected_components
 from youtube_scraper_db_spark.streaming.cc import run_cc_stream
+from youtube_scraper_db_spark.streaming.versioned import (
+    latest_committed_version,
+)
 
 
 def _drain(spark, tmp_path, batches):
@@ -44,9 +47,10 @@ def test_cross_batch_component_merge(spark, tmp_path):
     final, table_root = _drain(spark, tmp_path, batches)
     got = {r["node"]: r["component"] for r in final.collect()}
     assert got == {n: 1 for n in (1, 2, 3, 10, 11, 12)}
-    # the loop really advanced version-by-version (one commit per batch)
-    versions = [d for d in os.listdir(table_root) if d.startswith("v")]
-    assert len(versions) >= 3
+    # the loop really advanced version-by-version (one commit per batch),
+    # and only the last two versions are kept
+    assert latest_committed_version(table_root) == 3
+    assert len([d for d in os.listdir(table_root) if d.startswith("v")]) <= 2
 
 
 def test_stream_equals_batch_cc_any_layout(spark, tmp_path):

@@ -1,6 +1,6 @@
 """CDC apply loop (streaming/cdc.py): per-batch versioned merge into a
 stored table must converge to the one-shot batch merge, actually
-advancing through multiple table versions."""
+advancing through multiple table versions while keeping only two."""
 
 from __future__ import annotations
 
@@ -8,6 +8,9 @@ import os
 
 from youtube_scraper_db_spark.operators.merge import merge_upsert
 from youtube_scraper_db_spark.streaming.cdc import run_upsert_stream
+from youtube_scraper_db_spark.streaming.versioned import (
+    latest_committed_version,
+)
 
 
 def test_cdc_stream_converges_to_batch_merge(spark, tmp_path):
@@ -31,9 +34,12 @@ def test_cdc_stream_converges_to_batch_merge(spark, tmp_path):
     got = sorted(map(tuple, final.collect()))
     want = sorted(map(tuple, merge_upsert(base, updates, ["k"]).collect()))
     assert got == want == [(1, "a"), (2, "B"), (3, "c"), (4, "D"), (5, "E")]
-    # the loop really advanced version-by-version (3 files → 3+ commits)
-    versions = [d for d in os.listdir(table_root) if d.startswith("v")]
-    assert len(versions) >= 4  # v0 seed + one per non-empty batch
+    # the loop really advanced version-by-version: one commit per staged
+    # file (each a non-empty batch), and only the last two are kept
+    files = [f for f in os.listdir(staged) if f.endswith(".parquet")]
+    assert len(files) >= 2
+    assert latest_committed_version(table_root) == len(files)
+    assert len([d for d in os.listdir(table_root) if d.startswith("v")]) <= 2
 
 
 def test_restart_resumes_from_committed_version(spark, tmp_path):

@@ -138,3 +138,22 @@ def test_no_mkdtemp_outside_drain_module():
         if p != owner and re.search(r"\bmkdtemp\b", p.read_text())
     ]
     assert offenders == []
+
+
+def test_commit_marker_owned_by_versioned_module():
+    """Version naming, the ``_SUCCESS`` commit check and GC live in
+    ``streaming/versioned.py`` alone: no other package module spells the
+    marker, and the five stream folds reach it only via ``fold_stream``."""
+    owner = PKG / "streaming" / "versioned.py"
+    marker = [
+        str(p.relative_to(REPO))
+        for p in PKG.rglob("*.py")
+        if p != owner and re.search(r"""["']_SUCCESS["']""", p.read_text())
+    ]
+    runners = [
+        name
+        for name in ("cdc", "kmv", "cc", "skyline", "sample")
+        if "latest_committed_version"
+        in (PKG / "streaming" / f"{name}.py").read_text()
+    ]
+    assert marker == [] and runners == []

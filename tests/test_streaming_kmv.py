@@ -9,6 +9,9 @@ import os
 
 from youtube_scraper_db_spark.operators.kmv import kmv_sketch
 from youtube_scraper_db_spark.streaming.kmv import run_kmv_stream
+from youtube_scraper_db_spark.streaming.versioned import (
+    latest_committed_version,
+)
 
 K = 16
 
@@ -60,8 +63,9 @@ def test_version_advances_per_batch(spark, tmp_path):
     run_kmv_stream(
         _stream(spark, staged), "k", K, tbl, str(tmp_path / "ckpt")
     )
-    versions = [d for d in os.listdir(tbl) if d.startswith("v")]
-    assert len(versions) >= 3
+    # one commit per batch, and only the last two versions are kept
+    assert latest_committed_version(tbl) == 3
+    assert len([d for d in os.listdir(tbl) if d.startswith("v")]) <= 2
 
 
 def test_restart_resumes_sketch_versions(spark, tmp_path):

@@ -33,6 +33,7 @@ from .sinks.render_text import write_transcript_files
 from .sources.playlists_json import read_playlists_json
 from .sources.transcript_files import read_transcript_files
 from .streaming.inbox import transcript_preference_merge
+from .streaming.versioned import drop_below
 
 
 class Archive:
@@ -80,75 +81,44 @@ class Archive:
     def table(self, name: str) -> DataFrame:
         return self.spark.read.parquet(self._path(name))
 
+    def _point(self, name: str, version: int) -> None:
+        """Atomically repoint the version file at ``version`` (fsync'd
+        temp file + ``os.replace``)."""
+        ptr_tmp = self._version_file(name) + ".tmp"
+        with open(ptr_tmp, "w") as f:
+            f.write(str(version))
+            f.flush()
+            os.fsync(f.fileno())
+        os.replace(ptr_tmp, self._version_file(name))
+
     def _commit(self, name: str, df: DataFrame) -> None:
         """Commit a whole-table rewrite via versioned-directory swap.
 
         1. Materialize ``df`` into the NEXT version directory (the plan
            reads the current version's files, which stay untouched).
-        2. Atomically repoint the version file (``os.replace``).
-        3. Garbage-collect versions older than the previous one (kept for
-           ``rollback``) and any debris from crashed commits.
+        2. Atomically repoint the version file (``_point``).
+        3. Garbage-collect versions older than the previous one, which
+           is kept for ``rollback`` (streaming/versioned.py ``drop_below``).
 
         A failure in step 1 leaves a partial ``.v<N+1>`` directory and an
         unchanged pointer: readers never see it, and the next commit
         overwrites it. There is no state in which the table is missing or
         half-swapped."""
         cur = self._version_of(name)
-        nxt = cur + 1
-        df.write.mode("overwrite").parquet(self._version_path(name, nxt))
-        ptr_tmp = self._version_file(name) + ".tmp"
-        with open(ptr_tmp, "w") as f:
-            f.write(str(nxt))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(ptr_tmp, self._version_file(name))
-        self._gc(name, keep=(cur, nxt))
-
-    def _gc(self, name: str, keep: tuple[int, ...]) -> None:
-        """Drop superseded version dirs + legacy .tmp/.old swap debris."""
-        base = self._base(name)
-        prefix = os.path.basename(base) + ".v"
-        for entry in os.listdir(self.root):
-            if entry.startswith(prefix):
-                try:
-                    v = int(entry[len(prefix):])
-                except ValueError:
-                    continue
-                if v not in keep:
-                    shutil.rmtree(os.path.join(self.root, entry), ignore_errors=True)
-        if 0 not in keep and os.path.exists(base):
-            shutil.rmtree(base, ignore_errors=True)
-        for legacy in (base + ".tmp", base + ".old"):
-            if os.path.exists(legacy):
-                shutil.rmtree(legacy, ignore_errors=True)
-
-    def save_table(self, name: str, df: DataFrame) -> int:
-        """Commit an arbitrary table — e.g. a trained tokenizer
-        artifact (BPE/WordPiece merges, a unigram vocabulary) — through
-        the same versioned-directory protocol as the archive tables,
-        and return the committed version number. This is the
-        persistence half of the train→save→load→apply tokenizer story:
-        a model trained this month is reloaded by ``table(name)`` to
-        tokenize next month's corpus, with ``rollback`` giving the
-        usual one-step undo. Names must not collide with the schema
-        tables (they share the root directory)."""
-        self._commit(name, df)
-        return self._version_of(name)
+        df.write.mode("overwrite").parquet(self._version_path(name, cur + 1))
+        self._point(name, cur + 1)
+        drop_below(self._base(name) + ".v", cur)
+        if cur >= 1:
+            shutil.rmtree(self._base(name), ignore_errors=True)
 
     def rollback(self, name: str) -> None:
         """Repoint ``name`` at the version before the last commit (ref
         conn.rollback, add_transcripts.py:203). One step of history is
         retained; rolling back twice is an error."""
-        cur = self._version_of(name)
-        prev = cur - 1
+        prev = self._version_of(name) - 1
         if prev < 0 or not os.path.exists(self._version_path(name, prev)):
             raise ValueError(f"no previous version of {name!r} to roll back to")
-        ptr_tmp = self._version_file(name) + ".tmp"
-        with open(ptr_tmp, "w") as f:
-            f.write(str(prev))
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(ptr_tmp, self._version_file(name))
+        self._point(name, prev)
 
     # -- ingestion (run_me.py / import_playlists.py / add_transcripts.py) -
 
@@ -323,12 +293,17 @@ class Archive:
 
     # -- maintenance ------------------------------------------------------
 
-    def commit(self, name: str, df: DataFrame) -> None:
-        """Commit a whole-table rewrite of any user table (versioned swap,
-        rollback-able). The public entry point for tables outside the
-        reference's fixed schema set — maintenance ops (``compact``,
-        ``rollback``) work on them identically."""
+    def commit(self, name: str, df: DataFrame) -> int:
+        """Commit a whole-table rewrite of any table (versioned swap,
+        rollback-able) and return the committed version number. The
+        public entry point for tables outside the reference's fixed
+        schema set — e.g. a trained tokenizer artifact (BPE/WordPiece
+        merges, a unigram vocabulary), reloaded by ``table(name)`` to
+        tokenize next month's corpus. Maintenance ops (``compact``,
+        ``rollback``) work on them identically. Names must not collide
+        with the schema tables (they share the root directory)."""
         self._commit(name, df)
+        return self._version_of(name)
 
     def compact(self, name: str, target_file_bytes: int = 128 * 1024 * 1024) -> int:
         """Small-file compaction — rewrite ``name`` into files sized for

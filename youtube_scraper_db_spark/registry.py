@@ -10000,7 +10000,7 @@ def bpe_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``bpe_trained_merges`` and ``bpe_apply_tokens`` that a real
     pipeline runs monthly: train 8 distinct-pair ranks on the corpus,
     COMMIT the merge table through the archive's versioned-directory
-    protocol (archive.py save_table — crash-safe pointer flip, one-step
+    protocol (archive.py commit — crash-safe pointer flip, one-step
     rollback), reload it from parquet, and tokenize the held-out
     doc_id%2=1 slice with BOTH the in-session model and the reloaded
     one: every document must tokenize identically
@@ -10021,7 +10021,7 @@ def bpe_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "merge_rank int, lhs string, rhs string, pair_count long",
     )
     ar = Archive(spark, scratch_dir("sg_tokart_bpe_"))
-    version = ar.save_table("bpe_model", art)
+    version = ar.commit("bpe_model", art)
     loaded = ar.table("bpe_model")
     loaded_merges = [
         (r["lhs"], r["rhs"]) for r in loaded.orderBy("merge_rank").collect()
@@ -10074,7 +10074,7 @@ def unigram_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "piece string, piece_count long",
     )
     ar = Archive(spark, scratch_dir("sg_tokart_uni_"))
-    version = ar.save_table("unigram_model", art)
+    version = ar.commit("unigram_model", art)
     loaded = ar.table("unigram_model")
     cnts_t = {r["piece"]: int(r["piece_count"]) for r in trained_rows}
     cnts_l = {r["piece"]: int(r["piece_count"]) for r in loaded.collect()}
@@ -10175,7 +10175,7 @@ def wordpiece_artifact_roundtrip(
         sorted((p,) for p in vocab_trained), "piece string"
     )
     ar = Archive(spark, scratch_dir("sg_tokart_wp_"))
-    version = ar.save_table("wordpiece_model", art)
+    version = ar.commit("wordpiece_model", art)
     loaded = ar.table("wordpiece_model")
     vocab_loaded = {r["piece"] for r in loaded.collect()}
     held = d.filter(F.col("doc_id") % 2 == 1)
@@ -10323,7 +10323,7 @@ def bigram_model_artifact_roundtrip(
     checksums hash-check against the oracle's replay of the two
     training aggregates — the model that scores next month's corpus is
     byte-stable, not just row-count-stable. Ref: parity N/A (§2.12);
-    persistence protocol via archive.py save_table."""
+    persistence protocol via archive.py commit."""
     ensure_utc(spark)
     from .archive import Archive
 
@@ -10344,8 +10344,8 @@ def bigram_model_artifact_roundtrip(
     uni = uni.localCheckpoint(eager=True)
     big = big.localCheckpoint(eager=True)
     ar = Archive(spark, scratch_dir("sg_lmart_bigram_"))
-    v_uni = ar.save_table("bigram_uni", uni)
-    v_big = ar.save_table("bigram_big", big)
+    v_uni = ar.commit("bigram_uni", uni)
+    v_big = ar.commit("bigram_big", big)
     uni_l, big_l = ar.table("bigram_uni"), ar.table("bigram_big")
     mism = _score_mismatch(
         llm_bigram.bigram_doc_scores_from_model(
@@ -11368,7 +11368,7 @@ def ivf_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     rides along exact as in ``incremental_ivf_equiv`` — together with
     that gate this closes the daily-growth loop: reload last month's
     index, fold today's batch, search. Ref: parity N/A (§2.12);
-    persistence via archive.py save_table."""
+    persistence via archive.py commit."""
     ensure_utc(spark)
     from .archive import Archive
     from .functions.portable_hash import md5_halves
@@ -11383,8 +11383,8 @@ def ivf_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     idx = llm_similarity.ivf_index(e, cdf)
     ar = Archive(spark, scratch_dir("sg_ivfart_"))
-    v_c = ar.save_table("ivf_centroids", cdf)
-    v_l = ar.save_table("ivf_lists", idx)
+    v_c = ar.commit("ivf_centroids", cdf)
+    v_l = ar.commit("ivf_lists", idx)
     cdf_l = ar.table("ivf_centroids")
     idx_l = ar.table("ivf_lists")
     topk_l = llm_similarity.ivf_search_index(
@@ -11469,10 +11469,10 @@ def pq_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     books = llm_similarity.pq_train_codebooks(e, k=32)
     codes = llm_similarity.pq_encode(e, books).localCheckpoint()
     ar = Archive(spark, scratch_dir("sg_pqart_"))
-    v_b = ar.save_table(
+    v_b = ar.commit(
         "pq_books", llm_similarity.pq_books_table(spark, books)
     )
-    v_c = ar.save_table("pq_codes", codes)
+    v_c = ar.commit("pq_codes", codes)
     bdf_l = ar.table("pq_books")
     books_l = llm_similarity.pq_books_from_table(bdf_l)
     codes_l = ar.table("pq_codes")
@@ -11700,9 +11700,9 @@ def trigram_model_artifact_roundtrip(
     big = big.localCheckpoint(eager=True)
     tri = tri.localCheckpoint(eager=True)
     ar = Archive(spark, scratch_dir("sg_lmart_trigram_"))
-    v1 = ar.save_table("trigram_uni", uni)
-    v2 = ar.save_table("trigram_big", big)
-    v3 = ar.save_table("trigram_tri", tri)
+    v1 = ar.commit("trigram_uni", uni)
+    v2 = ar.commit("trigram_big", big)
+    v3 = ar.commit("trigram_tri", tri)
     uni_l = ar.table("trigram_uni")
     big_l = ar.table("trigram_big")
     tri_l = ar.table("trigram_tri")
@@ -11920,7 +11920,7 @@ def hll_artifact_fold_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("event_id") % 2 == 0), "user_id", 9
     )
     ar = Archive(spark, scratch_dir("sg_skart_hll_"))
-    v = ar.save_table("hll_user_regs", base_regs)
+    v = ar.commit("hll_user_regs", base_regs)
     regs_l = ar.table("hll_user_regs")
     folded = op_sketches.hll_merge(
         regs_l,
@@ -11988,7 +11988,7 @@ def cms_artifact_fold_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.filter(F.col("event_id") % 2 == 0), "user_id"
     )
     ar = Archive(spark, scratch_dir("sg_skart_cms_"))
-    v = ar.save_table("cms_user_counters", base_cnt)
+    v = ar.commit("cms_user_counters", base_cnt)
     cnt_l = ar.table("cms_user_counters")
     # both counter tables are 16k cells and feed two consumers each
     # (estimates + the cell-wise compare): checkpoint so the batch and
@@ -12100,7 +12100,7 @@ def bloom_artifact_fold_roundtrip(
         orders.filter(F.col("o_orderkey") % 2 == 0), "o_custkey"
     )
     ar = Archive(spark, scratch_dir("sg_skart_bloom_"))
-    v = ar.save_table("bloom_cust_bits", bits_a)
+    v = ar.commit("bloom_cust_bits", bits_a)
     bits_l = ar.table("bloom_cust_bits")
     folded = op_sketches.bloom_merge(
         bits_l,
@@ -12195,8 +12195,8 @@ def histogram_artifact_frozen_fold(
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
     ar = Archive(spark, scratch_dir("sg_skart_hist_"))
-    v1 = ar.save_table("hist_edges", edges)
-    v2 = ar.save_table("hist_bins", bins_base)
+    v1 = ar.commit("hist_edges", edges)
+    v2 = ar.commit("hist_bins", bins_base)
     edges_l = ar.table("hist_edges")
     bins_l = ar.table("hist_bins")
 
@@ -12309,7 +12309,7 @@ def heavy_hitter_artifact_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
         mg_partition_summaries(base, "w", 32), "w", 32
     )
     ar = Archive(spark, scratch_dir("sg_skart_mg_"))
-    ar.save_table("mg_word_summary", s_base)
+    ar.commit("mg_word_summary", s_base)
     s_loaded = ar.table("mg_word_summary")
     s_batch = mg_combine_summaries(
         mg_partition_summaries(batch, "w", 32), "w", 32
@@ -12533,8 +12533,8 @@ def minhash_index_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
         sig, 32, 16, portable=True
     ).localCheckpoint(eager=True)
     ar = Archive(spark, scratch_dir("sg_mhart_"))
-    v_s = ar.save_table("mh_sigs", sig)
-    v_b = ar.save_table("mh_bands", bands)
+    v_s = ar.commit("mh_sigs", sig)
+    v_b = ar.commit("mh_bands", bands)
     sig_l = ar.table("mh_sigs")
     bands_l = ar.table("mh_bands")
 
@@ -12612,11 +12612,11 @@ def incremental_minhash_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
     bands_base = llm_dedup.minhash_band_table(sig_base, 32, 16, portable=True)
     ar = Archive(spark, scratch_dir("sg_mhfold_"))
-    ar.save_table("mh_sigs", sig_base)
-    ar.save_table("mh_bands", bands_base)
+    ar.commit("mh_sigs", sig_base)
+    ar.commit("mh_bands", bands_base)
     # the frozen hash-family parameters the daily fold must reuse —
     # persisted WITH the index, read back to drive the batch banding
-    ar.save_table(
+    ar.commit(
         "mh_params",
         spark.createDataFrame(
             [(32, 16, 3)], "num_hashes int, bands int, shingle_k int"
@@ -13075,7 +13075,7 @@ def kmv_artifact_fold_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = F.col("event_id") % 4 == 0
     base_sk = op_kmv.kmv_sketch(ev.filter(~batch), "user_id", k)
     ar = Archive(spark, scratch_dir("sg_skart_kmv_"))
-    v = ar.save_table("kmv_user_sketch", base_sk)
+    v = ar.commit("kmv_user_sketch", base_sk)
     loaded = ar.table("kmv_user_sketch")
     folded = op_kmv.kmv_merge(
         loaded, op_kmv.kmv_sketch(ev.filter(batch), "user_id", k), k
@@ -13995,7 +13995,7 @@ def trigram_index_artifact_roundtrip(
     batch = F.col("doc_id") % 4 == 0
     base_p = trigram_postings(d.filter(~batch), "doc_id", "text")
     ar = Archive(spark, scratch_dir("sg_trgidx_"))
-    v = ar.save_table("trigram_postings", base_p)
+    v = ar.commit("trigram_postings", base_p)
     loaded = ar.table("trigram_postings")
     # distinct-union fold WITHOUT the distinct: trigram_postings is
     # internally (id, gram)-distinct and the base/batch doc_id splits
@@ -14623,10 +14623,10 @@ def bm25_index_artifact_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tf_base, dl_base = tf_dl(d.filter(~batch_pred))
     ar = Archive(spark, scratch_dir("sg_bm25idx_"))
-    v = ar.save_table("bm25_tf", tf_base)
-    ar.save_table("bm25_dl", dl_base)
-    ar.save_table("bm25_df", df_of(tf_base))
-    ar.save_table("bm25_stats", stats_of(dl_base))
+    v = ar.commit("bm25_tf", tf_base)
+    ar.commit("bm25_dl", dl_base)
+    ar.commit("bm25_df", df_of(tf_base))
+    ar.commit("bm25_stats", stats_of(dl_base))
     tf_b, dl_b = tf_dl(d.filter(batch_pred))
     tf_f = ar.table("bm25_tf").unionByName(tf_b)
     dl_f = ar.table("bm25_dl").unionByName(dl_b)
@@ -15494,7 +15494,7 @@ def nsw_index_artifact_roundtrip(
     strings, the shared artifact-checksum formula). With
     incremental_nsw_equiv this closes the growth loop: reload last
     month's graph, fold today's batch cell-locally, search. Ref: parity
-    N/A (§2.12); persistence via archive.py save_table."""
+    N/A (§2.12); persistence via archive.py commit."""
     ensure_utc(spark)
     from .archive import Archive
     from .functions.portable_hash import md5_halves as _md5h
@@ -15513,7 +15513,7 @@ def nsw_index_artifact_roundtrip(
         eager=True
     )
     ar = Archive(spark, scratch_dir("sg_nswart_"))
-    ar.save_table("nsw_edges", edges)
+    ar.commit("nsw_edges", edges)
     edges_l = ar.table("nsw_edges").localCheckpoint(eager=True)
     topk_l = llm_graph_ann.nsw_search(edges_l, e, q, beam=32, hops=4)
     topk_direct = llm_graph_ann.nsw_search(edges, e, q, beam=32, hops=4)

@@ -20,14 +20,10 @@ per id).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..llm.sampling import weighted_sample, weighted_sample_grouped
-from .drain import drain
-from .versioned import latest_committed_version
+from .versioned import fold_stream
 
 
 def run_weighted_sample_stream(
@@ -43,44 +39,24 @@ def run_weighted_sample_stream(
     reservoir (per ``group_col`` stratum when given), folding each
     micro-batch through the batch sampler. Returns the final reservoir
     as a batch DataFrame (columns of ``updates`` + ``priority``).
-    Version pointer resumes from the highest COMMITTED ``v{n}``
-    (``_SUCCESS``-verified — versioned.py)."""
-    spark = updates.sparkSession
-    os.makedirs(table_root, exist_ok=True)
-    current = {"v": latest_committed_version(table_root)}
+    Commit, resume and GC follow versioned.py."""
 
     def _sample(df: DataFrame) -> DataFrame:
         if group_col is None:
             return weighted_sample(df, id_col, weight_col, n)
         return weighted_sample_grouped(df, group_col, id_col, weight_col, n)
 
-    def _reservoir() -> DataFrame | None:
-        if current["v"] == 0:
-            return None
-        return spark.read.parquet(
-            os.path.join(table_root, f"v{current['v']}")
-        )
+    empty = _sample(updates.sparkSession.createDataFrame([], updates.schema))
 
-    def apply_batch(batch_df: DataFrame, _batch_id: int) -> None:
+    def fold(stored: DataFrame, batch: DataFrame) -> DataFrame:
         # rank the batch alone first (batch-sized work, O(n) survivors),
         # then re-rank against the stored reservoir — the union is ≤ 2n
-        # rows (per stratum), so the fold never re-reads history
-        sampled = _sample(batch_df)
-        stored = _reservoir()
-        if stored is not None:
-            folded = _sample(
-                stored.unionByName(sampled).distinct().drop("priority")
-            )
-        else:
-            folded = sampled
-        nxt = current["v"] + 1
-        folded.write.mode("overwrite").parquet(
-            os.path.join(table_root, f"v{nxt}")
-        )
-        current["v"] = nxt
+        # rows (per stratum), so the fold never re-reads history; with
+        # nothing stored (``stored is empty``) the batch's sample is the
+        # reservoir
+        sampled = _sample(batch)
+        if stored is empty:
+            return sampled
+        return _sample(stored.unionByName(sampled).distinct().drop("priority"))
 
-    drain(updates, apply_batch, checkpoint)
-    final = _reservoir()
-    if final is None:
-        return _sample(updates.sparkSession.createDataFrame([], updates.schema))
-    return final
+    return fold_stream(updates, table_root, checkpoint, empty, fold)

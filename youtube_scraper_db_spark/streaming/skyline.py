@@ -31,13 +31,10 @@ callers gating drained ≡ batch must feed full-row-unique updates (the
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 from ..operators.skyline import pareto_frontier
-from .drain import drain
-from .versioned import latest_committed_version
+from .versioned import fold_stream
 
 
 def run_skyline_stream(
@@ -49,36 +46,18 @@ def run_skyline_stream(
 ) -> DataFrame:
     """Drain ``updates`` into a versioned frontier table, folding each
     micro-batch through the batch skyline operator. Returns the final
-    frontier as a batch DataFrame. Version pointer RESUMES from the
-    highest COMMITTED ``v{n}`` on disk — ``_SUCCESS``-verified
-    (versioned.py), so a partial directory from a crash mid-write is
-    skipped and overwritten by the next fold."""
-    spark = updates.sparkSession
-    os.makedirs(table_root, exist_ok=True)
-    current = {"v": latest_committed_version(table_root)}
-    schema = updates.schema
+    frontier as a batch DataFrame. The initial state is the empty
+    frontier; commit, resume and GC follow versioned.py."""
+    empty = updates.sparkSession.createDataFrame([], updates.schema)
 
-    def _frontier() -> DataFrame:
-        if current["v"] == 0:
-            return spark.createDataFrame([], schema)
-        return spark.read.parquet(
-            os.path.join(table_root, f"v{current['v']}")
-        )
-
-    def apply_batch(batch_df: DataFrame, _batch_id: int) -> None:
+    def fold(frontier: DataFrame, batch: DataFrame) -> DataFrame:
         # distinct() makes crash-replay idempotent: a replayed batch's
         # rows are already frontier rows (or dominated), and exact
         # duplicates — which strict dominance can never eliminate —
         # collapse before the frontier test. See module docstring for
         # the input-multiplicity caveat.
-        folded = pareto_frontier(
-            _frontier().unionByName(batch_df).distinct(), minimize, maximize
+        return pareto_frontier(
+            frontier.unionByName(batch).distinct(), minimize, maximize
         )
-        nxt = current["v"] + 1
-        folded.write.mode("overwrite").parquet(
-            os.path.join(table_root, f"v{nxt}")
-        )
-        current["v"] = nxt
 
-    drain(updates, apply_batch, checkpoint)
-    return _frontier()
+    return fold_stream(updates, table_root, checkpoint, empty, fold)

@@ -8,12 +8,12 @@ grows with stream lifetime. Compaction rewrites the LIVE view (inserts
 minus tombstones) as a single committed BASELINE and garbage-collects
 the logs it consumed.
 
-Crash-safe commit protocol (the versioned.py ``_SUCCESS`` discipline,
+Crash-safe commit protocol (versioned.py's naming and commit marker,
 extended with a consumed-log manifest):
 
-1. The live view is written to ``base_v{n+1}`` (parquet commits through
-   Hadoop's FileOutputCommitter — the ``_SUCCESS`` marker appears only
-   after every task file is in place).
+1. The live view is written to ``base_v{n+1}``, a versioned directory
+   that counts as written once it carries the commit marker
+   (versioned.py ``is_committed``).
 2. A ``_compaction_manifest.json`` naming every log directory the
    snapshot CONSUMED is written into the committed baseline via
    ``os.replace`` (atomic on POSIX). A baseline is ACTIVE only when
@@ -39,6 +39,8 @@ import os
 import shutil
 import tempfile
 
+from .versioned import is_committed, versions
+
 _BASE_PREFIX = "base_v"
 #: leading underscore: Hadoop/Spark input listings skip _-prefixed
 #: files (the _SUCCESS convention), so the manifest never reads as data
@@ -46,22 +48,14 @@ _MANIFEST = "_compaction_manifest.json"
 
 
 def _baseline_dirs(root: str) -> list[tuple[int, str]]:
-    if not os.path.isdir(root):
-        return []
-    out = []
-    for d in os.listdir(root):
-        if d.startswith(_BASE_PREFIX) and d[len(_BASE_PREFIX):].isdigit():
-            out.append((int(d[len(_BASE_PREFIX):]), os.path.join(root, d)))
-    return sorted(out)
+    return versions(os.path.join(root, _BASE_PREFIX))
 
 
 def active_baseline(root: str) -> tuple[str | None, set[str]]:
     """(path, consumed-log-names) of the newest ACTIVE baseline —
-    ``_SUCCESS`` and ``manifest.json`` both present — or (None, set())."""
+    committed and carrying its manifest — or (None, set())."""
     for _, path in reversed(_baseline_dirs(root)):
-        if os.path.exists(os.path.join(path, "_SUCCESS")) and os.path.exists(
-            os.path.join(path, _MANIFEST)
-        ):
+        if is_committed(path) and os.path.exists(os.path.join(path, _MANIFEST)):
             with open(os.path.join(path, _MANIFEST)) as f:
                 return path, set(json.load(f)["consumed"])
     return None, set()
