@@ -17,7 +17,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from youtube_scraper_db_spark.registry import REGISTRY  # noqa: E402
-from youtube_scraper_db_spark.session import get_spark  # noqa: E402
+from youtube_scraper_db_spark.session import get_spark, time_noop_run  # noqa: E402
 
 #: headline queries — the scan/shuffle/window-heavy subset of the registry,
 #: plus the LLM-pipeline operators (dedup/similarity/text) so their
@@ -333,15 +333,6 @@ def main() -> None:
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     calib = _calibrate(spark, reps)
 
-    def _drop_cached_state() -> None:
-        # Isolate per-query timings: queries persist intermediates (shingle
-        # indexes, CC localCheckpoints) whose lifetime outlives the noop
-        # action; left in place they pile up across the run and make later
-        # timings measure block-manager/GC pressure instead of the plan.
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
-
     # Per-query time = min over interleaved passes: this box shares its
     # CPUs with periodic external load, and a single pass can catch a
     # multi-second spike mid-query. The min of two full passes reports
@@ -356,17 +347,12 @@ def main() -> None:
         for name in names:
             if name in errors:
                 continue
-            _drop_cached_state()
-            t0 = time.time()
             try:
-                specs[name].fn(spark, sf_dir).write.mode("overwrite").format(
-                    "noop"
-                ).save()
+                took = round(time_noop_run(spark, specs[name].fn, sf_dir), 3)
             except Exception as exc:  # noqa: BLE001 — report, don't die
                 errors[name] = f"{type(exc).__name__}: {exc}"[:500]
                 timings.pop(name, None)
                 continue
-            took = round(time.time() - t0, 3)
             timings[name] = min(timings.get(name, took), took)
 
     total = round(sum(timings.values()), 3)

@@ -224,3 +224,105 @@ def test_compact_lsh_store_preserves_live_views(spark, tmp_path):
     for before, after in ((p0, p1), (s0, s1), (b0, b1)):
         assert after.exceptAll(before).count() == 0
         assert before.exceptAll(after).count() == 0
+
+
+def _lsh_docs(spark, ids):
+    return spark.createDataFrame(
+        [(i, f"the quick brown fox jumps over dog number {i % 4}")
+         for i in ids],
+        "doc long, text string",
+    )
+
+
+def _lsh_stream(spark, df, path, n):
+    df.repartition(n).write.mode("overwrite").parquet(path)
+    return (
+        spark.readStream.schema("doc long, text string")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(path)
+    )
+
+
+def test_lsh_ingest_after_compaction_is_visible(spark, tmp_path):
+    # a fresh checkpoint after compaction restarts batch ids at 0; the
+    # new logs must not take names the baseline already consumed
+    from pyspark.sql import functions as F
+
+    from youtube_scraper_db_spark.llm.dedup import (
+        minhash_band_table,
+        minhash_lsh_pairs,
+        minhash_signatures,
+    )
+    from youtube_scraper_db_spark.streaming.dedup import (
+        compact_lsh_store,
+        run_lsh_ingest_stream,
+    )
+
+    idx = str(tmp_path / "idx")
+    run_lsh_ingest_stream(
+        _lsh_stream(spark, _lsh_docs(spark, range(24)),
+                    str(tmp_path / "s1"), 3),
+        idx, str(tmp_path / "ck1"), 16, 8, 3, portable=True,
+    )
+    compact_lsh_store(spark, idx)
+    pairs, sigs, bands = run_lsh_ingest_stream(
+        _lsh_stream(spark, _lsh_docs(spark, range(24, 28)),
+                    str(tmp_path / "s2"), 2),
+        idx, str(tmp_path / "ck2"), 16, 8, 3, portable=True,
+    )
+    every = _lsh_docs(spark, range(28))
+    want_sigs = minhash_signatures(every, "doc", "text", 16, 3, portable=True)
+    want_bands = minhash_band_table(want_sigs, 16, 8, portable=True)
+    assert sigs.count() == 28
+    assert sigs.exceptAll(want_sigs).count() == 0
+    assert want_sigs.exceptAll(sigs).count() == 0
+    assert bands.exceptAll(want_bands).count() == 0
+    assert want_bands.exceptAll(bands).count() == 0
+    # the new docs pair with the earlier docs of the same text
+    new = pairs.where(F.col("doc_b") >= 24)
+    assert new.where(F.col("doc_a") < 24).count() > 0
+    want_pairs = minhash_lsh_pairs(
+        every, "doc", "text", num_hashes=16, bands=8, portable=True
+    )
+    assert pairs.exceptAll(want_pairs).count() == 0
+    assert want_pairs.exceptAll(pairs).count() == 0
+
+
+def test_lsh_replayed_batch_does_not_pair_with_itself(spark, tmp_path):
+    # at-least-once replay: drop the last commit so the rerun re-executes
+    # that batch over its own logs, which are already on disk
+    import os
+
+    from pyspark.sql import functions as F
+
+    from youtube_scraper_db_spark.streaming.dedup import run_lsh_ingest_stream
+
+    idx, ck = str(tmp_path / "idx"), str(tmp_path / "ck")
+    src = str(tmp_path / "src")
+    _lsh_stream(spark, _lsh_docs(spark, range(24)), src, 3)
+
+    def ingest():
+        updates = (
+            spark.readStream.schema("doc long, text string")
+            .option("maxFilesPerTrigger", "1")
+            .parquet(src)
+        )
+        pairs, _sigs, _bands = run_lsh_ingest_stream(
+            updates, idx, ck, 16, 8, 3, portable=True
+        )
+        return pairs
+
+    first = ingest().localCheckpoint(eager=True)
+    commits = os.path.join(ck, "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdecimal())
+    for f in (str(last), f".{last}.crc"):
+        if os.path.exists(os.path.join(commits, f)):
+            os.remove(os.path.join(commits, f))
+    pairs = ingest()
+    assert last == 2 and os.path.exists(os.path.join(commits, str(last)))
+    assert pairs.where(F.col("doc_a") == F.col("doc_b")).count() == 0
+    assert pairs.groupBy("doc_a", "doc_b").count().where(
+        F.col("count") > 1
+    ).count() == 0
+    assert pairs.exceptAll(first).count() == 0
+    assert first.exceptAll(pairs).count() == 0

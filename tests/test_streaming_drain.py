@@ -2,8 +2,10 @@
 the per-process scratch root is gone after the process exits (also on an
 uncaught exception, and a forked child cannot remove its parent's root);
 a staged stream replays one file per micro-batch and its staging and
-checkpoint dirs are gone after the ``with``; and no other module in the
-package creates temp dirs that nothing removes."""
+checkpoint dirs are gone after the ``with``; gates that return
+driver-side rows leave no dirs behind; no other module in the package
+creates temp dirs that nothing removes; and the commit marker and the
+index-store log protocol each have one owning module."""
 
 from __future__ import annotations
 
@@ -157,3 +159,42 @@ def test_commit_marker_owned_by_versioned_module():
         in (PKG / "streaming" / f"{name}.py").read_text()
     ]
     assert marker == [] and runners == []
+
+
+def test_log_protocol_owned_by_store_module():
+    """Log naming, listing, own-batch exclusion and tombstone reads live
+    in ``streaming/store.py`` alone: no other package module spells a
+    ``b_``/``d_`` log prefix or resolves log directories itself."""
+    owner = PKG / "streaming" / "store.py"
+    prefix = re.compile(r"""["'][bd]_["']|\bf["'][bd]_\{""")
+    resolve = re.compile(
+        r"\b_?(active_baseline|live_log_dirs|log_dir_name)\s*\("
+    )
+    offenders = [
+        str(p.relative_to(REPO))
+        for p in PKG.rglob("*.py")
+        if p != owner
+        and (prefix.search(p.read_text()) or resolve.search(p.read_text()))
+    ]
+    assert offenders == []
+
+
+def test_gates_returning_driver_rows_leave_no_scratch_dirs(spark):
+    """Gates whose result is built from rows collected on the driver
+    remove their staging and checkpoint dirs before returning."""
+    from test_plan_lint import SF
+
+    from youtube_scraper_db_spark import registry
+
+    root = os.path.dirname(scratch_dir("sg_probe_"))
+    gates = {
+        registry.stream_window_late_drop: ("sg_late_", "sg_late_ck_"),
+        registry.custom_source_stream_drain: (
+            "sg_dsrc_stream_", "sg_dsrc_ck_"
+        ),
+        registry.stream_update_mode_counts: ("sg_upd_", "sg_upd_ck_"),
+    }
+    for gate, prefixes in gates.items():
+        assert gate(spark, SF).count() > 0
+        left = [d for d in os.listdir(root) if d.startswith(prefixes)]
+        assert left == [], (gate.__name__, left)

@@ -18,12 +18,15 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from youtube_scraper_db_spark.registry import REGISTRY  # noqa: E402
-from youtube_scraper_db_spark.session import get_spark  # noqa: E402
+from youtube_scraper_db_spark.session import (  # noqa: E402
+    drop_cached_state,
+    get_spark,
+    time_noop_run,
+)
 
 
 def main() -> int:
@@ -42,15 +45,10 @@ def main() -> int:
         print(f"unknown queries: {missing}", file=sys.stderr)
         return 2
 
-    def _drop_cached_state() -> None:
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
-
     if args.explain:
         os.makedirs(args.explain, exist_ok=True)
         for name in args.names:
-            _drop_cached_state()
+            drop_cached_state(spark)
             df = specs[name].fn(spark, args.sf)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted"
@@ -63,13 +61,8 @@ def main() -> int:
     timings: dict[str, float] = {}
     for rep in range(max(1, args.reps)):
         for name in args.names:
-            _drop_cached_state()
             spark.sparkContext.setJobDescription(f"opt:{name}")
-            t0 = time.time()
-            specs[name].fn(spark, args.sf).write.mode("overwrite").format(
-                "noop"
-            ).save()
-            took = round(time.time() - t0, 3)
+            took = round(time_noop_run(spark, specs[name].fn, args.sf), 3)
             timings[name] = min(timings.get(name, took), took)
             print(f"rep{rep} {name}: {took:.3f}s")
     print("--- min over reps ---")

@@ -25,7 +25,6 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -33,7 +32,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from youtube_scraper_db_spark.io import read_table  # noqa: E402
 from youtube_scraper_db_spark.registry import REGISTRY  # noqa: E402
-from youtube_scraper_db_spark.session import get_spark  # noqa: E402
+from youtube_scraper_db_spark.session import get_spark, time_noop_run  # noqa: E402
 from youtube_scraper_db_spark.streaming.drain import scratch_dir  # noqa: E402
 
 EVENT_QUERIES = [
@@ -538,15 +537,9 @@ def build_skew_pair(spark, sf_dir: str, factor: int) -> tuple[str, str]:
 
 
 def time_query(spark, spec, sf_dir: str, reps: int = 2) -> float:
-    best = float("inf")
-    for _ in range(reps):
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
-        t0 = time.time()
-        spec.fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
-        best = min(best, time.time() - t0)
-    return round(best, 2)
+    return round(
+        min(time_noop_run(spark, spec.fn, sf_dir) for _ in range(reps)), 2
+    )
 
 
 def time_all(sf_dir: str, names: list[str]) -> dict[str, float]:

@@ -65,7 +65,7 @@ from .sources.transcript_files import read_transcript_files
 from .streaming.dedup import dedup_stream
 from .streaming.enrich import enrich_stream
 from .streaming.inbox import read_inbox_stream
-from .streaming.drain import drain, scratch_dir, staged_stream
+from .streaming.drain import drain, scratch_dir, scratch_dirs, staged_stream
 from .streaming.joins import correlate_streams
 from .functions.scalars import (
     context_snippet,
@@ -6205,37 +6205,36 @@ def stream_window_late_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     def at(minutes: int) -> dt.datetime:
         return T0 + dt.timedelta(minutes=minutes)
 
-    staged = scratch_dir("sg_late_")
-    ckpt = scratch_dir("sg_late_ck_")
-    spark.createDataFrame(
-        [("A", at(10)), ("A", at(20)), ("W", at(120))], "k string, ts timestamp"
-    ).coalesce(1).write.parquet(os.path.join(staged, "b1"))
-
     emitted: list[tuple] = []
+    with scratch_dirs("sg_late_", "sg_late_ck_") as (staged, ckpt):
+        spark.createDataFrame(
+            [("A", at(10)), ("A", at(20)), ("W", at(120))],
+            "k string, ts timestamp",
+        ).coalesce(1).write.parquet(os.path.join(staged, "b1"))
 
-    def run_once() -> None:
-        stream = spark.readStream.schema("k string, ts timestamp").parquet(
-            staged + "/*"
-        )
-        counts = (
-            stream.withWatermark("ts", "30 minutes")
-            .groupBy(F.window("ts", "1 hour").alias("win"))
-            .agg(F.count("*").alias("n"))
-            .select(F.col("win.start").alias("win_start"), "n")
-        )
-        drain(
-            counts,
-            lambda df, _bid: emitted.extend(
-                (r.win_start, r.n) for r in df.collect()
-            ),
-            ckpt,
-        )
+        def run_once() -> None:
+            stream = spark.readStream.schema(
+                "k string, ts timestamp"
+            ).parquet(staged + "/*")
+            counts = (
+                stream.withWatermark("ts", "30 minutes")
+                .groupBy(F.window("ts", "1 hour").alias("win"))
+                .agg(F.count("*").alias("n"))
+                .select(F.col("win.start").alias("win_start"), "n")
+            )
+            drain(
+                counts,
+                lambda df, _bid: emitted.extend(
+                    (r.win_start, r.n) for r in df.collect()
+                ),
+                ckpt,
+            )
 
-    run_once()
-    spark.createDataFrame(
-        [("A", at(40)), ("B", at(5))], "k string, ts timestamp"
-    ).coalesce(1).write.parquet(os.path.join(staged, "b2"))
-    run_once()
+        run_once()
+        spark.createDataFrame(
+            [("A", at(40)), ("B", at(5))], "k string, ts timestamp"
+        ).coalesce(1).write.parquet(os.path.join(staged, "b2"))
+        run_once()
     return spark.createDataFrame(emitted, "win_start timestamp, n long")
 
 
@@ -8495,27 +8494,26 @@ def custom_source_stream_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("text").alias("transcript"),
         )
     )
-    out = scratch_dir("sg_dsrc_stream_")
-    ckpt = scratch_dir("sg_dsrc_ck_")
     emitted: list[tuple] = []
+    with scratch_dirs("sg_dsrc_stream_", "sg_dsrc_ck_") as (out, ckpt):
 
-    def run_once() -> None:
-        drain(
-            spark.readStream.format("transcript_text").load(out),
-            lambda df, _bid: emitted.extend(
-                (r.url, r.title, r.body) for r in df.collect()
-            ),
-            ckpt,
+        def run_once() -> None:
+            drain(
+                spark.readStream.format("transcript_text").load(out),
+                lambda df, _bid: emitted.extend(
+                    (r.url, r.title, r.body) for r in df.collect()
+                ),
+                ckpt,
+            )
+
+        write_transcript_files(
+            docs.filter(F.col("doc_id") < 50).drop("doc_id"), out
         )
-
-    write_transcript_files(
-        docs.filter(F.col("doc_id") < 50).drop("doc_id"), out
-    )
-    run_once()
-    write_transcript_files(
-        docs.filter(F.col("doc_id") >= 50).drop("doc_id"), out
-    )
-    run_once()
+        run_once()
+        write_transcript_files(
+            docs.filter(F.col("doc_id") >= 50).drop("doc_id"), out
+        )
+        run_once()
     back = spark.createDataFrame(
         emitted, "url string, title string, body string"
     )
@@ -8554,30 +8552,29 @@ def stream_update_mode_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ensure_utc(spark)
     ev = _t(spark, sf_dir, "events").select("event_id", "event_type")
-    staged = scratch_dir("sg_upd_")
-    for i in range(4):
-        ev.filter(F.pmod(F.col("event_id"), F.lit(4)) == i).coalesce(
-            1
-        ).write.parquet(os.path.join(staged, f"b{i}"))
-    stream = spark.readStream.schema("event_id long, event_type string").option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(staged + "/*")
-    counts = stream.groupBy("event_type").agg(F.count("*").alias("n"))
-    ckpt = scratch_dir("sg_upd_ck_")
     latest: dict[str, tuple[int, int]] = {}
 
     def absorb(df, bid: int) -> None:
         for r in df.collect():
             latest[r.event_type] = (bid, r.n)
 
-    q = (
-        counts.writeStream.outputMode("update")
-        .foreachBatch(absorb)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with scratch_dirs("sg_upd_", "sg_upd_ck_") as (staged, ckpt):
+        for i in range(4):
+            ev.filter(F.pmod(F.col("event_id"), F.lit(4)) == i).coalesce(
+                1
+            ).write.parquet(os.path.join(staged, f"b{i}"))
+        stream = spark.readStream.schema(
+            "event_id long, event_type string"
+        ).option("maxFilesPerTrigger", "1").parquet(staged + "/*")
+        counts = stream.groupBy("event_type").agg(F.count("*").alias("n"))
+        q = (
+            counts.writeStream.outputMode("update")
+            .foreachBatch(absorb)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     rows = [(k, v[1]) for k, v in latest.items()]
     return spark.createDataFrame(rows, "event_type string, n long")
 
@@ -15836,14 +15833,13 @@ def store_compaction_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_graph_ann.py, tests/test_streaming_dedup.py). Ref:
     parity N/A (§2.12); the store lifecycle completes the reference's
     keyed-delete loop (main_scraper.py:164-167) at store scale."""
-    import os as _os
-
     from .streaming.ann import (
         compact_ivf_store,
         read_ivf_store,
         run_ivf_delete_stream,
         run_ivf_ingest_stream,
     )
+    from .streaming.store import log_dirs
 
     ensure_utc(spark)
     e = _t(spark, sf_dir, "embeddings")
@@ -15861,9 +15857,7 @@ def store_compaction_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     with staged_stream(deleted, 2) as (del_updates, ckpt):
         run_ivf_delete_stream(del_updates, index_root, ckpt)
     compact_ivf_store(spark, index_root)
-    logs_gone = not any(
-        d.startswith(("b_", "d_")) for d in _os.listdir(index_root)
-    )
+    logs_gone = not log_dirs(index_root)
     compacted = read_ivf_store(spark, index_root).localCheckpoint(
         eager=True
     )

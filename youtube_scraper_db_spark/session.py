@@ -10,8 +10,10 @@ tasks).
 from __future__ import annotations
 
 import os
+import time
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -70,3 +72,28 @@ def ensure_utc(spark: SparkSession) -> SparkSession:
     if spark.conf.get("spark.sql.session.timeZone", None) != "UTC":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark
+
+
+def drop_cached_state(spark: SparkSession) -> None:
+    """Unpersist every cached table and RDD. Queries persist
+    intermediates (shingle indexes, CC localCheckpoints) whose lifetime
+    outlives the action; left in place they pile up across a timing run
+    and make later timings measure block-manager/GC pressure instead of
+    the plan."""
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist()
+
+
+def time_noop_run(
+    spark: SparkSession,
+    query: Callable[[SparkSession, str], DataFrame],
+    sf_dir: str,
+) -> float:
+    """Wall seconds to build ``query(spark, sf_dir)`` and run it through
+    the noop sink, after ``drop_cached_state``. Building is timed too:
+    stream and artifact gates do their work while building the frame."""
+    drop_cached_state(spark)
+    t0 = time.time()
+    query(spark, sf_dir).write.mode("overwrite").format("noop").save()
+    return time.time() - t0

@@ -16,13 +16,8 @@ assignment pass over the batch (broadcast centroids, zero shuffle) plus
 the batch-sized append; the historical corpus is never re-read or
 re-assigned.
 
-Restart/replay contract (foreachBatch is at-least-once): every batch
-writes its assigned rows to its OWN ``b_{batch_id}`` subdirectory in
-OVERWRITE mode (the streaming/dedup.py log-structured device), so a
-crash-replayed batch rewrites the same deterministic rows instead of
-appending duplicates; store presence is derived from the directories
-on disk, so a rerun against the same checkpoint resumes against the
-full prior index.
+The inverted lists are a log-structured store: insert and tombstone
+logs, replay, compaction and reads follow streaming/store.py.
 """
 
 from __future__ import annotations
@@ -33,33 +28,17 @@ from pyspark.sql import DataFrame
 
 from ..llm.similarity import ivf_index
 from .drain import drain
+from .store import commit_baseline, read_live, write_log
 
 _INDEX_SCHEMA = "vec_id long, v array<double>, vn double, cluster long"
-_TOMB_SCHEMA = "vec_id long"
 
 
 def read_ivf_store(spark, index_root: str) -> DataFrame:
-    """Current IVF index state: the newest compacted baseline (if any)
-    plus the ``b_*`` insert logs it has not consumed, anti-joined
-    against the live ``d_*`` tombstone logs — the log-structured delete
-    (``run_ivf_delete_stream``) with the compaction protocol's consumed
-    set applied (streaming/store.py). The anti-join is id-keyed and the
-    tombstone side is the small one (broadcast), so reading the store
+    """Current IVF index state: the store's live rows
+    (streaming/store.py ``read_live``), tombstones keyed on ``vec_id``.
+    The anti-join's tombstone side is broadcast, so reading the store
     stays a scan + broadcast filter at any corpus size."""
-    from pyspark.sql import functions as F
-
-    from .store import active_baseline, live_log_dirs
-
-    base, _ = active_baseline(index_root)
-    ins = ([base] if base else []) + live_log_dirs(index_root, "b_")
-    if not ins:
-        return spark.createDataFrame([], _INDEX_SCHEMA)
-    rows = spark.read.schema(_INDEX_SCHEMA).parquet(*ins)
-    dels = live_log_dirs(index_root, "d_")
-    if dels:
-        tombs = spark.read.schema(_TOMB_SCHEMA).parquet(*dels)
-        rows = rows.join(F.broadcast(tombs), "vec_id", "left_anti")
-    return rows
+    return read_live(spark, index_root, _INDEX_SCHEMA, ("vec_id",))
 
 
 def compact_ivf_store(spark, index_root: str) -> str:
@@ -69,8 +48,6 @@ def compact_ivf_store(spark, index_root: str) -> str:
     as the ingest/delete streams run on (streaming/store.py protocol;
     ``test_graph_ann`` pins live-view equality across it). Quiesced by
     contract, like any LSM compaction."""
-    from .store import commit_baseline
-
     return commit_baseline(index_root, read_ivf_store(spark, index_root))
 
 
@@ -81,29 +58,20 @@ def run_ivf_delete_stream(
     id_col: str = "vec_id",
 ) -> DataFrame:
     """Drain a stream of DELETED vector ids into the IVF store's
-    tombstone log: each micro-batch writes its ids to its own
-    ``d_{batch_id}`` directory (overwrite — the replay-idempotent
-    log-structured device), and every store read anti-joins them out
-    (``read_ivf_store``). Assignment is per-row pure, so dropping a row
-    from the lists IS the rebuild-without-row (``stream_ivf_delete_equiv``
-    gates fold-with-delete ≡ rebuild-without). Contract: ids are not
-    re-ingested after deletion — a tombstone suppresses the id across
-    ALL insert logs (no per-id version sequence by design; embedding
-    stores treat vector ids as immutable). Returns the post-delete
+    tombstone log (streaming/store.py), and every store read anti-joins
+    them out (``read_ivf_store``). Assignment is per-row pure, so
+    dropping a row from the lists IS the rebuild-without-row
+    (``stream_ivf_delete_equiv`` gates fold-with-delete ≡
+    rebuild-without). Ids are not re-ingested after deletion (no per-id
+    version sequence by design; embedding stores treat vector ids as
+    immutable). Returns the post-delete
     index read back from the store."""
     from pyspark.sql import functions as F
 
-    from .store import log_dir_name
-
-    os.makedirs(index_root, exist_ok=True)
-
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.select(F.col(id_col).alias("vec_id")).write.mode(
-            "overwrite"
-        ).parquet(
-            os.path.join(
-                index_root, log_dir_name(index_root, "d_", batch_id)
-            )
+        write_log(
+            batch_df.select(F.col(id_col).alias("vec_id")),
+            index_root, batch_id, tomb=True,
         )
 
     drain(del_updates, apply_batch, checkpoint)
@@ -124,10 +92,7 @@ def run_ivf_ingest_stream(
     Returns the drained index read back from the store —
     ``(vec_id, v, vn, cluster)``, directly searchable by
     ``llm.similarity.ivf_search_index``."""
-    from .store import log_dir_name
-
     spark = emb_updates.sparkSession
-    os.makedirs(index_root, exist_ok=True)
     # freeze the centroid rows driver-side once: foreachBatch re-executes
     # its closure per batch, and a lazy centroid plan would re-read the
     # dim table every micro-batch
@@ -135,11 +100,7 @@ def run_ivf_ingest_stream(
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         assigned = ivf_index(batch_df, cdf, id_col=id_col, vec_col=vec_col)
-        assigned.write.mode("overwrite").parquet(
-            os.path.join(
-                index_root, log_dir_name(index_root, "b_", batch_id)
-            )
-        )
+        write_log(assigned, index_root, batch_id)
 
     drain(emb_updates, apply_batch, checkpoint)
     return read_ivf_store(spark, index_root)
@@ -169,104 +130,24 @@ def _touched_pred(touched_pairs: list[tuple[str, int]]):
     return pred
 
 
-def _read_cell_members(
-    spark, vector_dirs: list[str], touched_pairs: list[tuple[str, int]]
-) -> DataFrame:
-    """Read ONLY the touched-cell partitions of the (fam, bk)-partitioned
-    vector log — the plan's PartitionFilters prune every other cell
-    directory, so per-batch I/O is ∝ touched-cell population, never the
-    corpus (tests/test_graph_ann.py asserts inputFiles() stays inside
-    the touched cells). Each ``b_*`` root is read separately then
-    unioned (partition discovery rejects multiple roots); the pruning
-    predicate applies per reader."""
-    pred = _touched_pred(touched_pairs)
-    parts = [
-        spark.read.schema(_CELL_SCHEMA).parquet(d).where(pred)
-        for d in vector_dirs
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
 def _live_members(
     spark,
     vec_dir: str,
-    touched_pairs: list[tuple[str, int]],
-    extra: DataFrame | None = None,
-    extra_tombs: DataFrame | None = None,
-    exclude_ins: str | None = None,
-    exclude_del: str | None = None,
+    touched_pairs: list[tuple[str, int]] | None = None,
+    **inflight,
 ) -> DataFrame:
-    """Touched cells' LIVE membership: pruned insert-log read (plus the
-    in-flight batch's rows) anti-joined against the pruned tombstone
-    logs (plus the in-flight delete batch). Both sides read only the
-    touched-cell partitions."""
-    from pyspark.sql import functions as F
-
-    from .store import active_baseline, live_log_dirs
-
-    base, _ = active_baseline(vec_dir)
-    ins_dirs = ([base] if base else []) + live_log_dirs(
-        vec_dir, "b_", exclude=exclude_ins
+    """The vector log's LIVE membership (streaming/store.py
+    ``read_live``), tombstones keyed on the cell and id. Given touched
+    cells, every log scan reads ONLY their partitions — the plan's
+    PartitionFilters prune every other cell directory, so per-batch I/O
+    is ∝ touched-cell population, never the corpus (tests/test_graph_ann.py
+    asserts inputFiles() stays inside the touched cells). ``inflight``
+    passes the in-flight batch's rows and own log through."""
+    where = None if touched_pairs is None else _touched_pred(touched_pairs)
+    return read_live(
+        spark, vec_dir, _CELL_SCHEMA, ("fam", "bk", "nid"), where=where,
+        **inflight,
     )
-    members = None
-    if ins_dirs:
-        members = _read_cell_members(spark, ins_dirs, touched_pairs)
-    if extra is not None:
-        members = extra if members is None else members.unionByName(
-            extra.select(*members.columns)
-        )
-    if members is None:
-        return spark.createDataFrame([], _CELL_SCHEMA)
-    tombs = None
-    del_dirs = live_log_dirs(vec_dir, "d_", exclude=exclude_del)
-    if del_dirs:
-        tombs = _read_cell_members(spark, del_dirs, touched_pairs)
-    if extra_tombs is not None:
-        tombs = extra_tombs if tombs is None else tombs.unionByName(
-            extra_tombs.select(*tombs.columns)
-        )
-    if tombs is not None:
-        members = members.join(
-            F.broadcast(tombs.select("fam", "bk", "nid").distinct()),
-            ["fam", "bk", "nid"],
-            "left_anti",
-        )
-    return members
-
-
-def _all_live_members(spark, vec_dir: str) -> DataFrame:
-    """The vector log's FULL live membership (no cell restriction) —
-    compaction's input: baseline + live insert logs, anti-joined
-    against the live tombstone logs on (fam, bk, nid)."""
-    from pyspark.sql import functions as F
-
-    from .store import active_baseline, live_log_dirs
-
-    base, _ = active_baseline(vec_dir)
-    ins_dirs = ([base] if base else []) + live_log_dirs(vec_dir, "b_")
-    if not ins_dirs:
-        return spark.createDataFrame([], _CELL_SCHEMA)
-    members = spark.read.schema(_CELL_SCHEMA).parquet(ins_dirs[0])
-    for d in ins_dirs[1:]:
-        members = members.unionByName(
-            spark.read.schema(_CELL_SCHEMA).parquet(d)
-        )
-    del_dirs = live_log_dirs(vec_dir, "d_")
-    if del_dirs:
-        tombs = spark.read.schema(_CELL_SCHEMA).parquet(del_dirs[0])
-        for d in del_dirs[1:]:
-            tombs = tombs.unionByName(
-                spark.read.schema(_CELL_SCHEMA).parquet(d)
-            )
-        members = members.join(
-            F.broadcast(tombs.select("fam", "bk", "nid").distinct()),
-            ["fam", "bk", "nid"],
-            "left_anti",
-        )
-    return members
 
 
 def compact_nsw_store(spark, index_root: str) -> str:
@@ -276,14 +157,10 @@ def compact_nsw_store(spark, index_root: str) -> str:
     (it is already ONE dynamically-overwritten partitioned table);
     subsequent ingest/delete batches fold on top of the baseline via
     the same pruned touched-cell reads."""
-    from .store import commit_baseline
-
     vec_dir = os.path.join(index_root, "vectors")
     return commit_baseline(
         vec_dir,
-        _all_live_members(spark, vec_dir).select(
-            "nid", "nv", "nn", "fam", "bk"
-        ),
+        _live_members(spark, vec_dir).select("nid", "nv", "nn", "fam", "bk"),
         partition_by=["fam", "bk"],
     )
 
@@ -320,7 +197,7 @@ def run_nsw_ingest_stream(
     it lands in — the graph twin of the log-structured LSH/IVF ingest,
     with replacement instead of append. Two state tables:
 
-    - ``vectors/b_{batch_id}``: the batch's membership rows in the
+    - the ``vectors/`` insert log: the batch's membership rows in the
       CELL-PARTITIONED ``nsw_cell_rows`` layout — each vector written
       once per family under ``fam=…/bk=…`` (r12 VERDICT "What's wrong
       #2": the first cut stored plain bucketed rows batch-keyed, so
@@ -332,10 +209,9 @@ def run_nsw_ingest_stream(
       dynamic-partition-overwritten whenever a batch lands in the cell;
       cells are sized by the plane-count knob.
 
-    Replay contract (foreachBatch is at-least-once): both writes are
-    deterministic functions of (prior vectors ∪ batch), so a crash-
-    replayed batch rewrites identical rows — a torn cell directory
-    self-heals on the replay's overwrite.
+    Replay contract: both writes are deterministic functions of (prior
+    vectors ∪ batch), so a crash-replayed batch rewrites identical rows
+    — a torn cell directory self-heals on the replay's overwrite.
 
     Append-only invariant (r12 ADVICE): the dynamic overwrite only
     rewrites partitions PRESENT in the recompute output, which is
@@ -355,7 +231,6 @@ def run_nsw_ingest_stream(
         nsw_cell_edges,
         nsw_cell_rows,
     )
-    from .store import log_dir_name
 
     spark = emb_updates.sparkSession
     planes = n_planes if n_planes is not None else N_PLANES
@@ -380,10 +255,9 @@ def run_nsw_ingest_stream(
             (r["fam"], r["bk"])
             for r in cells_b.select("fam", "bk").distinct().collect()
         )
-        own = log_dir_name(vec_dir, "b_", batch_id)
         members = _live_members(
             spark, vec_dir, touched_pairs, extra=cells_b,
-            exclude_ins=own,
+            own_insert=batch_id,
         )
         recomputed = nsw_cell_edges(members, m_neighbors)
         # ONE dynamic-partition overwrite replaces exactly the touched
@@ -395,9 +269,7 @@ def run_nsw_ingest_stream(
         recomputed.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
         ).partitionBy("fam", "bk").parquet(edge_dir)
-        cells_b.write.mode("overwrite").partitionBy("fam", "bk").parquet(
-            os.path.join(vec_dir, own)
-        )
+        write_log(cells_b, vec_dir, batch_id, partition_by=["fam", "bk"])
 
     drain(emb_updates, apply_batch, checkpoint)
     return read_nsw_store(spark, index_root)
@@ -437,8 +309,8 @@ def run_nsw_delete_stream(
 ) -> DataFrame:
     """Drain a stream of DELETED vectors out of the NSW cell store: a
     delete is a membership change, so each micro-batch tombstones its
-    rows in the vector log (cell-partitioned ``vectors/d_{batch_id}``,
-    the insert log's mirror) and recomputes its touched cells over the
+    rows in the vector log's cell-partitioned tombstone log (the insert
+    log's mirror) and recomputes its touched cells over the
     REMAINING live members — ``llm.graph_ann.nsw_apply_deletes``
     applied over time. Cells whose recompute comes back EMPTY (the
     batch deleted their last members) are purged explicitly
@@ -465,7 +337,6 @@ def run_nsw_delete_stream(
         nsw_cell_edges,
         nsw_cell_rows,
     )
-    from .store import log_dir_name
 
     spark = del_updates.sparkSession
     planes = n_planes if n_planes is not None else N_PLANES
@@ -485,10 +356,9 @@ def run_nsw_delete_stream(
         )
         if not touched_pairs:
             return
-        own = log_dir_name(vec_dir, "d_", batch_id)
         members = _live_members(
             spark, vec_dir, touched_pairs, extra_tombs=cells_d,
-            exclude_del=own,
+            own_tomb=batch_id,
         )
         recomputed = nsw_cell_edges(members, m_neighbors).localCheckpoint(
             eager=True
@@ -503,8 +373,8 @@ def run_nsw_delete_stream(
         _purge_cells(
             edge_dir, [c for c in touched_pairs if c not in live_pairs]
         )
-        cells_d.write.mode("overwrite").partitionBy("fam", "bk").parquet(
-            os.path.join(vec_dir, own)
+        write_log(
+            cells_d, vec_dir, batch_id, tomb=True, partition_by=["fam", "bk"]
         )
 
     drain(del_updates, apply_batch, checkpoint)

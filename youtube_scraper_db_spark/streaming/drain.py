@@ -1,11 +1,11 @@
 """Scratch directories and the replay-stream drain shared by the stream
 runners and the registry gates.
 
-Staging and checkpoint dirs die with the ``staged_stream`` ``with``
-block. Every other scratch dir (archive, table and index roots, output
-dirs) lives under one per-process root that is removed when the process
-exits, because returned plans may read their roots lazily after the
-query function has returned.
+Staging and checkpoint dirs die with the ``staged_stream`` or
+``scratch_dirs`` ``with`` block. Every other scratch dir (archive,
+table and index roots, output dirs) lives under one per-process root
+that is removed when the process exits, because returned plans may read
+their roots lazily after the query function has returned.
 """
 
 from __future__ import annotations
@@ -39,6 +39,18 @@ def scratch_dir(prefix: str) -> str:
 
 
 @contextmanager
+def scratch_dirs(*prefixes: str) -> Iterator[list[str]]:
+    """Fresh scratch dirs, one per prefix, removed on exit, also when
+    the body raises — for dirs nothing reads after the ``with``."""
+    dirs = [scratch_dir(p) for p in prefixes]
+    try:
+        yield dirs
+    finally:
+        for d in dirs:
+            shutil.rmtree(d, ignore_errors=True)
+
+
+@contextmanager
 def staged_stream(
     df: DataFrame, batches: int
 ) -> Iterator[tuple[DataFrame, str]]:
@@ -46,9 +58,7 @@ def staged_stream(
     checkpoint_dir)``: a file stream that replays them one file per
     micro-batch, and an empty checkpoint dir. Both dirs are removed on
     exit, also when the body raises."""
-    staged = scratch_dir("sg_stage_")
-    checkpoint = scratch_dir("sg_ckpt_")
-    try:
+    with scratch_dirs("sg_stage_", "sg_ckpt_") as (staged, checkpoint):
         df.repartition(batches).write.mode("overwrite").parquet(staged)
         stream = (
             df.sparkSession.readStream.schema(df.schema)
@@ -56,9 +66,6 @@ def staged_stream(
             .parquet(staged)
         )
         yield stream, checkpoint
-    finally:
-        shutil.rmtree(staged, ignore_errors=True)
-        shutil.rmtree(checkpoint, ignore_errors=True)
 
 
 def drain(

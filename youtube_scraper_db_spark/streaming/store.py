@@ -1,12 +1,46 @@
-"""Log-structured store COMPACTION — the lifecycle step that keeps the
-streaming index stores (IVF inverted lists, LSH sigs/bands, the NSW
-cell-partitioned vector log) bounded: ingest appends ``b_*`` insert
-logs, deletion appends ``d_*`` tombstone logs (streaming/ann.py,
-streaming/dedup.py), and without compaction both grow without bound —
-every read pays one anti-join per tombstone log and the file listing
-grows with stream lifetime. Compaction rewrites the LIVE view (inserts
-minus tombstones) as a single committed BASELINE and garbage-collects
-the logs it consumed.
+"""Log-structured index stores — the one owner of the log protocol that
+the streaming IVF inverted lists, the NSW cell-partitioned vector log
+and the LSH sigs/bands/pairs tables share (streaming/ann.py,
+streaming/dedup.py). The families pass their schema, key columns and
+any read predicate; this module names, lists, reads and compacts the
+logs.
+
+Logs (``write_log``): each ingest micro-batch overwrites its OWN insert
+log directory ``b_{batch_id}`` under the table root, each delete
+micro-batch its own tombstone log ``d_{batch_id}``. Overwrite, not
+append: foreachBatch is at-least-once, so a replayed batch rewrites the
+same deterministic rows instead of duplicating them.
+
+Generations: once a table has a compacted baseline (below), its log
+names carry the baseline's version (``b_g2_0``), so a fresh
+checkpoint's restarting batch ids can never collide with a name the
+baseline's manifest already lists as consumed — such a batch would be
+invisible to every reader. Tables never compacted keep the bare
+``b_N``/``d_N`` names.
+
+One checkpoint per log prefix per generation: batch ids name the logs,
+so a second checkpoint draining into the same prefix restarts at batch
+0 and rewrites the first one's logs. Incremental ingest resumes the same
+checkpoint; a fresh one starts after a compaction.
+
+Reads (``read_live``): a reader sees the active baseline plus the insert
+logs it has not consumed. On replay, the in-flight batch's own log
+directory is left out: it may already hold the crashed attempt's rows,
+and a batch must never read (or pair with) itself. Tombstones apply as
+a left-anti join on the family's key against the unconsumed tombstone
+logs, with the tombstone side broadcast (it is the small side by
+construction). Partitioned logs (NSW's ``fam=/bk=`` layout) are read
+one directory at a time and unioned, because partition discovery
+rejects several roots; unpartitioned logs are read in one scan. A store
+with no rows reads as an empty frame of the family's schema. Contract:
+ids are not re-ingested after deletion — a tombstone suppresses its key
+across all insert logs.
+
+Compaction (``commit_baseline``) keeps the stores bounded: without it
+both log kinds grow without bound — every read pays one anti-join per
+tombstone log and the file listing grows with stream lifetime.
+Compaction rewrites the LIVE view (inserts minus tombstones) as a
+single committed BASELINE and garbage-collects the logs it consumed.
 
 Crash-safe commit protocol (versioned.py's naming and commit marker,
 extended with a consumed-log manifest):
@@ -28,8 +62,7 @@ extended with a consumed-log manifest):
 Deletes stay correct through compaction because readers apply
 tombstones ONLY from non-consumed logs: the baseline already has the
 consumed tombstones physically applied, and the no-id-reuse contract
-(streaming/ann.py, streaming/dedup.py) means a tombstone never needs to
-outlive the rows it suppressed.
+means a tombstone never needs to outlive the rows it suppressed.
 """
 
 from __future__ import annotations
@@ -38,10 +71,15 @@ import json
 import os
 import shutil
 import tempfile
+from functools import reduce
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from .versioned import is_committed, versions
 
 _BASE_PREFIX = "base_v"
+_INSERT, _TOMB = "b_", "d_"
 #: leading underscore: Hadoop/Spark input listings skip _-prefixed
 #: files (the _SUCCESS convention), so the manifest never reads as data
 _MANIFEST = "_compaction_manifest.json"
@@ -51,7 +89,7 @@ def _baseline_dirs(root: str) -> list[tuple[int, str]]:
     return versions(os.path.join(root, _BASE_PREFIX))
 
 
-def active_baseline(root: str) -> tuple[str | None, set[str]]:
+def _active_baseline(root: str) -> tuple[str | None, set[str]]:
     """(path, consumed-log-names) of the newest ACTIVE baseline —
     committed and carrying its manifest — or (None, set())."""
     for _, path in reversed(_baseline_dirs(root)):
@@ -61,38 +99,107 @@ def active_baseline(root: str) -> tuple[str | None, set[str]]:
     return None, set()
 
 
-def live_log_dirs(
-    root: str, prefix: str, exclude: str | None = None
-) -> list[str]:
-    """The ``{prefix}*`` log directories NOT consumed by the active
-    baseline — what a reader folds on top of it. ``exclude`` skips the
-    in-flight batch's own directory BY NAME (the foreachBatch replay
-    device; callers get the name from ``log_dir_name``)."""
+def log_dirs(root: str) -> list[str]:
+    """Names of every insert and tombstone log directory under
+    ``root``, consumed or not."""
     if not os.path.isdir(root):
         return []
-    _, consumed = active_baseline(root)
     return sorted(
-        os.path.join(root, d)
-        for d in os.listdir(root)
-        if d.startswith(prefix) and d != exclude and d not in consumed
+        d for d in os.listdir(root) if d.startswith((_INSERT, _TOMB))
     )
 
 
-def log_dir_name(root: str, prefix: str, batch_id: int) -> str:
-    """Generation-qualified log directory name for a micro-batch write:
-    logs written after a compaction carry the active baseline's version
-    (``b_g2_0``), so a fresh checkpoint's restarting batch ids can
-    never collide with names an earlier generation's manifest already
-    consumed — a collision would make the new batch invisible to every
-    reader. Generation 0 keeps the legacy bare names (``b_0``) so
-    pre-compaction stores are unchanged."""
-    base, _ = active_baseline(root)
+def _log_dir_name(root: str, prefix: str, batch_id: int) -> str:
+    base, _ = _active_baseline(root)
     gen = (
         0
         if base is None
         else int(os.path.basename(base)[len(_BASE_PREFIX):])
     )
     return f"{prefix}g{gen}_{batch_id}" if gen else f"{prefix}{batch_id}"
+
+
+def _live_log_dirs(root: str, prefix: str, own: int | None) -> list[str]:
+    """The ``{prefix}*`` logs the active baseline has not consumed,
+    without batch ``own``'s directory."""
+    _, skip = _active_baseline(root)
+    if own is not None:
+        skip.add(_log_dir_name(root, prefix, own))
+    return [
+        os.path.join(root, d)
+        for d in log_dirs(root)
+        if d.startswith(prefix) and d not in skip
+    ]
+
+
+def _write(df: DataFrame, path: str, partition_by: list[str] | None) -> None:
+    writer = df.write.mode("overwrite")
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.parquet(path)
+
+
+def write_log(
+    df: DataFrame,
+    root: str,
+    batch_id: int,
+    tomb: bool = False,
+    partition_by: list[str] | None = None,
+) -> None:
+    """Overwrite micro-batch ``batch_id``'s own insert log under
+    ``root`` (its tombstone log if ``tomb``)."""
+    name = _log_dir_name(root, _TOMB if tomb else _INSERT, batch_id)
+    _write(df, os.path.join(root, name), partition_by)
+
+
+def _read(spark, dirs: list[str], schema: str, where) -> DataFrame | None:
+    if not dirs:
+        return None
+    partitioned = any("=" in e for d in dirs for e in os.listdir(d))
+    groups = [[d] for d in dirs] if partitioned else [dirs]
+    parts = [spark.read.schema(schema).parquet(*g) for g in groups]
+    if where is not None:
+        parts = [p.where(where) for p in parts]
+    return reduce(DataFrame.unionByName, parts)
+
+
+def _union(a: DataFrame | None, b: DataFrame | None) -> DataFrame | None:
+    if a is None or b is None:
+        return a if b is None else b
+    return a.unionByName(b.select(*a.columns))
+
+
+def read_live(
+    spark,
+    root: str,
+    schema: str,
+    key: tuple[str, ...],
+    tomb_root: str | None = None,
+    where=None,
+    own_insert: int | None = None,
+    own_tomb: int | None = None,
+    extra: DataFrame | None = None,
+    extra_tombs: DataFrame | None = None,
+) -> DataFrame:
+    """The table's LIVE rows: the active baseline plus its unconsumed
+    insert logs (and ``extra``, the in-flight batch's rows), anti-joined
+    on ``key`` against the unconsumed tombstone logs under ``tomb_root``
+    (default ``root``) plus ``extra_tombs``. ``where`` filters every log
+    scan (a partition predicate prunes directories); ``own_insert`` /
+    ``own_tomb`` name the in-flight batch whose own insert / tombstone
+    log is left out."""
+    base, _ = _active_baseline(root)
+    ins = ([base] if base else []) + _live_log_dirs(root, _INSERT, own_insert)
+    rows = _union(_read(spark, ins, schema, where), extra)
+    if rows is None:
+        # limit(0) plans as an empty LocalRelation, so a join or union
+        # against an empty store folds away instead of running jobs
+        return spark.createDataFrame([], schema).limit(0)
+    dels = _live_log_dirs(tomb_root or root, _TOMB, own_tomb)
+    tombs = _union(_read(spark, dels, schema, where), extra_tombs)
+    if tombs is None:
+        return rows
+    return rows.join(F.broadcast(tombs.select(*key)), list(key), "left_anti")
 
 
 def commit_baseline(
@@ -111,17 +218,9 @@ def commit_baseline(
     # consumes; logs appended concurrently would be silently lost, so
     # compaction is a quiesced maintenance step by contract (as it is
     # for every LSM store)
-    _, already = active_baseline(root)
-    consumed = sorted(
-        d
-        for d in os.listdir(root)
-        if (d.startswith("b_") or d.startswith("d_"))
-        and d not in already
-    )
-    writer = live_df.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(target)
+    _, already = _active_baseline(root)
+    consumed = [d for d in log_dirs(root) if d not in already]
+    _write(live_df, target, partition_by)
     # atomic manifest publish: tmp file + os.replace (the tmp name is
     # _-prefixed too, so a crash mid-publish never leaves a stray file
     # that Spark would list as data)
@@ -136,7 +235,7 @@ def commit_baseline(
 def gc_consumed(root: str) -> None:
     """Delete every log the active baseline consumed and every
     superseded baseline. Idempotent."""
-    active, consumed = active_baseline(root)
+    active, consumed = _active_baseline(root)
     if active is None:
         return
     for d in consumed:
