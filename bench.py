@@ -17,7 +17,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from youtube_scraper_db_spark.registry import REGISTRY  # noqa: E402
-from youtube_scraper_db_spark.session import get_spark, time_noop_run  # noqa: E402
+from youtube_scraper_db_spark.session import get_spark, time_noop_run, warm_up  # noqa: E402
 
 #: headline queries — the scan/shuffle/window-heavy subset of the registry,
 #: plus the LLM-pipeline operators (dedup/similarity/text) so their
@@ -322,13 +322,7 @@ def main() -> None:
     specs = {s.name: s for s in REGISTRY}
     names = [n for n in HEADLINE if n in specs]
 
-    # warmup: spin the JVM, parquet footer caches AND the C2 JIT on the
-    # heavy codegen paths — the dedup pipeline's generated classes take
-    # 2-3 executions to reach steady state, and an under-warmed first
-    # pass otherwise reports compiler time as plan time (measured: the
-    # same CC query 10.1s → 6.5s → 3.5s over three back-to-back runs).
-    for w in ("top_suppliers", "minhash_lsh_dups", "near_dup_clusters"):
-        specs[w].fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
+    warm_up(spark, specs, sf_dir)
 
     reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3"))
     calib = _calibrate(spark, reps)

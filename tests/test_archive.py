@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import contextlib
 import json
 
 import pytest
@@ -30,6 +31,25 @@ alpha beta plain
 @pytest.fixture()
 def archive(spark, tmp_path):
     return Archive.create(spark, str(tmp_path / "db"))
+
+
+@contextlib.contextmanager
+def jobs_started(spark):
+    """Yield a list that holds, after the block, the ids of the Spark
+    jobs the block started (through its own job group)."""
+    sc = spark.sparkContext
+    group = "test-archive-jobs-started"
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job-start events are async
+    before = set(sc.statusTracker().getJobIdsForGroup(group))
+    started: list[int] = []
+    sc.setJobGroup(group, group, interruptOnCancel=False)
+    try:
+        yield started
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        started.extend(set(sc.statusTracker().getJobIdsForGroup(group)) - before)
 
 
 def test_archive_lifecycle(spark, archive, tmp_path):
@@ -254,3 +274,52 @@ def test_save_table_versioned_roundtrip(spark, archive):
     assert archive.table("bpe_model").agg(
         F.sum("pair_count")
     ).first()[0] == 17
+
+
+def _notes(spark, *keys):
+    return spark.createDataFrame([(k,) for k in keys], "k int")
+
+
+def test_table_reuses_frame_of_unchanged_version(spark, archive):
+    archive.commit("notes", _notes(spark, 1, 2))
+    first = archive.table("notes")
+    with jobs_started(spark) as started:
+        again = archive.table("notes")
+    assert again is first
+    assert started == []  # no listing or schema-inference job
+    assert sorted(r.k for r in again.collect()) == [1, 2]
+
+
+def test_table_reads_own_commit(spark, archive):
+    archive.commit("notes", _notes(spark, 1))
+    assert [r.k for r in archive.table("notes").collect()] == [1]
+    archive.commit("notes", _notes(spark, 7, 8))
+    assert sorted(r.k for r in archive.table("notes").collect()) == [7, 8]
+
+
+def test_table_sees_rewritten_version_dir_of_other_handle(spark, archive):
+    """Rollback then commit rewrites the same ``.v<N>`` path: a frame
+    cached on the version number would name deleted files."""
+    archive.commit("notes", _notes(spark, 1))
+    assert archive.commit("notes", _notes(spark, 2)) == 2
+    assert [r.k for r in archive.table("notes").collect()] == [2]
+    other = Archive(spark, archive.root)
+    other.rollback("notes")
+    assert other.commit("notes", _notes(spark, 3, 4)) == 2
+    assert sorted(r.k for r in archive.table("notes").collect()) == [3, 4]
+
+
+def test_stats_builds_without_a_job(spark, archive):
+    archive.stats()  # reads the four tables once
+    with jobs_started(spark) as started:
+        df = archive.stats()
+    assert started == []
+    assert df.dtypes == [
+        ("total_videos", "bigint"), ("last_update", "timestamp"),
+        ("total_playlists", "bigint"), ("total_transcripts", "bigint"),
+        ("cross_linked_videos", "bigint"),
+    ]
+    assert df.collect()[0].asDict() == {
+        "total_videos": 0, "last_update": None, "total_playlists": 0,
+        "total_transcripts": 0, "cross_linked_videos": 0,
+    }

@@ -6,8 +6,9 @@ Usage:
     python tools/opt_profile.py [--sf DIR] [--reps N] [--explain OUTDIR]
                                 [--suffix _before] name [name ...]
 
-Timing matches bench.py: per query, clear cached state, run the plan via
-the noop sink, keep the min over reps. Explain output goes to
+Timing matches bench.py: one untimed warm-up (``session.warm_up``), then
+per query, clear cached state, run the plan via the noop sink, keep the
+min over reps. Explain output goes to
 OUTDIR/<name><suffix>.txt (building a gate's DataFrame may itself run
 its scaffolding — streams, localCheckpoints — so --explain costs about
 one extra run per query).
@@ -26,6 +27,7 @@ from youtube_scraper_db_spark.session import (  # noqa: E402
     drop_cached_state,
     get_spark,
     time_noop_run,
+    warm_up,
 )
 
 
@@ -44,6 +46,10 @@ def main() -> int:
     if missing:
         print(f"unknown queries: {missing}", file=sys.stderr)
         return 2
+
+    # untimed, as in bench.py: otherwise rep 0 of the first query pays
+    # the session's JVM and JIT warm-up
+    warm_up(spark, specs, args.sf)
 
     if args.explain:
         os.makedirs(args.explain, exist_ok=True)

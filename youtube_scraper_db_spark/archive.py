@@ -15,6 +15,18 @@ is retained until the NEXT commit, giving one-step ``rollback`` — the
 Spark analog of the reference's per-file transaction + conn.rollback
 (ref add_transcripts.py:199-204, main_scraper.py:169-174). On a real
 cluster the same call sites take a Delta/Iceberg commit instead.
+
+Read rule: one DataFrame per table per committed version directory.
+``table`` reads the pointer file on every call (so commits made by other
+processes and other ``Archive`` handles are seen), then reuses the frame
+it built last time if the current version directory is the same
+directory: same path, inode and mtime (a deleted directory's inode
+number can be reused). Building a frame lists the directory and runs a
+schema-inference job over a parquet footer; the ten browse-page reads
+make 24 ``table`` calls on tables that do not change between them. The
+version number alone is not a safe key: after ``rollback`` the next
+commit rewrites the same ``.v<N>`` path, and a frame listed before that
+names files that no longer exist.
 """
 
 from __future__ import annotations
@@ -42,6 +54,7 @@ class Archive:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        self._frames: dict[str, tuple[tuple, DataFrame]] = {}
 
     # -- storage ---------------------------------------------------------
 
@@ -79,7 +92,20 @@ class Archive:
         return ar
 
     def table(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self._path(name))
+        """The current committed version of ``name``, read once per
+        version directory (module docstring, "Read rule"). The cache key
+        is ``(path, st_ino, st_mtime_ns)`` of that directory; a new key
+        replaces the entry, so frames of superseded versions drop out."""
+        path = self._path(name)
+        try:
+            st = os.stat(path)
+        except FileNotFoundError:
+            return self.spark.read.parquet(path)  # raises PATH_NOT_FOUND
+        key = (path, st.st_ino, st.st_mtime_ns)
+        hit = self._frames.get(name)
+        if hit is None or hit[0] != key:
+            hit = self._frames[name] = (key, self.spark.read.parquet(path))
+        return hit[1]
 
     def _point(self, name: str, version: int) -> None:
         """Atomically repoint the version file at ``version`` (fsync'd
@@ -284,9 +310,10 @@ class Archive:
         """Run ad-hoc Spark SQL with every archive table registered as a
         temp view (the reference's database is an open SQLite file any
         user can point sqlite3 at; this is that capability on the Spark
-        engine). Views re-resolve the CURRENT committed version at call
-        time, so a query never mixes table versions committed after it
-        was registered."""
+        engine). Each call re-registers every view on the table's CURRENT
+        committed version (``table`` re-reads the pointer file), so a
+        query never reads a version older than the last commit before
+        the call."""
         for name in schemas.SCHEMAS:
             self.table(name).createOrReplaceTempView(name)
         return self.spark.sql(query)

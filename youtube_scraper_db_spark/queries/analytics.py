@@ -20,12 +20,13 @@ def summary_stats(
     playlist_videos: DataFrame,
 ) -> DataFrame:
     """A1/A4/A5 dashboard stats (ref display.py:145-193) as one single-row
-    DataFrame: table counts, cross-linked-video count, last-update max."""
+    DataFrame: table counts, cross-linked-video count, last-update max.
+    Four one-row aggregates, cross-joined; building it runs no job."""
     cross = (
         playlist_videos.groupBy("video_id")
         .agg(F.countDistinct("playlist_id").alias("n"))
         .filter(F.col("n") > 1)
-        .count()
+        .agg(F.count("*").alias("cross_linked_videos"))
     )
     return (
         videos.agg(
@@ -34,7 +35,7 @@ def summary_stats(
         )
         .crossJoin(playlists.agg(F.count("*").alias("total_playlists")))
         .crossJoin(transcripts.agg(F.count("*").alias("total_transcripts")))
-        .withColumn("cross_linked_videos", F.lit(cross).cast("long"))
+        .crossJoin(cross)
     )
 
 
