@@ -7,6 +7,7 @@ import hashlib
 
 from pyspark.sql import functions as F
 
+from youtube_scraper_db_spark.functions.portable_hash import km_mix
 from youtube_scraper_db_spark.operators import sketches as S
 
 
@@ -68,7 +69,7 @@ def test_hash_family_matches_python_md5(spark):
     df = spark.createDataFrame([(12345,)], "k long")
     h1c, h2c = S._h1h2(F.col("k"))
     got = df.select(
-        h1c.alias("h1"), h2c.alias("h2"), S._mix(h1c, h2c, 3).alias("m3")
+        h1c.alias("h1"), h2c.alias("h2"), km_mix(h1c, h2c, 3).alias("m3")
     ).first()
     hx = hashlib.md5(b"12345").hexdigest()
     h1 = int(hx[:15], 16)
@@ -358,7 +359,7 @@ def test_grouped_cms_equals_scalar_per_group(spark):
         [("a" if i % 3 else "b", i % 40) for i in range(3000)],
         "g string, k long",
     )
-    grouped = S.cms_counters_grouped(df, "g", "k", depth=4, width=256)
+    grouped = S.cms_counters(df, "k", depth=4, width=256, by=("g",))
     for g in ("a", "b"):
         scalar = S.cms_counters(
             df.where(F.col("g") == g), "k", depth=4, width=256
@@ -369,7 +370,7 @@ def test_grouped_cms_equals_scalar_per_group(spark):
         }
         want = {(r["row"], r["slot"]): r["cnt"] for r in scalar.collect()}
         assert got == want
-    est = S.cms_point_estimates_grouped(df, "g", "k", depth=4, width=256)
+    est = S.cms_point_estimates(df, "k", depth=4, width=256, by=("g",))
     for r in est.collect():
         assert r["overestimate_ok"], r
 
@@ -383,7 +384,7 @@ def test_grouped_bloom_equals_scalar_per_group(spark):
         "g string, k long",
     )
     probe = spark.createDataFrame([(i,) for i in range(400)], "k long")
-    bits = S.bloom_bits_grouped(build, "g", "k", k=5, m_bits=1 << 12)
+    bits = S.bloom_bits(build, "k", k=5, m_bits=1 << 12, by=("g",))
     for g in ("a", "b"):
         scalar = S.bloom_bits(
             build.where(F.col("g") == g), "k", k=5, m_bits=1 << 12
@@ -393,8 +394,8 @@ def test_grouped_bloom_equals_scalar_per_group(spark):
         assert got == want
     rep = {
         r["g"]: r
-        for r in S.bloom_probe_report_grouped(
-            build, "g", "k", probe, "k", k=5, m_bits=1 << 12
+        for r in S.bloom_probe_report(
+            build, "k", probe, "k", k=5, m_bits=1 << 12, by=("g",)
         ).collect()
     }
     for g in ("a", "b"):
@@ -404,3 +405,55 @@ def test_grouped_bloom_equals_scalar_per_group(spark):
         # no false negatives: every present key is maybe-present
         assert r["maybe_present"] >= r["true_present"]
         assert r["false_positives"] == r["maybe_present"] - r["true_present"]
+
+
+def test_grouped_hll_equals_scalar_per_group(spark):
+    """Per-group independence for the grouped HLL: each group's
+    registers equal the scalar registers over that group's rows, and
+    each group's estimate row (estimate, nonzero registers, exact
+    distinct) equals the scalar sketch's one row."""
+    df = spark.createDataFrame(
+        [("a" if i % 3 else "b", i % 700) for i in range(3000)],
+        "g string, k long",
+    )
+    regs = S.hll_registers(df, "k", p=9, by=("g",))
+    est = {r["g"]: r for r in S.hll_estimate(df, "k", p=9, by=("g",)).collect()}
+    assert set(est) == {"a", "b"}
+    for g in ("a", "b"):
+        part = df.where(F.col("g") == g)
+        got = {
+            (r["bucket"], r["rho"])
+            for r in regs.where(F.col("g") == g).collect()
+        }
+        want = {(r["bucket"], r["rho"]) for r in S.hll_registers(part, "k").collect()}
+        assert got == want
+        scalar = S.hll_estimate(part, "k", p=9).first()
+        assert est[g].asDict() == {"g": g, **scalar.asDict()}
+
+
+def test_grouped_histogram_equals_scalar_per_group(spark):
+    """Per-group independence for the grouped histogram: each group's
+    row equals the scalar sketch over that group's rows (per-group
+    edges, counts and rank-pick), and the scalar estimates equal the
+    one-row quantile report's."""
+    df = spark.createDataFrame(
+        [("a" if i % 3 else "b", float((i * 37) % 1000) / 7.0) for i in range(3000)],
+        "g string, v double",
+    )
+    qs = (0.5, 0.9, 0.99)
+    grouped = {
+        r["g"]: r
+        for r in S.histogram_quantiles(df, "v", 64, qs, by=("g",)).collect()
+    }
+    assert set(grouped) == {"a", "b"}
+    for g in ("a", "b"):
+        part = df.where(F.col("g") == g)
+        scalar = S.histogram_quantiles(part, "v", 64, qs).first()
+        assert grouped[g].asDict() == {"g": g, **scalar.asDict()}
+        report = S.histogram_quantile_report(
+            part, "v", split=F.lit(True), bins=64, qs=qs
+        ).first()
+        assert report["n"] == scalar["n_rows"]
+        for tag in ("p5", "p9", "p99"):
+            assert report[f"{tag}_est"] == scalar[f"{tag}_est"]
+            assert report[f"{tag}_in_bin"]

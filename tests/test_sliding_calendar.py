@@ -33,11 +33,12 @@ def test_kmv_width_one_equals_per_leaf_sketch(spark):
     ev = _events(spark)
     leaves = op_kmv.kmv_leaf_sketches(ev, "ts", "user", 8, "day")
     est_w1 = op_kmv.kmv_sliding_estimates(leaves, 8, 1, "day")
-    grouped = op_kmv.kmv_estimate_grouped(
+    grouped = op_kmv.kmv_estimate(
         op_kmv.kmv_sketch_grouped(
             ev.withColumn("d", F.date_trunc("day", "ts")), "d", "user", 8
         ),
         8,
+        by=("g",),
     )
     a = {
         r["wend"]: (r["estimate"], r["sketch_size"], r["kth_hash"])

@@ -179,6 +179,22 @@ def test_log_protocol_owned_by_store_module():
     assert offenders == []
 
 
+def test_md5_half_sql_owned_by_portable_hash():
+    """The DuckDB form of the 60-bit md5 halves lives in
+    ``functions/portable_hash.py`` alone (``md5_halves_sql``): no other
+    package module types the ``substr(md5(…), 1|17, 15))::BIGINT``
+    tail by hand. Other hashes (the 8-hex-char buckets, the 64-bit
+    UBIGINT form, 11-char video ids) are different and stay."""
+    owner = PKG / "functions" / "portable_hash.py"
+    tail = re.compile(r",\s*(1|17),\s*15\)\)::BIGINT")
+    offenders = [
+        str(p.relative_to(REPO))
+        for p in PKG.rglob("*.py")
+        if p != owner and tail.search(p.read_text())
+    ]
+    assert offenders == []
+
+
 def test_gates_returning_driver_rows_leave_no_scratch_dirs(spark):
     """Gates whose result is built from rows collected on the driver
     remove their staging and checkpoint dirs before returning."""

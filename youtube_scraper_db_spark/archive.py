@@ -37,7 +37,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 
 from . import schemas
-from .operators.diffsync import sync_membership
+from .operators.diffsync import sync_scoped_membership
 from .operators.merge import field_update, insert_if_absent, keyed_delete, merge_upsert
 from .queries import analytics, catalog, search
 from .sinks.export_json import write_playlists_json
@@ -204,14 +204,13 @@ class Archive:
 
     def sync_playlist_membership(self, desired_edges: DataFrame) -> None:
         """J8+S11/S12 scoped to the playlists present in ``desired_edges``."""
-        from pyspark.sql import functions as F
-
-        edges = self.table("playlist_videos")
-        touched = desired_edges.select("playlist_id").distinct()
-        in_scope = edges.join(touched, "playlist_id", "left_semi")
-        untouched = edges.join(touched, "playlist_id", "left_anti")
-        synced = sync_membership(in_scope, desired_edges, ["playlist_id", "video_id"])
-        self._commit("playlist_videos", untouched.unionByName(synced))
+        synced = sync_scoped_membership(
+            self.table("playlist_videos"),
+            desired_edges,
+            "playlist_id",
+            ["playlist_id", "video_id"],
+        )
+        self._commit("playlist_videos", synced)
 
     def remove_video_from_playlists(self, video_id: str, playlist_ids: list[str]) -> None:
         """S12 (ref display.py:692-699 Cross-Links delete)."""

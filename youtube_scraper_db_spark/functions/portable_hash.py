@@ -1,19 +1,22 @@
 """The portable md5 hash family — ONE implementation of the
 arithmetic every oracle-replayable hash pipeline shares (MinHash
 signatures and band buckets in llm/dedup.py, the HLL/CMS/Bloom
-sketches in operators/sketches.py).
+sketches in operators/sketches.py, KMV in operators/kmv.py).
 
 ``h1/h2`` are the two 60-bit halves of one md5 digest (hex chars 1-15
-and 17-31 — the same slices as ``('0x' || substr(md5(x), 1, 15))::
-BIGINT`` in DuckDB); seeded variants are Kirsch-Mitzenmacher mixes
-``(h1 + i·h2) mod 2^60`` with the multiply split at 30 bits so every
-intermediate stays below 2^61 — Java longs would wrap silently while
-DuckDB BIGINTs would raise, and the split makes both engines compute
-the SAME exact integers. That cross-engine identity is a correctness
-contract: it is what lets the driver hash-check sketch estimates and
-LSH pair lists value-for-value, so any change here must update every
-oracle twin in registry.py / operators/sketches.py in the same commit
-(this module exists so there is exactly one place to change).
+and 17-31). Both engine forms live here: ``md5_halves`` is the Spark
+Column form (``conv(substring(md5(x), …), 16, 10)``) and
+``md5_halves_sql`` the DuckDB SQL form (a ``'0x'``-prefixed hex
+substring cast to BIGINT). Seeded variants are Kirsch-Mitzenmacher
+mixes ``(h1 + i·h2) mod 2^60`` (``km_mix`` / ``km_mix_sql``) with the
+multiply split at 30 bits so every intermediate stays below 2^61 —
+Java longs would wrap silently while DuckDB BIGINTs would raise, and
+the split makes both engines compute the SAME exact integers. That
+cross-engine identity is a correctness contract: it is what lets the
+driver hash-check sketch estimates and LSH pair lists value-for-value,
+so any change here changes both engines at once (this module exists so
+there is exactly one place to change; no other package module spells
+the SQL form out).
 
 Production pipelines swap md5 → xxhash64 for throughput; the md5 form
 is the oracle-gated path."""
@@ -33,6 +36,16 @@ def md5_halves(col: Column) -> tuple[Column, Column]:
     md = F.md5(col)
     h1 = F.conv(F.substring(md, 1, 15), 16, 10).cast("long")
     h2 = F.conv(F.substring(md, 17, 15), 16, 10).cast("long")
+    return h1, h2
+
+
+def md5_halves_sql(expr: str) -> tuple[str, str]:
+    """The DuckDB twin of ``md5_halves``: the two 60-bit halves of
+    ``md5(expr)`` as BIGINT SQL expressions. ``expr`` must already be
+    VARCHAR (cast keys first, as the Spark side does)."""
+    h1, h2 = (
+        f"('0x' || substr(md5({expr}), {i}, 15))::BIGINT" for i in (1, 17)
+    )
     return h1, h2
 
 

@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.portable_hash import md5_halves_sql
 from .similarity import _dot, as_double, lsh_signature, portable_hyperplanes
 
 #: The gate's plane family: 8 portable hyperplanes over 64 dims, split
@@ -485,10 +486,13 @@ def nsw_oracle_sql(
     )"""
         )
         prev = f"b{i}"
+    edge_h = md5_halves_sql(
+        "CAST(src AS VARCHAR) || ':' || CAST(dst AS VARCHAR)"
+    )[0]
     return f"""
     WITH pl AS (
       SELECT p.p AS p, d.d AS d,
-             ('0x' || substr(md5(p.p || ':' || d.d), 1, 15))::BIGINT
+             {md5_halves_sql("p.p || ':' || d.d")[0]}
                / 1152921504606846976.0 - 0.5 AS c
       FROM (SELECT unnest(generate_series(0, {n_planes - 1})) AS p) p
            CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS d) d
@@ -538,9 +542,8 @@ def nsw_oracle_sql(
     ),
     ne AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_edges{
         f''',
-           CAST(SUM((('0x' || substr(md5(CAST(src AS VARCHAR) || ':'
-                || CAST(dst AS VARCHAR)), 1, 15))::BIGINT)
-               % {checksum_mod}) AS BIGINT) AS edge_checksum'''
+           CAST(SUM(({edge_h}) % {checksum_mod}) AS BIGINT)
+             AS edge_checksum'''
         if checksum_mod else ""} FROM edges)
     SELECT t.vec_id, t.cos_sim, h.recall_hits, ne.n_edges{
         ", ne.edge_checksum" if checksum_mod else ""}

@@ -229,11 +229,11 @@ def portable_hyperplanes(dim: int, n_planes: int) -> list[list[float]]:
     """md5-derived uniform[-0.5, 0.5) hyperplanes: ``coef(p, d) =
     int(md5(f"{p}:{d}")[:15 hex], 16) / 2^60 - 0.5``.
 
-    Exactly replayable in DuckDB SQL — ``('0x' || substr(md5(p || ':' ||
-    d), 1, 15))::BIGINT / 2^60 - 0.5`` — because both engines round the
-    same 60-bit integer to the same IEEE double and the power-of-two
-    division is an exact scaling; this is what upgrades the LSH registry
-    gates from rows-only to full value-hash checks. Uniform cube
+    Exactly replayable in DuckDB SQL — the first ``md5_halves_sql``
+    half of ``p || ':' || d``, / 2^60 - 0.5 — because both engines
+    round the same 60-bit integer to the same IEEE double and the
+    power-of-two division is an exact scaling; this is what upgrades the
+    LSH registry gates from rows-only to full value-hash checks. Uniform cube
     directions are slightly anisotropic vs the gaussian family (corner
     directions over-weighted) but perfectly serviceable for sign
     hashing; ``hyperplanes`` (gaussian) stays the production default."""

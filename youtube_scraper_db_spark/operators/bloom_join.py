@@ -47,7 +47,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.portable_hash import km_mix, km_mix_sql, md5_halves
+from ..functions.portable_hash import km_mix, km_mix_sql, md5_halves, md5_halves_sql
 
 
 def _check_m_bits(m_bits: int) -> None:
@@ -228,11 +228,12 @@ def bloom_prune_pass_count_sql(
     fact_pos = " UNION ALL ".join(
         f"SELECT rid, ({m}) % {m_bits} AS pos FROM fh" for m in mixes
     )
+    dh1, dh2 = md5_halves_sql(f"CAST({dim_key} AS VARCHAR)")
+    fh1, fh2 = md5_halves_sql("CAST(rid AS VARCHAR)")
     return f"""
     WITH dh AS (
       SELECT DISTINCT
-             ('0x' || substr(md5(CAST({dim_key} AS VARCHAR)), 1, 15))::BIGINT AS h1,
-             ('0x' || substr(md5(CAST({dim_key} AS VARCHAR)), 17, 15))::BIGINT AS h2
+             {dh1} AS h1, {dh2} AS h2
       FROM {dim_table} WHERE ({dim_where}) AND {dim_key} IS NOT NULL
     ),
     bits AS (SELECT DISTINCT pos FROM ({dim_pos})),
@@ -242,8 +243,7 @@ def bloom_prune_pass_count_sql(
     ),
     fh AS (
       SELECT rid,
-             ('0x' || substr(md5(CAST(rid AS VARCHAR)), 1, 15))::BIGINT AS h1,
-             ('0x' || substr(md5(CAST(rid AS VARCHAR)), 17, 15))::BIGINT AS h2
+             {fh1} AS h1, {fh2} AS h2
       FROM fk
     ),
     fp AS (SELECT DISTINCT rid, pos FROM ({fact_pos})),

@@ -94,3 +94,20 @@ def sync_membership(
     to_add, to_remove = diff_keys(edges, desired, keys)
     added = insert_if_absent(edges, desired.join(to_add, on=list(keys), how="left_semi"), keys)
     return keyed_delete(added, to_remove, keys)
+
+
+def sync_scoped_membership(
+    edges: DataFrame,
+    desired: DataFrame,
+    scope: str,
+    keys: Sequence[str],
+) -> DataFrame:
+    """``sync_membership`` scoped to the ``scope`` values present in
+    ``desired`` — the reference syncs per fetched playlist (ref
+    main_scraper.py:144-179), so an unfetched playlist keeps its edges.
+    left_semi/left_anti on the same broadcastable key set split the
+    table without a shuffle; the untouched rows pass through as-is."""
+    touched = desired.select(scope).distinct()
+    in_scope = edges.join(touched, scope, "left_semi")
+    untouched = edges.join(touched, scope, "left_anti")
+    return untouched.unionByName(sync_membership(in_scope, desired, keys))

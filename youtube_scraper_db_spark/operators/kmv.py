@@ -20,7 +20,17 @@ operators/sketches.py): the hash is the first 60-bit md5 half
 (functions/portable_hash.py), so DuckDB replays the ENTIRE sketch —
 the retained hash set, the k-th order statistic, and therefore the
 estimate and even its approximation error — value-for-value with
-``('0x' || substr(md5(x), 1, 15))::BIGINT`` + ``ORDER BY h LIMIT k``.
+``md5_halves_sql`` (the SQL form of the same half) + ``ORDER BY h
+LIMIT k``.
+
+Group columns: the estimate (``kmv_estimate``) is one core with
+``by`` — empty for the scalar sketch — as in operators/sketches.py.
+The bottom-k BUILDERS stay two paths, ``kmv_sketch`` and
+``kmv_sketch_grouped``, because they compile to different plans: the
+scalar sketch caps the ≤ partitions·k survivors with a global
+``orderBy().limit(k)`` behind a one-state Arrow kernel, the grouped
+one with a per-group ``row_number`` window behind a per-group-state
+kernel.
 
 Scale shape: a per-partition Arrow kernel folds each partition's
 hashes through an O(k) bottom-k state (map-only — raw keys never
@@ -44,14 +54,14 @@ the exact distinct join.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.portable_hash import md5_halves
+from ..functions.portable_hash import md5_halves, md5_halves_sql
 from . import sliding
 
 #: Hash-space size: hashes are uniform 60-bit integers (md5 half).
@@ -173,27 +183,15 @@ def _est_expr(size: Column, kth: Column, k: int) -> Column:
     )
 
 
-def kmv_estimate(sketch: DataFrame, k: int) -> DataFrame:
-    """One-row (estimate, sketch_size, kth_hash) from a sketch table."""
-    st = sketch.agg(
+def kmv_estimate(sketch: DataFrame, k: int, by: Sequence[str] = ()) -> DataFrame:
+    """(*by, estimate, sketch_size, kth_hash) per group of a sketch
+    table — one row for the scalar sketch."""
+    st = sketch.groupBy(*by).agg(
         F.count(F.lit(1)).cast("long").alias("sketch_size"),
         F.max("h").alias("kth_hash"),
     )
     return st.select(
-        _est_expr(F.col("sketch_size"), F.col("kth_hash"), k).alias("estimate"),
-        "sketch_size",
-        "kth_hash",
-    )
-
-
-def kmv_estimate_grouped(sketch: DataFrame, k: int) -> DataFrame:
-    """Per-group (g, estimate, sketch_size, kth_hash)."""
-    st = sketch.groupBy("g").agg(
-        F.count(F.lit(1)).cast("long").alias("sketch_size"),
-        F.max("h").alias("kth_hash"),
-    )
-    return st.select(
-        "g",
+        *by,
         _est_expr(F.col("sketch_size"), F.col("kth_hash"), k).alias("estimate"),
         "sketch_size",
         "kth_hash",
@@ -217,7 +215,7 @@ def kmv_theta(sketch: DataFrame, k: int) -> DataFrame:
 
 
 def _h_sql(key: str) -> str:
-    return f"('0x' || substr(md5(CAST({key} AS VARCHAR)), 1, 15))::BIGINT"
+    return md5_halves_sql(f"CAST({key} AS VARCHAR)")[0]
 
 
 def kmv_bottomk_cte(name: str, table: str, key: str, where: str, k: int) -> str:
@@ -262,7 +260,7 @@ def kmv_oracle_sql(table: str, key: str, k: int) -> str:
 
 
 def kmv_grouped_oracle_sql(table: str, group_col: str, key: str, k: int) -> str:
-    """Replay of kmv_sketch_grouped + kmv_estimate_grouped + per-group
+    """Replay of kmv_sketch_grouped + kmv_estimate per group + per-group
     exact witnesses."""
     return f"""
     WITH hs AS (
@@ -399,8 +397,8 @@ def kmv_artifact_oracle_sql(
     ),
     art AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS saved_size,
-             CAST(SUM(('0x' || substr(md5(CAST(h AS VARCHAR)), 1, 15))::BIGINT
-                      % {check_mod}) AS BIGINT) AS saved_checksum
+             CAST(SUM({_h_sql("h")} % {check_mod}) AS BIGINT)
+               AS saved_checksum
       FROM base
     )
     SELECT art.saved_size, art.saved_checksum,
@@ -456,18 +454,7 @@ def kmv_sliding_estimates(
         .where(F.col("rn") <= k)
         .drop("rn")
     )
-    st = bk.groupBy("wend").agg(
-        F.count(F.lit(1)).cast("long").alias("sketch_size"),
-        F.max("h").alias("kth_hash"),
-    )
-    return st.select(
-        "wend",
-        _est_expr(F.col("sketch_size"), F.col("kth_hash"), k).alias(
-            "estimate"
-        ),
-        "sketch_size",
-        "kth_hash",
-    )
+    return kmv_estimate(bk, k, ("wend",))
 
 
 def sliding_exact_distinct(

@@ -1,10 +1,11 @@
 """Probabilistic sketches — the sublinear-state summaries a 100 TB
 pipeline leans on where exact answers would shuffle the world:
 HyperLogLog distinct counting, Count-Min frequency estimation, Bloom
-membership pruning. (The exact counterparts ship elsewhere in the repo:
-salted exact distinct, Misra-Gries heavy hitters with exact recount,
-semi-join membership — these sketches are the bounded-memory scale
-path, and the gates measure them AGAINST those exact answers.)
+membership pruning, histogram quantiles. (The exact counterparts ship
+elsewhere in the repo: salted exact distinct, Misra-Gries heavy
+hitters with exact recount, semi-join membership — these sketches are
+the bounded-memory scale path, and the gates measure them AGAINST
+those exact answers.)
 
 Determinism/oracle contract (same device as the portable MinHash,
 llm/dedup.py): every hash is derived from md5 — ``h1/h2`` are the two
@@ -12,24 +13,45 @@ llm/dedup.py): every hash is derived from md5 — ``h1/h2`` are the two
 mixes ``(h1 + i·h2) mod 2^60`` with the multiply split at 30 bits so
 every intermediate stays under 2^61 in BOTH engines (Java longs would
 wrap, DuckDB BIGINTs would raise; the split makes them compute the
-same exact integers). DuckDB therefore replays every sketch
+same exact integers). Both engine forms live in
+functions/portable_hash.py. DuckDB therefore replays every sketch
 value-for-value, including the sketch's approximation error — the
 driver gate hash-checks the ESTIMATES, not just invariants.
 
+Group columns (``by``): each family has ONE core, and every core takes
+``by``, a tuple of column names — empty for the scalar sketch. A
+grouped sketch is the scalar sketch computed per group: the group
+columns join the cell identity (HLL bucket, CMS (row, slot), Bloom
+bit, histogram bin), so no cell is shared across groups and every
+group's table obeys the scalar guarantees on its own. Rows whose key
+or any group column is NULL are dropped; outputs lead with the group
+columns under their own names, and group names must not collide with
+the sketch's own columns (k, pos, row, slot, bucket, rho, bin, cnt,
+lo, hi, n). The oracle twins take the same ``by``. One pair stays two
+paths because the plans differ: the grouped Bloom probe asks every
+group about every key, so it cross joins the broadcast group list
+with the probe keys; the scalar probe has one group and joins the keys
+directly (no nested-loop join). (The KMV twin, operators/kmv.py, keeps
+its two bottom-k builders for the same reason.)
+
 Scale shape: every sketch is one hash-keyed aggregate over key-sized
 rows (map-side partial combine does the heavy lifting); register /
-counter / bit-position tables are O(sketch size), never O(data).
-Production would swap md5 → xxhash64 for throughput — a one-line
-change per sketch that keeps every plan identical.
+counter / bit-position tables are O(groups × sketch size), never
+O(data). Production would swap md5 → xxhash64 for throughput — a
+one-line change per sketch that keeps every plan identical.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.portable_hash import km_mix, km_mix_sql, md5_halves
+from ..functions.portable_hash import km_mix, km_mix_sql, md5_halves, md5_halves_sql
 from . import sliding
+
+By = Sequence[str]
 
 
 def _h1h2(col: Column) -> tuple[Column, Column]:
@@ -37,8 +59,118 @@ def _h1h2(col: Column) -> tuple[Column, Column]:
     return md5_halves(col.cast("string"))
 
 
-def _mix(h1: Column, h2: Column, i: int) -> Column:
-    return km_mix(h1, h2, i)
+def _notnull(*cols: str) -> Column:
+    cond = F.col(cols[0]).isNotNull()
+    for c in cols[1:]:
+        cond = cond & F.col(c).isNotNull()
+    return cond
+
+
+def _join_by(a: DataFrame, b: DataFrame, by: By) -> DataFrame:
+    """``a`` ⋈ ``b`` on the group columns — for the scalar sketch (no
+    group columns) a cross join of one-row frames."""
+    return a.join(b, list(by)) if by else a.crossJoin(b)
+
+
+def _km_cells(
+    df: DataFrame, keep: By, key: str, n: int, mod: int, row: bool = False
+) -> DataFrame:
+    """The k-position explode: each row's ``key`` hashed ONCE to its md5
+    halves, then expanded to its ``n`` seeded positions
+    ``km_mix(h1, h2, i) % mod`` — Bloom bit positions (``pos``) or,
+    with ``row``, Count-Min cells (``row``, ``slot``); ``keep`` columns
+    ride along. The halves are bound in their own projection before the
+    explode: inlining them into every seed would carry n×2 md5 subtrees
+    and lean on codegen CSE this codebase deliberately doesn't trust."""
+    h1, h2 = _h1h2(F.col(key))
+    pos = [
+        km_mix(F.col("__h1"), F.col("__h2"), i) % F.lit(mod) for i in range(n)
+    ]
+    if row:
+        cells = [
+            F.struct(F.lit(i).alias("row"), p.alias("slot"))
+            for i, p in enumerate(pos)
+        ]
+        exploded, out = F.explode(F.array(*cells)).alias("rs"), ["rs.row", "rs.slot"]
+    else:
+        exploded, out = F.explode(F.array(*pos)).alias("pos"), ["pos"]
+    return (
+        df.select(*keep, h1.alias("__h1"), h2.alias("__h2"))
+        .select(*keep, exploded)
+        .select(*keep, *out)
+    )
+
+
+# --- SQL building blocks ------------------------------------------------
+
+
+def _pre(by: By, alias: str = "") -> str:
+    """``"a.g1, a.g2, "`` — the group columns as a select-list prefix."""
+    return "".join(f"{alias}{c}, " for c in by)
+
+
+def _notnull_sql(*cols: str) -> str:
+    return " AND ".join(f"{c} IS NOT NULL" for c in cols)
+
+
+def _group_by_sql(by: By) -> str:
+    return f" GROUP BY {', '.join(by)}" if by else ""
+
+
+def _km_sql(src: str, keep: str, n: int, mod: int, row: bool = False) -> str:
+    """SQL twin of ``_km_cells``: the ``n`` seeded positions of every
+    (h1, h2) row of ``src`` as one UNION ALL (``keep`` is a select-list
+    prefix)."""
+    return " UNION ALL ".join(
+        f"SELECT {keep}{i} AS row, ({km_mix_sql(i)}) % {mod} AS slot FROM {src}"
+        if row
+        else f"SELECT {keep}({km_mix_sql(i)}) % {mod} AS pos FROM {src}"
+        for i in range(n)
+    )
+
+
+def _halves_cte(name: str, table: str, key: str, where: str = "", cols: str = "") -> str:
+    """CTE of the distinct (``cols``, h1, h2) rows of non-null ``key``."""
+    h1, h2 = md5_halves_sql(f"CAST({key} AS VARCHAR)")
+    return f"""
+    {name} AS (
+      SELECT DISTINCT {cols}{h1} AS h1, {h2} AS h2
+      FROM {table} WHERE {key} IS NOT NULL{where}
+    )"""
+
+
+def _ck_sql(canon: str, mod: int) -> str:
+    """Artifact-checksum SQL over canonical strings — the registry's
+    ``_artifact_checksum_sql`` formula (first md5 half, summed mod
+    ``mod``); kept in lockstep with the engine's ``md5_halves``-based
+    sums."""
+    h1, _ = md5_halves_sql(canon)
+    return f"CAST(SUM(({h1}) % {mod}) AS BIGINT)"
+
+
+def _union_sql(
+    ctes: str,
+    cols: str,
+    rels: str,
+    art: tuple[str, str, str, int] | None = None,
+) -> str:
+    """Tail of the merge-gate oracles. ``art`` = (source CTE, count
+    column, canonical string, checksum mod) turns the merge replay into
+    the persistence+fold gate's: the source CTE is the SAVED artifact,
+    and its row count and canonical checksum ride along."""
+    if art is None:
+        return f"WITH {ctes}\n    SELECT {cols}\n    FROM {rels}"
+    src, count_col, canon, mod = art
+    return f"""WITH {ctes},
+    art AS (
+      SELECT CAST(COUNT(*) AS BIGINT) AS {count_col},
+             {_ck_sql(canon, mod)} AS saved_checksum
+      FROM {src}
+    )
+    SELECT (SELECT {count_col} FROM art) AS {count_col},
+           (SELECT saved_checksum FROM art) AS saved_checksum, {cols},
+           CAST(1 AS INT) AS artifact_version
+    FROM {rels}"""
 
 
 # --- HyperLogLog ------------------------------------------------------
@@ -66,31 +198,36 @@ def hll_bucket_rho(key: Column, p: int = 9) -> tuple[Column, Column]:
 
 
 def hll_registers(
-    df: DataFrame, key: str, p: int = 9
+    df: DataFrame, key: str, p: int = 9, by: By = ()
 ) -> DataFrame:
-    """(bucket, rho): the 2^p HyperLogLog registers of ``key`` — one
-    hash-keyed aggregate over the ``hll_bucket_rho`` projection;
-    register table is O(2^p) regardless of input size."""
+    """(*by, bucket, rho): the 2^p HyperLogLog registers of ``key`` per
+    group — one hash-keyed aggregate over the ``hll_bucket_rho``
+    projection. Grouped, it is the scale replacement for ``GROUP BY
+    count(DISTINCT key)``, whose shuffle carries every distinct
+    (group, key) pair; this shuffles at most groups × 2^p register rows
+    with full map-side combine, whatever the key cardinality."""
     bucket, rho = hll_bucket_rho(F.col(key), p)
     return (
-        df.where(F.col(key).isNotNull())
-        .select(bucket.alias("bucket"), rho.alias("rho"))
-        .groupBy("bucket")
+        df.where(_notnull(key, *by))
+        .select(*by, bucket.alias("bucket"), rho.alias("rho"))
+        .groupBy(*by, "bucket")
         .agg(F.max("rho").alias("rho"))
     )
 
 
-def hll_estimate_from_registers(regs: DataFrame, p: int = 9) -> DataFrame:
-    """One-row (estimate, nonzero_registers) from a register table —
-    shared by the direct path and merged sketches. Small-range (linear
-    counting) correction per the original paper; estimate rounded to
-    4dp so the harmonic-sum accumulation order cannot flip the value
-    hash."""
+def hll_estimate_from_registers(
+    regs: DataFrame, p: int = 9, by: By = ()
+) -> DataFrame:
+    """(*by, estimate, nonzero_registers) per group from a register
+    table — shared by the direct path, merged sketches and sliding
+    windows. Small-range (linear counting) correction per the original
+    paper; estimate rounded to 4dp so the harmonic-sum accumulation
+    order cannot flip the value hash."""
     m = 1 << p
     alpha = 0.7213 / (1.0 + 1.079 / m)
-    agg = regs.agg(
+    agg = regs.groupBy(*by).agg(
         F.sum(F.pow(F.lit(2.0), -F.col("rho"))).alias("s"),
-        F.count("*").alias("v"),
+        F.count(F.lit(1)).alias("v"),
     )
     raw = F.lit(alpha * m * m) / (F.col("s") + (F.lit(m) - F.col("v")))
     # empty registers contribute 2^0 = 1 each to the harmonic sum
@@ -100,108 +237,10 @@ def hll_estimate_from_registers(regs: DataFrame, p: int = 9) -> DataFrame:
         F.lit(float(m)) * F.log(F.lit(float(m)) / zeros),
     ).otherwise(raw)
     return agg.select(
+        *by,
         F.round(est, 4).alias("estimate"),
         F.col("v").cast("long").alias("nonzero_registers"),
     )
-
-
-def hll_registers_grouped(
-    df: DataFrame, group_col: str, key: str, p: int = 9
-) -> DataFrame:
-    """(g, bucket, rho): one HLL register table PER GROUP from a single
-    keyed aggregate — the scale replacement for ``GROUP BY
-    count(DISTINCT key)``, whose shuffle carries every distinct
-    (group, key) pair; this shuffles at most groups × 2^p register rows
-    with full map-side combine. State is O(groups × 2^p) regardless of
-    key cardinality."""
-    bucket, rho = hll_bucket_rho(F.col(key), p)
-    return (
-        df.where(F.col(key).isNotNull() & F.col(group_col).isNotNull())
-        .select(
-            F.col(group_col).alias("g"),
-            bucket.alias("bucket"),
-            rho.alias("rho"),
-        )
-        .groupBy("g", "bucket")
-        .agg(F.max("rho").alias("rho"))
-    )
-
-
-def hll_estimates_grouped(regs: DataFrame, p: int = 9) -> DataFrame:
-    """(g, estimate, nonzero_registers) per group from a grouped
-    register table — the ``hll_estimate_from_registers`` arithmetic
-    (alpha correction + small-range linear counting, 4dp rounding) as
-    one grouped aggregate instead of one scalar row."""
-    m = 1 << p
-    alpha = 0.7213 / (1.0 + 1.079 / m)
-    agg = regs.groupBy("g").agg(
-        F.sum(F.pow(F.lit(2.0), -F.col("rho"))).alias("s"),
-        F.count(F.lit(1)).alias("v"),
-    )
-    raw = F.lit(alpha * m * m) / (F.col("s") + (F.lit(m) - F.col("v")))
-    zeros = F.lit(m) - F.col("v")
-    est = F.when(
-        (raw <= 2.5 * m) & (zeros > 0),
-        F.lit(float(m)) * F.log(F.lit(float(m)) / zeros),
-    ).otherwise(raw)
-    return agg.select(
-        "g",
-        F.round(est, 4).alias("estimate"),
-        F.col("v").cast("long").alias("nonzero_registers"),
-    )
-
-
-def hll_grouped_oracle_sql(
-    table: str, group_col: str, key: str, p: int = 9
-) -> str:
-    """DuckDB replay of the grouped HLL estimates — the
-    ``hll_oracle_sql`` hash/rho/harmonic arithmetic with every
-    aggregate keyed by the group column."""
-    w = 60 - p
-    m = 1 << p
-    alpha = 0.7213 / (1.0 + 1.079 / m)
-    bitlen = " + ".join(
-        f"CASE WHEN tail >= {1 << k} THEN 1 ELSE 0 END" for k in range(w)
-    )
-    return f"""
-    WITH h AS (
-      SELECT {group_col} AS g,
-             ('0x' || substr(md5(CAST({key} AS VARCHAR)), 1, 15))::BIGINT AS h1
-      FROM {table}
-      WHERE {key} IS NOT NULL AND {group_col} IS NOT NULL
-    ),
-    br AS (SELECT g, h1 >> {w} AS bucket, h1 & {(1 << w) - 1} AS tail FROM h),
-    regs AS (
-      SELECT g, bucket, MAX({w + 1} - ({bitlen})) AS rho
-      FROM br GROUP BY g, bucket
-    ),
-    agg AS (
-      SELECT g, SUM(power(2.0, -rho)) AS s, COUNT(*) AS v
-      FROM regs GROUP BY g
-    ),
-    est AS (
-      SELECT g,
-             CASE WHEN (CAST({alpha!r} AS DOUBLE) * {m} * {m})
-                        / (s + ({m} - v)) <= CAST({2.5 * m!r} AS DOUBLE)
-                   AND ({m} - v) > 0
-                  THEN CAST({float(m)!r} AS DOUBLE)
-                       * ln(CAST({float(m)!r} AS DOUBLE) / ({m} - v))
-                  ELSE (CAST({alpha!r} AS DOUBLE) * {m} * {m})
-                       / (s + ({m} - v))
-             END AS e, v
-      FROM agg
-    ),
-    ex AS (
-      SELECT {group_col} AS g,
-             CAST(COUNT(DISTINCT {key}) AS BIGINT) AS exact_distinct
-      FROM {table}
-      WHERE {key} IS NOT NULL AND {group_col} IS NOT NULL
-      GROUP BY 1
-    )
-    SELECT est.g AS {group_col}, ROUND(est.e, 4) AS estimate,
-           CAST(est.v AS BIGINT) AS nonzero_registers, ex.exact_distinct
-    FROM est JOIN ex ON est.g = ex.g
-    """
 
 
 def hll_merge(a: DataFrame, b: DataFrame) -> DataFrame:
@@ -222,51 +261,59 @@ def hll_merge(a: DataFrame, b: DataFrame) -> DataFrame:
 
 
 def hll_estimate(
-    df: DataFrame, key: str, p: int = 9
+    df: DataFrame, key: str, p: int = 9, by: By = ()
 ) -> DataFrame:
-    """One-row (estimate, nonzero_registers, exact_distinct): the
-    HyperLogLog cardinality estimate next to the exact answer it
-    approximates (the gate hash-checks BOTH, so the sketch arithmetic
-    and its error are pinned)."""
-    return hll_estimate_from_registers(hll_registers(df, key, p), p).crossJoin(
-        df.where(F.col(key).isNotNull()).agg(
-            F.countDistinct(key).alias("exact_distinct")
-        )
+    """(*by, estimate, nonzero_registers, exact_distinct): the
+    HyperLogLog cardinality estimate per group next to the exact answer
+    it approximates (the gate hash-checks BOTH, so the sketch
+    arithmetic and its error are pinned)."""
+    est = hll_estimate_from_registers(hll_registers(df, key, p, by), p, by)
+    exact = (
+        df.where(_notnull(key, *by))
+        .groupBy(*by)
+        .agg(F.countDistinct(key).alias("exact_distinct"))
     )
+    return _join_by(est, exact, by)
 
 
-def _hll_regs_sql(src: str, regs: str, table: str, key: str, where: str, p: int) -> str:
-    """CTE pair computing the register table of ``key`` rows matching
-    ``where`` — the SQL twin of hll_registers."""
+def _hll_regs_sql(
+    src: str, regs: str, table: str, key: str, where: str, p: int, by: By = ()
+) -> str:
+    """CTEs computing the register table of ``key`` rows matching
+    ``where`` per group — the SQL twin of hll_registers."""
     w = 60 - p
+    g = _pre(by)
+    h1, _ = md5_halves_sql(f"CAST({key} AS VARCHAR)")
     bitlen = " + ".join(
         f"CASE WHEN tail >= {1 << k} THEN 1 ELSE 0 END" for k in range(w)
     )
     return f"""
     {src} AS (
-      SELECT ('0x' || substr(md5(CAST({key} AS VARCHAR)), 1, 15))::BIGINT AS h1
-      FROM {table} WHERE {key} IS NOT NULL{where}
+      SELECT {g}{h1} AS h1
+      FROM {table} WHERE {_notnull_sql(key, *by)}{where}
     ),
     {src}_br AS (
-      SELECT h1 >> {w} AS bucket, h1 & {(1 << w) - 1} AS tail FROM {src}
+      SELECT {g}h1 >> {w} AS bucket, h1 & {(1 << w) - 1} AS tail FROM {src}
     ),
     {regs} AS (
-      SELECT bucket, MAX({w + 1} - ({bitlen})) AS rho
-      FROM {src}_br GROUP BY bucket
+      SELECT {g}bucket, MAX({w + 1} - ({bitlen})) AS rho
+      FROM {src}_br GROUP BY {g}bucket
     )"""
 
 
-def _hll_est_sql(regs: str, est: str, p: int) -> str:
-    """CTE computing (e, v) from a register CTE — the SQL twin of
+def _hll_est_sql(regs: str, est: str, p: int, by: By = ()) -> str:
+    """CTEs computing (*by, e, v) from a register CTE — the SQL twin of
     hll_estimate_from_registers."""
     m = 1 << p
     alpha = 0.7213 / (1.0 + 1.079 / m)
+    g = _pre(by)
     return f"""
     {est}_agg AS (
-      SELECT SUM(power(2.0, -rho)) AS s, COUNT(*) AS v FROM {regs}
+      SELECT {g}SUM(power(2.0, -rho)) AS s, COUNT(*) AS v
+      FROM {regs}{_group_by_sql(by)}
     ),
     {est} AS (
-      SELECT CASE WHEN (CAST({alpha!r} AS DOUBLE) * {m} * {m})
+      SELECT {g}CASE WHEN (CAST({alpha!r} AS DOUBLE) * {m} * {m})
                         / (s + ({m} - v)) <= CAST({2.5 * m!r} AS DOUBLE)
                    AND ({m} - v) > 0
                   THEN CAST({float(m)!r} AS DOUBLE)
@@ -278,29 +325,37 @@ def _hll_est_sql(regs: str, est: str, p: int) -> str:
     )"""
 
 
-def hll_oracle_sql(table: str, key: str, p: int = 9) -> str:
+def hll_oracle_sql(table: str, key: str, p: int = 9, by: By = ()) -> str:
     """DuckDB replay of hll_estimate — literally the same hash, rho,
-    harmonic sum and corrections."""
+    harmonic sum and corrections, per group."""
+    ex_join = f" JOIN ex USING ({', '.join(by)})" if by else ", ex"
     return f"""
-    WITH {_hll_regs_sql('h', 'regs', table, key, '', p)},
-    {_hll_est_sql('regs', 'est', p)}
-    SELECT ROUND(e, 4) AS estimate,
-           CAST(v AS BIGINT) AS nonzero_registers,
-           (SELECT CAST(count(DISTINCT {key}) AS BIGINT)
-            FROM {table} WHERE {key} IS NOT NULL) AS exact_distinct
-    FROM est
+    WITH {_hll_regs_sql('h', 'regs', table, key, '', p, by)},
+    {_hll_est_sql('regs', 'est', p, by)},
+    ex AS (
+      SELECT {_pre(by)}CAST(COUNT(DISTINCT {key}) AS BIGINT) AS exact_distinct
+      FROM {table} WHERE {_notnull_sql(key, *by)}{_group_by_sql(by)}
+    )
+    SELECT {_pre(by)}ROUND(e, 4) AS estimate,
+           CAST(v AS BIGINT) AS nonzero_registers, exact_distinct
+    FROM est{ex_join}
     """
 
 
 def hll_union_oracle_sql(
-    table: str, key: str, split: str, p: int = 9
+    table: str,
+    key: str,
+    split: str,
+    p: int = 9,
+    checksum_mod: int | None = None,
 ) -> str:
     """DuckDB replay of the merge gate: sketch two disjoint halves
     (``split`` / NOT ``split``), merge via full-join greatest, estimate
     the merged registers AND the directly-sketched full input — the
-    exact mergeability identity the engine asserts."""
-    return f"""
-    WITH {_hll_regs_sql('ha', 'ra', table, key, f' AND ({split})', p)},
+    exact mergeability identity the engine asserts. With
+    ``checksum_mod`` it replays the persistence+fold gate: the
+    ``split`` half's register table is the SAVED artifact."""
+    ctes = f"""{_hll_regs_sql('ha', 'ra', table, key, f' AND ({split})', p)},
     {_hll_regs_sql('hb', 'rb', table, key, f' AND NOT ({split})', p)},
     merged AS (
       SELECT COALESCE(a.bucket, b.bucket) AS bucket,
@@ -309,125 +364,62 @@ def hll_union_oracle_sql(
     ),
     {_hll_est_sql('merged', 'em', p)},
     {_hll_regs_sql('hf', 'rf', table, key, '', p)},
-    {_hll_est_sql('rf', 'ef', p)}
-    SELECT ROUND(em.e, 4) AS union_estimate,
+    {_hll_est_sql('rf', 'ef', p)}"""
+    cols = f"""ROUND(em.e, 4) AS union_estimate,
            ROUND(ef.e, 4) AS direct_estimate,
            ROUND(em.e, 4) = ROUND(ef.e, 4) AS merge_consistent,
            (SELECT CAST(count(DISTINCT {key}) AS BIGINT)
-            FROM {table} WHERE {key} IS NOT NULL) AS exact_union
-    FROM em, ef
-    """
-
-
-def _ck_sql(canon: str, mod: int) -> str:
-    """Artifact-checksum SQL over canonical strings — the registry's
-    ``_artifact_checksum_sql`` formula (md5 hex chars 1-15 → 60-bit
-    BIGINT, summed mod ``mod``); kept in lockstep with the engine's
-    ``md5_halves``-based sums."""
-    return (
-        f"CAST(SUM((('0x' || substr(md5({canon}), 1, 15))::BIGINT)"
-        f" % {mod}) AS BIGINT)"
-    )
-
-
-def hll_artifact_oracle_sql(
-    table: str, key: str, split: str, p: int, checksum_mod: int
-) -> str:
-    """DuckDB replay of the HLL persistence+fold gate: the base-half
-    register table (the SAVED artifact) with its canonical checksum,
-    the new batch's registers folded in by greatest-merge, the folded
-    estimate vs the directly-sketched full input, and the exact union —
-    the ``hll_union_oracle_sql`` replay plus the artifact witnesses."""
-    ck = _ck_sql(
-        "CAST(bucket AS VARCHAR) || ':' || CAST(rho AS VARCHAR)",
-        checksum_mod,
-    )
-    return f"""
-    WITH {_hll_regs_sql('ha', 'ra', table, key, f' AND ({split})', p)},
-    {_hll_regs_sql('hb', 'rb', table, key, f' AND NOT ({split})', p)},
-    merged AS (
-      SELECT COALESCE(a.bucket, b.bucket) AS bucket,
-             GREATEST(COALESCE(a.rho, 0), COALESCE(b.rho, 0)) AS rho
-      FROM ra a FULL OUTER JOIN rb b ON a.bucket = b.bucket
-    ),
-    {_hll_est_sql('merged', 'em', p)},
-    {_hll_regs_sql('hf', 'rf', table, key, '', p)},
-    {_hll_est_sql('rf', 'ef', p)},
-    art AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS saved_registers,
-             {ck} AS saved_checksum
-      FROM ra
-    )
-    SELECT a.saved_registers, a.saved_checksum,
-           ROUND(em.e, 4) AS union_estimate,
-           ROUND(ef.e, 4) AS direct_estimate,
-           ROUND(em.e, 4) = ROUND(ef.e, 4) AS merge_consistent,
-           (SELECT CAST(count(DISTINCT {key}) AS BIGINT)
-            FROM {table} WHERE {key} IS NOT NULL) AS exact_union,
-           CAST(1 AS INT) AS artifact_version
-    FROM em, ef, art a
-    """
+            FROM {table} WHERE {key} IS NOT NULL) AS exact_union"""
+    art = None
+    if checksum_mod is not None:
+        canon = "CAST(bucket AS VARCHAR) || ':' || CAST(rho AS VARCHAR)"
+        art = ("ra", "saved_registers", canon, checksum_mod)
+    return _union_sql(ctes, cols, "em, ef", art)
 
 
 # --- Count-Min --------------------------------------------------------
 
 def cms_counters(
-    df: DataFrame, key: str, depth: int = 4, width: int = 4096
+    df: DataFrame, key: str, depth: int = 4, width: int = 4096, by: By = ()
 ) -> DataFrame:
-    """(row, slot, cnt): the depth × width Count-Min counter table of
-    ``key`` occurrences — one hash-keyed aggregate (rows explode
-    ``depth``× on the map side, combine partially, shuffle O(depth ×
-    distinct-slots))."""
+    """(*by, row, slot, cnt): the depth × width Count-Min counter table
+    of ``key`` occurrences per group — one hash-keyed aggregate (rows
+    explode ``depth``× on the map side, combine partially, shuffle
+    O(groups × depth × distinct-slots)). Grouped, it is the
+    per-dimension frequency dashboard without a (group, key)-cardinality
+    shuffle; per-group tables merge across days by the same
+    element-wise sum."""
     return (
-        cms_cell_rows(df, key, depth, width)
-        .groupBy("row", "slot")
+        cms_cell_rows(df, key, depth, width, by)
+        .groupBy(*by, "row", "slot")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
 
 
 def cms_cell_rows(
-    df: DataFrame, key: str, depth: int = 4, width: int = 4096
+    df: DataFrame, key: str, depth: int = 4, width: int = 4096, by: By = ()
 ) -> DataFrame:
-    """(row, slot) cell rows, one per input row per depth — the map-only
-    per-row half of the CMS pipeline, shared by the batch aggregate
-    above and the STREAMING counter maintenance gate (the
+    """(*by, row, slot) cell rows, one per input row per depth — the
+    map-only per-row half of the CMS pipeline, shared by the batch
+    aggregate above and the STREAMING counter maintenance gate (the
     ``hll_bucket_rho`` device: one projection, two execution modes)."""
-    h1, h2 = _h1h2(F.col(key))
-    rows = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("row"),
-                    (
-                        _mix(F.col("__h1"), F.col("__h2"), i) % F.lit(width)
-                    ).alias("slot"),
-                )
-                for i in range(depth)
-            ]
-        )
-    ).alias("rs")
-    return (
-        df.where(F.col(key).isNotNull())
-        # bind the digest halves ONCE per row before the per-seed
-        # explosion — inlining _h1h2 into every mix carries depth×2 md5
-        # subtrees and leans on codegen CSE this codebase deliberately
-        # doesn't trust (same device as cms_point_estimates below)
-        .select(h1.alias("__h1"), h2.alias("__h2"))
-        .select(rows)
-        .select("rs.row", "rs.slot")
-    )
+    return _km_cells(df.where(_notnull(key, *by)), by, key, depth, width, row=True)
 
 
 def cms_point_estimates(
-    df: DataFrame, key: str, depth: int = 4, width: int = 4096
+    df: DataFrame, key: str, depth: int = 4, width: int = 4096, by: By = ()
 ) -> DataFrame:
-    """(key, est, exact, overestimate_ok): Count-Min point estimate (min
-    over the depth counter rows) for EVERY distinct key, next to its
-    exact count — the defining CMS guarantee est ≥ exact rides along as
-    a checked column. Probe side joins its per-row slots against the
-    counter table; both sides are slot-keyed aggregates."""
-    counters = cms_counters(df, key, depth, width)
-    return cms_point_estimates_from_counters(df, key, counters, depth, width)
+    """(*by, k, est, exact, overestimate_ok): Count-Min point estimate
+    (min over the depth counter rows) for EVERY distinct (group, key),
+    next to its exact count — the defining CMS guarantee est ≥ exact
+    rides along as a checked column, per group independently (a group's
+    cells only ever count that group's rows). Probe side joins its
+    per-row slots against the counter table; both sides are
+    slot-keyed aggregates."""
+    counters = cms_counters(df, key, depth, width, by)
+    return cms_point_estimates_from_counters(
+        df, key, counters, depth, width, by=by
+    )
 
 
 def cms_point_estimates_from_counters(
@@ -437,6 +429,7 @@ def cms_point_estimates_from_counters(
     depth: int = 4,
     width: int = 4096,
     exact_from: DataFrame | None = None,
+    by: By = (),
 ) -> DataFrame:
     """``cms_point_estimates`` probing an EXPLICIT counter table — the
     entry point for estimating through merged sketches (``cms_merge``),
@@ -451,190 +444,42 @@ def cms_point_estimates_from_counters(
     ``exact_from``: probe keys are deduped and their exact counts come
     from it (0 for keys the build never saw — making the witness a
     theorem instead of a spurious violation)."""
-    h1, h2 = _h1h2(F.col("k"))
+    gk = [*by, "k"]
     if exact_from is not None:
         keys = (
-            df.where(F.col(key).isNotNull())
-            .select(F.col(key).alias("k"))
+            df.where(_notnull(key, *by))
+            .select(*by, F.col(key).alias("k"))
             .distinct()
         )
         bcounts = (
-            exact_from.where(F.col(key).isNotNull())
-            .groupBy(F.col(key).alias("k"))
+            exact_from.where(_notnull(key, *by))
+            .groupBy(*by, F.col(key).alias("k"))
             .agg(F.count(F.lit(1)).alias("__bc"))
         )
-        grouped = keys.join(bcounts, "k", "left").select(
-            "k", F.coalesce("__bc", F.lit(0)).alias("exact")
+        grouped = keys.join(bcounts, gk, "left").select(
+            *gk, F.coalesce("__bc", F.lit(0)).alias("exact")
         )
     else:
         grouped = (
-            df.where(F.col(key).isNotNull())
-            .groupBy(F.col(key).alias("k"))
+            df.where(_notnull(key, *by))
+            .groupBy(*by, F.col(key).alias("k"))
             .agg(F.count(F.lit(1)).alias("exact"))
         )
-    probes = (
-        grouped
-        # bind the digest halves ONCE per key — inlining _h1h2 into
-        # every seed expression would carry depth×2 md5 subtrees and
-        # lean on codegen CSE this codebase deliberately doesn't trust
-        # (same device as the portable MinHash projection)
-        .select("k", "exact", h1.alias("__h1"), h2.alias("__h2"))
-        .select(
-            "k",
-            "exact",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).alias("row"),
-                            (
-                                _mix(F.col("__h1"), F.col("__h2"), i)
-                                % F.lit(width)
-                            ).alias("slot"),
-                        )
-                        for i in range(depth)
-                    ]
-                )
-            ).alias("rs"),
-        )
-        .select("k", "exact", "rs.row", "rs.slot")
-    )
+    probes = _km_cells(grouped, [*gk, "exact"], "k", depth, width, row=True)
     return (
         # LEFT join + coalesce-to-0: a probed key can hash to a cell the
         # counter table never materialized (possible when probing keys
         # the build input never saw — the merged-sketch entry point this
         # function advertises); the correct CMS estimate for an absent
         # cell is 0, and an inner join would instead inflate the min (or
-        # drop the key entirely if all k cells are absent). Mirrors
-        # bloom_probe_report_from_bits' handling of unset positions.
-        probes.join(counters, ["row", "slot"], "left")
+        # drop the key entirely if all k cells are absent). Mirrors the
+        # Bloom probe's handling of unset positions.
+        probes.join(counters, [*by, "row", "slot"], "left")
         .withColumn("cnt", F.coalesce("cnt", F.lit(0)))
-        .groupBy("k", "exact")
+        .groupBy(*gk, "exact")
         .agg(F.min("cnt").cast("long").alias("est"))
         .select(
-            "k",
-            F.col("est"),
-            F.col("exact").cast("long").alias("exact"),
-            (F.col("est") >= F.col("exact")).alias("overestimate_ok"),
-        )
-    )
-
-
-def cms_oracle_sql(
-    table: str, key: str, depth: int = 4, width: int = 4096
-) -> str:
-    mixes = [km_mix_sql(i) for i in range(depth)]
-    slot_rows = " UNION ALL ".join(
-        f"SELECT k, exact, {i} AS row, ({m}) % {width} AS slot FROM kh"
-        for i, m in enumerate(mixes)
-    )
-    return f"""
-    WITH kh AS (
-      SELECT {key} AS k, CAST(COUNT(*) AS BIGINT) AS exact,
-             ('0x' || substr(md5(CAST({key} AS VARCHAR)), 1, 15))::BIGINT AS h1,
-             ('0x' || substr(md5(CAST({key} AS VARCHAR)), 17, 15))::BIGINT AS h2
-      FROM {table} WHERE {key} IS NOT NULL GROUP BY {key}
-    ),
-    slots AS ({slot_rows}),
-    counters AS (
-      SELECT row, slot, SUM(exact) AS cnt FROM slots GROUP BY row, slot
-    )
-    SELECT s.k, CAST(MIN(COALESCE(c.cnt, 0)) AS BIGINT) AS est, s.exact,
-           MIN(COALESCE(c.cnt, 0)) >= s.exact AS overestimate_ok
-    FROM slots s LEFT JOIN counters c ON s.row = c.row AND s.slot = c.slot
-    GROUP BY s.k, s.exact
-    """
-
-
-def cms_counters_grouped(
-    df: DataFrame, group_col: str, key: str, depth: int = 4, width: int = 4096
-) -> DataFrame:
-    """(g, row, slot, cnt): one Count-Min counter table PER GROUP from a
-    single keyed aggregate — the frequency member of the grouped-sketch
-    grid (grouped HLL registers, grouped histogram quantiles, grouped
-    Misra-Gries). The group key simply joins the (row, slot) cell
-    identity: every per-group table obeys the scalar sketch's guarantees
-    independently because no cell is shared across groups. Shuffle
-    carries at most groups × depth × width counter rows with full
-    map-side combine — the per-dimension frequency dashboard at 100 TB
-    without a (group, key)-cardinality shuffle."""
-    h1, h2 = _h1h2(F.col(key))
-    rows = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(i).alias("row"),
-                    (
-                        _mix(F.col("__h1"), F.col("__h2"), i) % F.lit(width)
-                    ).alias("slot"),
-                )
-                for i in range(depth)
-            ]
-        )
-    ).alias("rs")
-    return (
-        df.where(F.col(key).isNotNull() & F.col(group_col).isNotNull())
-        # digest halves bound once per row before the per-seed explosion
-        # (see cms_cell_rows)
-        .select(F.col(group_col).alias("g"), h1.alias("__h1"), h2.alias("__h2"))
-        .select("g", rows)
-        .select("g", "rs.row", "rs.slot")
-        .groupBy("g", "row", "slot")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-
-
-def cms_point_estimates_grouped(
-    df: DataFrame, group_col: str, key: str, depth: int = 4, width: int = 4096
-) -> DataFrame:
-    """(g, k, est, exact, overestimate_ok): Count-Min point estimates
-    through the PER-GROUP counter tables for every distinct (group, key)
-    pair, next to the exact counts — ``cms_point_estimates`` keyed by
-    group. The witness est ≥ exact holds per group independently (each
-    group's cells only ever count that group's rows). Probe side joins
-    per-(group, key) slots against the grouped counter table; both sides
-    are (g, row, slot)-keyed aggregates."""
-    counters = cms_counters_grouped(df, group_col, key, depth, width)
-    h1, h2 = _h1h2(F.col("k"))
-    grouped = (
-        df.where(F.col(key).isNotNull() & F.col(group_col).isNotNull())
-        .groupBy(F.col(group_col).alias("g"), F.col(key).alias("k"))
-        .agg(F.count(F.lit(1)).alias("exact"))
-    )
-    probes = (
-        grouped
-        .select("g", "k", "exact", h1.alias("__h1"), h2.alias("__h2"))
-        .select(
-            "g",
-            "k",
-            "exact",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).alias("row"),
-                            (
-                                _mix(F.col("__h1"), F.col("__h2"), i)
-                                % F.lit(width)
-                            ).alias("slot"),
-                        )
-                        for i in range(depth)
-                    ]
-                )
-            ).alias("rs"),
-        )
-        .select("g", "k", "exact", "rs.row", "rs.slot")
-    )
-    return (
-        # left join + coalesce-to-0 mirrors cms_point_estimates_from_
-        # counters: correct when probing keys a group's build never saw
-        probes.join(counters, ["g", "row", "slot"], "left")
-        .withColumn("cnt", F.coalesce("cnt", F.lit(0)))
-        .groupBy("g", "k", "exact")
-        .agg(F.min("cnt").cast("long").alias("est"))
-        .select(
-            "g",
-            "k",
+            *gk,
             "est",
             F.col("exact").cast("long").alias("exact"),
             (F.col("est") >= F.col("exact")).alias("overestimate_ok"),
@@ -642,36 +487,31 @@ def cms_point_estimates_grouped(
     )
 
 
-def cms_grouped_oracle_sql(
-    table: str, group_col: str, key: str, depth: int = 4, width: int = 4096
+def cms_oracle_sql(
+    table: str, key: str, depth: int = 4, width: int = 4096, by: By = ()
 ) -> str:
-    """DuckDB replay of the grouped CMS point estimates — the
-    ``cms_oracle_sql`` hash/slot/min arithmetic with every aggregate and
-    the counter join keyed by the group column."""
-    mixes = [km_mix_sql(i) for i in range(depth)]
-    slot_rows = " UNION ALL ".join(
-        f"SELECT g, k, exact, {i} AS row, ({m}) % {width} AS slot FROM kh"
-        for i, m in enumerate(mixes)
-    )
+    """DuckDB replay of cms_point_estimates — the same hash, slots,
+    per-group counters and min, collisions included."""
+    g = _pre(by)
+    h1, h2 = md5_halves_sql(f"CAST({key} AS VARCHAR)")
+    on = "".join(f"s.{c} = c.{c} AND " for c in by)
     return f"""
     WITH kh AS (
-      SELECT {group_col} AS g, {key} AS k, CAST(COUNT(*) AS BIGINT) AS exact,
-             ('0x' || substr(md5(CAST({key} AS VARCHAR)), 1, 15))::BIGINT AS h1,
-             ('0x' || substr(md5(CAST({key} AS VARCHAR)), 17, 15))::BIGINT AS h2
-      FROM {table}
-      WHERE {key} IS NOT NULL AND {group_col} IS NOT NULL
-      GROUP BY 1, 2
+      SELECT {g}{key} AS k, CAST(COUNT(*) AS BIGINT) AS exact,
+             {h1} AS h1, {h2} AS h2
+      FROM {table} WHERE {_notnull_sql(key, *by)} GROUP BY {g}{key}
     ),
-    slots AS ({slot_rows}),
+    slots AS ({_km_sql('kh', f'{g}k, exact, ', depth, width, row=True)}),
     counters AS (
-      SELECT g, row, slot, SUM(exact) AS cnt FROM slots GROUP BY g, row, slot
+      SELECT {g}row, slot, SUM(exact) AS cnt FROM slots
+      GROUP BY {g}row, slot
     )
-    SELECT s.g AS {group_col}, s.k,
+    SELECT {_pre(by, 's.')}s.k,
            CAST(MIN(COALESCE(c.cnt, 0)) AS BIGINT) AS est, s.exact,
            MIN(COALESCE(c.cnt, 0)) >= s.exact AS overestimate_ok
     FROM slots s LEFT JOIN counters c
-      ON s.g = c.g AND s.row = c.row AND s.slot = c.slot
-    GROUP BY s.g, s.k, s.exact
+      ON {on}s.row = c.row AND s.slot = c.slot
+    GROUP BY {_pre(by, 's.')}s.k, s.exact
     """
 
 
@@ -691,7 +531,12 @@ def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
 
 
 def cms_union_oracle_sql(
-    table: str, key: str, split: str, depth: int = 4, width: int = 4096
+    table: str,
+    key: str,
+    split: str,
+    depth: int = 4,
+    width: int = 4096,
+    checksum_mod: int | None = None,
 ) -> str:
     """DuckDB replay of the CMS merge gate: per-key counts of two
     disjoint row-halves (``split`` / NOT ``split``) → two counter
@@ -699,136 +544,38 @@ def cms_union_oracle_sql(
     MERGED counters, compared cell-for-cell and estimate-for-estimate
     against the directly-built sketch. Because integer sum is
     associative, both comparisons must come back exact — and the oracle
-    hash-checks the actual sums/estimates, not just the booleans."""
-    mixes = [km_mix_sql(i) for i in range(depth)]
-    slot_rows = " UNION ALL ".join(
-        f"SELECT k, {i} AS row, ({m}) % {width} AS slot FROM kh"
-        for i, m in enumerate(mixes)
-    )
-    return f"""
-    WITH kf AS (
-      SELECT {key} AS k, CAST(COUNT(*) AS BIGINT) AS c
-      FROM {table} WHERE {key} IS NOT NULL GROUP BY {key}
-    ),
-    ka AS (
-      SELECT {key} AS k, CAST(COUNT(*) AS BIGINT) AS c
-      FROM {table} WHERE {key} IS NOT NULL AND ({split}) GROUP BY {key}
-    ),
-    kb AS (
-      SELECT {key} AS k, CAST(COUNT(*) AS BIGINT) AS c
-      FROM {table} WHERE {key} IS NOT NULL AND NOT ({split}) GROUP BY {key}
-    ),
-    kh AS (
-      SELECT k,
-             ('0x' || substr(md5(CAST(k AS VARCHAR)), 1, 15))::BIGINT AS h1,
-             ('0x' || substr(md5(CAST(k AS VARCHAR)), 17, 15))::BIGINT AS h2
-      FROM kf
-    ),
-    slots AS ({slot_rows}),
-    ca AS (
-      SELECT s.row, s.slot, SUM(ka.c) AS cnt
-      FROM slots s JOIN ka ON s.k = ka.k GROUP BY s.row, s.slot
-    ),
-    cb AS (
-      SELECT s.row, s.slot, SUM(kb.c) AS cnt
-      FROM slots s JOIN kb ON s.k = kb.k GROUP BY s.row, s.slot
-    ),
-    cd AS (
-      SELECT s.row, s.slot, SUM(kf.c) AS cnt
-      FROM slots s JOIN kf ON s.k = kf.k GROUP BY s.row, s.slot
-    ),
-    cm AS (
-      SELECT COALESCE(a.row, b.row) AS row, COALESCE(a.slot, b.slot) AS slot,
-             COALESCE(a.cnt, 0) + COALESCE(b.cnt, 0) AS cnt
-      FROM ca a FULL OUTER JOIN cb b ON a.row = b.row AND a.slot = b.slot
-    ),
-    cells AS (
-      SELECT COUNT(*) AS n_cells,
-             SUM(CASE WHEN m.cnt = d.cnt THEN 0 ELSE 1 END) AS n_diff
-      FROM cm m FULL OUTER JOIN cd d ON m.row = d.row AND m.slot = d.slot
-    ),
-    em AS (
-      SELECT s.k, MIN(m.cnt) AS est
-      FROM slots s JOIN cm m ON s.row = m.row AND s.slot = m.slot
-      GROUP BY s.k
-    ),
-    ed AS (
-      SELECT s.k, MIN(d.cnt) AS est
-      FROM slots s JOIN cd d ON s.row = d.row AND s.slot = d.slot
-      GROUP BY s.k
-    ),
-    ests AS (
-      SELECT COUNT(*) AS keys,
-             CAST(SUM(em.est) AS BIGINT) AS sum_est_merged,
-             CAST(SUM(ed.est) AS BIGINT) AS sum_est_direct,
-             SUM(CASE WHEN em.est = ed.est THEN 0 ELSE 1 END) AS n_est_diff,
-             SUM(CASE WHEN em.est >= kf.c THEN 0 ELSE 1 END) AS n_underest
-      FROM em JOIN ed ON em.k = ed.k JOIN kf ON em.k = kf.k
-    )
-    SELECT CAST(e.keys AS BIGINT) AS keys,
-           e.sum_est_merged, e.sum_est_direct,
-           (c.n_diff = 0 AND e.n_est_diff = 0) AS merge_consistent,
-           e.n_underest = 0 AS overestimate_ok,
-           (SELECT CAST(SUM(c) AS BIGINT) FROM kf) AS exact_total
-    FROM ests e, cells c
-    """
+    hash-checks the actual sums/estimates, not just the booleans. With
+    ``checksum_mod`` it replays the persistence+fold gate: the
+    ``split`` half's counter table is the SAVED artifact."""
+    h1, h2 = md5_halves_sql("CAST(k AS VARCHAR)")
 
+    def counts(name: str, where: str) -> str:
+        return f"""
+    {name} AS (
+      SELECT {key} AS k, CAST(COUNT(*) AS BIGINT) AS c
+      FROM {table} WHERE {key} IS NOT NULL{where} GROUP BY {key}
+    )"""
 
-def cms_artifact_oracle_sql(
-    table: str,
-    key: str,
-    split: str,
-    checksum_mod: int,
-    depth: int = 4,
-    width: int = 4096,
-) -> str:
-    """DuckDB replay of the CMS persistence+fold gate — the
-    ``cms_union_oracle_sql`` replay with the base-half counter table
-    treated as the SAVED artifact: its row count and canonical checksum
-    ride along, everything else (fold, estimates through the folded
-    counters, the overestimate guarantee) is identical."""
-    mixes = [km_mix_sql(i) for i in range(depth)]
-    slot_rows = " UNION ALL ".join(
-        f"SELECT k, {i} AS row, ({m}) % {width} AS slot FROM kh"
-        for i, m in enumerate(mixes)
-    )
-    ck = _ck_sql(
-        "CAST(row AS VARCHAR) || ':' || CAST(slot AS VARCHAR)"
-        " || ':' || CAST(cnt AS VARCHAR)",
-        checksum_mod,
-    )
-    return f"""
-    WITH kf AS (
-      SELECT {key} AS k, CAST(COUNT(*) AS BIGINT) AS c
-      FROM {table} WHERE {key} IS NOT NULL GROUP BY {key}
-    ),
-    ka AS (
-      SELECT {key} AS k, CAST(COUNT(*) AS BIGINT) AS c
-      FROM {table} WHERE {key} IS NOT NULL AND ({split}) GROUP BY {key}
-    ),
-    kb AS (
-      SELECT {key} AS k, CAST(COUNT(*) AS BIGINT) AS c
-      FROM {table} WHERE {key} IS NOT NULL AND NOT ({split}) GROUP BY {key}
-    ),
-    kh AS (
-      SELECT k,
-             ('0x' || substr(md5(CAST(k AS VARCHAR)), 1, 15))::BIGINT AS h1,
-             ('0x' || substr(md5(CAST(k AS VARCHAR)), 17, 15))::BIGINT AS h2
-      FROM kf
-    ),
-    slots AS ({slot_rows}),
-    ca AS (
-      SELECT s.row, s.slot, CAST(SUM(ka.c) AS BIGINT) AS cnt
-      FROM slots s JOIN ka ON s.k = ka.k GROUP BY s.row, s.slot
-    ),
-    cb AS (
-      SELECT s.row, s.slot, CAST(SUM(kb.c) AS BIGINT) AS cnt
-      FROM slots s JOIN kb ON s.k = kb.k GROUP BY s.row, s.slot
-    ),
-    cd AS (
-      SELECT s.row, s.slot, CAST(SUM(kf.c) AS BIGINT) AS cnt
-      FROM slots s JOIN kf ON s.k = kf.k GROUP BY s.row, s.slot
-    ),
+    def counters(name: str, src: str) -> str:
+        return f"""
+    {name} AS (
+      SELECT s.row, s.slot, CAST(SUM({src}.c) AS BIGINT) AS cnt
+      FROM slots s JOIN {src} ON s.k = {src}.k GROUP BY s.row, s.slot
+    )"""
+
+    def ests(name: str, cnt: str) -> str:
+        return f"""
+    {name} AS (
+      SELECT s.k, MIN(x.cnt) AS est
+      FROM slots s JOIN {cnt} x ON s.row = x.row AND s.slot = x.slot
+      GROUP BY s.k
+    )"""
+
+    ctes = f"""{counts('kf', '')},{counts('ka', f' AND ({split})')},
+    {counts('kb', f' AND NOT ({split})')},
+    kh AS (SELECT k, {h1} AS h1, {h2} AS h2 FROM kf),
+    slots AS ({_km_sql('kh', 'k, ', depth, width, row=True)}),
+    {counters('ca', 'ka')},{counters('cb', 'kb')},{counters('cd', 'kf')},
     cm AS (
       SELECT COALESCE(a.row, b.row) AS row, COALESCE(a.slot, b.slot) AS slot,
              COALESCE(a.cnt, 0) + COALESCE(b.cnt, 0) AS cnt
@@ -837,17 +584,7 @@ def cms_artifact_oracle_sql(
     cells AS (
       SELECT SUM(CASE WHEN m.cnt = d.cnt THEN 0 ELSE 1 END) AS n_diff
       FROM cm m FULL OUTER JOIN cd d ON m.row = d.row AND m.slot = d.slot
-    ),
-    em AS (
-      SELECT s.k, MIN(m.cnt) AS est
-      FROM slots s JOIN cm m ON s.row = m.row AND s.slot = m.slot
-      GROUP BY s.k
-    ),
-    ed AS (
-      SELECT s.k, MIN(d.cnt) AS est
-      FROM slots s JOIN cd d ON s.row = d.row AND s.slot = d.slot
-      GROUP BY s.k
-    ),
+    ),{ests('em', 'cm')},{ests('ed', 'cd')},
     ests AS (
       SELECT COUNT(*) AS keys,
              CAST(SUM(em.est) AS BIGINT) AS sum_est_merged,
@@ -855,21 +592,20 @@ def cms_artifact_oracle_sql(
              SUM(CASE WHEN em.est = ed.est THEN 0 ELSE 1 END) AS n_est_diff,
              SUM(CASE WHEN em.est >= kf.c THEN 0 ELSE 1 END) AS n_underest
       FROM em JOIN ed ON em.k = ed.k JOIN kf ON em.k = kf.k
-    ),
-    art AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS saved_cells,
-             {ck} AS saved_checksum
-      FROM ca
-    )
-    SELECT a.saved_cells, a.saved_checksum,
-           CAST(e.keys AS BIGINT) AS keys,
+    )"""
+    cols = """CAST(e.keys AS BIGINT) AS keys,
            e.sum_est_merged, e.sum_est_direct,
            (c.n_diff = 0 AND e.n_est_diff = 0) AS merge_consistent,
            e.n_underest = 0 AS overestimate_ok,
-           (SELECT CAST(SUM(c) AS BIGINT) FROM kf) AS exact_total,
-           CAST(1 AS INT) AS artifact_version
-    FROM ests e, cells c, art a
-    """
+           (SELECT CAST(SUM(c) AS BIGINT) FROM kf) AS exact_total"""
+    art = None
+    if checksum_mod is not None:
+        canon = (
+            "CAST(row AS VARCHAR) || ':' || CAST(slot AS VARCHAR)"
+            " || ':' || CAST(cnt AS VARCHAR)"
+        )
+        art = ("ca", "saved_cells", canon, checksum_mod)
+    return _union_sql(ctes, cols, "ests e, cells c", art)
 
 
 # --- Bloom ------------------------------------------------------------
@@ -885,36 +621,23 @@ def bloom_merge(a: DataFrame, b: DataFrame) -> DataFrame:
 
 
 def bloom_bits(
-    df: DataFrame, key: str, k: int = 5, m_bits: int = 1 << 14
+    df: DataFrame, key: str, k: int = 5, m_bits: int = 1 << 14, by: By = ()
 ) -> DataFrame:
-    """(pos,): the DISTINCT set bit positions of the filter built over
-    ``key`` — O(min(m_bits, k·distinct)) rows."""
-    return bloom_position_rows(df, key, k, m_bits).distinct()
+    """(*by, pos): the DISTINCT set bit positions of the filter built
+    over ``key``, one filter per group — O(groups × min(m_bits,
+    k·distinct)) rows. Grouped, it is the partition-level pruning index
+    at 100 TB (one filter per partition/day, broadcast to skip whole
+    partitions before a shuffle)."""
+    return bloom_position_rows(df, key, k, m_bits, by).distinct()
 
 
 def bloom_position_rows(
-    df: DataFrame, key: str, k: int = 5, m_bits: int = 1 << 14
+    df: DataFrame, key: str, k: int = 5, m_bits: int = 1 << 14, by: By = ()
 ) -> DataFrame:
-    """(pos) rows, one per input row per hash — the map-only per-row
-    half of the Bloom pipeline, shared by the batch distinct above and
-    the STREAMING bit-accumulation gate."""
-    h1, h2 = _h1h2(F.col(key))
-    return (
-        df.where(F.col(key).isNotNull())
-        # digest halves bound once per row, not once per seed (see
-        # cms_cell_rows)
-        .select(h1.alias("__h1"), h2.alias("__h2"))
-        .select(
-            F.explode(
-                F.array(
-                    *[
-                        _mix(F.col("__h1"), F.col("__h2"), i) % F.lit(m_bits)
-                        for i in range(k)
-                    ]
-                )
-            ).alias("pos")
-        )
-    )
+    """(*by, pos) rows, one per input row per hash — the map-only
+    per-row half of the Bloom pipeline, shared by the batch distinct
+    above and the STREAMING bit-accumulation gate."""
+    return _km_cells(df.where(_notnull(key, *by)), by, key, k, m_bits)
 
 
 def bloom_probe_report(
@@ -924,17 +647,21 @@ def bloom_probe_report(
     probe_key: str,
     k: int = 5,
     m_bits: int = 1 << 14,
+    by: By = (),
 ) -> DataFrame:
-    """One-row (probed, maybe_present, true_present, false_positives):
+    """(*by, probed, maybe_present, true_present, false_positives):
     probe every distinct ``probe_key`` against the filter built over
-    ``build_key``. A key is "maybe present" iff ALL k bit positions are
-    set; true membership comes from the exact semi-join, so the false
-    positives — the sketch's entire error — are hash-checked by the
-    oracle. Shape: bit table is O(m_bits); probe side is a positions
-    join + all-k count, never a row-by-row filter."""
-    bits = bloom_bits(build, build_key, k, m_bits)
+    ``build_key`` — per group, against every group's filter (the
+    partition-pruning question "which partitions can this key skip?"
+    asked for the whole probe set at once). A key is "maybe present"
+    iff ALL k bit positions are set; true membership comes from the
+    exact (group, key) table, so the false positives — the sketch's
+    entire error — are hash-checked by the oracle. Shape: bit table is
+    O(m_bits); probe side is a positions join + all-k count, never a
+    row-by-row filter."""
+    bits = bloom_bits(build, build_key, k, m_bits, by)
     return bloom_probe_report_from_bits(
-        bits, build, build_key, probe, probe_key, k, m_bits
+        bits, build, build_key, probe, probe_key, k, m_bits, by
     )
 
 
@@ -946,51 +673,64 @@ def bloom_probe_report_from_bits(
     probe_key: str,
     k: int = 5,
     m_bits: int = 1 << 14,
+    by: By = (),
 ) -> DataFrame:
     """``bloom_probe_report`` probing an EXPLICIT bit table — the entry
     point for probing through merged filters (``bloom_merge``). ``build``
     is still needed for the exact-membership truth side."""
-    pk = probe.where(F.col(probe_key).isNotNull()).select(
-        F.col(probe_key).alias("k")
-    ).distinct()
-    h1, h2 = _h1h2(F.col("k"))
-    ppos = (
-        pk.select("k", h1.alias("__h1"), h2.alias("__h2"))
-        .select(
-            "k",
-            F.explode(
-                F.array(
-                    *[
-                        _mix(F.col("__h1"), F.col("__h2"), i) % F.lit(m_bits)
-                        for i in range(k)
-                    ]
-                )
-            ).alias("pos"),
-        )
+    truth = _distinct_keys(build, build_key, by)
+    groups = bits.select(*by).distinct() if by else None
+    pk = _distinct_keys(probe, probe_key)
+    return _bloom_report(bits, pk, truth, by, groups, k, m_bits)
+
+
+def _distinct_keys(df: DataFrame, key: str, by: By = ()) -> DataFrame:
+    """(*by, k): the distinct non-null keys of ``df`` per group."""
+    return (
+        df.where(_notnull(key, *by))
+        .select(*by, F.col(key).alias("k"))
         .distinct()
     )
+
+
+def _bloom_report(
+    bits: DataFrame,
+    pk: DataFrame,
+    truth: DataFrame,
+    by: By,
+    groups: DataFrame | None,
+    k: int,
+    m_bits: int,
+) -> DataFrame:
+    """The Bloom probe pipeline every probe report shares (batch,
+    grouped, sliding): hash each distinct probe key ``pk`` once to its
+    k positions (they are group-independent), count its set positions
+    in each group's ``bits`` (*by, pos), call it maybe-present where
+    all are set, left-join the exact ``truth`` (*by, k) and count per
+    group. With ``groups`` (the group list), the group × key probe
+    matrix is a broadcast cross join against it — ≤ dim-cardinality
+    rows, the allowlisted dim × dim cross join, never a data×data
+    cartesian; the scalar report has no group list and no cross join.
+    Set-bit counting is a (group, pos)-keyed join; nothing fact-sized
+    crosses."""
+    gk = [*by, "k"]
+    ppos = _km_cells(pk, ["k"], "k", k, m_bits).distinct()
     hits = (
         ppos.join(bits, "pos")
-        .groupBy("k")
+        .groupBy(*gk)
         .agg(F.countDistinct("pos").alias("nset"))
     )
     npos = ppos.groupBy("k").agg(F.countDistinct("pos").alias("ntotal"))
-    maybe = (
-        npos.join(hits, "k", "left")
-        .select(
-            "k",
-            (F.coalesce(F.col("nset"), F.lit(0)) == F.col("ntotal")).alias(
-                "maybe"
-            ),
-        )
+    grid = npos if groups is None else F.broadcast(groups).crossJoin(npos)
+    maybe = grid.join(hits, gk, "left").select(
+        *gk,
+        (F.coalesce(F.col("nset"), F.lit(0)) == F.col("ntotal")).alias("maybe"),
     )
-    truth = pk.join(
-        build.select(F.col(build_key).alias("k")).distinct(), "k", "left_semi"
-    ).select("k", F.lit(True).alias("present"))
-    joined = maybe.join(truth, "k", "left").select(
-        "k", "maybe", F.coalesce("present", F.lit(False)).alias("present")
+    present = truth.withColumn("present", F.lit(True))
+    joined = maybe.join(present, gk, "left").select(
+        *by, "maybe", F.coalesce("present", F.lit(False)).alias("present")
     )
-    return joined.agg(
+    return joined.groupBy(*by).agg(
         F.count(F.lit(1)).cast("long").alias("probed"),
         F.sum(F.col("maybe").cast("long")).cast("long").alias("maybe_present"),
         F.sum(F.col("present").cast("long")).cast("long").alias("true_present"),
@@ -998,6 +738,48 @@ def bloom_probe_report_from_bits(
         .cast("long")
         .alias("false_positives"),
     )
+
+
+def _bloom_probe_sql(
+    bits: str,
+    build_table: str,
+    build_key: str,
+    probe_table: str,
+    probe_key: str,
+    k: int,
+    m_bits: int,
+    by: By = (),
+) -> str:
+    """CTEs ph, ppos, m, t: every distinct probe key's k positions,
+    counted set in each group's ``bits`` (*by, pos) CTE, with exact
+    membership — the SQL twin of ``_bloom_report``."""
+    grid = "ppos p"
+    on = "b.pos = p.pos"
+    if by:
+        grid = f"(SELECT DISTINCT {', '.join(by)} FROM {bits}) grp CROSS JOIN ppos p"
+        on = "".join(f"b.{c} = grp.{c} AND " for c in by) + on
+    same = "".join(f" AND x.{c} = m.{c}" for c in by)
+    return f"""{_halves_cte('ph', probe_table, probe_key, cols=f'{probe_key} AS k, ')},
+    ppos AS (SELECT DISTINCT k, pos FROM ({_km_sql('ph', 'k, ', k, m_bits)})),
+    m AS (
+      SELECT {_pre(by, 'grp.')}p.k, COUNT(*) AS ntotal, COUNT(b.pos) AS nset
+      FROM {grid} LEFT JOIN {bits} b ON {on}
+      GROUP BY {_pre(by, 'grp.')}p.k
+    ),
+    t AS (
+      SELECT {_pre(by, 'm.')}m.k, m.nset = m.ntotal AS maybe,
+             EXISTS (SELECT 1 FROM {build_table} x
+                     WHERE x.{build_key} = m.k{same}) AS present
+      FROM m
+    )"""
+
+
+#: the probe report's columns over the ``t`` CTE of ``_bloom_probe_sql``
+_BLOOM_REPORT_SQL = """CAST(COUNT(*) AS BIGINT) AS probed,
+           CAST(SUM(CASE WHEN maybe THEN 1 ELSE 0 END) AS BIGINT) AS maybe_present,
+           CAST(SUM(CASE WHEN present THEN 1 ELSE 0 END) AS BIGINT) AS true_present,
+           CAST(SUM(CASE WHEN maybe AND NOT present THEN 1 ELSE 0 END) AS BIGINT)
+             AS false_positives"""
 
 
 def bloom_oracle_sql(
@@ -1007,325 +789,88 @@ def bloom_oracle_sql(
     probe_key: str,
     k: int = 5,
     m_bits: int = 1 << 14,
+    by: By = (),
 ) -> str:
-    def mixes() -> list[str]:
-        return [km_mix_sql(i) for i in range(k)]
-
-    build_pos = " UNION ALL ".join(
-        f"SELECT ({m}) % {m_bits} AS pos FROM bh" for m in mixes()
-    )
-    probe_pos = " UNION ALL ".join(
-        f"SELECT k, ({m}) % {m_bits} AS pos FROM ph" for m in mixes()
-    )
+    """DuckDB replay of bloom_probe_report — the same bit positions per
+    group, probe matrix and exact membership."""
+    g = _pre(by)
+    where = "".join(f" AND {c} IS NOT NULL" for c in by)
     return f"""
-    WITH bh AS (
-      SELECT DISTINCT
-             ('0x' || substr(md5(CAST({build_key} AS VARCHAR)), 1, 15))::BIGINT AS h1,
-             ('0x' || substr(md5(CAST({build_key} AS VARCHAR)), 17, 15))::BIGINT AS h2
-      FROM {build_table} WHERE {build_key} IS NOT NULL
-    ),
-    bits AS (SELECT DISTINCT pos FROM ({build_pos})),
-    ph AS (
-      SELECT DISTINCT {probe_key} AS k,
-             ('0x' || substr(md5(CAST({probe_key} AS VARCHAR)), 1, 15))::BIGINT AS h1,
-             ('0x' || substr(md5(CAST({probe_key} AS VARCHAR)), 17, 15))::BIGINT AS h2
-      FROM {probe_table} WHERE {probe_key} IS NOT NULL
-    ),
-    ppos AS (SELECT DISTINCT k, pos FROM ({probe_pos})),
-    m AS (
-      SELECT p.k,
-             COUNT(*) AS ntotal,
-             COUNT(b.pos) AS nset
-      FROM ppos p LEFT JOIN bits b ON p.pos = b.pos
-      GROUP BY p.k
-    ),
-    t AS (
-      SELECT m.k, m.nset = m.ntotal AS maybe,
-             EXISTS (SELECT 1 FROM {build_table} x
-                     WHERE x.{build_key} = m.k) AS present
-      FROM m
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS probed,
-           CAST(SUM(CASE WHEN maybe THEN 1 ELSE 0 END) AS BIGINT) AS maybe_present,
-           CAST(SUM(CASE WHEN present THEN 1 ELSE 0 END) AS BIGINT) AS true_present,
-           CAST(SUM(CASE WHEN maybe AND NOT present THEN 1 ELSE 0 END) AS BIGINT)
-             AS false_positives
-    FROM t
+    WITH {_halves_cte('bh', build_table, build_key, where, g)},
+    bits AS (SELECT DISTINCT {g}pos FROM ({_km_sql('bh', g, k, m_bits)})),
+    {_bloom_probe_sql('bits', build_table, build_key, probe_table, probe_key, k, m_bits, by)}
+    SELECT {g}{_BLOOM_REPORT_SQL}
+    FROM t{_group_by_sql(by)}
     """
 
 
-def bloom_bits_grouped(
-    df: DataFrame, group_col: str, key: str, k: int = 5, m_bits: int = 1 << 14
-) -> DataFrame:
-    """(g, pos): the distinct set bit positions of ONE Bloom filter PER
-    GROUP — the membership member of the grouped-sketch grid. The group
-    key joins the bit identity, so each group's filter is exactly the
-    scalar filter over that group's rows (no cross-group sharing) and
-    per-group filters merge across days by the same distinct-union.
-    O(groups × min(m_bits, k·distinct)) rows — the partition-level
-    pruning index at 100 TB (one filter per partition/day, broadcast to
-    skip whole partitions before a shuffle)."""
-    h1, h2 = _h1h2(F.col(key))
-    return (
-        df.where(F.col(key).isNotNull() & F.col(group_col).isNotNull())
-        # digest halves bound once per row, not once per seed (see
-        # cms_cell_rows)
-        .select(F.col(group_col).alias("g"), h1.alias("__h1"), h2.alias("__h2"))
-        .select(
-            "g",
-            F.explode(
-                F.array(
-                    *[
-                        _mix(F.col("__h1"), F.col("__h2"), i) % F.lit(m_bits)
-                        for i in range(k)
-                    ]
-                )
-            ).alias("pos"),
-        )
-        .distinct()
-    )
-
-
-def bloom_probe_report_grouped(
-    build: DataFrame,
-    group_col: str,
-    build_key: str,
-    probe: DataFrame,
-    probe_key: str,
-    k: int = 5,
-    m_bits: int = 1 << 14,
-) -> DataFrame:
-    """(g, probed, maybe_present, true_present, false_positives): probe
-    every distinct ``probe_key`` against EVERY group's filter — the
-    partition-pruning question ("which partitions can this key skip?")
-    asked for the whole probe set at once. A key is maybe-present in a
-    group iff all k of its positions are set in THAT group's bits; truth
-    comes from the exact per-group semi-join, so each group's false
-    positives — the sketch's entire error — are hash-checked.
-
-    Shape: the probe side hashes once (positions are group-independent),
-    the group×key probe matrix comes from a broadcast cross join against
-    the group DIM (≤ partition-count rows — the allowlisted
-    dim-cardinality cross join, not a data×data cartesian), and set-bit
-    counting is a (g, pos)-keyed join. Nothing fact-sized crosses."""
-    pk = (
-        probe.where(F.col(probe_key).isNotNull())
-        .select(F.col(probe_key).alias("k"))
-        .distinct()
-    )
-    h1, h2 = _h1h2(F.col("k"))
-    ppos = (
-        pk.select("k", h1.alias("__h1"), h2.alias("__h2"))
-        .select(
-            "k",
-            F.explode(
-                F.array(
-                    *[
-                        _mix(F.col("__h1"), F.col("__h2"), i) % F.lit(m_bits)
-                        for i in range(k)
-                    ]
-                )
-            ).alias("pos"),
-        )
-        .distinct()
-    )
-    bits = bloom_bits_grouped(build, group_col, build_key, k, m_bits)
-    groups = bits.select("g").distinct()
-    hits = (
-        ppos.join(bits, "pos")
-        .groupBy("g", "k")
-        .agg(F.countDistinct("pos").alias("nset"))
-    )
-    npos = ppos.groupBy("k").agg(F.countDistinct("pos").alias("ntotal"))
-    maybe = (
-        F.broadcast(groups)
-        .crossJoin(npos)
-        .join(hits, ["g", "k"], "left")
-        .select(
-            "g",
-            "k",
-            (F.coalesce(F.col("nset"), F.lit(0)) == F.col("ntotal")).alias(
-                "maybe"
-            ),
-        )
-    )
-    truth = (
-        build.where(
-            F.col(build_key).isNotNull() & F.col(group_col).isNotNull()
-        )
-        .select(
-            F.col(group_col).alias("g"), F.col(build_key).alias("k")
-        )
-        .distinct()
-        .withColumn("present", F.lit(True))
-    )
-    joined = maybe.join(truth, ["g", "k"], "left").select(
-        "g", "maybe", F.coalesce("present", F.lit(False)).alias("present")
-    )
-    return joined.groupBy("g").agg(
-        F.count(F.lit(1)).cast("long").alias("probed"),
-        F.sum(F.col("maybe").cast("long")).cast("long").alias("maybe_present"),
-        F.sum(F.col("present").cast("long")).cast("long").alias("true_present"),
-        F.sum((F.col("maybe") & ~F.col("present")).cast("long"))
-        .cast("long")
-        .alias("false_positives"),
-    )
-
-
-def bloom_grouped_oracle_sql(
-    build_table: str,
-    group_col: str,
-    build_key: str,
-    probe_table: str,
-    probe_key: str,
-    k: int = 5,
-    m_bits: int = 1 << 14,
-) -> str:
-    """DuckDB replay of the grouped Bloom probe report — the
-    ``bloom_oracle_sql`` bit/probe arithmetic with the bit table, the
-    probe matrix, and the truth join keyed by the group column."""
-    mixes = [km_mix_sql(i) for i in range(k)]
-    build_pos = " UNION ALL ".join(
-        f"SELECT g, ({m}) % {m_bits} AS pos FROM bh" for m in mixes
-    )
-    probe_pos = " UNION ALL ".join(
-        f"SELECT k, ({m}) % {m_bits} AS pos FROM ph" for m in mixes
-    )
-    return f"""
-    WITH bh AS (
-      SELECT DISTINCT {group_col} AS g,
-             ('0x' || substr(md5(CAST({build_key} AS VARCHAR)), 1, 15))::BIGINT AS h1,
-             ('0x' || substr(md5(CAST({build_key} AS VARCHAR)), 17, 15))::BIGINT AS h2
-      FROM {build_table}
-      WHERE {build_key} IS NOT NULL AND {group_col} IS NOT NULL
-    ),
-    bits AS (SELECT DISTINCT g, pos FROM ({build_pos})),
-    ph AS (
-      SELECT DISTINCT {probe_key} AS k,
-             ('0x' || substr(md5(CAST({probe_key} AS VARCHAR)), 1, 15))::BIGINT AS h1,
-             ('0x' || substr(md5(CAST({probe_key} AS VARCHAR)), 17, 15))::BIGINT AS h2
-      FROM {probe_table} WHERE {probe_key} IS NOT NULL
-    ),
-    ppos AS (SELECT DISTINCT k, pos FROM ({probe_pos})),
-    grp AS (SELECT DISTINCT g FROM bits),
-    m AS (
-      SELECT grp.g, p.k,
-             COUNT(*) AS ntotal,
-             COUNT(b.pos) AS nset
-      FROM grp CROSS JOIN ppos p
-      LEFT JOIN bits b ON b.g = grp.g AND b.pos = p.pos
-      GROUP BY grp.g, p.k
-    ),
-    t AS (
-      SELECT m.g, m.k, m.nset = m.ntotal AS maybe,
-             EXISTS (SELECT 1 FROM {build_table} x
-                     WHERE x.{build_key} = m.k
-                       AND x.{group_col} = m.g) AS present
-      FROM m
-    )
-    SELECT g AS {group_col},
-           CAST(COUNT(*) AS BIGINT) AS probed,
-           CAST(SUM(CASE WHEN maybe THEN 1 ELSE 0 END) AS BIGINT) AS maybe_present,
-           CAST(SUM(CASE WHEN present THEN 1 ELSE 0 END) AS BIGINT) AS true_present,
-           CAST(SUM(CASE WHEN maybe AND NOT present THEN 1 ELSE 0 END) AS BIGINT)
-             AS false_positives
-    FROM t GROUP BY g
-    """
-
-
-def bloom_artifact_oracle_sql(
+def bloom_union_oracle_sql(
     build_table: str,
     build_key: str,
     probe_table: str,
     probe_key: str,
     split: str,
-    checksum_mod: int,
     k: int = 5,
     m_bits: int = 1 << 14,
+    checksum_mod: int | None = None,
 ) -> str:
-    """DuckDB replay of the Bloom persistence+fold gate — the
-    ``bloom_union_oracle_sql`` replay with the base-half bit table
-    treated as the SAVED artifact (row count + canonical checksum);
-    fold = bit-union with the new half's bits, probe through the
-    merged filter, bit-set equality vs the directly-built filter."""
-    mixes = [km_mix_sql(i) for i in range(k)]
-    ba = " UNION ALL ".join(
-        f"SELECT ({m}) % {m_bits} AS pos FROM bha" for m in mixes
-    )
-    bb = " UNION ALL ".join(
-        f"SELECT ({m}) % {m_bits} AS pos FROM bhb" for m in mixes
-    )
-    bf = " UNION ALL ".join(
-        f"SELECT ({m}) % {m_bits} AS pos FROM bhf" for m in mixes
-    )
-    probe_pos = " UNION ALL ".join(
-        f"SELECT k, ({m}) % {m_bits} AS pos FROM ph" for m in mixes
-    )
-    ck = _ck_sql("CAST(pos AS VARCHAR)", checksum_mod)
+    """DuckDB replay of the Bloom merge gate: build-key halves
+    (``split`` / NOT ``split``) → two bit tables → bit-union merge →
+    probe every ``probe_key`` through the MERGED filter, with the
+    merged-vs-direct bit-set equality as an exact witness. Set-union
+    associativity makes the bit sets identical, so the probe report
+    through the merged filter must equal the direct one — and the
+    oracle hash-checks the report itself, false positives included.
+    With ``checksum_mod`` it replays the persistence+fold gate: the
+    ``split`` half's bit table is the SAVED artifact (and the gate
+    reports no direct bit count)."""
 
-    def half(name: str, where: str) -> str:
-        return f"""
-    {name} AS (
-      SELECT DISTINCT
-             ('0x' || substr(md5(CAST({build_key} AS VARCHAR)), 1, 15))::BIGINT AS h1,
-             ('0x' || substr(md5(CAST({build_key} AS VARCHAR)), 17, 15))::BIGINT AS h2
-      FROM {build_table} WHERE {build_key} IS NOT NULL{where}
-    )"""
+    def bits(name: str, src: str, where: str) -> str:
+        return f"""{_halves_cte(src, build_table, build_key, where)},
+    {name} AS (SELECT DISTINCT pos FROM ({_km_sql(src, '', k, m_bits)}))"""
 
-    return f"""
-    WITH {half('bha', f' AND ({split})')},
-    {half('bhb', f' AND NOT ({split})')},
-    {half('bhf', '')},
-    bits_a AS (SELECT DISTINCT pos FROM ({ba})),
-    bits_m AS (SELECT DISTINCT pos FROM (
-      SELECT pos FROM bits_a UNION ALL {bb})),
-    bits_d AS (SELECT DISTINCT pos FROM ({bf})),
+    ctes = f"""{bits('bits_a', 'bha', f' AND ({split})')},
+    {bits('bits_b', 'bhb', f' AND NOT ({split})')},
+    {bits('bits_d', 'bhf', '')},
+    bits_m AS (
+      SELECT pos FROM bits_a UNION SELECT pos FROM bits_b
+    ),
     bitcmp AS (
       SELECT (SELECT COUNT(*) FROM bits_m) AS nbits_merged,
+             (SELECT COUNT(*) FROM bits_d) AS nbits_direct,
              (SELECT COUNT(*) FROM (
                 SELECT pos FROM bits_m EXCEPT SELECT pos FROM bits_d
                 UNION ALL
                 SELECT pos FROM bits_d EXCEPT SELECT pos FROM bits_m
              )) AS n_diff
     ),
-    art AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS saved_bits,
-             {ck} AS saved_checksum
-      FROM bits_a
-    ),
-    ph AS (
-      SELECT DISTINCT {probe_key} AS k,
-             ('0x' || substr(md5(CAST({probe_key} AS VARCHAR)), 1, 15))::BIGINT AS h1,
-             ('0x' || substr(md5(CAST({probe_key} AS VARCHAR)), 17, 15))::BIGINT AS h2
-      FROM {probe_table} WHERE {probe_key} IS NOT NULL
-    ),
-    ppos AS (SELECT DISTINCT k, pos FROM ({probe_pos})),
-    m AS (
-      SELECT p.k, COUNT(*) AS ntotal, COUNT(b.pos) AS nset
-      FROM ppos p LEFT JOIN bits_m b ON p.pos = b.pos
-      GROUP BY p.k
-    ),
-    t AS (
-      SELECT m.k, m.nset = m.ntotal AS maybe,
-             EXISTS (SELECT 1 FROM {build_table} x
-                     WHERE x.{build_key} = m.k) AS present
-      FROM m
+    {_bloom_probe_sql('bits_m', build_table, build_key, probe_table, probe_key, k, m_bits)}"""
+    direct = "" if checksum_mod is not None else (
+        "(SELECT CAST(nbits_direct AS BIGINT) FROM bitcmp) AS nbits_direct,\n           "
     )
-    SELECT (SELECT saved_bits FROM art) AS saved_bits,
-           (SELECT saved_checksum FROM art) AS saved_checksum,
-           CAST(COUNT(*) AS BIGINT) AS probed,
-           CAST(SUM(CASE WHEN maybe THEN 1 ELSE 0 END) AS BIGINT) AS maybe_present,
-           CAST(SUM(CASE WHEN present THEN 1 ELSE 0 END) AS BIGINT) AS true_present,
-           CAST(SUM(CASE WHEN maybe AND NOT present THEN 1 ELSE 0 END) AS BIGINT)
-             AS false_positives,
+    cols = f"""{_BLOOM_REPORT_SQL},
            (SELECT CAST(nbits_merged AS BIGINT) FROM bitcmp) AS nbits_merged,
-           (SELECT n_diff = 0 FROM bitcmp) AS merge_consistent,
-           CAST(1 AS INT) AS artifact_version
-    FROM t
-    """
+           {direct}(SELECT n_diff = 0 FROM bitcmp) AS merge_consistent"""
+    art = None
+    if checksum_mod is not None:
+        art = ("bits_a", "saved_bits", "CAST(pos AS VARCHAR)", checksum_mod)
+    return _union_sql(ctes, cols, "t", art)
 
 
 # --- Histogram quantile sketch ------------------------------------------
+
+def histogram_bin_expr(v: Column, lo: Column, hi: Column, bins: int) -> Column:
+    """The shared per-row binning projection — the ``hll_bucket_rho``
+    device applied to histograms: batch construction, the streaming
+    twin, and the oracle all bin through this exact arithmetic. ``lo``/
+    ``hi`` may be column refs from an in-plan stats row or
+    driver-collected literals; the IEEE quotient and floor are identical
+    either way."""
+    w = (hi - lo) / float(bins)
+    return F.when(hi == lo, F.lit(0)).otherwise(
+        F.least(F.floor((v - lo) / w).cast("long"), F.lit(bins - 1))
+    )
+
 
 def histogram_bin_expr_frozen(
     v: Column, lo: Column, hi: Column, bins: int
@@ -1348,82 +893,93 @@ def histogram_bin_expr_frozen(
     )
 
 
-def histogram_artifact_oracle_sql(
-    table: str, col: str, split: str, bins: int, checksum_mod: int
-) -> str:
-    """DuckDB replay of the frozen-edge histogram persistence+fold
-    gate: base-half edges + bin counts (the SAVED artifact, with its
-    canonical checksum), the new batch binned under the FROZEN edges
-    with edge-bin clamping, the cell-wise fold, and the direct
-    histogram of the full input under the same frozen edges — integer
-    sums, so fold ≡ direct exactly."""
-    ck = _ck_sql(
-        "CAST(bin AS VARCHAR) || ':' || CAST(cnt AS VARCHAR)", checksum_mod
-    )
-    clamp = (
-        f"CASE WHEN hi = lo THEN 0 ELSE LEAST({bins - 1}, GREATEST(0, "
-        f"CAST(FLOOR((v - lo) / ((hi - lo) / {float(bins)!r})) AS BIGINT)"
-        f")) END"
-    )
-    return f"""
-    WITH srcb AS (
-      SELECT CAST({col} AS DOUBLE) AS v FROM {table}
-      WHERE {col} IS NOT NULL AND ({split})
-    ),
-    srcn AS (
-      SELECT CAST({col} AS DOUBLE) AS v FROM {table}
-      WHERE {col} IS NOT NULL AND NOT ({split})
-    ),
-    srcf AS (
-      SELECT CAST({col} AS DOUBLE) AS v FROM {table} WHERE {col} IS NOT NULL
-    ),
-    edges AS (SELECT MIN(v) AS lo, MAX(v) AS hi FROM srcb),
-    bb AS (
-      SELECT {clamp} AS bin, CAST(COUNT(*) AS BIGINT) AS cnt
-      FROM srcb, edges GROUP BY 1
-    ),
-    bn AS (
-      SELECT {clamp} AS bin, CAST(COUNT(*) AS BIGINT) AS cnt
-      FROM srcn, edges GROUP BY 1
-    ),
-    folded AS (
-      SELECT COALESCE(a.bin, b.bin) AS bin,
-             COALESCE(a.cnt, 0) + COALESCE(b.cnt, 0) AS cnt
-      FROM bb a FULL OUTER JOIN bn b ON a.bin = b.bin
-    ),
-    direct AS (
-      SELECT {clamp} AS bin, CAST(COUNT(*) AS BIGINT) AS cnt
-      FROM srcf, edges GROUP BY 1
-    ),
-    cmp AS (
-      SELECT SUM(CASE WHEN f.cnt = d.cnt THEN 0 ELSE 1 END) AS n_diff
-      FROM folded f FULL OUTER JOIN direct d ON f.bin = d.bin
-    ),
-    art AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS saved_bins,
-             {ck} AS saved_checksum
-      FROM bb
-    )
-    SELECT a.saved_bins, a.saved_checksum,
-           FLOOR((SELECT lo FROM edges) * 100 + 0.5) / 100.0 AS lo_edge,
-           FLOOR((SELECT hi FROM edges) * 100 + 0.5) / 100.0 AS hi_edge,
-           (SELECT CAST(SUM(cnt) AS BIGINT) FROM folded) AS n_total,
-           (SELECT n_diff = 0 FROM cmp) AS fold_consistent,
-           CAST(1 AS INT) AS artifact_version
-    FROM art a
-    """
+def _tag(q: float) -> str:
+    return str(q).replace("0.", "p")
 
 
-def histogram_bin_expr(v: Column, lo: Column, hi: Column, bins: int) -> Column:
-    """The shared per-row binning projection — the ``hll_bucket_rho``
-    device applied to histograms: batch construction, the streaming
-    twin, and the oracle all bin through this exact arithmetic. ``lo``/
-    ``hi`` may be column refs from an in-plan stats row or
-    driver-collected literals; the IEEE quotient and floor are identical
-    either way."""
-    w = (hi - lo) / float(bins)
-    return F.when(hi == lo, F.lit(0)).otherwise(
-        F.least(F.floor((v - lo) / w).cast("long"), F.lit(bins - 1))
+def _half_up2(c: Column) -> Column:
+    """Portable half-up 2dp rounding (Spark ROUND is HALF_UP; DuckDB's
+    can bank) — ``_half_up2_sql`` on the oracle side."""
+    return F.floor(c * 100 + F.lit(0.5)) / 100.0
+
+
+def _quantile_picks(
+    cnts: DataFrame, stats: DataFrame, bins: int, qs: Sequence[float], by: By = ()
+) -> DataFrame:
+    """The rank-pick every histogram estimator shares. ``cnts`` is the
+    (*by, bin, cnt) counter table (no empty cells), ``stats`` the
+    (*by, lo, hi, n) row per group. For each q the covering bin is the
+    one whose running count first reaches r = n·q — cum ≥ r > cum − cnt,
+    which exactly one bin meets — and the estimate interpolates inside
+    it: lo + w·(bin + (r − cum_prev)/cnt). Returns ``stats`` with
+    ({tag}_raw, {tag}_bin) per q. Everything here is groups × bins
+    rows."""
+    cum = _join_by(
+        cnts.withColumn(
+            "cum", F.sum("cnt").over(Window.partitionBy(*by).orderBy("bin"))
+        ),
+        F.broadcast(stats),
+        by,
+    )
+    w = (F.col("hi") - F.col("lo")) / float(bins)
+    prev = F.col("cum") - F.col("cnt")
+    out = stats
+    for q in qs:
+        tag, r = _tag(q), F.col("n") * float(q)
+        pick = cum.where((F.col("cum") >= r) & (prev < r)).select(
+            *by,
+            (F.col("lo") + w * (F.col("bin") + (r - prev) / F.col("cnt"))).alias(
+                f"{tag}_raw"
+            ),
+            F.col("bin").alias(f"{tag}_bin"),
+        )
+        # one pick row per group: broadcast, so the scalar sketch's
+        # one-row picks cross-join as a nested loop, never a cartesian
+        out = _join_by(out, F.broadcast(pick), by)
+    return out
+
+
+def _estimates(qs: Sequence[float]) -> list[Column]:
+    return [_half_up2(F.col(f"{_tag(q)}_raw")).alias(f"{_tag(q)}_est") for q in qs]
+
+
+def histogram_quantiles(
+    df: DataFrame,
+    col: str,
+    bins: int = 64,
+    qs: Sequence[float] = (0.5, 0.9),
+    by: By = (),
+) -> DataFrame:
+    """(*by, n_rows, {tag}_est per q): histogram quantile estimates per
+    group — per-group [lo, hi] edges, per-group ``bins``-cell counts
+    (one keyed aggregate, map-side combinable), then the shared
+    rank-pick (``_quantile_picks``), half-up 2dp. At 100 TB this is
+    per-dimension percentiles from one bounded-state pass: state is
+    O(groups × bins) and the only fact-sized stage is the binning
+    scan."""
+    src = df.where(_notnull(col, *by)).select(
+        *by, F.col(col).cast("double").alias("v")
+    )
+    # stats (groups-sized) and the bin counts (groups × bins) are both
+    # consumed by every per-quantile pick — materialized, the fact scan
+    # runs once for the edges and once for the binning instead of once
+    # per downstream consumer (measured 7 scans in the r13 sweep)
+    stats = src.groupBy(*by).agg(
+        F.min("v").alias("lo"),
+        F.max("v").alias("hi"),
+        F.count(F.lit(1)).alias("n"),
+    ).localCheckpoint(eager=True)
+    binned = _join_by(src, F.broadcast(stats), by).select(
+        *by,
+        histogram_bin_expr(F.col("v"), F.col("lo"), F.col("hi"), bins).alias(
+            "bin"
+        ),
+    )
+    cnts = binned.groupBy(*by, "bin").agg(
+        F.count(F.lit(1)).alias("cnt")
+    ).localCheckpoint(eager=True)
+    return _quantile_picks(cnts, stats, bins, qs, by).select(
+        *by, F.col("n").cast("long").alias("n_rows"), *_estimates(qs)
     )
 
 
@@ -1436,12 +992,13 @@ def histogram_quantile_report(
 ) -> DataFrame:
     """One-row histogram-quantile sketch report: ``bins`` equi-width
     bins over [min, max] of ``col``, quantile estimates interpolated
-    within the covering bin, the MERGEABILITY witness (bins built from
-    the disjoint ``split`` halves and summed must equal the direct
-    histogram cell-for-cell — integer sum, exact), and the sketch's
-    structural guarantee checked per quantile: the estimate lies INSIDE
-    the bin covering rank n·q (``{tag}_in_bin`` — a theorem: the
-    interpolation fraction is in (0, 1] by the pick condition).
+    within the covering bin (the ``histogram_quantiles`` estimates),
+    the MERGEABILITY witness (bins built from the disjoint ``split``
+    halves and summed must equal the direct histogram cell-for-cell —
+    integer sum, exact), and the sketch's structural guarantee checked
+    per quantile: the estimate lies INSIDE the bin covering rank n·q
+    (``{tag}_in_bin`` — a theorem: the interpolation fraction is in
+    (0, 1] by the pick condition).
 
     ``|estimate − exact| ≤ bin width`` is deliberately NOT the witness:
     the estimate ranks at n·q while ``percentile``/``quantile_cont``
@@ -1456,9 +1013,7 @@ def histogram_quantile_report(
     here is deterministic floor/linear arithmetic over exact counts —
     the DuckDB oracle replays estimates value-for-value. State is
     O(bins) with map-side partial combine; merge = element-wise sum —
-    the CMS economics applied to quantiles. Rounding uses the portable
-    half-up device FLOOR(x·100 + 0.5)/100 on both sides (Spark ROUND is
-    HALF_UP; DuckDB's can bank)."""
+    the CMS economics applied to quantiles."""
     src = df.where(F.col(col).isNotNull()).select(
         F.col(col).cast("double").alias("v"), split.alias("__half")
     )
@@ -1481,143 +1036,6 @@ def histogram_quantile_report(
     return histogram_report_from_counters(
         direct, merged, stats, df, col, bins, qs
     )
-
-
-def histogram_quantiles_grouped(
-    df: DataFrame,
-    group_col: str,
-    col: str,
-    bins: int = 64,
-    qs: tuple[float, ...] = (0.5, 0.9),
-) -> DataFrame:
-    """Per-GROUP histogram quantile estimates — the scalar sketch's
-    rank-pick arithmetic (``histogram_report_from_counters``) keyed by
-    a group column: per-group [lo, hi] edges, per-group 64-bin counts
-    (one keyed aggregate, map-side combinable), a per-group cumulative
-    sum (window partitioned by group — groups × bins rows, never fact
-    rows), and the first-covering-bin interpolation per quantile. At
-    100 TB this is per-dimension percentiles from one bounded-state
-    pass: state is O(groups × bins) and the only fact-sized stage is
-    the binning scan. Columns: (group_col, n_rows, {tag}_est per q),
-    half-up 2dp rounding — the oracle replays every number."""
-    from pyspark.sql import Window
-
-    src = df.where(
-        F.col(col).isNotNull() & F.col(group_col).isNotNull()
-    ).select(
-        F.col(group_col).alias("g"), F.col(col).cast("double").alias("v")
-    )
-    # stats (groups-sized) and the bin counts (groups × bins) are both
-    # consumed by every per-quantile pick — materialized, the fact scan
-    # runs once for the edges and once for the binning instead of once
-    # per downstream consumer (measured 7 scans in the r13 sweep)
-    stats = src.groupBy("g").agg(
-        F.min("v").alias("lo"),
-        F.max("v").alias("hi"),
-        F.count(F.lit(1)).alias("n"),
-    ).localCheckpoint(eager=True)
-    binned = src.join(F.broadcast(stats), "g").select(
-        "g",
-        histogram_bin_expr(F.col("v"), F.col("lo"), F.col("hi"), bins).alias(
-            "bin"
-        ),
-    )
-    cnts = binned.groupBy("g", "bin").agg(
-        F.count(F.lit(1)).alias("cnt")
-    ).localCheckpoint(eager=True)
-    cum = cnts.join(F.broadcast(stats), "g").withColumn(
-        "cum", F.sum("cnt").over(Window.partitionBy("g").orderBy("bin"))
-    )
-
-    def half_up2(c: Column) -> Column:
-        return F.floor(c * 100 + F.lit(0.5)) / 100.0
-
-    w = (F.col("hi") - F.col("lo")) / float(bins)
-    out = stats.select("g", F.col("n").cast("long").alias("n_rows"))
-    for q in qs:
-        tag = str(q).replace("0.", "p")
-        r = F.col("n") * float(q)
-        pick = (
-            cum.where(F.col("cum") >= r)
-            .withColumn(
-                "__rn",
-                F.row_number().over(Window.partitionBy("g").orderBy("bin")),
-            )
-            .where(F.col("__rn") == 1)
-            .select(
-                "g",
-                half_up2(
-                    F.col("lo")
-                    + w
-                    * (
-                        F.col("bin")
-                        + (r - (F.col("cum") - F.col("cnt"))) / F.col("cnt")
-                    )
-                ).alias(f"{tag}_est"),
-            )
-        )
-        out = out.join(pick, "g")
-    return out
-
-
-def histogram_quantiles_grouped_oracle_sql(
-    table: str,
-    group_col: str,
-    col: str,
-    bins: int = 64,
-    qs: tuple[float, ...] = (0.5, 0.9),
-) -> str:
-    """DuckDB replay of the grouped histogram quantiles — identical
-    per-group edges, binning, cumulative sum, and first-covering-bin
-    interpolation, half-up 2dp on both sides."""
-    pick_ctes = []
-    pick_cols = []
-    for q in qs:
-        tag = str(q).replace("0.", "p")
-        pick_ctes.append(f"""
-    {tag} AS (
-      SELECT g,
-             FLOOR((lo + ((hi - lo) / {float(bins)!r})
-                    * (bin + (n * {q!r} - (cum - cnt)) / cnt)) * 100
-                   + 0.5) / 100.0 AS {tag}_est
-      FROM (
-        SELECT c.g, c.bin, c.cnt, c.cum, s.lo, s.hi, s.n,
-               row_number() OVER (PARTITION BY c.g ORDER BY c.bin) AS rn
-        FROM cum c JOIN stats s USING (g)
-        WHERE c.cum >= s.n * {q!r}
-      ) WHERE rn = 1
-    )""")
-        pick_cols.append(f"{tag}.{tag}_est")
-    joins = " ".join(f"JOIN {str(q).replace('0.', 'p')} USING (g)" for q in qs)
-    return f"""
-    WITH src AS (
-      SELECT {group_col} AS g, CAST({col} AS DOUBLE) AS v
-      FROM {table}
-      WHERE {col} IS NOT NULL AND {group_col} IS NOT NULL
-    ),
-    stats AS (
-      SELECT g, MIN(v) AS lo, MAX(v) AS hi, COUNT(*) AS n
-      FROM src GROUP BY g
-    ),
-    binned AS (
-      SELECT s.g, CASE WHEN t.hi = t.lo THEN 0
-                  ELSE LEAST(CAST(FLOOR((s.v - t.lo)
-                                  / ((t.hi - t.lo) / {float(bins)!r}))
-                             AS BIGINT), {bins - 1}) END AS bin
-      FROM src s JOIN stats t USING (g)
-    ),
-    cnts AS (
-      SELECT g, bin, CAST(COUNT(*) AS BIGINT) AS cnt
-      FROM binned GROUP BY g, bin
-    ),
-    cum AS (
-      SELECT g, bin, cnt, SUM(cnt) OVER (PARTITION BY g ORDER BY bin) AS cum
-      FROM cnts
-    ),{",".join(pick_ctes)}
-    SELECT stats.g AS {group_col}, CAST(stats.n AS BIGINT) AS n_rows,
-           {", ".join(pick_cols)}
-    FROM stats {joins}
-    """
 
 
 def histogram_counters(
@@ -1672,69 +1090,115 @@ def histogram_report_from_counters(
         )
         .select((F.col("n_diff") == 0).alias("merge_consistent"))
     )
-
-    from pyspark.sql import Window
-
-    cum = direct.withColumn(
-        "cum", F.sum("cnt").over(Window.orderBy("bin"))
-    )
-
-    def half_up2(c: Column) -> Column:
-        return F.floor(c * 100 + F.lit(0.5)) / 100.0
-
-    w = (F.col("hi") - F.col("lo")) / float(bins)
-    picks = []
-    for q in qs:
-        tag = str(q).replace("0.", "p")
-        r = F.col("n") * float(q)
-        pick = (
-            cum.crossJoin(F.broadcast(stats))
-            .where(F.col("cum") >= r)
-            .orderBy("bin")
-            .limit(1)
-            .select(
-                (
-                    F.col("lo")
-                    + w
-                    * (
-                        F.col("bin")
-                        + (r - (F.col("cum") - F.col("cnt"))) / F.col("cnt")
-                    )
-                ).alias(f"{tag}_raw"),
-                F.col("bin").alias(f"{tag}_bin"),
-            )
-        )
-        picks.append((tag, q, pick))
-
     exact = exact_src.where(F.col(col).isNotNull()).agg(
-        *[
-            F.percentile(col, F.lit(q)).alias(
-                f"{str(q).replace('0.', 'p')}_exact_raw"
-            )
-            for q in qs
-        ]
+        *[F.percentile(col, F.lit(q)).alias(f"{_tag(q)}_exact_raw") for q in qs]
     )
-    out = stats
-    for _, _, pick in picks:
-        out = out.crossJoin(pick)
-    out = out.crossJoin(exact).crossJoin(cells)
+    out = (
+        _quantile_picks(direct, stats, bins, qs)
+        .crossJoin(exact)
+        .crossJoin(cells)
+    )
+    w = (F.col("hi") - F.col("lo")) / float(bins)
     cols = [
         F.col("n").cast("long").alias("n"),
-        half_up2(F.col("lo")).alias("lo"),
-        half_up2(F.col("hi")).alias("hi"),
+        _half_up2(F.col("lo")).alias("lo"),
+        _half_up2(F.col("hi")).alias("hi"),
     ]
-    for tag, _q, _ in picks:
-        bin_lo = F.col("lo") + w * F.col(f"{tag}_bin")
-        cols.append(half_up2(F.col(f"{tag}_raw")).alias(f"{tag}_est"))
-        cols.append(half_up2(F.col(f"{tag}_exact_raw")).alias(f"{tag}_exact"))
-        cols.append(
-            (
-                (F.col(f"{tag}_raw") >= bin_lo - F.lit(1e-9))
-                & (F.col(f"{tag}_raw") <= bin_lo + w + F.lit(1e-9))
-            ).alias(f"{tag}_in_bin")
-        )
+    for q, est in zip(qs, _estimates(qs)):
+        tag = _tag(q)
+        raw, bin_lo = F.col(f"{tag}_raw"), F.col("lo") + w * F.col(f"{tag}_bin")
+        cols += [
+            est,
+            _half_up2(F.col(f"{tag}_exact_raw")).alias(f"{tag}_exact"),
+            ((raw >= bin_lo - F.lit(1e-9)) & (raw <= bin_lo + w + F.lit(1e-9))).alias(
+                f"{tag}_in_bin"
+            ),
+        ]
     cols.append(F.col("merge_consistent"))
     return out.select(*cols)
+
+
+# --- histogram SQL twins
+
+def _half_up2_sql(x: str) -> str:
+    return f"FLOOR({x} * 100 + 0.5) / 100.0"
+
+
+def _bin_sql(bins: int, frozen: bool = False) -> str:
+    """SQL twin of ``histogram_bin_expr`` (``frozen``:
+    ``histogram_bin_expr_frozen``) over columns v, lo, hi."""
+    b = f"CAST(FLOOR((v - lo) / ((hi - lo) / {float(bins)!r})) AS BIGINT)"
+    if frozen:
+        b = f"GREATEST(0, {b})"
+    return f"CASE WHEN hi = lo THEN 0 ELSE LEAST({b}, {bins - 1}) END"
+
+
+def _quantile_picks_sql(
+    cnts: str, stats: str, bins: int, qs: Sequence[float], by: By = ()
+) -> str:
+    """CTEs ``cum`` and ``pick_{tag}`` per q over a (*by, bin, cnt)
+    counter CTE and a (*by, lo, hi, n) stats CTE — the SQL twin of
+    ``_quantile_picks``; each pick has (*by, {tag}_raw, {tag}_bin)."""
+    part = f"PARTITION BY {', '.join(by)} " if by else ""
+    src = f"{cnts} JOIN {stats} USING ({', '.join(by)})" if by else f"{cnts}, {stats}"
+    picks = [
+        f"""
+    cum AS (
+      SELECT *, SUM(cnt) OVER ({part}ORDER BY bin) AS cum FROM {src}
+    )"""
+    ]
+    for q in qs:
+        tag = _tag(q)
+        picks.append(f"""
+    pick_{tag} AS (
+      SELECT {_pre(by)}lo + ((hi - lo) / {float(bins)!r})
+               * (bin + (n * {q!r} - (cum - cnt)) / cnt) AS {tag}_raw,
+             bin AS {tag}_bin
+      FROM cum WHERE cum >= n * {q!r} AND cum - cnt < n * {q!r}
+    )""")
+    return ",".join(picks)
+
+
+def _estimates_sql(qs: Sequence[float], by: By = ()) -> tuple[list[str], str]:
+    """(the half-up {tag}_est columns, the pick CTE joins) for a final
+    SELECT over the stats CTE."""
+    cols = [f"{_half_up2_sql(f'{_tag(q)}_raw')} AS {_tag(q)}_est" for q in qs]
+    joins = "".join(
+        f" JOIN pick_{_tag(q)} USING ({', '.join(by)})" if by else f", pick_{_tag(q)}"
+        for q in qs
+    )
+    return cols, joins
+
+
+def histogram_quantiles_oracle_sql(
+    table: str,
+    col: str,
+    bins: int = 64,
+    qs: Sequence[float] = (0.5, 0.9),
+    by: By = (),
+) -> str:
+    """DuckDB replay of ``histogram_quantiles`` — identical per-group
+    edges, binning, cumulative sum, and first-covering-bin
+    interpolation, half-up 2dp on both sides."""
+    g = _pre(by)
+    ests, joins = _estimates_sql(qs, by)
+    with_stats = f"JOIN stats USING ({', '.join(by)})" if by else ", stats"
+    return f"""
+    WITH src AS (
+      SELECT {g}CAST({col} AS DOUBLE) AS v
+      FROM {table} WHERE {_notnull_sql(col, *by)}
+    ),
+    stats AS (
+      SELECT {g}MIN(v) AS lo, MAX(v) AS hi, COUNT(*) AS n
+      FROM src{_group_by_sql(by)}
+    ),
+    cnts AS (
+      SELECT {g}{_bin_sql(bins)} AS bin, CAST(COUNT(*) AS BIGINT) AS cnt
+      FROM src {with_stats} GROUP BY {g}bin
+    ),{_quantile_picks_sql('cnts', 'stats', bins, qs, by)}
+    SELECT {g}CAST(n AS BIGINT) AS n_rows, {", ".join(ests)}
+    FROM stats{joins}
+    """
 
 
 def histogram_quantile_oracle_sql(
@@ -1749,36 +1213,21 @@ def histogram_quantile_oracle_sql(
     interpolation, identical half-up rounding, plus exact quantiles via
     ``quantile_cont`` (the same interpolated definition as Spark's
     ``percentile``)."""
-    qcols = []
-    for q in qs:
-        tag = str(q).replace("0.", "p")
-        qcols.append(f"""
-    pick_{tag} AS (
-      SELECT lo + ((hi - lo) / {float(bins)!r})
-               * (bin + (({q!r} * n) - (cum - cnt)) / cnt) AS {tag}_raw,
-             bin AS {tag}_bin
-      FROM cum, stats
-      WHERE cum >= {q!r} * n
-      ORDER BY bin LIMIT 1
-    )""")
+    ests, joins = _estimates_sql(qs)
     sel = []
-    for q in qs:
-        tag = str(q).replace("0.", "p")
+    for q, est in zip(qs, ests):
+        tag = _tag(q)
         binw = f"((s.hi - s.lo) / {float(bins)!r})"
         sel.append(
-            f"FLOOR({tag}_raw * 100 + 0.5) / 100.0 AS {tag}_est,\n"
-            f"           FLOOR({tag}_exact_raw * 100 + 0.5) / 100.0 AS {tag}_exact,\n"
+            f"{est},\n"
+            f"           {_half_up2_sql(f'{tag}_exact_raw')} AS {tag}_exact,\n"
             f"           ({tag}_raw >= s.lo + {binw} * {tag}_bin - 1e-9\n"
             f"            AND {tag}_raw <= s.lo + {binw} * ({tag}_bin + 1) + 1e-9)\n"
             f"             AS {tag}_in_bin"
         )
-    pick_joins = ", ".join(
-        f"pick_{str(q).replace('0.', 'p')}" for q in qs
-    )
     sel_block = ",\n           ".join(sel)
     exact_block = ", ".join(
-        f"quantile_cont(v, {q!r}) AS {str(q).replace('0.', 'p')}_exact_raw"
-        for q in qs
+        f"quantile_cont(v, {q!r}) AS {_tag(q)}_exact_raw" for q in qs
     )
     return f"""
     WITH src AS (
@@ -1786,13 +1235,7 @@ def histogram_quantile_oracle_sql(
       FROM {table} WHERE {col} IS NOT NULL
     ),
     stats AS (SELECT MIN(v) AS lo, MAX(v) AS hi, COUNT(*) AS n FROM src),
-    binned AS (
-      SELECT CASE WHEN hi = lo THEN 0
-                  ELSE LEAST(CAST(FLOOR((v - lo) / ((hi - lo) / {float(bins)!r}))
-                                  AS BIGINT), {bins - 1}) END AS bin,
-             half
-      FROM src, stats
-    ),
+    binned AS (SELECT {_bin_sql(bins)} AS bin, half FROM src, stats),
     direct AS (SELECT bin, CAST(COUNT(*) AS BIGINT) AS cnt FROM binned GROUP BY bin),
     ba AS (SELECT bin, CAST(COUNT(*) AS BIGINT) AS ca FROM binned WHERE half GROUP BY bin),
     bb AS (SELECT bin, CAST(COUNT(*) AS BIGINT) AS cb FROM binned WHERE NOT half GROUP BY bin),
@@ -1806,20 +1249,59 @@ def histogram_quantile_oracle_sql(
                AS merge_consistent
       FROM merged m FULL OUTER JOIN direct d ON m.bin = d.bin
     ),
-    cum AS (
-      SELECT bin, cnt, SUM(cnt) OVER (ORDER BY bin) AS cum FROM direct
-    ),
-    exact AS (
-      SELECT {exact_block}
-      FROM src
-    ),{",".join(qcols)}
+    exact AS (SELECT {exact_block} FROM src),{_quantile_picks_sql('direct', 'stats', bins, qs)}
     SELECT CAST(s.n AS BIGINT) AS n,
-           FLOOR(s.lo * 100 + 0.5) / 100.0 AS lo,
-           FLOOR(s.hi * 100 + 0.5) / 100.0 AS hi,
+           {_half_up2_sql('s.lo')} AS lo,
+           {_half_up2_sql('s.hi')} AS hi,
            {sel_block},
            cells.merge_consistent
-    FROM stats s, exact, cells, {pick_joins}
+    FROM stats s, exact, cells{joins}
     """
+
+
+def histogram_artifact_oracle_sql(
+    table: str, col: str, split: str, bins: int, checksum_mod: int
+) -> str:
+    """DuckDB replay of the frozen-edge histogram persistence+fold
+    gate: base-half edges + bin counts (the SAVED artifact, with its
+    canonical checksum), the new batch binned under the FROZEN edges
+    with edge-bin clamping, the cell-wise fold, and the direct
+    histogram of the full input under the same frozen edges — integer
+    sums, so fold ≡ direct exactly."""
+
+    def binned(name: str, src: str) -> str:
+        return f"""
+    {name} AS (
+      SELECT {_bin_sql(bins, frozen=True)} AS bin, CAST(COUNT(*) AS BIGINT) AS cnt
+      FROM {src}, edges GROUP BY 1
+    )"""
+
+    def values(name: str, where: str) -> str:
+        return f"""
+    {name} AS (
+      SELECT CAST({col} AS DOUBLE) AS v FROM {table}
+      WHERE {col} IS NOT NULL{where}
+    )"""
+
+    ctes = f"""{values('srcb', f' AND ({split})')},
+    {values('srcn', f' AND NOT ({split})')},{values('srcf', '')},
+    edges AS (SELECT MIN(v) AS lo, MAX(v) AS hi FROM srcb),{binned('bb', 'srcb')},
+    {binned('bn', 'srcn')},{binned('direct', 'srcf')},
+    folded AS (
+      SELECT COALESCE(a.bin, b.bin) AS bin,
+             COALESCE(a.cnt, 0) + COALESCE(b.cnt, 0) AS cnt
+      FROM bb a FULL OUTER JOIN bn b ON a.bin = b.bin
+    ),
+    cmp AS (
+      SELECT SUM(CASE WHEN f.cnt = d.cnt THEN 0 ELSE 1 END) AS n_diff
+      FROM folded f FULL OUTER JOIN direct d ON f.bin = d.bin
+    )"""
+    cols = f"""{_half_up2_sql('lo')} AS lo_edge,
+           {_half_up2_sql('hi')} AS hi_edge,
+           (SELECT CAST(SUM(cnt) AS BIGINT) FROM folded) AS n_total,
+           (SELECT n_diff = 0 FROM cmp) AS fold_consistent"""
+    canon = "CAST(bin AS VARCHAR) || ':' || CAST(cnt AS VARCHAR)"
+    return _union_sql(ctes, cols, "edges", ("bb", "saved_bins", canon, checksum_mod))
 
 
 def histogram_range_shard_report(
@@ -1844,8 +1326,6 @@ def histogram_range_shard_report(
     bins once past its quota — the structural balance bound, checked as
     ``balanced_ok``). Output: one row per non-empty shard (shard,
     n_rows, lo_val, hi_val, balanced_ok, range_disjoint)."""
-    from pyspark.sql import Window
-
     src = df.where(F.col(col).isNotNull()).select(
         F.col(col).cast("double").alias("v")
     )
@@ -1889,8 +1369,8 @@ def histogram_range_shard_report(
     )
     per_shard = shard_map.groupBy("shard").agg(
         F.sum("cnt").cast("long").alias("n_rows"),
-        (F.floor(F.min("vmin") * 100 + F.lit(0.5)) / 100.0).alias("lo_val"),
-        (F.floor(F.max("vmax") * 100 + F.lit(0.5)) / 100.0).alias("hi_val"),
+        _half_up2(F.min("vmin")).alias("lo_val"),
+        _half_up2(F.max("vmax")).alias("hi_val"),
     )
     bound = (
         shard_map.crossJoin(F.broadcast(stats))
@@ -1928,12 +1408,7 @@ def histogram_range_shard_oracle_sql(
       FROM {table} WHERE {col} IS NOT NULL
     ),
     stats AS (SELECT MIN(v) AS lo, MAX(v) AS hi, COUNT(*) AS n FROM src),
-    binned AS (
-      SELECT v, CASE WHEN hi = lo THEN 0
-                  ELSE LEAST(CAST(FLOOR((v - lo) / ((hi - lo) / {float(bins)!r}))
-                                  AS BIGINT), {bins - 1}) END AS bin
-      FROM src, stats
-    ),
+    binned AS (SELECT v, {_bin_sql(bins)} AS bin FROM src, stats),
     bincnt AS (SELECT bin, CAST(COUNT(*) AS BIGINT) AS cnt
                FROM binned GROUP BY bin),
     cum AS (SELECT bin, cnt, SUM(cnt) OVER (ORDER BY bin) AS cum FROM bincnt),
@@ -1945,8 +1420,8 @@ def histogram_range_shard_oracle_sql(
     ),
     per_shard AS (
       SELECT s.shard, CAST(COUNT(*) AS BIGINT) AS n_rows,
-             FLOOR(MIN(b.v) * 100 + 0.5) / 100.0 AS lo_val,
-             FLOOR(MAX(b.v) * 100 + 0.5) / 100.0 AS hi_val
+             {_half_up2_sql('MIN(b.v)')} AS lo_val,
+             {_half_up2_sql('MAX(b.v)')} AS hi_val
       FROM binned b JOIN smap s ON b.bin = s.bin
       GROUP BY s.shard
     ),
@@ -1961,91 +1436,14 @@ def histogram_range_shard_oracle_sql(
     """
 
 
-def bloom_union_oracle_sql(
-    build_table: str,
-    build_key: str,
-    probe_table: str,
-    probe_key: str,
-    split: str,
-    k: int = 5,
-    m_bits: int = 1 << 14,
-) -> str:
-    """DuckDB replay of the Bloom merge gate: build-key halves
-    (``split`` / NOT ``split``) → two bit tables → bit-union merge →
-    probe every ``probe_key`` through the MERGED filter, with the
-    merged-vs-direct bit-set equality as an exact witness. Set-union
-    associativity makes the bit sets identical, so the probe report
-    through the merged filter must equal the direct one — and the
-    oracle hash-checks the report itself, false positives included."""
-    mixes = [km_mix_sql(i) for i in range(k)]
-    ba = " UNION ALL ".join(
-        f"SELECT ({m}) % {m_bits} AS pos FROM bha" for m in mixes
-    )
-    bb = " UNION ALL ".join(
-        f"SELECT ({m}) % {m_bits} AS pos FROM bhb" for m in mixes
-    )
-    bf = " UNION ALL ".join(
-        f"SELECT ({m}) % {m_bits} AS pos FROM bhf" for m in mixes
-    )
-    probe_pos = " UNION ALL ".join(
-        f"SELECT k, ({m}) % {m_bits} AS pos FROM ph" for m in mixes
-    )
-
-    def half(name: str, where: str) -> str:
-        return f"""
-    {name} AS (
-      SELECT DISTINCT
-             ('0x' || substr(md5(CAST({build_key} AS VARCHAR)), 1, 15))::BIGINT AS h1,
-             ('0x' || substr(md5(CAST({build_key} AS VARCHAR)), 17, 15))::BIGINT AS h2
-      FROM {build_table} WHERE {build_key} IS NOT NULL{where}
-    )"""
-
-    return f"""
-    WITH {half('bha', f' AND ({split})')},
-    {half('bhb', f' AND NOT ({split})')},
-    {half('bhf', '')},
-    bits_m AS (SELECT DISTINCT pos FROM ({ba} UNION ALL {bb})),
-    bits_d AS (SELECT DISTINCT pos FROM ({bf})),
-    bitcmp AS (
-      SELECT (SELECT COUNT(*) FROM bits_m) AS nbits_merged,
-             (SELECT COUNT(*) FROM bits_d) AS nbits_direct,
-             (SELECT COUNT(*) FROM (
-                SELECT pos FROM bits_m EXCEPT SELECT pos FROM bits_d
-                UNION ALL
-                SELECT pos FROM bits_d EXCEPT SELECT pos FROM bits_m
-             )) AS n_diff
-    ),
-    ph AS (
-      SELECT DISTINCT {probe_key} AS k,
-             ('0x' || substr(md5(CAST({probe_key} AS VARCHAR)), 1, 15))::BIGINT AS h1,
-             ('0x' || substr(md5(CAST({probe_key} AS VARCHAR)), 17, 15))::BIGINT AS h2
-      FROM {probe_table} WHERE {probe_key} IS NOT NULL
-    ),
-    ppos AS (SELECT DISTINCT k, pos FROM ({probe_pos})),
-    m AS (
-      SELECT p.k, COUNT(*) AS ntotal, COUNT(b.pos) AS nset
-      FROM ppos p LEFT JOIN bits_m b ON p.pos = b.pos
-      GROUP BY p.k
-    ),
-    t AS (
-      SELECT m.k, m.nset = m.ntotal AS maybe,
-             EXISTS (SELECT 1 FROM {build_table} x
-                     WHERE x.{build_key} = m.k) AS present
-      FROM m
-    )
-    SELECT CAST(COUNT(*) AS BIGINT) AS probed,
-           CAST(SUM(CASE WHEN maybe THEN 1 ELSE 0 END) AS BIGINT) AS maybe_present,
-           CAST(SUM(CASE WHEN present THEN 1 ELSE 0 END) AS BIGINT) AS true_present,
-           CAST(SUM(CASE WHEN maybe AND NOT present THEN 1 ELSE 0 END) AS BIGINT)
-             AS false_positives,
-           (SELECT CAST(nbits_merged AS BIGINT) FROM bitcmp) AS nbits_merged,
-           (SELECT CAST(nbits_direct AS BIGINT) FROM bitcmp) AS nbits_direct,
-           (SELECT n_diff = 0 FROM bitcmp) AS merge_consistent
-    FROM t
-    """
+# --- Sliding windows over leaf tables ------------------------------------
+# Each family's leaf store is its grouped sketch with the ``grain``
+# bucket of the timestamp as the group (``leaf``); a window's sketch
+# merges its leaves over the shared spine (operators/sliding.py).
 
 
-# --- Sliding windows over leaf register tables --------------------------
+def _with_leaf(df: DataFrame, ts_col: str, grain: str) -> DataFrame:
+    return df.withColumn("leaf", F.date_trunc(grain, F.col(ts_col)))
 
 
 def hll_leaf_registers(
@@ -2056,10 +1454,7 @@ def hll_leaf_registers(
     sliding-window distinct-count service (the KMV twin is
     operators/kmv.py kmv_leaf_sketches). O(leaves × 2^p) rows whatever
     the event volume."""
-    bucketed = df.withColumn("__leaf", F.date_trunc(grain, F.col(ts_col)))
-    return hll_registers_grouped(bucketed, "__leaf", key, p).select(
-        F.col("g").alias("leaf"), "bucket", "rho"
-    )
+    return hll_registers(_with_leaf(df, ts_col, grain), key, p, by=("leaf",))
 
 
 def hll_sliding_estimates(
@@ -2075,11 +1470,27 @@ def hll_sliding_estimates(
     shared spine (operators/sliding.py)."""
     merged = (
         sliding.window_leaves(leaves, width, grain)
-        .groupBy(F.col("wend").alias("g"), F.col("bucket"))
+        .groupBy("wend", "bucket")
         .agg(F.max("rho").alias("rho"))
     )
-    return hll_estimates_grouped(merged, p).select(
-        F.col("g").alias("wend"), "estimate", "nonzero_registers"
+    return hll_estimate_from_registers(merged, p, by=("wend",))
+
+
+def _ends_sql(table: str, ts_col: str, key: str, grain: str) -> str:
+    # key-not-null matches the engine: its window ends come from the LEAF
+    # table (the leaf builders drop null keys), so a grain bucket whose
+    # keys are ALL null has no leaf and no window end on either side
+    return f"""
+    ends AS (
+      SELECT DISTINCT date_trunc('{grain}', {ts_col}) AS wend FROM {table}
+      WHERE {ts_col} IS NOT NULL AND {key} IS NOT NULL
+    )"""
+
+
+def _in_window_sql(leaf: str, width: int, grain: str) -> str:
+    return (
+        f"{leaf} BETWEEN ends.wend - INTERVAL {width - 1} {grain}"
+        f" AND ends.wend"
     )
 
 
@@ -2093,65 +1504,25 @@ def hll_sliding_oracle_sql(
 ) -> str:
     """DuckDB replay of leaf registers + window register-max merge +
     estimate arithmetic + the exact sliding distinct witness."""
-    w = 60 - p
-    m = 1 << p
-    alpha = 0.7213 / (1.0 + 1.079 / m)
-    bitlen = " + ".join(
-        f"CASE WHEN tail >= {1 << k} THEN 1 ELSE 0 END" for k in range(w)
-    )
     return f"""
-    WITH ends AS (
-      -- key-not-null matches the engine: its window ends come from the
-      -- LEAF register table (hll_leaf_registers drops null keys), so a
-      -- grain bucket whose keys are ALL null has no leaf and no window
-      -- end on either side
-      SELECT DISTINCT date_trunc('{grain}', {ts_col}) AS wend FROM {table}
-      WHERE {ts_col} IS NOT NULL AND {key} IS NOT NULL
+    WITH {_ends_sql(table, ts_col, key, grain)},
+    lsrc AS (
+      SELECT date_trunc('{grain}', {ts_col}) AS leaf, {key} FROM {table}
     ),
-    h AS (
-      SELECT date_trunc('{grain}', {ts_col}) AS leaf,
-             ('0x' || substr(md5(CAST({key} AS VARCHAR)), 1, 15))::BIGINT AS h1
-      FROM {table} WHERE {key} IS NOT NULL AND {ts_col} IS NOT NULL
-    ),
-    br AS (
-      SELECT leaf, h1 >> {w} AS bucket, h1 & {(1 << w) - 1} AS tail FROM h
-    ),
-    lregs AS (
-      SELECT leaf, bucket, MAX({w + 1} - ({bitlen})) AS rho
-      FROM br GROUP BY leaf, bucket
-    ),
+    {_hll_regs_sql('h', 'lregs', 'lsrc', key, '', p, by=('leaf',))},
     wregs AS (
       SELECT ends.wend, lr.bucket, MAX(lr.rho) AS rho
-      FROM ends JOIN lregs lr
-        ON lr.leaf BETWEEN ends.wend - INTERVAL {width - 1} {grain}
-                       AND ends.wend
+      FROM ends JOIN lregs lr ON {_in_window_sql('lr.leaf', width, grain)}
       GROUP BY ends.wend, lr.bucket
     ),
-    agg AS (
-      SELECT wend, SUM(power(2.0, -rho)) AS s, COUNT(*) AS v
-      FROM wregs GROUP BY wend
-    ),
-    est AS (
-      SELECT wend,
-             CASE WHEN (CAST({alpha!r} AS DOUBLE) * {m} * {m})
-                        / (s + ({m} - v)) <= CAST({2.5 * m!r} AS DOUBLE)
-                   AND ({m} - v) > 0
-                  THEN CAST({float(m)!r} AS DOUBLE)
-                       * ln(CAST({float(m)!r} AS DOUBLE) / ({m} - v))
-                  ELSE (CAST({alpha!r} AS DOUBLE) * {m} * {m})
-                       / (s + ({m} - v))
-             END AS e, v
-      FROM agg
-    ),
+    {_hll_est_sql('wregs', 'est', p, by=('wend',))},
     lk AS (
       SELECT DISTINCT date_trunc('{grain}', {ts_col}) AS leaf, {key} AS kk
       FROM {table} WHERE {key} IS NOT NULL AND {ts_col} IS NOT NULL
     ),
     ex AS (
       SELECT ends.wend, count(DISTINCT lk.kk) AS exact_distinct
-      FROM ends JOIN lk
-        ON lk.leaf BETWEEN ends.wend - INTERVAL {width - 1} {grain}
-                       AND ends.wend
+      FROM ends JOIN lk ON {_in_window_sql('lk.leaf', width, grain)}
       GROUP BY ends.wend
     )
     SELECT CAST(est.wend AS TIMESTAMP) AS wend, ROUND(est.e, 4) AS estimate,
@@ -2201,12 +1572,9 @@ def histogram_sliding_quantiles(
     leaf histograms (associative, so the merged window cells are
     IDENTICAL to binning the window's raw events directly; the oracle
     builds windows the direct way, which makes the driver comparison
-    itself the mergeability proof), then the batch estimator's exact
-    interpolation arithmetic per window: rank r = n·q, covering bin =
-    the first with cum ≥ r, estimate = lo + w·(bin + (r − cum_prev)/cnt),
-    half-up 2dp. All window work is dim-sized (windows × bins rows)."""
-    from pyspark.sql import Window
-
+    itself the mergeability proof), then the batch estimator's
+    rank-pick (``_quantile_picks``) per window, half-up 2dp. All window
+    work is dim-sized (windows × bins rows)."""
     # materialized: the windows × bins merged table feeds the cumsum,
     # the totals, AND one pick subtree per quantile — lazy, each of
     # those re-runs the range join and the leaf build underneath it
@@ -2217,37 +1585,12 @@ def histogram_sliding_quantiles(
         .agg(F.sum("cnt").alias("cnt"))
         .localCheckpoint(eager=True)
     )
-    wspec = Window.partitionBy("wend").orderBy("bin")
-    cum = merged.withColumn("cum", F.sum("cnt").over(wspec))
-    totals = merged.groupBy("wend").agg(F.sum("cnt").alias("n"))
-    cum = cum.join(F.broadcast(totals), "wend")
-    w = (F.lit(hi) - F.lit(lo)) / float(bins)
-
-    def half_up2(c: Column) -> Column:
-        return F.floor(c * 100 + F.lit(0.5)) / 100.0
-
-    out = totals.select(
-        "wend", F.col("n").cast("long").alias("n_total")
+    totals = merged.groupBy("wend").agg(F.sum("cnt").alias("n")).select(
+        "wend", "n", F.lit(lo).alias("lo"), F.lit(hi).alias("hi")
     )
-    for q in qs:
-        tag = str(q).replace("0.", "p")
-        r = F.col("n") * float(q)
-        pick = (
-            cum.where((F.col("cum") >= r) & (F.col("cum") - F.col("cnt") < r))
-            .select(
-                "wend",
-                half_up2(
-                    F.lit(lo)
-                    + w
-                    * (
-                        F.col("bin")
-                        + (r - (F.col("cum") - F.col("cnt"))) / F.col("cnt")
-                    )
-                ).alias(f"{tag}_est"),
-            )
-        )
-        out = out.join(pick, "wend")
-    return out
+    return _quantile_picks(merged, totals, bins, qs, ("wend",)).select(
+        "wend", F.col("n").cast("long").alias("n_total"), *_estimates(qs)
+    )
 
 
 def histogram_sliding_oracle_sql(
@@ -2263,33 +1606,7 @@ def histogram_sliding_oracle_sql(
     the DIRECT way (bin the window's raw rows), same fixed global
     edges, same interpolation, same half-up rounding; equality with the
     engine's leaf-sum path is the mergeability proof."""
-    clamp = (
-        f"CASE WHEN hi = lo THEN 0 ELSE LEAST("
-        f"CAST(FLOOR((v - lo) / ((hi - lo) / {float(bins)!r})) AS BIGINT),"
-        f" {bins - 1}) END"
-    )
-    q_cols = []
-    for q in qs:
-        tag = str(q).replace("0.", "p")
-        q_cols.append(
-            f"""
-    {tag} AS (
-      SELECT c.wend,
-             FLOOR((e.lo + ((e.hi - e.lo) / {float(bins)!r})
-                    * (c.bin + (t.n * {q!r} - (c.cum - c.cnt)) / c.cnt))
-                   * 100 + 0.5) / 100.0 AS {tag}_est
-      FROM cum c JOIN tot t ON t.wend = c.wend, edges e
-      WHERE c.cum >= t.n * {q!r} AND c.cum - c.cnt < t.n * {q!r}
-    )"""
-        )
-    sel = ", ".join(
-        f"{str(q).replace('0.', 'p')}_est" for q in qs
-    )
-    joins = " ".join(
-        f"JOIN {str(q).replace('0.', 'p')} ON"
-        f" {str(q).replace('0.', 'p')}.wend = tot.wend"
-        for q in qs
-    )
+    ests, joins = _estimates_sql(qs, ("wend",))
     return f"""
     WITH src AS (
       SELECT date_trunc('{grain}', {ts_col}) AS leaf,
@@ -2299,22 +1616,15 @@ def histogram_sliding_oracle_sql(
     edges AS (SELECT MIN(v) AS lo, MAX(v) AS hi FROM src),
     ends AS (SELECT DISTINCT leaf AS wend FROM src),
     wb AS (
-      SELECT ends.wend, {clamp} AS bin, CAST(COUNT(*) AS BIGINT) AS cnt
-      FROM ends JOIN src
-        ON src.leaf BETWEEN ends.wend - INTERVAL {width - 1} {grain}
-                        AND ends.wend, edges
+      SELECT ends.wend, {_bin_sql(bins)} AS bin, CAST(COUNT(*) AS BIGINT) AS cnt
+      FROM ends JOIN src ON {_in_window_sql('src.leaf', width, grain)}, edges
       GROUP BY ends.wend, 2
     ),
-    cum AS (
-      SELECT wend, bin, cnt,
-             SUM(cnt) OVER (PARTITION BY wend ORDER BY bin) AS cum
-      FROM wb
-    ),
-    tot AS (SELECT wend, SUM(cnt) AS n FROM wb GROUP BY wend),
-    {",".join(q_cols)}
-    SELECT CAST(tot.wend AS TIMESTAMP) AS wend,
-           CAST(tot.n AS BIGINT) AS n_total, {sel}
-    FROM tot {joins}
+    tot AS (SELECT wend, lo, hi, SUM(cnt) AS n FROM wb, edges GROUP BY wend, lo, hi),
+    {_quantile_picks_sql('wb', 'tot', bins, qs, ('wend',))}
+    SELECT CAST(wend AS TIMESTAMP) AS wend,
+           CAST(n AS BIGINT) AS n_total, {", ".join(ests)}
+    FROM tot{joins}
     """
 
 
@@ -2340,12 +1650,7 @@ def bloom_leaf_bits(
     """(leaf, pos): one Bloom filter's distinct set-bit positions per
     ``grain`` bucket — the persisted leaf store. O(leaves × min(m_bits,
     k·distinct)) rows whatever the event volume."""
-    bucketed = df.where(F.col(ts_col).isNotNull()).withColumn(
-        "__leaf", F.date_trunc(grain, F.col(ts_col))
-    )
-    return bloom_bits_grouped(bucketed, "__leaf", key, k, m_bits).select(
-        F.to_timestamp("g").alias("leaf"), "pos"
-    )
+    return bloom_bits(_with_leaf(df, ts_col, grain), key, k, m_bits, by=("leaf",))
 
 
 def bloom_sliding_probe_report(
@@ -2363,17 +1668,13 @@ def bloom_sliding_probe_report(
 ) -> DataFrame:
     """(wend, probed, maybe_present, true_present, false_positives):
     probe every distinct ``probe_key`` against every sliding window's
-    merged Bloom filter. The window filter is the bit-union of the
-    window's leaf filters (``sliding.window_leaves`` over the BIT
-    table — never per-event data); a key is maybe-present iff all k of
-    its positions are set in the window's merged bits; truth comes from
-    the exact (leaf, key)-deduped range join, so each window's false
+    merged Bloom filter — the grouped probe report (``_bloom_report``)
+    with the window end as the group. The window filter is the
+    bit-union of the window's leaf filters (``sliding.window_leaves``
+    over the BIT table — never per-event data); truth comes from the
+    exact (leaf, key)-deduped range join, so each window's false
     positives — the sketch's entire error — hash-check against the
-    oracle. Shape: the ends × probe grid is the allowlisted dim × dim
-    cross join (bloom_probe_report_grouped's device); everything
-    fact-sized stays keyed."""
-    from . import sliding
-
+    oracle."""
     if ends is None:
         # ends + the window bit-union both consume the leaf bit table;
         # materialize so the leaf build (the raw-event aggregate) runs
@@ -2389,53 +1690,8 @@ def bloom_sliding_probe_report(
         .select("wend", "pos")
         .distinct()
     )
-    pk = (
-        probe.where(F.col(probe_key).isNotNull())
-        .select(F.col(probe_key).alias("k"))
-        .distinct()
-    )
-    h1, h2 = _h1h2(F.col("k"))
-    ppos = (
-        pk.select("k", h1.alias("__h1"), h2.alias("__h2"))
-        .select(
-            "k",
-            F.explode(
-                F.array(
-                    *[
-                        _mix(F.col("__h1"), F.col("__h2"), i) % F.lit(m_bits)
-                        for i in range(k)
-                    ]
-                )
-            ).alias("pos"),
-        )
-        .distinct()
-    )
-    nset = (
-        ppos.join(wbits, "pos")
-        .groupBy("wend", "k")
-        .agg(F.countDistinct("pos").alias("nset"))
-    )
-    npos = ppos.groupBy("k").agg(F.countDistinct("pos").alias("ntotal"))
-    maybe = (
-        F.broadcast(ends.select("wend"))
-        .crossJoin(npos)
-        .join(nset, ["wend", "k"], "left")
-        .select(
-            "wend",
-            "k",
-            (F.coalesce(F.col("nset"), F.lit(0)) == F.col("ntotal")).alias(
-                "maybe"
-            ),
-        )
-    )
-    lk = (
-        events.where(F.col(key).isNotNull() & F.col(ts_col).isNotNull())
-        .select(
-            F.date_trunc(grain, F.col(ts_col)).alias("leaf"),
-            F.col(key).alias("k"),
-        )
-        .distinct()
-    )
+    pk = _distinct_keys(probe, probe_key)
+    lk = _distinct_keys(_with_leaf(events, ts_col, grain), key, ("leaf",))
     truth = (
         sliding.window_leaves(
             lk, width, grain, ends=ends, broadcast_leaves=False
@@ -2443,18 +1699,9 @@ def bloom_sliding_probe_report(
         .select("wend", "k")
         .distinct()
         .join(pk, "k", "left_semi")
-        .withColumn("present", F.lit(True))
     )
-    joined = maybe.join(truth, ["wend", "k"], "left").select(
-        "wend", "maybe", F.coalesce("present", F.lit(False)).alias("present")
-    )
-    return joined.groupBy("wend").agg(
-        F.count(F.lit(1)).cast("long").alias("probed"),
-        F.sum(F.col("maybe").cast("long")).cast("long").alias("maybe_present"),
-        F.sum(F.col("present").cast("long")).cast("long").alias("true_present"),
-        F.sum((F.col("maybe") & ~F.col("present")).cast("long"))
-        .cast("long")
-        .alias("false_positives"),
+    return _bloom_report(
+        wbits, pk, truth, ("wend",), ends.select("wend"), k, m_bits
     )
 
 
@@ -2473,73 +1720,24 @@ def bloom_sliding_oracle_sql(
     witness for any (grain, width) calendar. Column names match the
     engine side: (wend, probed, maybe_present, true_present,
     false_positives)."""
-    mixes = [km_mix_sql(i) for i in range(k)]
-    leaf_pos = " UNION ALL ".join(
-        f"SELECT leaf, ({m}) % {m_bits} AS pos FROM bh" for m in mixes
-    )
-    probe_pos = " UNION ALL ".join(
-        f"SELECT k, ({m}) % {m_bits} AS pos FROM ph" for m in mixes
-    )
+    leaf = f"date_trunc('{grain}', {ts_col}) AS leaf, "
     return f"""
-    WITH ends AS (
-      -- key-not-null matches the engine side, whose window ends come
-      -- from the LEAF table (bloom_leaf_bits drops null keys): a grain
-      -- bucket whose keys are ALL null produces no leaf and so no
-      -- window end on either side
-      SELECT DISTINCT date_trunc('{grain}', {ts_col}) AS wend FROM {table}
-      WHERE {ts_col} IS NOT NULL AND {key} IS NOT NULL
-    ),
-    bh AS (
-      SELECT DISTINCT date_trunc('{grain}', {ts_col}) AS leaf,
-             ('0x' || substr(md5(CAST({key} AS VARCHAR)), 1, 15))::BIGINT AS h1,
-             ('0x' || substr(md5(CAST({key} AS VARCHAR)), 17, 15))::BIGINT AS h2
-      FROM {table} WHERE {key} IS NOT NULL AND {ts_col} IS NOT NULL
-    ),
-    lb AS (SELECT DISTINCT leaf, pos FROM ({leaf_pos})),
+    WITH {_ends_sql(table, ts_col, key, grain)},
+    {_halves_cte('bh', table, key, f' AND {ts_col} IS NOT NULL', leaf)},
+    lb AS (SELECT DISTINCT leaf, pos FROM ({_km_sql('bh', 'leaf, ', k, m_bits)})),
     wb AS (
       SELECT DISTINCT ends.wend, lb.pos
-      FROM ends JOIN lb
-        ON lb.leaf BETWEEN ends.wend - INTERVAL {width - 1} {grain}
-                       AND ends.wend
-    ),
-    ph AS (
-      SELECT DISTINCT {probe_key} AS k,
-             ('0x' || substr(md5(CAST({probe_key} AS VARCHAR)), 1, 15))::BIGINT AS h1,
-             ('0x' || substr(md5(CAST({probe_key} AS VARCHAR)), 17, 15))::BIGINT AS h2
-      FROM {probe_table} WHERE {probe_key} IS NOT NULL
-    ),
-    ppos AS (SELECT DISTINCT k, pos FROM ({probe_pos})),
-    np AS (SELECT k, COUNT(*) AS ntotal FROM ppos GROUP BY k),
-    ns AS (
-      SELECT wb.wend, p.k, COUNT(*) AS nset
-      FROM ppos p JOIN wb ON wb.pos = p.pos
-      GROUP BY wb.wend, p.k
-    ),
-    mb AS (
-      SELECT e.wend, np.k,
-             COALESCE(ns.nset, 0) = np.ntotal AS maybe
-      FROM ends e CROSS JOIN np
-      LEFT JOIN ns ON ns.wend = e.wend AND ns.k = np.k
+      FROM ends JOIN lb ON {_in_window_sql('lb.leaf', width, grain)}
     ),
     lk AS (
-      SELECT DISTINCT date_trunc('{grain}', {ts_col}) AS leaf, {key} AS k
+      SELECT DISTINCT {leaf}{key} AS k
       FROM {table} WHERE {key} IS NOT NULL AND {ts_col} IS NOT NULL
     ),
-    tr AS (
+    wk AS (
       SELECT DISTINCT ends.wend, lk.k
-      FROM ends JOIN lk
-        ON lk.leaf BETWEEN ends.wend - INTERVAL {width - 1} {grain}
-                       AND ends.wend
-      WHERE lk.k IN (SELECT k FROM ppos)
-    )
-    SELECT CAST(mb.wend AS TIMESTAMP) AS wend,
-           CAST(COUNT(*) AS BIGINT) AS probed,
-           CAST(SUM(CASE WHEN mb.maybe THEN 1 ELSE 0 END) AS BIGINT)
-             AS maybe_present,
-           CAST(SUM(CASE WHEN tr.k IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS true_present,
-           CAST(SUM(CASE WHEN mb.maybe AND tr.k IS NULL THEN 1 ELSE 0 END)
-                AS BIGINT) AS false_positives
-    FROM mb LEFT JOIN tr ON tr.wend = mb.wend AND tr.k = mb.k
-    GROUP BY mb.wend
+      FROM ends JOIN lk ON {_in_window_sql('lk.leaf', width, grain)}
+    ),
+    {_bloom_probe_sql('wb', 'wk', 'k', probe_table, probe_key, k, m_bits, ('wend',))}
+    SELECT CAST(t.wend AS TIMESTAMP) AS wend, {_BLOOM_REPORT_SQL}
+    FROM t GROUP BY t.wend
     """

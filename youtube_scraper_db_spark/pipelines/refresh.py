@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..operators.diffsync import sync_membership
+from ..operators.diffsync import sync_scoped_membership
 from ..operators.merge import field_update, merge_upsert
 
 #: ref main_scraper.py:34-36.
@@ -140,16 +140,10 @@ def refresh_playlists(
     the reference (ref main_scraper.py:306-312). Defaults to the
     playlists present in the snapshot, i.e. all-successful.
     """
-    # J8 + S11/S12: reconcile the edge table with the fetched snapshot —
-    # scoped to the playlists the snapshot covers (the reference syncs per
-    # fetched playlist, ref main_scraper.py:144-179; an unfetched playlist
-    # must keep its edges). left_semi/left_anti on the same broadcastable
-    # key set split the table without a shuffle.
-    touched = fetched_membership.select("playlist_id").distinct()
-    in_scope = playlist_videos.join(touched, "playlist_id", "left_semi")
-    untouched = playlist_videos.join(touched, "playlist_id", "left_anti")
-    synced_edges = untouched.unionByName(
-        sync_membership(in_scope, fetched_membership, ["playlist_id", "video_id"])
+    # J8 + S11/S12: reconcile the edge table with the fetched snapshot,
+    # scoped to the playlists the snapshot covers.
+    synced_edges = sync_scoped_membership(
+        playlist_videos, fetched_membership, "playlist_id", ["playlist_id", "video_id"]
     )
 
     # A9 + S13: write back per-playlist distinct counts and freshness.

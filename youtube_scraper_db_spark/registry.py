@@ -67,6 +67,7 @@ from .streaming.enrich import enrich_stream
 from .streaming.inbox import read_inbox_stream
 from .streaming.drain import drain, scratch_dir, scratch_dirs, staged_stream
 from .streaming.joins import correlate_streams
+from .functions.portable_hash import md5_halves_sql
 from .functions.scalars import (
     context_snippet,
     display_name,
@@ -1394,10 +1395,10 @@ def _cloned_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: same IEEE double and the power-of-two division is exact, so the plane
 #: coefficients are bit-identical; the 6dp rounding before the sign test
 #: absorbs summation-order jitter (~1e-13) between the engines.
-_PORTABLE_PLANES_CTE = r"""
+_PORTABLE_PLANES_CTE = f"""
     pl AS (
       SELECT p.p AS p, d.d AS d,
-             ('0x' || substr(md5(p.p || ':' || d.d), 1, 15))::BIGINT
+             {md5_halves_sql("p.p || ':' || d.d")[0]}
                / 1152921504606846976.0 - 0.5 AS c
       FROM (SELECT unnest(generate_series(0, 3)) AS p) p
            CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS d) d
@@ -1438,8 +1439,8 @@ def _minhash_band_pipeline_ctes(corpus_sql: str) -> str:
     ),
     hh AS (
       SELECT doc,
-             ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS h1,
-             ('0x' || substr(md5(shingle), 17, 15))::BIGINT AS h2
+             {md5_halves_sql("shingle")[0]} AS h1,
+             {md5_halves_sql("shingle")[1]} AS h2
       FROM sh
     ),
     mh AS (
@@ -6101,7 +6102,9 @@ def order_value_percentrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     "EXT-classic-q5 J2 J4 A2 O2",
     oracle="""
     SELECT n_name,
-           ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS revenue
+           CAST(ROUND(SUM(CAST(l_extendedprice AS DECIMAL(15, 2))
+                          * (1 - CAST(l_discount AS DECIMAL(15, 2)))), 2)
+                AS DOUBLE) AS revenue
     FROM customer
     JOIN orders   ON c_custkey = o_custkey
     JOIN lineitem ON l_orderkey = o_orderkey
@@ -6125,8 +6128,10 @@ def classic_q5_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold at any SF where they're dimensions) so lineitem — the
     100 TB table — is never shuffled, only probed. The same-nation
     customer⇄supplier condition rides the supplier join as a residual.
-    Revenue rounds to 2 decimals on both sides (repo float-agg
-    convention)."""
+    Revenue is summed EXACTLY as DECIMAL(15, 2) prices and discounts on
+    both sides, then rounded to 2 decimals and cast back to DOUBLE: a
+    double sum rounded after summing lands on either side of a .005
+    boundary depending on summation order, i.e. on partitioning."""
     c = _t(spark, sf_dir, "customer")
     o = _t(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -6151,8 +6156,14 @@ def classic_q5_local_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.groupBy("n_name")
         .agg(
             F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("revenue")
+                F.sum(
+                    F.col("l_extendedprice").cast("decimal(15,2)")
+                    * (1 - F.col("l_discount").cast("decimal(15,2)"))
+                ),
+                2,
+            )
+            .cast("double")
+            .alias("revenue")
         )
         .orderBy(F.desc("revenue"), F.asc("n_name"))
     )
@@ -11019,17 +11030,11 @@ def stream_hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte-identical to one-shot construction, and the gate shares the
     batch gate's oracle verbatim (hll_oracle_sql: same hash, same rho
     CASE-sum, same harmonic estimate, beside the exact distinct). The
-    per-row (bucket, rho) projection is the SAME expression the batch
-    path uses (operators/sketches.py hll_bucket_rho)."""
+    register aggregate is the SAME ``hll_registers`` the batch path
+    uses (operators/sketches.py), here over a streaming source."""
     ensure_utc(spark)
     stream = read_table_stream(spark, sf_dir, "events").select("user_id")
-    bucket, rho = op_sketches.hll_bucket_rho(F.col("user_id"), 9)
-    regs = (
-        stream.where(F.col("user_id").isNotNull())
-        .select(bucket.alias("bucket"), rho.alias("rho"))
-        .groupBy("bucket")
-        .agg(F.max("rho").alias("rho"))
-    )
+    regs = op_sketches.hll_registers(stream, "user_id", 9)
     drained = _run_stream(
         regs,
         state_partitions=_stream_parallelism(spark),
@@ -11891,8 +11896,8 @@ def incremental_trigram_model_equiv(
 @spec(
     "hll_artifact_fold_roundtrip",
     "EXT-sketch-hll EXT-artifact EXT-sketch-merge S14 S16",
-    oracle=op_sketches.hll_artifact_oracle_sql(
-        "events", "user_id", "event_id % 2 = 0", 9, _ART_CHECK_MOD
+    oracle=op_sketches.hll_union_oracle_sql(
+        "events", "user_id", "event_id % 2 = 0", 9, checksum_mod=_ART_CHECK_MOD
     ),
 )
 def hll_artifact_fold_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -11963,8 +11968,8 @@ def hll_artifact_fold_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 @spec(
     "cms_artifact_fold_roundtrip",
     "EXT-sketch-cms EXT-artifact EXT-sketch-merge S14 S16",
-    oracle=op_sketches.cms_artifact_oracle_sql(
-        "events", "user_id", "event_id % 2 = 0", _ART_CHECK_MOD
+    oracle=op_sketches.cms_union_oracle_sql(
+        "events", "user_id", "event_id % 2 = 0", checksum_mod=_ART_CHECK_MOD
     ),
 )
 def cms_artifact_fold_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12067,13 +12072,13 @@ def cms_artifact_fold_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 @spec(
     "bloom_artifact_fold_roundtrip",
     "EXT-sketch-bloom EXT-artifact EXT-sketch-merge S14 S16",
-    oracle=op_sketches.bloom_artifact_oracle_sql(
+    oracle=op_sketches.bloom_union_oracle_sql(
         "orders",
         "o_custkey",
         "customer",
         "c_custkey",
         "o_orderkey % 2 = 0",
-        _ART_CHECK_MOD,
+        checksum_mod=_ART_CHECK_MOD,
     ),
 )
 def bloom_artifact_fold_roundtrip(
@@ -12320,7 +12325,7 @@ def heavy_hitter_artifact_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
 @spec(
     "hll_distinct_users_by_type",
     "EXT-sketch-hll A3 A2",
-    oracle=op_sketches.hll_grouped_oracle_sql("events", "event_type", "user_id", 9),
+    oracle=op_sketches.hll_oracle_sql("events", "user_id", 9, ("event_type",)),
 )
 def hll_distinct_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPED HLL — approximate distinct users PER EVENT TYPE next to
@@ -12328,42 +12333,29 @@ def hll_distinct_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     count(DISTINCT user_id)``, whose shuffle carries every distinct
     (type, user) pair; the sketch form shuffles at most groups × 2^9
     register rows with full map-side combine
-    (operators/sketches.py hll_registers_grouped /
-    hll_estimates_grouped). At 100 TB this is THE daily-dashboard
-    aggregate — per-dimension cardinalities from one bounded-state
-    pass — and per-group registers merge across days exactly like the
-    scalar sketch (same element-wise max). Both the estimates and the
-    exact twins hash-check against the oracle's replay of the full
-    hash/rho/harmonic arithmetic."""
+    (operators/sketches.py hll_estimate with ``by``). At 100 TB this is
+    THE daily-dashboard aggregate — per-dimension cardinalities from one
+    bounded-state pass — and per-group registers merge across days
+    exactly like the scalar sketch (same element-wise max). Both the
+    estimates and the exact twins hash-check against the oracle's
+    replay of the full hash/rho/harmonic arithmetic."""
     ensure_utc(spark)
     ev = _t(spark, sf_dir, "events")
-    regs = op_sketches.hll_registers_grouped(ev, "event_type", "user_id", 9)
-    est = op_sketches.hll_estimates_grouped(regs, 9)
-    exact = (
-        ev.where(F.col("user_id").isNotNull() & F.col("event_type").isNotNull())
-        .groupBy(F.col("event_type").alias("g"))
-        .agg(F.countDistinct("user_id").alias("exact_distinct"))
-    )
-    return est.join(exact, "g").select(
-        F.col("g").alias("event_type"),
-        "estimate",
-        "nonzero_registers",
-        "exact_distinct",
-    )
+    return op_sketches.hll_estimate(ev, "user_id", 9, ("event_type",))
 
 
 @spec(
     "event_value_quantiles_by_type",
     "EXT-sketch-quantile EXT-histogram A8",
-    oracle=op_sketches.histogram_quantiles_grouped_oracle_sql(
-        "events", "event_type", "value", 64, (0.5, 0.9)
+    oracle=op_sketches.histogram_quantiles_oracle_sql(
+        "events", "value", 64, (0.5, 0.9), ("event_type",)
     ),
 )
 def event_value_quantiles_by_type(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """GROUPED histogram quantiles — per-event-type p50/p90 from 64-bin
-    histograms (operators/sketches.py histogram_quantiles_grouped):
+    histograms (operators/sketches.py histogram_quantiles):
     per-group edges, one keyed bin-count aggregate, a per-group
     cumulative sum over groups × bins rows, first-covering-bin
     interpolation. The per-dimension-percentile dashboard aggregate at
@@ -12375,10 +12367,8 @@ def event_value_quantiles_by_type(
     by group)."""
     ensure_utc(spark)
     ev = _t(spark, sf_dir, "events")
-    return op_sketches.histogram_quantiles_grouped(
-        ev, "event_type", "value", 64, (0.5, 0.9)
-    ).select(
-        F.col("g").alias("event_type"), "n_rows", "p5_est", "p9_est"
+    return op_sketches.histogram_quantiles(
+        ev, "value", 64, (0.5, 0.9), ("event_type",)
     )
 
 
@@ -12428,7 +12418,7 @@ def heavy_hitter_words_by_lang(
 @spec(
     "cms_user_counts_by_type",
     "EXT-sketch-cms A2 A8",
-    oracle=op_sketches.cms_grouped_oracle_sql("events", "event_type", "user_id"),
+    oracle=op_sketches.cms_oracle_sql("events", "user_id", by=("event_type",)),
 )
 def cms_user_counts_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPED Count-Min — per-event-type frequency estimates for every
@@ -12437,7 +12427,7 @@ def cms_user_counts_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     per dimension, grouped histogram ranks, grouped MG finds dominant
     values; this ESTIMATES any value's frequency per dimension with
     bounded state). One counter table per group from a single keyed
-    aggregate (operators/sketches.py cms_counters_grouped): the group
+    aggregate (operators/sketches.py cms_counters with ``by``): the group
     key joins the (row, slot) cell identity, so every per-group table
     obeys est ≥ exact independently — the witness rides along per
     (type, user) row and the oracle replays the per-group counters,
@@ -12446,22 +12436,14 @@ def cms_user_counts_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     element-wise sum as the scalar sketch."""
     ensure_utc(spark)
     ev = _t(spark, sf_dir, "events")
-    return op_sketches.cms_point_estimates_grouped(
-        ev, "event_type", "user_id"
-    ).select(
-        F.col("g").alias("event_type"),
-        "k",
-        "est",
-        "exact",
-        "overestimate_ok",
-    )
+    return op_sketches.cms_point_estimates(ev, "user_id", by=("event_type",))
 
 
 @spec(
     "bloom_filter_by_type",
     "EXT-sketch-bloom J10 A8",
-    oracle=op_sketches.bloom_grouped_oracle_sql(
-        "events", "event_type", "user_id", "customer", "c_custkey"
+    oracle=op_sketches.bloom_oracle_sql(
+        "events", "user_id", "customer", "c_custkey", by=("event_type",)
     ),
 )
 def bloom_filter_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -12471,7 +12453,7 @@ def bloom_filter_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions can skip this key?"), completing the grouped-sketch
     grid's membership cell. Each group's bit table is exactly the
     scalar filter over that group's rows (the group key joins the bit
-    identity — operators/sketches.py bloom_bits_grouped), so per-group
+    identity — operators/sketches.py bloom_bits with ``by``), so per-group
     false positives are independent and the oracle hash-checks each
     group's full error surface. The probe side hashes ONCE (positions
     are group-independent); the group×key probe matrix is a broadcast
@@ -12481,14 +12463,8 @@ def bloom_filter_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_utc(spark)
     ev = _t(spark, sf_dir, "events")
     customer = _t(spark, sf_dir, "customer")
-    return op_sketches.bloom_probe_report_grouped(
-        ev, "event_type", "user_id", customer, "c_custkey"
-    ).select(
-        F.col("g").alias("event_type"),
-        "probed",
-        "maybe_present",
-        "true_present",
-        "false_positives",
+    return op_sketches.bloom_probe_report(
+        ev, "user_id", customer, "c_custkey", by=("event_type",)
     )
 
 
@@ -12904,7 +12880,7 @@ def kmv_distinct_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("event_type").cast("string").alias("g"))
         .agg(F.countDistinct("user_id").cast("long").alias("exact_distinct"))
     )
-    return op_kmv.kmv_estimate_grouped(sk, 32).join(exact, "g")
+    return op_kmv.kmv_estimate(sk, 32, ("g",)).join(exact, "g")
 
 
 @spec(
@@ -13954,9 +13930,8 @@ def kmv_antijoin_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     art AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS saved_postings,
-             CAST(SUM(('0x' || substr(md5(gram || ':' ||
-                        CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT
-                      % {_ART_CHECK_MOD}) AS BIGINT) AS saved_checksum
+             {_artifact_checksum_sql("gram || ':' || CAST(doc_id AS VARCHAR)")}
+               AS saved_checksum
       FROM base
     )
     SELECT art.saved_postings, art.saved_checksum,
@@ -14404,8 +14379,7 @@ def user_status_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH days AS (SELECT DISTINCT CAST(ts AS DATE) AS d FROM events),
     hs AS (
       SELECT DISTINCT CAST(ts AS DATE) AS day,
-             ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 15))::BIGINT
-               AS h
+             {md5_halves_sql("CAST(user_id AS VARCHAR)")[0]} AS h
       FROM events WHERE user_id IS NOT NULL
     ),
     dw AS (
@@ -14561,9 +14535,8 @@ def stream_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     art AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS saved_terms,
-             CAST(SUM(('0x' || substr(md5(w || ':' ||
-                        CAST(df AS VARCHAR)), 1, 15))::BIGINT
-                      % {_ART_CHECK_MOD}) AS BIGINT) AS saved_checksum
+             {_artifact_checksum_sql("w || ':' || CAST(df AS VARCHAR)")}
+               AS saved_checksum
       FROM df_base
     )
     SELECT art.saved_terms, art.saved_checksum,
@@ -15030,8 +15003,8 @@ def hll_sliding_distinct_users(
     oracle=f"""
     WITH dh AS (
       SELECT DISTINCT
-             ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 15))::BIGINT AS h1,
-             ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 17, 15))::BIGINT AS h2
+             {md5_halves_sql("CAST(o_orderkey AS VARCHAR)")[0]} AS h1,
+             {md5_halves_sql("CAST(o_orderkey AS VARCHAR)")[1]} AS h2
       FROM orders
       WHERE o_orderpriority = '1-URGENT' AND o_orderkey IS NOT NULL
     ),
