@@ -26,8 +26,8 @@ TRAIN_IDS = {0, 2, 4}
 
 def _engine(spark):
     df = spark.createDataFrame(ROWS, "doc_id long, text string")
-    got = BG.bigram_doc_scores(
-        df, "doc_id", "text", train_pred=F.col("id") % 2 == 0
+    got = BG.doc_scores(
+        df, "doc_id", "text", 2, train_pred=F.col("id") % 2 == 0
     ).collect()
     return {
         r["id"]: (r["total_micrologp"], r["n_tokens"], r["n_backoff"])
@@ -36,7 +36,7 @@ def _engine(spark):
 
 
 def test_engine_matches_bruteforce(spark):
-    want = BG.py_bigram_scores(ROWS, TRAIN_IDS)
+    want = BG.py_ngram_scores(ROWS, TRAIN_IDS, 2)
     assert _engine(spark) == want
 
 
@@ -66,7 +66,7 @@ def test_in_model_transition_score_is_count_ratio():
     # left context 4 times ("the cat" ×2, "the mat", "the dog"),
     # "the cat" twice → S(cat|the) = 2/4
     want = math.floor(1e6 * math.log(2 / 4) + 0.5)
-    ref = BG.py_bigram_scores(ROWS, TRAIN_IDS)
+    ref = BG.py_ngram_scores(ROWS, TRAIN_IDS, 2)
     # doc 9 = "the cat sat": U(the) + S(cat|the) + S(sat|cat)
     uni = {}
     for i, t in ROWS:
@@ -84,7 +84,7 @@ def test_in_model_transition_score_is_count_ratio():
 
 def _engine3(spark, rows, pred):
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = BG.trigram_doc_scores(df, "doc_id", "text", train_pred=pred).collect()
+    got = BG.doc_scores(df, "doc_id", "text", 3, train_pred=pred).collect()
     return {
         r["id"]: (
             r["total_micrologp"],
@@ -97,7 +97,7 @@ def _engine3(spark, rows, pred):
 
 
 def test_trigram_engine_matches_bruteforce(spark):
-    want = BG.py_trigram_scores(ROWS, TRAIN_IDS)
+    want = BG.py_ngram_scores(ROWS, TRAIN_IDS, 3)
     got = _engine3(spark, ROWS, F.col("id") % 2 == 0)
     assert got == want
 
@@ -118,7 +118,7 @@ def test_trigram_double_backoff_scores_two_constants():
     """A position whose trigram AND bigram are unseen scores
     2·BACKOFF_MU + U(c) — one constant per hop."""
     rows = [(0, "p q r"), (1, "x y r")]
-    ref = BG.py_trigram_scores(rows, {0})
+    ref = BG.py_ngram_scores(rows, {0}, 3)
     uni = {"p": 1, "q": 1, "r": 1}
     total = sum(uni.values()) + len(uni)
 
@@ -136,7 +136,7 @@ def test_trigram_double_backoff_scores_two_constants():
 def test_trigram_degenerate_and_short_docs(spark):
     rows = [(0, ""), (1, "a b c d"), (3, None), (5, "x"), (7, "x y")]
     got = _engine3(spark, rows, F.col("id") % 2 == 0)
-    want = BG.py_trigram_scores(rows, {0})
+    want = BG.py_ngram_scores(rows, {0}, 3)
     assert got == want
     # no model at all: totals 0, every level backs off
     assert got[1] == (0, 4, 2, 3) and got[5] == (0, 1, 0, 0)
@@ -152,57 +152,57 @@ def test_empty_training_slice_degenerates_totally(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         r["id"]: (r["total_micrologp"], r["n_tokens"], r["n_backoff"])
-        for r in BG.bigram_doc_scores(
-            df, "doc_id", "text", train_pred=F.col("id") % 2 == 0
+        for r in BG.doc_scores(
+            df, "doc_id", "text", 2, train_pred=F.col("id") % 2 == 0
         ).collect()
     }
-    want = BG.py_bigram_scores(rows, {0})
+    want = BG.py_ngram_scores(rows, {0}, 2)
     assert got == want
     assert got[1] == (0, 3, 2) and got[5] == (0, 1, 0)
 
 
 def test_scores_from_persisted_model_tables(spark, tmp_path):
-    """bigram_doc_scores == bigram_doc_scores_from_model over tables
-    that round-tripped through a versioned archive commit — the LM's
+    """doc_scores == doc_scores_from_model over order-2 tables that
+    round-tripped through a versioned archive commit — the LM's
     persistable state is exactly the two count tables."""
     from youtube_scraper_db_spark.archive import Archive
     from youtube_scraper_db_spark.llm.bigram import (
-        bigram_doc_scores_from_model,
-        bigram_model_tables,
+        doc_scores_from_model,
+        model_tables,
     )
 
     df = spark.createDataFrame(ROWS, "doc_id long, text string")
     pred = F.col("id") % 2 == 0
-    uni, big = bigram_model_tables(df, "doc_id", "text", pred)
+    uni, big = model_tables(df, "doc_id", "text", 2, pred)
     ar = Archive(spark, str(tmp_path / "db"))
     assert ar.commit("bigram_uni", uni) == 1
     assert ar.commit("bigram_big", big) == 1
-    direct = {tuple(r) for r in BG.bigram_doc_scores(
-        df, "doc_id", "text", pred
+    direct = {tuple(r) for r in BG.doc_scores(
+        df, "doc_id", "text", 2, pred
     ).collect()}
-    loaded = {tuple(r) for r in bigram_doc_scores_from_model(
-        df, "doc_id", "text", ar.table("bigram_uni"), ar.table("bigram_big")
+    loaded = {tuple(r) for r in doc_scores_from_model(
+        df, "doc_id", "text", (ar.table("bigram_uni"), ar.table("bigram_big"))
     ).collect()}
     assert direct == loaded == {
-        (i, *v) for i, v in BG.py_bigram_scores(ROWS, TRAIN_IDS).items()
+        (i, *v) for i, v in BG.py_ngram_scores(ROWS, TRAIN_IDS, 2).items()
     }
 
 
 def test_model_fold_equals_union_retrain(spark):
-    """merge_model_tables over disjoint slices == retraining on the
+    """merge_models over disjoint order-2 slices == retraining on the
     union, cell-for-cell and score-for-score, in either fold order."""
     from youtube_scraper_db_spark.llm.bigram import (
-        bigram_doc_scores_from_model,
-        bigram_model_tables,
-        merge_model_tables,
+        doc_scores_from_model,
+        merge_models,
+        model_tables,
     )
 
     df = spark.createDataFrame(ROWS, "doc_id long, text string")
     base = df.filter(F.col("doc_id") % 3 != 1)
     batch = df.filter(F.col("doc_id") % 3 == 1)
-    ub, bb = bigram_model_tables(base, "doc_id", "text")
-    un, bn = bigram_model_tables(batch, "doc_id", "text")
-    ud, bd = bigram_model_tables(df, "doc_id", "text")
+    ub, bb = model_tables(base, "doc_id", "text", 2)
+    un, bn = model_tables(batch, "doc_id", "text", 2)
+    ud, bd = model_tables(df, "doc_id", "text", 2)
 
     def canon(uni, big):
         return (
@@ -210,65 +210,65 @@ def test_model_fold_equals_union_retrain(spark):
             sorted(map(tuple, big.collect())),
         )
 
-    uf, bf = merge_model_tables(ub, bb, un, bn)
+    uf, bf = merge_models((ub, bb), (un, bn))
     assert canon(uf, bf) == canon(ud, bd)
     # fold order cannot matter (sum commutes)
-    ur, br = merge_model_tables(un, bn, ub, bb)
+    ur, br = merge_models((un, bn), (ub, bb))
     assert canon(ur, br) == canon(ud, bd)
-    sf = {tuple(r) for r in bigram_doc_scores_from_model(
-        df, "doc_id", "text", uf, bf
+    sf = {tuple(r) for r in doc_scores_from_model(
+        df, "doc_id", "text", (uf, bf)
     ).collect()}
-    sd = {tuple(r) for r in bigram_doc_scores_from_model(
-        df, "doc_id", "text", ud, bd
+    sd = {tuple(r) for r in doc_scores_from_model(
+        df, "doc_id", "text", (ud, bd)
     ).collect()}
     assert sf == sd
 
 
 def test_trigram_fold_and_artifact_roundtrip(spark, tmp_path):
     """Order-3 symmetry of the fold + persistence story:
-    merge_trigram_model_tables over disjoint slices == retraining on
-    the union (either fold order), and a save/reload through the
-    archive re-scores every document identically, matching the pure
-    Python reference."""
+    merge_models over disjoint order-3 slices == retraining on the
+    union (either fold order), and a save/reload through the archive
+    re-scores every document identically, matching the pure Python
+    reference."""
     from youtube_scraper_db_spark.archive import Archive
     from youtube_scraper_db_spark.llm import bigram as BG
     from youtube_scraper_db_spark.llm.bigram import (
-        merge_trigram_model_tables,
-        trigram_doc_scores_from_model,
-        trigram_model_tables,
+        doc_scores_from_model,
+        merge_models,
+        model_tables,
     )
 
     df = spark.createDataFrame(ROWS, "doc_id long, text string")
     base = df.filter(F.col("doc_id") % 3 != 1)
     batch = df.filter(F.col("doc_id") % 3 == 1)
-    mb = trigram_model_tables(base, "doc_id", "text")
-    mn = trigram_model_tables(batch, "doc_id", "text")
-    md = trigram_model_tables(df, "doc_id", "text")
+    mb = model_tables(base, "doc_id", "text", 3)
+    mn = model_tables(batch, "doc_id", "text", 3)
+    md = model_tables(df, "doc_id", "text", 3)
 
     def canon(m):
         return tuple(sorted(map(tuple, t.collect())) for t in m)
 
-    assert canon(merge_trigram_model_tables(mb, mn)) == canon(md)
-    assert canon(merge_trigram_model_tables(mn, mb)) == canon(md)
+    assert canon(merge_models(mb, mn)) == canon(md)
+    assert canon(merge_models(mn, mb)) == canon(md)
 
     ar = Archive(spark, str(tmp_path / "db3"))
     for name, t in zip(("t_uni", "t_big", "t_tri"), md):
         assert ar.commit(name, t) == 1
     loaded = {
         tuple(r)
-        for r in trigram_doc_scores_from_model(
+        for r in doc_scores_from_model(
             df, "doc_id", "text",
-            ar.table("t_uni"), ar.table("t_big"), ar.table("t_tri"),
+            (ar.table("t_uni"), ar.table("t_big"), ar.table("t_tri")),
         ).collect()
     }
     direct = {
         tuple(r)
-        for r in BG.trigram_doc_scores(df, "doc_id", "text").collect()
+        for r in BG.doc_scores(df, "doc_id", "text", 3).collect()
     }
     assert loaded == direct == {
         (i, *v)
-        for i, v in BG.py_trigram_scores(
-            ROWS, {i for i, _ in ROWS}
+        for i, v in BG.py_ngram_scores(
+            ROWS, {i for i, _ in ROWS}, 3
         ).items()
     }
 
@@ -281,25 +281,25 @@ def test_shared_tok_frame_paths_match_default(spark):
     tok = BG.tok_frame(df, "doc_id", "text").localCheckpoint(eager=True)
     pred = F.col("id") % 2 == 0
 
-    u0, b0 = BG.bigram_model_tables(df, "doc_id", "text", pred)
-    u1, b1 = BG.bigram_model_tables(df, "doc_id", "text", pred, tok=tok)
+    u0, b0 = BG.model_tables(df, "doc_id", "text", 2, pred)
+    u1, b1 = BG.model_tables(df, "doc_id", "text", 2, pred, tok=tok)
     assert sorted(map(tuple, u0.collect())) == sorted(map(tuple, u1.collect()))
     assert sorted(map(tuple, b0.collect())) == sorted(map(tuple, b1.collect()))
 
-    s0 = {tuple(r) for r in BG.bigram_doc_scores_from_model(
-        df, "doc_id", "text", u0, b0).collect()}
-    s1 = {tuple(r) for r in BG.bigram_doc_scores_from_model(
-        df, "doc_id", "text", u1, b1, tok=tok).collect()}
+    s0 = {tuple(r) for r in BG.doc_scores_from_model(
+        df, "doc_id", "text", (u0, b0)).collect()}
+    s1 = {tuple(r) for r in BG.doc_scores_from_model(
+        df, "doc_id", "text", (u1, b1), tok=tok).collect()}
     assert s0 == s1
 
-    m0 = BG.trigram_model_tables(df, "doc_id", "text", pred)
-    m1 = BG.trigram_model_tables(df, "doc_id", "text", pred, tok=tok)
+    m0 = BG.model_tables(df, "doc_id", "text", 3, pred)
+    m1 = BG.model_tables(df, "doc_id", "text", 3, pred, tok=tok)
     for t0, t1 in zip(m0, m1):
         assert sorted(map(tuple, t0.collect())) == sorted(
             map(tuple, t1.collect())
         )
-    t0 = {tuple(r) for r in BG.trigram_doc_scores_from_model(
-        df, "doc_id", "text", *m0).collect()}
-    t1 = {tuple(r) for r in BG.trigram_doc_scores_from_model(
-        df, "doc_id", "text", *m1, tok=tok).collect()}
+    t0 = {tuple(r) for r in BG.doc_scores_from_model(
+        df, "doc_id", "text", m0).collect()}
+    t1 = {tuple(r) for r in BG.doc_scores_from_model(
+        df, "doc_id", "text", m1, tok=tok).collect()}
     assert t0 == t1

@@ -67,3 +67,38 @@ def test_ensure_bucketed_idempotent(spark, bucketed_pair, tmp_path):
     )
     # table already existed: not rewritten, same row count
     assert df.count() == before
+
+
+def test_bucketed_gate_keeps_same_basename_datasets_apart(spark, tmp_path):
+    """``bucketed_order_lines`` caches its bucketed copies per catalog:
+    a second dataset whose directory has the same basename must get its
+    own copies, so each run matches its own dataset's oracle."""
+    import os
+    import sys
+
+    import duckdb
+    import pyarrow.parquet as pq
+    from test_plan_lint import SF as src
+
+    from youtube_scraper_db_spark.registry import REGISTRY
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    from check_oracle import canon_rows
+
+    alt = tmp_path / "alt" / "sf0.001"
+    alt.mkdir(parents=True)
+    pq.write_table(pq.read_table(f"{src}/orders.parquet"), alt / "orders.parquet")
+    li = pq.read_table(f"{src}/lineitem.parquet")
+    pq.write_table(li.slice(0, li.num_rows // 2), alt / "lineitem.parquet")
+
+    spec = next(s for s in REGISTRY if s.name == "bucketed_order_lines")
+    for sf in (src, str(alt)):
+        con = duckdb.connect()
+        for t in ("orders", "lineitem"):
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
+            )
+        rel = con.sql(spec.oracle)
+        want = canon_rows(rel.columns, rel.fetchall())
+        got = spec.fn(spark, sf)
+        assert canon_rows(got.columns, [tuple(r) for r in got.collect()]) == want, sf

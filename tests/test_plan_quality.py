@@ -295,3 +295,14 @@ def test_q21_anti_side_reuses_late_set(spark):
     plan = plan_of(spark, "classic_q21_waiting_supplier")
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+@pytest.mark.parametrize(
+    "name", ["histogram_quantile_sketch", "stream_histogram_quantiles"]
+)
+def test_quantile_picks_share_one_running_count(spark, name):
+    """Every quantile's pick reads ONE running-count Window over the
+    bins: a Window (and its single-partition Exchange) per quantile
+    means the pick subtree was copied per q."""
+    plan = plan_of(spark, name)
+    assert len(re.findall(r"^\(\d+\) Window\b", plan, re.M)) == 1, plan

@@ -105,7 +105,7 @@ def test_bigram_totals_are_finite_and_consistent(texts):
     the training slice (so ≤ 0 ⇒ total ≤ 0)."""
     rows = [(i, t) for i, t in enumerate(texts)]
     train_ids = {i for i, _ in rows if i % 2 == 0}
-    got = BG.py_bigram_scores(rows, train_ids)
+    got = BG.py_ngram_scores(rows, train_ids, 2)
     from youtube_scraper_db_spark.llm.text import py_tokens
 
     assert set(got) == {i for i, _ in rows}
@@ -127,8 +127,8 @@ def test_bigram_score_monotone_in_transition_count():
     score for documents exercising it."""
     base = [(0, "a b"), (2, "a c"), (4, "a c")]
     more = [(0, "a b"), (2, "a b"), (4, "a c")]
-    s_base = BG.py_bigram_scores(base + [(1, "a b")], {0, 2, 4})[1]
-    s_more = BG.py_bigram_scores(more + [(1, "a b")], {0, 2, 4})[1]
+    s_base = BG.py_ngram_scores(base + [(1, "a b")], {0, 2, 4}, 2)[1]
+    s_more = BG.py_ngram_scores(more + [(1, "a b")], {0, 2, 4}, 2)[1]
     assert s_more[0] > s_base[0]
 
 
@@ -138,7 +138,7 @@ def test_backed_off_transition_scores_below_observed_floor():
     factor is a real penalty (ln 0.4 < 0 in micro-units)."""
     assert BG.BACKOFF_MU == math.floor(1e6 * math.log(0.4) + 0.5) < 0
     rows = [(0, "a b a b a c"), (1, "a z")]  # "a z" unseen in training
-    got = BG.py_bigram_scores(rows, {0})
+    got = BG.py_ngram_scores(rows, {0}, 2)
     # doc 1 = U(a) + (BACKOFF + U(z)); recompute and compare exactly
     uni = {"a": 3, "b": 2, "c": 1}
     total = sum(uni.values()) + len(uni)

@@ -84,7 +84,7 @@ def test_trigram_totality_and_witness_bounds(rows, train_ids):
     witnesses respect their structural bounds: nb2 counts trigram
     positions (≤ max(0, n−2)), nb1 counts unigram-level falls (≤ nb2 +
     the one position-2 bigram slot)."""
-    got = BG.py_trigram_scores(rows, train_ids)
+    got = BG.py_ngram_scores(rows, train_ids, 3)
     assert set(got) == {i for i, _ in rows}
     from youtube_scraper_db_spark.llm.text import py_tokens
 
@@ -103,7 +103,7 @@ def test_trigram_totality_and_witness_bounds(rows, train_ids):
 def test_trigram_trained_on_everything_never_backs_off(rows):
     """Score corpus == train corpus ⇒ every transition was observed at
     every order ⇒ zero hops anywhere."""
-    got = BG.py_trigram_scores(rows, {i for i, _ in rows})
+    got = BG.py_ngram_scores(rows, {i for i, _ in rows}, 3)
     for total, n, nb2, nb1 in got.values():
         assert nb2 == 0 and nb1 == 0
 

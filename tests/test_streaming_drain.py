@@ -142,6 +142,20 @@ def test_no_mkdtemp_outside_drain_module():
     assert offenders == []
 
 
+def test_no_absolute_paths_in_package():
+    """No package module names a machine path: scratch space comes from
+    ``scratch_dir`` and data dirs from the caller, so a copy of the
+    repo elsewhere (or a second process) never writes into this one."""
+    literal = re.compile(r"""["']/(?:root|tmp|home|opt|var)\b""")
+    offenders = [
+        f"{p.relative_to(PKG)}:{n}"
+        for p in sorted(PKG.rglob("*.py"))
+        for n, line in enumerate(p.read_text().splitlines(), 1)
+        if literal.search(line)
+    ]
+    assert offenders == []
+
+
 def test_commit_marker_owned_by_versioned_module():
     """Version naming, the ``_SUCCESS`` commit check and GC live in
     ``streaming/versioned.py`` alone: no other package module spells the

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import argparse
 import datetime as dt
+import hashlib
 import math
 import os
 import sys
@@ -51,11 +52,16 @@ def canon_rows(cols: list[str], rows: list[tuple]) -> list[tuple]:
     return sorted(tuple(canon_cell(r[i]) for i in order) for r in rows)
 
 
+def digest(cols: list[str], rows: list[tuple]) -> str:
+    """12 hex chars of sha256 over the canonical rows: two runs' ``ok``
+    lines diff equal exactly when the Spark rows are identical."""
+    return hashlib.sha256(repr(canon_rows(cols, rows)).encode()).hexdigest()[:12]
+
+
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
     ap.add_argument("names", nargs="*")
-    ap.add_argument("-v", "--verbose", action="store_true")
     args = ap.parse_args()
 
     spark = get_spark("check_oracle")
@@ -78,7 +84,10 @@ def main() -> int:
             failures += 1
             continue
         if s.oracle is None:
-            print(f"ok   {s.name}: rows-only ({len(srows)} rows, {time.time()-t0:.1f}s)")
+            print(
+                f"ok   {s.name}: rows-only ({len(srows)} rows, "
+                f"{time.time()-t0:.1f}s) {digest(scols, srows)}"
+            )
             continue
         try:
             res = con.execute(s.oracle)
@@ -127,7 +136,10 @@ def main() -> int:
                 print(f"FAIL {s.name}: value mismatch; first diffs: {bad}")
                 ok = False
         if ok:
-            print(f"ok   {s.name}: {len(srows)} rows match ({time.time()-t0:.1f}s)")
+            print(
+                f"ok   {s.name}: {len(srows)} rows match "
+                f"({time.time()-t0:.1f}s) {digest(scols, srows)}"
+            )
         else:
             failures += 1
 

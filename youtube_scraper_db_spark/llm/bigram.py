@@ -1,49 +1,61 @@
-"""Bigram language model with stupid backoff for quality scoring — the
-context-sensitive extension of ``doc_unigram_quality`` (the actual
+"""Stupid-backoff n-gram language model of order n for quality scoring —
+the context-sensitive extension of ``doc_unigram_quality`` (the actual
 CCNet filter shape: train a cheap LM on a reference slice, score every
 document, threshold on per-token log-prob).
 
 Model (Brants et al. 2007, "Large Language Models in Machine
-Translation" — stupid backoff): the transition score is
+Translation" — stupid backoff). An order-n model is its count tables
+for k = 1..n over the training slice: ``(w, c)``, ``(a, b, c2)``,
+``(a, b, c, c3)``, … (``gram_keys(k)`` / ``gram_count(k)``). Position p
+of a document scores at context level L = min(p − 1, n − 1):
 
-    S(b | a) = count(a b) / count(a ·)        if count(a b) > 0
-             = 0.4 · U(b)                     otherwise (back off)
+    S_m(p) = count(w_{p−m} … w_p) / count(w_{p−m} … w_{p−1} ·)
+                                      if that (m+1)-gram was seen
+           = 0.4 · S_{m−1}(p)         otherwise (back off one level)
+    S_0(p) = U(w_p) = (count(w_p) + 1) / T,   T = Σ counts + |vocab|
 
-where U is the additively-smoothed unigram distribution and 0.4 the
-paper's fixed backoff factor. Scores are not normalized probabilities
-— that is exactly what makes the model cheap at corpus scale (no
-discount/normalization pass) and exactly replayable: everything is a
-ratio of exact integer counts.
+so a document totals Σ_p S_L(p) and a position that misses every level
+down to the unigram scores 0.4^L · U(w_p). Each miss at level m is
+witnessed per document: at order 2 the one witness is ``n_backoff``
+(bigram → unigram hops); at order 3 ``n_backoff2`` counts trigram →
+bigram hops and ``n_backoff1`` the positions that fell all the way to
+the unigram. Scores are not normalized probabilities — that is exactly
+what makes the model cheap at corpus scale (no discount/normalization
+pass) and exactly replayable: everything is a ratio of exact integer
+counts. Count tables are sum-mergeable (``merge_models``), so a model
+folded from disjoint slices equals the model retrained on their union.
 
 Integer micro-log device (llm/unigram.py quantlog_scores): every score
 is quantized to ``floor(1e6·ln(x) + 0.5)`` micro-log units, where x is
 a quotient of exact integers — both engines compute the same IEEE
 double and the same integer, so the DuckDB oracle replays the WHOLE
-train→score path value-for-value. The backoff factor contributes the
-constant ``floor(1e6·ln(0.4) + 0.5)`` = -916291 micro-units.
+train→score path value-for-value. Each backoff hop adds the constant
+``BACKOFF_MU`` = floor(1e6·ln(0.4) + 0.5) = -916291 micro-units.
 
-Train/score split: the LM trains on a FILTERED slice (the gate uses
-``doc_id % 2 = 0``) and scores the whole corpus — held-out documents
-contain unseen transitions, so the backoff path genuinely fires (a
-model trained and scored on the same corpus never backs off: every
-observed transition has count ≥ 1). Unseen words score as the smoothed
-zero-count unigram ``floor(1e6·ln(1/T) + 0.5)``; unseen contexts back
-off by construction. Total over every input, including empty/NULL text
-(scores 0 over 0 tokens).
+Train/score split: the gates train on a FILTERED slice and score the
+whole corpus — held-out documents contain unseen n-grams, so the
+backoff path genuinely fires (a model trained and scored on the same
+corpus never backs off). Unseen words score as the smoothed zero-count
+unigram ``floor(1e6·ln(1/T) + 0.5)``. Total over every input, including
+empty/NULL text (scores 0 over 0 tokens); with no training tokens at
+all every score is NULL, summing to 0 with every lookup backed off.
 
-Scale shape: two corpus-sized aggregates (unigram + bigram counts over
-the training slice), then the scoring pass is transition rows joined
-against model tables that are type-counted (unigram ≪ corpus; bigram
-types sublinear in corpus tokens) and one per-document sum. Join
-strategy is left to AQE — it broadcasts the model tables when runtime
-stats allow and shuffle-joins when a 100 TB training slice makes them
-executor-unsafe. All native Column expressions; no Python anywhere.
+Scale shape: n corpus-sized aggregates over the training slice, then
+the scoring pass joins each position's n-gram window against
+type-counted model tables (unigram ≪ corpus; higher-order types
+sublinear in corpus tokens) and sums per document. No broadcast hints
+on the model tables: at training-corpus scale the n-gram-type table can
+reach billions of rows, and AQE broadcasts them when runtime stats
+allow and shuffle-joins when they are executor-unsafe. Only the 1-row
+smoothing total keeps an explicit broadcast. All native Column
+expressions; no Python anywhere.
 
 Reference parity: N/A — §2.12 training-data extension surface.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 
 from pyspark.sql import Column, DataFrame
@@ -57,30 +69,37 @@ from . import text as llm_text
 BACKOFF_MU = math.floor(1e6 * math.log(0.4) + 0.5)
 
 
+def gram_keys(k: int) -> list[str]:
+    """Key columns of the k-gram count table."""
+    return ["w"] if k == 1 else list("abcdefgh"[:k])
+
+
+def gram_count(k: int) -> str:
+    """Count column of the k-gram count table."""
+    return "c" if k == 1 else f"c{k}"
+
+
+def backoff_cols(order: int) -> list[str]:
+    """The backoff witnesses of an order-n score, highest level first."""
+    if order == 2:
+        return ["n_backoff"]
+    return [f"n_backoff{m}" for m in range(order - 1, 0, -1)]
+
+
 def _mu_log(x: Column) -> Column:
     """floor(1e6·ln(x) + 0.5) as BIGINT — the shared quantizer."""
     return F.floor(F.lit(1e6) * F.log(x) + F.lit(0.5)).cast("long")
 
 
-def _pairs(t: Column) -> Column:
-    """Adjacent (a, b) struct pairs of a token array (< 2 tokens → [])."""
-    m = F.greatest(F.size(t) - 1, F.lit(0))
-    return F.zip_with(
-        F.slice(t, 1, m),
-        F.slice(t, 2, m),
-        lambda a, b: F.struct(a.alias("a"), b.alias("b")),
-    )
-
-
 def tok_frame(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """The ``(id, t)`` tokenized-corpus frame every trainer/scorer in
     this module derives from. Exposed so a caller that both trains and
-    scores (or scores under two models) can tokenize ONCE, cache the
-    result (``persist``), and pass it via the ``tok=``
-    parameter — without it, each train aggregate and each scoring
-    branch is an independent consumer of this lazy projection and
-    re-runs the full text scan + regex split (7-10 corpus passes in the
-    artifact gates; at 100 TB each pass is a full corpus read)."""
+    scores (or scores under two models) can tokenize ONCE, materialize
+    the result, and pass it via ``tok=`` — without it, each train
+    aggregate and each scoring branch is an independent consumer of
+    this lazy projection and re-runs the full text scan + regex split
+    (7-10 corpus passes in the artifact gates; at 100 TB each pass is a
+    full corpus read)."""
     return docs.select(
         F.col(id_col).alias("id"), llm_text.tokens(text_col).alias("t")
     )
@@ -92,208 +111,188 @@ def _tok(
     return tok if tok is not None else tok_frame(docs, id_col, text_col)
 
 
-def bigram_model_tables(
+def _extend(ks: list[str]):
+    """zip_with step: a (ks[:-1]) struct plus one token as ``ks[-1]``."""
+    return lambda p, x: F.struct(
+        *[p[y].alias(y) for y in ks[:-1]], x.alias(ks[-1])
+    )
+
+
+def _explode_grams(tok: DataFrame, k: int, *keep: str) -> tuple[DataFrame, list]:
+    """One row per k-gram of each token array (none below k tokens):
+    the ``keep`` columns plus the gram, and the k key columns
+    (``gram_keys(k)``) to select or group by."""
+    if k == 1:
+        return tok.select(*keep, F.explode("t").alias("w")), ["w"]
+    ks = gram_keys(k)
+    n = F.greatest(F.size("t") - (k - 1), F.lit(0))
+    grams = F.zip_with(
+        F.slice("t", 1, n),
+        F.slice("t", 2, n),
+        lambda a, b: F.struct(a.alias(ks[0]), b.alias(ks[1])),
+    )
+    for j in range(2, k):
+        grams = F.zip_with(grams, F.slice("t", j + 1, n), _extend(ks[: j + 1]))
+    rows = tok.select(*keep, F.explode(grams).alias("g"))
+    return rows, [F.col(f"g.{x}").alias(x) for x in ks]
+
+
+def model_tables(
     docs: DataFrame,
     id_col: str,
     text_col: str,
+    order: int,
     train_pred: Column | None = None,
     tok: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """The bigram LM's ENTIRE persistable state: the unigram count
-    table ``(w, c)`` and the bigram count table ``(a, b, c2)`` over the
-    training slice. Everything else the scorer needs — the smoothing
-    total T, the micro-log unigram scores, the context totals c(a ·) —
-    is a pure derivation of these two tables, which is what makes
-    count-persistence sufficient (``bigram_model_artifact_roundtrip``
-    saves exactly these through the archive's versioned commit and
-    re-derives the rest on load). ``tok`` short-circuits tokenization
-    with a shared pre-tokenized ``(id, t)`` frame (see ``tok_frame``)."""
+) -> tuple[DataFrame, ...]:
+    """The order-n model's ENTIRE persistable state: the k-gram count
+    tables for k = 1..order over the rows matching ``train_pred``. T,
+    the micro-log unigram scores and the context totals are pure
+    derivations of them, so persisting the counts persists the model.
+    ``tok`` shares a pre-tokenized ``(id, t)`` frame (``tok_frame``)."""
     tok = _tok(docs, id_col, text_col, tok)
     train = tok.filter(train_pred) if train_pred is not None else tok
-    uni = (
-        train.select(F.explode("t").alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
+    grams = [_explode_grams(train, k) for k in range(1, order + 1)]
+    # grouped by the struct fields themselves, a table the scorer renames
+    # for a shifted lookup plans as the same broadcast as the original
+    return tuple(
+        rows.groupBy(*keys).agg(F.count(F.lit(1)).alias(gram_count(k)))
+        for k, (rows, keys) in enumerate(grams, 1)
     )
-    big = (
-        train.select(F.explode(_pairs(F.col("t"))).alias("p"))
-        .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .agg(F.count(F.lit(1)).alias("c2"))
-    )
-    return uni, big
 
 
-def merge_model_tables(
-    uni_a: DataFrame,
-    big_a: DataFrame,
-    uni_b: DataFrame,
-    big_b: DataFrame,
-) -> tuple[DataFrame, DataFrame]:
-    """Fold two bigram models trained on DISJOINT corpus slices into
-    one: counts are sum-mergeable (full-outer join + coalesced sum per
-    key), so the folded model is EXACTLY the model retrained on the
-    union — the incremental-maintenance story for the LM family (the
-    CMS cell-merge economics applied to count tables): a new document
-    batch folds into last month's saved model with one vocabulary-sized
-    merge, no corpus re-scan."""
-    uni = (
-        uni_a.select("w", F.col("c").alias("ca"))
-        .join(uni_b.select("w", F.col("c").alias("cb")), "w", "full_outer")
-        .select(
-            "w",
-            (F.coalesce("ca", F.lit(0)) + F.coalesce("cb", F.lit(0))).alias(
-                "c"
-            ),
-        )
-    )
-    big = (
-        big_a.select("a", "b", F.col("c2").alias("ca"))
-        .join(
-            big_b.select("a", "b", F.col("c2").alias("cb")),
-            ["a", "b"],
-            "full_outer",
-        )
-        .select(
-            "a",
-            "b",
-            (F.coalesce("ca", F.lit(0)) + F.coalesce("cb", F.lit(0))).alias(
-                "c2"
-            ),
-        )
-    )
-    return uni, big
+def merge_models(
+    x: tuple[DataFrame, ...], y: tuple[DataFrame, ...]
+) -> tuple[DataFrame, ...]:
+    """Fold two same-order models trained on DISJOINT corpus slices:
+    each table sums its counts per key (full-outer join + coalesced
+    sum), so the fold is EXACTLY the model retrained on the union — a
+    new batch folds into a saved model with type-table-sized merges, no
+    corpus re-scan."""
 
-
-def merge_trigram_model_tables(
-    a: tuple[DataFrame, DataFrame, DataFrame],
-    b: tuple[DataFrame, DataFrame, DataFrame],
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Fold two trigram models trained on DISJOINT corpus slices into
-    one — ``merge_model_tables`` generalized to order 3: all three
-    count tables are sum-mergeable (full-outer join + coalesced sum
-    per key), so the folded model equals the union-retrained model
-    EXACTLY (``incremental_trigram_model_equiv`` gates it). The merge
-    cost is vocabulary-type-sized (the trigram-type table dominates),
-    never a corpus re-scan."""
-
-    def _merge(x: DataFrame, y: DataFrame, keys: list[str], cnt: str):
+    def merge(k: int, a: DataFrame, b: DataFrame) -> DataFrame:
+        ks, cnt = gram_keys(k), gram_count(k)
         return (
-            x.select(*keys, F.col(cnt).alias("__ca"))
-            .join(y.select(*keys, F.col(cnt).alias("__cb")), keys, "full_outer")
+            a.select(*ks, F.col(cnt).alias("__ca"))
+            .join(b.select(*ks, F.col(cnt).alias("__cb")), ks, "full_outer")
             .select(
-                *keys,
+                *ks,
                 (
                     F.coalesce("__ca", F.lit(0)) + F.coalesce("__cb", F.lit(0))
                 ).alias(cnt),
             )
         )
 
-    return (
-        _merge(a[0], b[0], ["w"], "c"),
-        _merge(a[1], b[1], ["a", "b"], "c2"),
-        _merge(a[2], b[2], ["a", "b", "c"], "c3"),
-    )
+    return tuple(merge(k, a, b) for k, (a, b) in enumerate(zip(x, y), 1))
 
 
-def bigram_doc_scores(
+def doc_scores(
     docs: DataFrame,
     id_col: str,
     text_col: str,
+    order: int,
     train_pred: Column | None = None,
 ) -> DataFrame:
-    """(id, total_micrologp, n_tokens, n_backoff): stupid-backoff bigram
-    scores per document. The LM trains on rows matching ``train_pred``
-    (default: everything) and scores EVERY row; a document's total is
-    U(w₁) + Σᵢ S(wᵢ | wᵢ₋₁) in micro-log units, ``n_backoff`` counts
-    backed-off transitions (the observable that the context model is
-    actually being exercised).
+    """(id, total_micrologp, n_tokens, *backoff_cols(order)): every row
+    scored under the order-n model trained on the rows matching
+    ``train_pred`` (default: everything).
 
     Tokenizes ONCE and materializes (``localCheckpoint``): the train
-    aggregates and the three scoring branches are otherwise independent
-    consumers that each re-run the text scan + regex split — at 100 TB,
-    ~7 full corpus passes for one scoring call. The vocab-sized model
-    tables stay lazy over the materialized token frame (their remaining
-    recomputes overlap inside the one final job; A/B-measured, eagerly
-    checkpointing them serialized more than it saved, and a lazy
-    ``persist`` was slower still — the InMemoryRelation blocks the
-    final job's planning wins)."""
+    aggregates and the scoring branches are otherwise independent
+    consumers that each re-run the text scan + regex split. The
+    type-sized model tables stay lazy over the materialized token frame
+    (their remaining recomputes overlap inside the one final job;
+    A/B-measured, eagerly checkpointing them serialized more than it
+    saved, and a lazy ``persist`` was slower still — the
+    InMemoryRelation blocks the final job's planning wins)."""
     tok = tok_frame(docs, id_col, text_col).localCheckpoint(eager=True)
-    uni, big = bigram_model_tables(docs, id_col, text_col, train_pred, tok=tok)
-    return bigram_doc_scores_from_model(
-        docs, id_col, text_col, uni, big, tok=tok
-    )
+    model = model_tables(docs, id_col, text_col, order, train_pred, tok=tok)
+    return doc_scores_from_model(docs, id_col, text_col, model, tok=tok)
 
 
-def bigram_doc_scores_from_model(
+def doc_scores_from_model(
     docs: DataFrame,
     id_col: str,
     text_col: str,
-    uni: DataFrame,
-    big: DataFrame,
+    model: tuple[DataFrame, ...],
     tok: DataFrame | None = None,
 ) -> DataFrame:
-    """Score every document under an EXPLICIT bigram model — the entry
-    point for models reloaded from a versioned artifact table. ``uni``
-    is ``(w, c)``, ``big`` is ``(a, b, c2)``; T, the micro-log unigram
-    scores and the context totals derive here, so persisted counts are
-    the whole model. ``tok`` shares a pre-tokenized ``(id, t)`` frame
-    across the scoring branches (see ``tok_frame``)."""
+    """Score every document under an EXPLICIT model (its order is
+    ``len(model)``) — the entry point for models reloaded from a
+    versioned artifact table or folded from two slices. ``tok`` shares
+    a pre-tokenized ``(id, t)`` frame across the scoring branches."""
+    order = len(model)
     tok = _tok(docs, id_col, text_col, tok)
-    tot = uni.agg(
+    tot = model[0].agg(
         (F.sum("c") + F.count(F.lit(1))).cast("double").alias("T")
     )
-    um = uni.crossJoin(F.broadcast(tot)).select(
+    um = model[0].crossJoin(F.broadcast(tot)).select(
         "w", _mu_log((F.col("c") + 1) / F.col("T")).alias("u")
     )
-    ctx = big.groupBy("a").agg(F.sum("c2").alias("c1"))
-
-    # --- scoring rows over the WHOLE corpus ---
-    # No broadcast hints on the model tables: at training-corpus scale
-    # the bigram-TYPE table can reach billions of rows (unsafe to force
-    # onto executors) — AQE converts these equi-joins to broadcast when
-    # runtime stats allow, which is the right call at every scale. Only
-    # the 1-row total keeps an explicit broadcast.
+    # ctx[m - 1]: the level-m context totals d{m} = count(w_1 … w_m ·)
+    ctx = [
+        model[m]
+        .groupBy(*gram_keys(m + 1)[:-1])
+        .agg(F.sum(gram_count(m + 1)).alias(f"d{m}"))
+        for m in range(1, order)
+    ]
     oov = _mu_log(F.lit(1.0) / F.col("T"))  # smoothed zero-count unigram
-    heads = (
-        tok.filter(F.size("t") >= 1)
-        .select("id", F.element_at("t", 1).alias("w"))
-        .join(um, "w", "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "id",
-            F.coalesce(F.col("u"), oov).alias("s"),
-            F.lit(0).alias("bo"),
+    witnesses = dict(zip(range(order - 1, 0, -1), backoff_cols(order)))
+
+    def keyed(t: DataFrame, ks: list[str], span: list[str]) -> DataFrame:
+        """``t`` with its key columns renamed to the window's ``span``."""
+        if ks == span:
+            return t
+        return t.select(
+            *[F.col(k).alias(x) for k, x in zip(ks, span)],
+            *[c for c in t.columns if c not in ks],
         )
-    )
-    trans = (
-        tok.select("id", F.explode(_pairs(F.col("t"))).alias("p"))
-        .select("id", F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .join(big, ["a", "b"], "left")
-        .join(ctx, "a", "left")
-        .join(
-            um.select(F.col("w").alias("b"), F.col("u").alias("ub")),
-            "b",
-            "left",
-        )
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "id",
-            F.when(
-                F.col("c2").isNotNull(),
-                _mu_log(F.col("c2").cast("double") / F.col("c1")),
+
+    def level(top: int) -> DataFrame:
+        """The positions scored at context level ``top``: one per doc
+        below the model order, every n-gram window at it."""
+        win = gram_keys(top + 1)
+        if top < order - 1:
+            rows = tok.filter(F.size("t") >= top + 1).select(
+                "id",
+                *[F.element_at("t", j + 1).alias(x) for j, x in enumerate(win)],
             )
-            .otherwise(F.lit(BACKOFF_MU) + F.coalesce(F.col("ub"), oov))
-            .alias("s"),
-            F.when(F.col("c2").isNull(), 1).otherwise(0).alias("bo"),
+        else:
+            rows, keys = _explode_grams(tok, top + 1, "id")
+            rows = rows.select("id", *keys)
+        for m in range(top, 0, -1):
+            span, ks = win[top - m:], gram_keys(m + 1)
+            rows = rows.join(keyed(model[m], ks, span), span, "left").join(
+                keyed(ctx[m - 1], ks[:-1], span[:-1]), span[:-1], "left"
+            )
+        rows = rows.join(keyed(um, ["w"], win[-1:]), win[-1], "left").crossJoin(
+            F.broadcast(tot)
         )
-    )
+        s, miss, flags = F.coalesce(F.col("u"), oov), None, {}
+        for m in range(1, top + 1):
+            n = F.col(gram_count(m + 1))
+            s = F.when(
+                n.isNotNull(), _mu_log(n.cast("double") / F.col(f"d{m}"))
+            ).otherwise(F.lit(BACKOFF_MU) + s)
+        for m in range(top, 0, -1):
+            unseen = F.col(gram_count(m + 1)).isNull()
+            miss = unseen if miss is None else miss & unseen
+            flags[m] = F.when(miss, 1).otherwise(0)
+        return rows.select(
+            "id",
+            s.alias("s"),
+            *[flags.get(m, F.lit(0)).alias(c) for m, c in witnesses.items()],
+        )
+
     agg = (
-        heads.unionByName(trans)
+        functools.reduce(
+            DataFrame.unionByName, [level(top) for top in range(order)]
+        )
         .groupBy("id")
         .agg(
             F.sum("s").cast("long").alias("total_micrologp"),
             F.count(F.lit(1)).cast("int").alias("n_tokens"),
-            F.sum("bo").cast("int").alias("n_backoff"),
+            *[F.sum(c).cast("int").alias(c) for c in witnesses.values()],
         )
     )
     return tok.select("id").join(agg, "id", "left").select(
@@ -301,364 +300,57 @@ def bigram_doc_scores_from_model(
         F.coalesce("total_micrologp", F.lit(0).cast("long")).alias(
             "total_micrologp"
         ),
-        F.coalesce("n_tokens", F.lit(0).cast("int")).alias("n_tokens"),
-        F.coalesce("n_backoff", F.lit(0).cast("int")).alias("n_backoff"),
+        *[
+            F.coalesce(c, F.lit(0).cast("int")).alias(c)
+            for c in ["n_tokens", *witnesses.values()]
+        ],
     )
 
 
-def _triples(t: Column) -> Column:
-    """Adjacent (a, b, c) struct triples of a token array (< 3 → [])."""
-    m = F.greatest(F.size(t) - 2, F.lit(0))
-    ab = F.zip_with(
-        F.slice(t, 1, m),
-        F.slice(t, 2, m),
-        lambda a, b: F.struct(a.alias("a"), b.alias("b")),
-    )
-    return F.zip_with(
-        ab,
-        F.slice(t, 3, m),
-        lambda p, c: F.struct(
-            p["a"].alias("a"), p["b"].alias("b"), c.alias("c")
-        ),
-    )
-
-
-def trigram_model_tables(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    train_pred: Column | None = None,
-    tok: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The trigram LM's ENTIRE persistable state: the unigram ``(w,
-    c)``, bigram ``(a, b, c2)`` and trigram ``(a, b, c, c3)`` count
-    tables over the training slice — the three-table generalization of
-    ``bigram_model_tables``. T, the micro-log unigram scores and BOTH
-    context totals (c(a ·) and c(a b ·)) are pure derivations of these
-    counts, so count-persistence is sufficient at order 3 exactly as at
-    order 2 (``trigram_model_artifact_roundtrip`` saves these through
-    the archive's versioned commit and re-derives the rest on load).
-    ``tok`` shares a pre-tokenized ``(id, t)`` frame (``tok_frame``)."""
-    tok = _tok(docs, id_col, text_col, tok)
-    train = tok.filter(train_pred) if train_pred is not None else tok
-    uni = (
-        train.select(F.explode("t").alias("w"))
-        .groupBy("w")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    big = (
-        train.select(F.explode(_pairs(F.col("t"))).alias("p"))
-        .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .agg(F.count(F.lit(1)).alias("c2"))
-    )
-    tri = (
-        train.select(F.explode(_triples(F.col("t"))).alias("p"))
-        .groupBy(
-            F.col("p.a").alias("a"),
-            F.col("p.b").alias("b"),
-            F.col("p.c").alias("c"),
-        )
-        .agg(F.count(F.lit(1)).alias("c3"))
-    )
-    return uni, big, tri
-
-
-def trigram_doc_scores(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    train_pred: Column | None = None,
-) -> DataFrame:
-    """(id, total_micrologp, n_tokens, n_backoff2, n_backoff1): order-3
-    stupid backoff (Brants 2007 §4 — the production chain order):
-
-        S(c | a b) = count(a b c) / count(a b ·)   if count(a b c) > 0
-                   = 0.4 · S(c | b)                otherwise
-
-    with ``S(c | b)`` the bigram rule above, bottoming out at the
-    smoothed unigram. A document totals U(w₁) + S(w₂ | w₁) +
-    Σᵢ₌₃ S(wᵢ | wᵢ₋₂ wᵢ₋₁). ``n_backoff2`` counts trigram→bigram hops
-    (positions ≥ 3 whose trigram was unseen); ``n_backoff1`` counts
-    transitions that fell all the way to the UNIGRAM level — the
-    position-2 bigram miss plus doubly-backed-off trigram positions —
-    so both hops of the chain are witnessed observables. Each hop adds
-    one BACKOFF_MU constant, so a doubly-backed-off position scores
-    2·BACKOFF_MU + U(c) — still a sum of quantized integers the oracle
-    replays exactly.
-
-    Same scale shape as ``bigram_doc_scores`` with one more
-    training-slice aggregate (trigram types) and one more type-counted
-    join; strategies left to AQE for the same reason. Tokenizes ONCE
-    and materializes the token frame; the model tables stay lazy over
-    it (same measured trade as ``bigram_doc_scores``)."""
-    tok = tok_frame(docs, id_col, text_col).localCheckpoint(eager=True)
-    uni, big, tri = trigram_model_tables(
-        docs, id_col, text_col, train_pred, tok=tok
-    )
-    return trigram_doc_scores_from_model(
-        docs, id_col, text_col, uni, big, tri, tok=tok
-    )
-
-
-def trigram_doc_scores_from_model(
-    docs: DataFrame,
-    id_col: str,
-    text_col: str,
-    uni: DataFrame,
-    big: DataFrame,
-    tri: DataFrame,
-    tok: DataFrame | None = None,
-) -> DataFrame:
-    """Score every document under an EXPLICIT trigram model — the entry
-    point for models reloaded from a versioned artifact table. ``uni``
-    is ``(w, c)``, ``big`` is ``(a, b, c2)``, ``tri`` is ``(a, b, c,
-    c3)``; T, the micro-log unigram scores and both context totals
-    derive here, so the persisted counts are the whole model. ``tok``
-    shares a pre-tokenized ``(id, t)`` frame (see ``tok_frame``)."""
-    tok = _tok(docs, id_col, text_col, tok)
-    tot = uni.agg(
-        (F.sum("c") + F.count(F.lit(1))).cast("double").alias("T")
-    )
-    um = uni.crossJoin(F.broadcast(tot)).select(
-        "w", _mu_log((F.col("c") + 1) / F.col("T")).alias("u")
-    )
-    ctx = big.groupBy("a").agg(F.sum("c2").alias("c1"))
-    ctx3 = tri.groupBy("a", "b").agg(F.sum("c3").alias("c23"))
-
-    oov = _mu_log(F.lit(1.0) / F.col("T"))
-    # position 1: smoothed unigram
-    heads = (
-        tok.filter(F.size("t") >= 1)
-        .select("id", F.element_at("t", 1).alias("w"))
-        .join(um, "w", "left")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "id",
-            F.coalesce(F.col("u"), oov).alias("s"),
-            F.lit(0).alias("bo2"),
-            F.lit(0).alias("bo1"),
-        )
-    )
-    # position 2: the bigram rule (no trigram context exists yet)
-    bscore = F.when(
-        F.col("c2").isNotNull(),
-        _mu_log(F.col("c2").cast("double") / F.col("c1")),
-    ).otherwise(F.lit(BACKOFF_MU) + F.coalesce(F.col("ub"), oov))
-    second = (
-        tok.filter(F.size("t") >= 2)
-        .select(
-            "id",
-            F.element_at("t", 1).alias("a"),
-            F.element_at("t", 2).alias("b"),
-        )
-        .join(big, ["a", "b"], "left")
-        .join(ctx, "a", "left")
-        .join(
-            um.select(F.col("w").alias("b"), F.col("u").alias("ub")),
-            "b",
-            "left",
-        )
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "id",
-            bscore.alias("s"),
-            F.lit(0).alias("bo2"),
-            F.when(F.col("c2").isNull(), 1).otherwise(0).alias("bo1"),
-        )
-    )
-    # positions ≥ 3: the trigram rule, chaining down on misses
-    bscore_bc = F.when(
-        F.col("c2bc").isNotNull(),
-        _mu_log(F.col("c2bc").cast("double") / F.col("c1b")),
-    ).otherwise(F.lit(BACKOFF_MU) + F.coalesce(F.col("uc"), oov))
-    trans = (
-        tok.select("id", F.explode(_triples(F.col("t"))).alias("p"))
-        .select(
-            "id",
-            F.col("p.a").alias("a"),
-            F.col("p.b").alias("b"),
-            F.col("p.c").alias("c"),
-        )
-        .join(tri, ["a", "b", "c"], "left")
-        .join(ctx3, ["a", "b"], "left")
-        .join(
-            big.select(
-                F.col("a").alias("b"),
-                F.col("b").alias("c"),
-                F.col("c2").alias("c2bc"),
-            ),
-            ["b", "c"],
-            "left",
-        )
-        .join(
-            ctx.select(F.col("a").alias("b"), F.col("c1").alias("c1b")),
-            "b",
-            "left",
-        )
-        .join(
-            um.select(F.col("w").alias("c"), F.col("u").alias("uc")),
-            "c",
-            "left",
-        )
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "id",
-            F.when(
-                F.col("c3").isNotNull(),
-                _mu_log(F.col("c3").cast("double") / F.col("c23")),
-            )
-            .otherwise(F.lit(BACKOFF_MU) + bscore_bc)
-            .alias("s"),
-            F.when(F.col("c3").isNull(), 1).otherwise(0).alias("bo2"),
-            F.when(
-                F.col("c3").isNull() & F.col("c2bc").isNull(), 1
-            )
-            .otherwise(0)
-            .alias("bo1"),
-        )
-    )
-    agg = (
-        heads.unionByName(second)
-        .unionByName(trans)
-        .groupBy("id")
-        .agg(
-            F.sum("s").cast("long").alias("total_micrologp"),
-            F.count(F.lit(1)).cast("int").alias("n_tokens"),
-            F.sum("bo2").cast("int").alias("n_backoff2"),
-            F.sum("bo1").cast("int").alias("n_backoff1"),
-        )
-    )
-    return tok.select("id").join(agg, "id", "left").select(
-        "id",
-        F.coalesce("total_micrologp", F.lit(0).cast("long")).alias(
-            "total_micrologp"
-        ),
-        F.coalesce("n_tokens", F.lit(0).cast("int")).alias("n_tokens"),
-        F.coalesce("n_backoff2", F.lit(0).cast("int")).alias("n_backoff2"),
-        F.coalesce("n_backoff1", F.lit(0).cast("int")).alias("n_backoff1"),
-    )
-
-
-def py_trigram_scores(
+def py_ngram_scores(
     rows: list[tuple[int, str | None]],
     train_ids: set[int],
-) -> dict[int, tuple[int, int, int, int]]:
-    """Brute-force reference twin for pytest pinning:
-    id → (total_micrologp, n_tokens, n_backoff2, n_backoff1)."""
+    order: int,
+) -> dict[int, tuple[int, ...]]:
+    """Brute-force reference twin (pure Python, dict counting) for
+    pytest pinning: id → (total_micrologp, n_tokens,
+    *backoff_cols(order))."""
     toks = {i: llm_text.py_tokens(t) for i, t in rows}
-    uni: dict[str, int] = {}
-    big: dict[tuple[str, str], int] = {}
-    ctx: dict[str, int] = {}
-    tri: dict[tuple[str, str, str], int] = {}
-    ctx3: dict[tuple[str, str], int] = {}
+    cnt: list[dict[tuple[str, ...], int]] = [{} for _ in range(order)]
+    ctx: list[dict[tuple[str, ...], int]] = [{} for _ in range(order)]
     for i, t in toks.items():
         if i not in train_ids:
             continue
-        for w in t:
-            uni[w] = uni.get(w, 0) + 1
-        for a, b in zip(t, t[1:]):
-            big[(a, b)] = big.get((a, b), 0) + 1
-            ctx[a] = ctx.get(a, 0) + 1
-        for a, b, c in zip(t, t[1:], t[2:]):
-            tri[(a, b, c)] = tri.get((a, b, c), 0) + 1
-            ctx3[(a, b)] = ctx3.get((a, b), 0) + 1
-    total = sum(uni.values()) + len(uni)
+        for k in range(1, order + 1):
+            for p in range(len(t) - k + 1):
+                g = tuple(t[p:p + k])
+                cnt[k - 1][g] = cnt[k - 1].get(g, 0) + 1
+                ctx[k - 1][g[:-1]] = ctx[k - 1].get(g[:-1], 0) + 1
+    levels = range(order - 1, 0, -1)
+    total = sum(cnt[0].values()) + len(cnt[0])
     if total == 0:
+        # no model: every score is NULL (summing to 0) and every lookup
+        # backs off — the engine and the DuckDB oracle degenerate alike
         return {
-            i: (
-                0,
-                len(t),
-                max(0, len(t) - 2),
-                max(0, len(t) - 1),
-            )
+            i: (0, len(t), *[max(0, len(t) - m) for m in levels])
             for i, t in toks.items()
         }
 
     def mu(x: float) -> int:
         return math.floor(1e6 * math.log(x) + 0.5)
 
-    def u(w: str) -> int:
-        return mu((uni.get(w, 0) + 1) / total)
-
-    def s2(a: str, b: str) -> tuple[int, bool]:
-        """Bigram rule: (score, hit-unigram-level)."""
-        c2 = big.get((a, b))
-        if c2 is not None:
-            return mu(c2 / ctx[a]), False
-        return BACKOFF_MU + u(b), True
-
-    out: dict[int, tuple[int, int, int, int]] = {}
+    out: dict[int, tuple[int, ...]] = {}
     for i, t in toks.items():
-        if not t:
-            out[i] = (0, 0, 0, 0)
-            continue
-        s = u(t[0])
-        nb2 = nb1 = 0
-        if len(t) >= 2:
-            v, fell = s2(t[0], t[1])
-            s += v
-            nb1 += int(fell)
-        for a, b, c in zip(t, t[1:], t[2:]):
-            c3 = tri.get((a, b, c))
-            if c3 is not None:
-                s += mu(c3 / ctx3[(a, b)])
-            else:
-                v, fell = s2(b, c)
-                s += BACKOFF_MU + v
-                nb2 += 1
-                nb1 += int(fell)
-        out[i] = (s, len(t), nb2, nb1)
-    return out
-
-
-def py_bigram_scores(
-    rows: list[tuple[int, str | None]],
-    train_ids: set[int],
-) -> dict[int, tuple[int, int, int]]:
-    """Brute-force reference twin (pure Python, dict counting) for
-    pytest pinning: id → (total_micrologp, n_tokens, n_backoff)."""
-    toks = {i: llm_text.py_tokens(t) for i, t in rows}
-    uni: dict[str, int] = {}
-    big: dict[tuple[str, str], int] = {}
-    ctx: dict[str, int] = {}
-    for i, t in toks.items():
-        if i not in train_ids:
-            continue
-        for w in t:
-            uni[w] = uni.get(w, 0) + 1
-        for a, b in zip(t, t[1:]):
-            big[(a, b)] = big.get((a, b), 0) + 1
-            ctx[a] = ctx.get(a, 0) + 1
-    total = sum(uni.values()) + len(uni)
-    if total == 0:
-        # Degenerate no-model case (training slice has zero tokens):
-        # the engine's smoothing total is NULL, every per-token score is
-        # NULL, and the per-doc SUM coalesces to 0 with every transition
-        # marked backed-off — the DuckDB oracle degenerates identically.
-        # Match that totality here instead of dividing by zero.
-        return {
-            i: (0, len(t), max(0, len(t) - 1)) for i, t in toks.items()
-        }
-
-    def mu(x: float) -> int:
-        return math.floor(1e6 * math.log(x) + 0.5)
-
-    def u(w: str) -> int:
-        return mu((uni.get(w, 0) + 1) / total)
-
-    out: dict[int, tuple[int, int, int]] = {}
-    for i, t in toks.items():
-        if not t:
-            out[i] = (0, 0, 0)
-            continue
-        s = u(t[0])
-        nb = 0
-        for a, b in zip(t, t[1:]):
-            c2 = big.get((a, b))
-            if c2 is not None:
-                s += mu(c2 / ctx[a])
-            else:
-                s += BACKOFF_MU + u(b)
-                nb += 1
-        out[i] = (s, len(t), nb)
+        s, nb = 0, dict.fromkeys(levels, 0)
+        for p, w in enumerate(t):
+            hit = None
+            for m in range(min(p, order - 1), 0, -1):
+                g = tuple(t[p - m:p + 1])
+                if g in cnt[m]:
+                    hit = mu(cnt[m][g] / ctx[m][g[:-1]])
+                    break
+                s += BACKOFF_MU
+                nb[m] += 1
+            s += hit if hit is not None else mu((cnt[0].get((w,), 0) + 1) / total)
+        out[i] = (s, len(t), *[nb[m] for m in levels])
     return out

@@ -18,7 +18,8 @@ counts of joined tables must match (or be integer multiples with
 
 ``saveAsTable`` is required (bucket metadata lives in the catalog, not
 the parquet files); ``path`` makes the table external so the files land
-in a controlled location rather than the session's warehouse dir.
+in a controlled location rather than the session's warehouse dir
+(``ensure_bucketed`` defaults it to a scratch dir removed at exit).
 
 Exchange elimination needs no configuration. Sort elimination
 additionally needs ``spark.sql.legacy.bucketedTableScan.outputOrdering=
@@ -29,6 +30,8 @@ true`` (set in session.get_spark) AND one file per bucket — which
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..streaming.drain import scratch_dir
 
 
 def write_bucketed(
@@ -70,7 +73,11 @@ def ensure_bucketed(
 ) -> DataFrame:
     """Idempotent accessor: materialize once per catalog lifetime, then
     serve the bucketed table. (The bucketed copy is a derived artifact —
-    rebuilding it is always safe.)"""
+    rebuilding it is always safe.) The files go to ``path``, or to a
+    fresh scratch dir allocated only when the table is written. The
+    table name is the cache key, so it must name ``df``'s source."""
     if not spark.catalog.tableExists(table):
-        write_bucketed(df, table, keys, num_buckets, path=path)
+        write_bucketed(
+            df, table, keys, num_buckets, path=path or scratch_dir(f"sg_{table}_")
+        )
     return spark.table(table)

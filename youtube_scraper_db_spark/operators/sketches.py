@@ -912,8 +912,10 @@ def _quantile_picks(
     one whose running count first reaches r = n·q — cum ≥ r > cum − cnt,
     which exactly one bin meets — and the estimate interpolates inside
     it: lo + w·(bin + (r − cum_prev)/cnt). Returns ``stats`` with
-    ({tag}_raw, {tag}_bin) per q. Everything here is groups × bins
-    rows."""
+    ({tag}_raw, {tag}_bin) per q. The running count is computed once
+    and every q picks from it in one conditional aggregate; grouping by
+    all of ``stats`` keeps the no-values report at 0 rows. Everything
+    here is groups × bins rows."""
     cum = _join_by(
         cnts.withColumn(
             "cum", F.sum("cnt").over(Window.partitionBy(*by).orderBy("bin"))
@@ -923,20 +925,16 @@ def _quantile_picks(
     )
     w = (F.col("hi") - F.col("lo")) / float(bins)
     prev = F.col("cum") - F.col("cnt")
-    out = stats
+    picks = []
     for q in qs:
         tag, r = _tag(q), F.col("n") * float(q)
-        pick = cum.where((F.col("cum") >= r) & (prev < r)).select(
-            *by,
-            (F.col("lo") + w * (F.col("bin") + (r - prev) / F.col("cnt"))).alias(
-                f"{tag}_raw"
-            ),
-            F.col("bin").alias(f"{tag}_bin"),
-        )
-        # one pick row per group: broadcast, so the scalar sketch's
-        # one-row picks cross-join as a nested loop, never a cartesian
-        out = _join_by(out, F.broadcast(pick), by)
-    return out
+        hit = (F.col("cum") >= r) & (prev < r)
+        est = F.col("lo") + w * (F.col("bin") + (r - prev) / F.col("cnt"))
+        picks += [
+            F.max(F.when(hit, est)).alias(f"{tag}_raw"),
+            F.max(F.when(hit, F.col("bin"))).alias(f"{tag}_bin"),
+        ]
+    return cum.groupBy(*stats.columns).agg(*picks)
 
 
 def _estimates(qs: Sequence[float]) -> list[Column]:

@@ -24,6 +24,7 @@ Conventions for oracle parity (see SURVEY.md §5):
 
 from __future__ import annotations
 
+import functools
 import json
 from collections.abc import Callable
 from dataclasses import dataclass, field, replace
@@ -3130,19 +3131,19 @@ def bucketed_order_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     write paid the shuffle once; tests/test_bucketing.py pins the plan
     shape). The oracle is the plain join, proving the bucketed layout
     changes the physical plan only, never the results."""
-    import re as _re
+    import hashlib
+    import os
 
-    tag = _re.sub(r"[^0-9a-zA-Z]", "_", sf_dir.rstrip("/").rsplit("/", 1)[-1])
-    base = "/root/repo/.bucketed"
+    # the bucketed copies are cached per catalog under this name, so it
+    # keys on the dataset's resolved path, not on its basename
+    tag = hashlib.sha256(os.path.realpath(sf_dir).encode()).hexdigest()[:12]
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
     bo = bucketing.ensure_bucketed(
-        spark, o, f"bkt_orders_{tag}", ["o_orderkey"], 8,
-        path=f"{base}/bkt_orders_{tag}",
+        spark, o, f"bkt_orders_{tag}", ["o_orderkey"], 8
     )
     bl = bucketing.ensure_bucketed(
-        spark, li, f"bkt_lineitem_{tag}", ["l_orderkey"], 8,
-        path=f"{base}/bkt_lineitem_{tag}",
+        spark, li, f"bkt_lineitem_{tag}", ["l_orderkey"], 8
     )
     return (
         bo.join(bl, bo["o_orderkey"] == bl["l_orderkey"])
@@ -9397,232 +9398,168 @@ def doc_unigram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bigram_quality_sql() -> str:
-    """DuckDB replay of the stupid-backoff bigram scorer
-    (llm/bigram.py): unigram + bigram counts over the even-doc_id
-    training slice, smoothed unigram micro-logs, then every document's
-    transitions scored — observed ones as FLOOR(1e6·ln(c2/c1)+0.5),
-    unseen ones as the -916291 backoff constant plus the (possibly
-    OOV-smoothed) unigram. Every score is ln of a quotient of exact
-    integers, so both engines quantize identically."""
-    return f"""
-    WITH {_TOK_CTE},
-    tr AS (SELECT doc_id, t FROM tok WHERE doc_id % 2 = 0),
-    uni AS (
-      SELECT w, CAST(COUNT(*) AS BIGINT) AS c
-      FROM (SELECT unnest(t) AS w FROM tr) GROUP BY w
-    ),
+#: Names of the LM count tables by order (llm/bigram.py model_tables),
+#: as CTEs in the oracles and as the ``{name}_rows``/``_checksum``
+#: columns of the artifact and fold gates.
+_LM_TABLES = ("uni", "big", "tri")
+
+
+def _lm_counts_sql(order: int, train: str | None) -> str:
+    """CTEs of the k-gram count tables (k = 1..order) over the token
+    lists of the documents matching ``train`` (all when None) — the
+    DuckDB twin of llm/bigram.py model_tables."""
+    ctes = [f"tr AS (SELECT doc_id, t FROM tok WHERE {train})"] if train else []
+    for k, name in zip(range(1, order + 1), _LM_TABLES):
+        keys = ", ".join(llm_bigram.gram_keys(k))
+        ctes.append(f"""
+    {name} AS (
+      SELECT {keys}, CAST(COUNT(*) AS BIGINT) AS {llm_bigram.gram_count(k)}
+      FROM ({_lm_grams_sql(k, "tr" if train else "tok")}) GROUP BY {keys}
+    )""")
+    return ",".join(ctes)
+
+
+def _lm_grams_sql(k: int, src: str) -> str:
+    """One row per k-gram of ``src``'s token lists: doc_id and the k
+    tokens under llm/bigram.py gram_keys(k)."""
+    cols = ", ".join(
+        f"t[q + {j}] AS {x}" for j, x in enumerate(llm_bigram.gram_keys(k))
+    )
+    return (
+        f"SELECT doc_id, {cols} "
+        f"FROM {src}, LATERAL unnest(range(1, len(t) - {k} + 2)) r(q)"
+    )
+
+
+def _lm_quality_sql(order: int, train: str) -> str:
+    """DuckDB replay of llm/bigram.py doc_scores at ``order``, trained on
+    the documents matching ``train``: the same per-level lookups,
+    FLOOR(1e6·ln(int/int)+0.5) quantization and one BACKOFF_MU per
+    hop, so both engines produce the same integers."""
+    witnesses = dict(
+        zip(range(order - 1, 0, -1), llm_bigram.backoff_cols(order))
+    )
+    ctes = [
+        _lm_counts_sql(order, train),
+        """
     tot AS (SELECT SUM(c) + COUNT(*) AS T FROM uni),
     um AS (
       SELECT w, CAST(FLOOR(1e6 * ln((c + 1) / T) + 0.5) AS BIGINT) AS u
       FROM uni, tot
     ),
-    big AS (
-      SELECT a, b, CAST(COUNT(*) AS BIGINT) AS c2 FROM (
-        SELECT t[k] AS a, t[k + 1] AS b
-        FROM tr, LATERAL unnest(range(1, len(t))) q(k)
-      ) GROUP BY a, b
-    ),
-    ctx AS (SELECT a, CAST(SUM(c2) AS BIGINT) AS c1 FROM big GROUP BY a),
     oov AS (
       SELECT CAST(FLOOR(1e6 * ln(1.0 / T) + 0.5) AS BIGINT) AS v FROM tot
-    ),
-    heads AS (SELECT doc_id, t[1] AS w FROM tok WHERE len(t) >= 1),
-    hs AS (
-      SELECT h.doc_id, COALESCE(um.u, oov.v) AS s, 0 AS bo
-      FROM heads h LEFT JOIN um ON h.w = um.w, oov
-    ),
-    trans AS (
-      SELECT doc_id, t[k] AS a, t[k + 1] AS b
-      FROM tok, LATERAL unnest(range(1, len(t))) q(k)
-    ),
-    ts AS (
-      SELECT x.doc_id,
-             CASE WHEN big.c2 IS NOT NULL
-                  THEN CAST(FLOOR(1e6 * ln(CAST(big.c2 AS DOUBLE) / ctx.c1)
-                                  + 0.5) AS BIGINT)
-                  ELSE {llm_bigram.BACKOFF_MU} + COALESCE(um.u, oov.v)
-             END AS s,
-             CASE WHEN big.c2 IS NULL THEN 1 ELSE 0 END AS bo
-      FROM trans x
-      LEFT JOIN big ON x.a = big.a AND x.b = big.b
-      LEFT JOIN ctx ON x.a = ctx.a
-      LEFT JOIN um ON x.b = um.w, oov
-    ),
+    )""",
+    ]
+    for m in range(1, order):
+        keys = ", ".join(llm_bigram.gram_keys(m + 1)[:-1])
+        ctes.append(f"""
+    ctx{m} AS (
+      SELECT {keys}, CAST(SUM({llm_bigram.gram_count(m + 1)}) AS BIGINT) AS d
+      FROM {_LM_TABLES[m]} GROUP BY {keys}
+    )""")
+    for top in range(order):
+        win = llm_bigram.gram_keys(top + 1)
+        if top < order - 1:
+            cols = ", ".join(f"t[{j + 1}] AS {x}" for j, x in enumerate(win))
+            rows = f"SELECT doc_id, {cols} FROM tok WHERE len(t) >= {top + 1}"
+        else:
+            rows = _lm_grams_sql(top + 1, "tok")
+        joins, s, miss, flags = [], "COALESCE(um.u, oov.v)", [], {}
+        for m in range(top, 0, -1):
+            span = win[top - m:]
+            ks = llm_bigram.gram_keys(m + 1)
+            on = " AND ".join(f"x.{x} = n{m}.{k}" for k, x in zip(ks, span))
+            on_ctx = " AND ".join(
+                f"x.{x} = d{m}.{k}" for k, x in zip(ks, span[:-1])
+            )
+            joins.append(f"LEFT JOIN {_LM_TABLES[m]} n{m} ON {on}")
+            joins.append(f"LEFT JOIN ctx{m} d{m} ON {on_ctx}")
+            miss.append(f"n{m}.{llm_bigram.gram_count(m + 1)} IS NULL")
+            flags[m] = f"CASE WHEN {' AND '.join(miss)} THEN 1 ELSE 0 END"
+        for m in range(1, top + 1):
+            n = f"n{m}.{llm_bigram.gram_count(m + 1)}"
+            s = (
+                f"CASE WHEN {n} IS NOT NULL "
+                f"THEN CAST(FLOOR(1e6 * ln(CAST({n} AS DOUBLE) / d{m}.d)"
+                f" + 0.5) AS BIGINT) "
+                f"ELSE {llm_bigram.BACKOFF_MU} + {s} END"
+            )
+        bo = "".join(
+            f", {flags.get(m, '0')} AS {c}" for m, c in witnesses.items()
+        )
+        ctes.append(f"""
+    s{top} AS (
+      SELECT x.doc_id, {s} AS s{bo}
+      FROM ({rows}) x
+      {' '.join(joins)}
+      LEFT JOIN um ON x.{win[-1]} = um.w, oov
+    )""")
+    union = " UNION ALL ".join(f"SELECT * FROM s{top}" for top in range(order))
+    sums = "".join(f", SUM({c}) AS {c}" for c in witnesses.values())
+    outs = "".join(
+        f",\n           CAST(COALESCE(a.{c}, 0) AS INT) AS {c}"
+        for c in witnesses.values()
+    )
+    return f"""
+    WITH {_TOK_CTE},{",".join(ctes)},
     agg AS (
-      SELECT doc_id, SUM(s) AS ts, COUNT(*) AS n, SUM(bo) AS nb
-      FROM (SELECT * FROM hs UNION ALL SELECT * FROM ts) GROUP BY doc_id
+      SELECT doc_id, SUM(s) AS ts, COUNT(*) AS n{sums}
+      FROM ({union}) GROUP BY doc_id
     )
     SELECT tk.doc_id,
            CAST(COALESCE(a.ts, 0) AS BIGINT) AS total_micrologp,
-           CAST(COALESCE(a.n, 0) AS INT) AS n_tokens,
-           CAST(COALESCE(a.nb, 0) AS INT) AS n_backoff
+           CAST(COALESCE(a.n, 0) AS INT) AS n_tokens{outs}
     FROM tok tk LEFT JOIN agg a ON tk.doc_id = a.doc_id
     """
+
+
+def _lm_quality(
+    spark: SparkSession, sf_dir: str, order: int, mod: int
+) -> DataFrame:
+    """Every document scored under the order-n stupid-backoff LM
+    (llm/bigram.py) trained on the ``doc_id % mod = 0`` slice."""
+    ensure_utc(spark)
+    d = _t(spark, sf_dir, "documents")
+    return llm_bigram.doc_scores(
+        d, "doc_id", "text", order, train_pred=F.col("id") % mod == 0
+    ).withColumnRenamed("id", "doc_id")
 
 
 @spec(
     "doc_bigram_quality",
     "EXT-bigram EXT-quality LLM-text",
-    oracle=_bigram_quality_sql(),
+    oracle=_lm_quality_sql(2, "doc_id % 2 = 0"),
 )
 def doc_bigram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Context-sensitive LM quality scoring with a stupid-backoff BIGRAM
-    model (llm/bigram.py) — the r06-verdict extension of
-    ``doc_unigram_quality`` to the actual CCNet filter shape: the LM
-    trains on a reference slice (even doc_ids), scores EVERY document,
-    and per-token NLL = -total/n_tokens is the downstream threshold.
-    Transitions observed in training score as the exact count ratio
-    c(a b)/c(a ·); unseen ones back off to 0.4·U(b) — and because the
-    scoring corpus is a superset of the training slice, backoff
-    GENUINELY fires (a same-corpus model never backs off; ``n_backoff``
-    rides along as the witness). All scores are
-    FLOOR(1e6·ln(int/int)+0.5) micro-log integers, so the DuckDB
-    oracle replays the entire train→score path. Engine is pure Column
-    expressions: two training-slice aggregates, vocabulary-sized
-    (broadcast) count tables joined to transition rows, one per-doc
-    sum — no Python anywhere. Kneser-Ney is deliberately out of scope:
-    its discounting is float-valued and not exactly replayable
-    (SURVEY §14 / r06 verdict item 5). Ref: parity N/A (§2.12
-    training-data surface)."""
-    ensure_utc(spark)
-    d = _t(spark, sf_dir, "documents")
-    return llm_bigram.bigram_doc_scores(
-        d, "doc_id", "text", train_pred=F.col("id") % 2 == 0
-    ).select(
-        F.col("id").alias("doc_id"), "total_micrologp", "n_tokens", "n_backoff"
-    )
-
-
-def _trigram_quality_sql() -> str:
-    """DuckDB replay of the order-3 stupid-backoff scorer
-    (llm/bigram.py trigram_doc_scores): unigram + bigram + trigram
-    counts over the doc_id%3=0 training slice, then every document's
-    positions scored — trigram hits as FLOOR(1e6·ln(c3/c23)+0.5),
-    misses chaining through the bigram rule (one -916291 constant per
-    hop) down to the smoothed unigram. Identical integer quantization
-    on both sides."""
-    bmu = llm_bigram.BACKOFF_MU
-    return f"""
-    WITH {_TOK_CTE},
-    tr AS (SELECT doc_id, t FROM tok WHERE doc_id % 3 = 0),
-    uni AS (
-      SELECT w, CAST(COUNT(*) AS BIGINT) AS c
-      FROM (SELECT unnest(t) AS w FROM tr) GROUP BY w
-    ),
-    tot AS (SELECT SUM(c) + COUNT(*) AS T FROM uni),
-    um AS (
-      SELECT w, CAST(FLOOR(1e6 * ln((c + 1) / T) + 0.5) AS BIGINT) AS u
-      FROM uni, tot
-    ),
-    big AS (
-      SELECT a, b, CAST(COUNT(*) AS BIGINT) AS c2 FROM (
-        SELECT t[k] AS a, t[k + 1] AS b
-        FROM tr, LATERAL unnest(range(1, len(t))) q(k)
-      ) GROUP BY a, b
-    ),
-    ctx AS (SELECT a, CAST(SUM(c2) AS BIGINT) AS c1 FROM big GROUP BY a),
-    tri AS (
-      SELECT a, b, c, CAST(COUNT(*) AS BIGINT) AS c3 FROM (
-        SELECT t[k] AS a, t[k + 1] AS b, t[k + 2] AS c
-        FROM tr, LATERAL unnest(range(1, len(t) - 1)) q(k)
-      ) GROUP BY a, b, c
-    ),
-    ctx3 AS (
-      SELECT a, b, CAST(SUM(c3) AS BIGINT) AS c23 FROM tri GROUP BY a, b
-    ),
-    oov AS (
-      SELECT CAST(FLOOR(1e6 * ln(1.0 / T) + 0.5) AS BIGINT) AS v FROM tot
-    ),
-    heads AS (SELECT doc_id, t[1] AS w FROM tok WHERE len(t) >= 1),
-    hs AS (
-      SELECT h.doc_id, COALESCE(um.u, oov.v) AS s, 0 AS bo2, 0 AS bo1
-      FROM heads h LEFT JOIN um ON h.w = um.w, oov
-    ),
-    sec AS (SELECT doc_id, t[1] AS a, t[2] AS b FROM tok WHERE len(t) >= 2),
-    ss AS (
-      SELECT x.doc_id,
-             CASE WHEN big.c2 IS NOT NULL
-                  THEN CAST(FLOOR(1e6 * ln(CAST(big.c2 AS DOUBLE) / ctx.c1)
-                                  + 0.5) AS BIGINT)
-                  ELSE {bmu} + COALESCE(um.u, oov.v)
-             END AS s,
-             0 AS bo2,
-             CASE WHEN big.c2 IS NULL THEN 1 ELSE 0 END AS bo1
-      FROM sec x
-      LEFT JOIN big ON x.a = big.a AND x.b = big.b
-      LEFT JOIN ctx ON x.a = ctx.a
-      LEFT JOIN um ON x.b = um.w, oov
-    ),
-    trans AS (
-      SELECT doc_id, t[k] AS a, t[k + 1] AS b, t[k + 2] AS c
-      FROM tok, LATERAL unnest(range(1, len(t) - 1)) q(k)
-    ),
-    ts AS (
-      SELECT x.doc_id,
-             CASE WHEN tri.c3 IS NOT NULL
-                  THEN CAST(FLOOR(1e6 * ln(CAST(tri.c3 AS DOUBLE) / ctx3.c23)
-                                  + 0.5) AS BIGINT)
-                  ELSE {bmu} + CASE WHEN b2.c2 IS NOT NULL
-                       THEN CAST(FLOOR(1e6 * ln(CAST(b2.c2 AS DOUBLE) / cb.c1)
-                                       + 0.5) AS BIGINT)
-                       ELSE {bmu} + COALESCE(um.u, oov.v) END
-             END AS s,
-             CASE WHEN tri.c3 IS NULL THEN 1 ELSE 0 END AS bo2,
-             CASE WHEN tri.c3 IS NULL AND b2.c2 IS NULL THEN 1 ELSE 0 END AS bo1
-      FROM trans x
-      LEFT JOIN tri ON x.a = tri.a AND x.b = tri.b AND x.c = tri.c
-      LEFT JOIN ctx3 ON x.a = ctx3.a AND x.b = ctx3.b
-      LEFT JOIN big b2 ON x.b = b2.a AND x.c = b2.b
-      LEFT JOIN ctx cb ON x.b = cb.a
-      LEFT JOIN um ON x.c = um.w, oov
-    ),
-    agg AS (
-      SELECT doc_id, SUM(s) AS ts2, COUNT(*) AS n,
-             SUM(bo2) AS nb2, SUM(bo1) AS nb1
-      FROM (SELECT * FROM hs UNION ALL SELECT * FROM ss
-            UNION ALL SELECT * FROM ts) GROUP BY doc_id
-    )
-    SELECT tk.doc_id,
-           CAST(COALESCE(a.ts2, 0) AS BIGINT) AS total_micrologp,
-           CAST(COALESCE(a.n, 0) AS INT) AS n_tokens,
-           CAST(COALESCE(a.nb2, 0) AS INT) AS n_backoff2,
-           CAST(COALESCE(a.nb1, 0) AS INT) AS n_backoff1
-    FROM tok tk LEFT JOIN agg a ON tk.doc_id = a.doc_id
-    """
+    model — the r06-verdict extension of ``doc_unigram_quality`` to the
+    actual CCNet filter shape: the LM trains on a reference slice (even
+    doc_ids), scores EVERY document, and per-token NLL =
+    -total/n_tokens is the downstream threshold. The scoring corpus is a
+    superset of the training slice, so backoff GENUINELY fires
+    (``n_backoff`` is the witness), and the DuckDB oracle replays the
+    entire train→score path. Kneser-Ney is deliberately out of scope:
+    its discounting is float-valued and not exactly replayable (SURVEY
+    §14 / r06 verdict item 5). Ref: parity N/A (§2.12 training-data
+    surface)."""
+    return _lm_quality(spark, sf_dir, 2, 2)
 
 
 @spec(
     "doc_trigram_quality",
     "EXT-trigram EXT-quality LLM-text",
-    oracle=_trigram_quality_sql(),
+    oracle=_lm_quality_sql(3, "doc_id % 3 = 0"),
 )
 def doc_trigram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LM quality scoring with the PRODUCTION-order stupid-backoff
     chain — trigram → bigram → unigram (Brants 2007 trains order-5;
-    order-3 exhibits the full chain mechanics) — extending
-    ``doc_bigram_quality`` one order per the r07 verdict. The LM trains
-    on the doc_id%3=0 slice (a thinner slice than the bigram gate's
-    half, so BOTH hops genuinely fire on held-out text) and scores
-    every document; ``n_backoff2`` witnesses trigram→bigram hops,
-    ``n_backoff1`` the transitions that fell all the way to the
-    unigram. Every score is FLOOR(1e6·ln(int/int)+0.5) micro-log
-    integers with one -916291 constant per hop, so the DuckDB oracle
-    replays the whole chain. Engine (llm/bigram.py trigram_doc_scores)
-    stays pure Column expressions: three training-slice aggregates,
-    type-counted model tables with AQE-chosen join strategies, one
-    per-doc sum. Ref: parity N/A (§2.12 training-data surface)."""
-    ensure_utc(spark)
-    d = _t(spark, sf_dir, "documents")
-    return llm_bigram.trigram_doc_scores(
-        d, "doc_id", "text", train_pred=F.col("id") % 3 == 0
-    ).select(
-        F.col("id").alias("doc_id"),
-        "total_micrologp",
-        "n_tokens",
-        "n_backoff2",
-        "n_backoff1",
-    )
+    order-3 exhibits the full chain mechanics) — per the r07 verdict.
+    The LM trains on the doc_id%3=0 slice (thinner than the bigram
+    gate's half, so BOTH hops genuinely fire on held-out text) and
+    scores every document. Ref: parity N/A (§2.12 training-data
+    surface)."""
+    return _lm_quality(spark, sf_dir, 3, 3)
 
 
 @spec(
@@ -10198,47 +10135,43 @@ def wordpiece_artifact_roundtrip(
     )
 
 
-def _lm_checksums(uni: DataFrame, big: DataFrame) -> DataFrame:
-    """One-row (uni_rows, uni_checksum, big_rows, big_checksum) over a
-    bigram model's two count tables — the md5 canonical strings MUST
-    stay in lockstep with _bigram_model_artifact_sql /
-    _incremental_bigram_sql (both gates share this witness)."""
+def _lm_checksums(model: tuple[DataFrame, ...]) -> DataFrame:
+    """One row of ({t}_rows, {t}_checksum) per count table t of an LM
+    model — the md5 canonical strings (``w:c``, ``a:b:c2``,
+    ``a:b:c:c3``) stay in lockstep with ``_lm_tables_sql``."""
     from .functions.portable_hash import md5_halves
 
-    uh, _ = md5_halves(
-        F.concat_ws(":", F.col("w"), F.col("c").cast("string"))
-    )
-    bh, _ = md5_halves(
-        F.concat_ws(
-            ":", F.col("a"), F.col("b"), F.col("c2").cast("string")
+    stats = []
+    for k, (name, t) in enumerate(zip(_LM_TABLES, model), 1):
+        h, _ = md5_halves(
+            F.concat_ws(
+                ":",
+                *llm_bigram.gram_keys(k),
+                F.col(llm_bigram.gram_count(k)).cast("string"),
+            )
         )
-    )
-    ustats = uni.agg(
-        F.count(F.lit(1)).cast("long").alias("uni_rows"),
-        F.sum(uh % F.lit(_ART_CHECK_MOD)).cast("long").alias("uni_checksum"),
-    )
-    bstats = big.agg(
-        F.count(F.lit(1)).cast("long").alias("big_rows"),
-        F.sum(bh % F.lit(_ART_CHECK_MOD)).cast("long").alias("big_checksum"),
-    )
-    return ustats.crossJoin(bstats)
+        stats.append(
+            t.agg(
+                F.count(F.lit(1)).cast("long").alias(f"{name}_rows"),
+                F.sum(h % F.lit(_ART_CHECK_MOD))
+                .cast("long")
+                .alias(f"{name}_checksum"),
+            )
+        )
+    return functools.reduce(DataFrame.crossJoin, stats)
 
 
-def _score_mismatch(
-    scored_a: DataFrame,
-    scored_b: DataFrame,
-    cols: tuple[str, ...] = ("total_micrologp", "n_tokens", "n_backoff"),
-) -> DataFrame:
+def _score_mismatch(scored_a: DataFrame, scored_b: DataFrame) -> DataFrame:
     """One-row (n_score_mismatch): null-safe full-outer compare of two
-    (id, *cols) score frames — a dropped or extra document counts as a
-    mismatch. Default columns fit the bigram scorer; the trigram gate
-    passes its two-hop backoff witnesses."""
+    score frames on every column but ``id`` — a dropped or extra
+    document counts as a mismatch."""
+    cols = [c for c in scored_a.columns if c != "id"]
     a = scored_a.select("id", *[F.col(c).alias(f"__a_{c}") for c in cols])
     b = scored_b.select("id", *[F.col(c).alias(f"__b_{c}") for c in cols])
-    same = None
-    for c in cols:
-        eq = F.col(f"__a_{c}").eqNullSafe(F.col(f"__b_{c}"))
-        same = eq if same is None else (same & eq)
+    same = functools.reduce(
+        Column.__and__,
+        [F.col(f"__a_{c}").eqNullSafe(F.col(f"__b_{c}")) for c in cols],
+    )
     return a.join(b, "id", "full_outer").agg(
         F.sum(F.when(same, 0).otherwise(1))
         .cast("long")
@@ -10277,103 +10210,92 @@ def _msdiff_rows(a: DataFrame, b: DataFrame) -> DataFrame:
     )
 
 
-def _bigram_model_artifact_sql() -> str:
-    """Oracle for the bigram-LM persistence gate: replay the two model
-    aggregates (the LM's entire persistable state) over the even-doc_id
-    training slice, checksum their canonical rows, and pin the
-    engine-side equality witnesses to their only correct values."""
-    uc = _artifact_checksum_sql("w || ':' || CAST(c AS VARCHAR)")
-    bc = _artifact_checksum_sql(
-        "a || ':' || b || ':' || CAST(c2 AS VARCHAR)"
+def _lm_tables_sql(order: int, train: str | None = None) -> str:
+    """Oracle of the LM artifact gates (model trained on ``train``) and
+    fold gates (``train`` None: the union-retrained model the fold must
+    equal): each count table's row count and checksum, replayed from
+    the same canonical strings the engine hashes, with the engine-side
+    equality witnesses pinned to their only correct values (version 1:
+    one commit each; 0 mismatches: parquet round-trips strings and
+    longs exactly, and integer counts sum-merge exactly)."""
+    cols = []
+    for k, name in zip(range(1, order + 1), _LM_TABLES):
+        canon = " || ':' || ".join(
+            [
+                *llm_bigram.gram_keys(k),
+                f"CAST({llm_bigram.gram_count(k)} AS VARCHAR)",
+            ]
+        )
+        cols += [
+            f"(SELECT CAST(COUNT(*) AS BIGINT) FROM {name}) AS {name}_rows",
+            f"(SELECT {_artifact_checksum_sql(canon)} FROM {name})"
+            f" AS {name}_checksum",
+        ]
+    witness, ok = (
+        ("CAST(1 AS INT) AS artifact_version", "roundtrip_ok")
+        if train
+        else ("TRUE AS merge_consistent", "fold_ok")
     )
     return f"""
-    WITH {_TOK_CTE},
-    tr AS (SELECT doc_id, t FROM tok WHERE doc_id % 2 = 0),
-    uni AS (
-      SELECT w, CAST(COUNT(*) AS BIGINT) AS c
-      FROM (SELECT unnest(t) AS w FROM tr) GROUP BY w
-    ),
-    big AS (
-      SELECT a, b, CAST(COUNT(*) AS BIGINT) AS c2 FROM (
-        SELECT t[k] AS a, t[k + 1] AS b
-        FROM tr, LATERAL unnest(range(1, len(t))) q(k)
-      ) GROUP BY a, b
-    )
-    SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM uni) AS uni_rows,
-           (SELECT {uc} FROM uni) AS uni_checksum,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM big) AS big_rows,
-           (SELECT {bc} FROM big) AS big_checksum,
-           CAST(1 AS INT) AS artifact_version,
+    WITH {_TOK_CTE},{_lm_counts_sql(order, train)}
+    SELECT {", ".join(cols)},
+           {witness},
            (SELECT CAST(COUNT(*) AS BIGINT) FROM documents)
              AS n_docs_scored,
            CAST(0 AS BIGINT) AS n_score_mismatch,
-           TRUE AS roundtrip_ok
+           TRUE AS {ok}
     """
 
 
-@spec(
-    "bigram_model_artifact_roundtrip",
-    "EXT-bigram EXT-artifact S14 S16",
-    oracle=_bigram_model_artifact_sql(),
-)
-def bigram_model_artifact_roundtrip(
-    spark: SparkSession, sf_dir: str
+def _lm_artifact_roundtrip(
+    spark: SparkSession, sf_dir: str, order: int
 ) -> DataFrame:
-    """LM-MODEL persistence — the tokenizer-artifact story applied to
-    the statistical LM family: the bigram model's entire persistable
-    state is its two count tables (llm/bigram.py bigram_model_tables —
-    T, the micro-log scores and the context totals are pure derivations
-    of them), so both commit through the archive's versioned protocol,
-    reload from parquet, and EVERY document re-scores under the loaded
-    model (bigram_doc_scores_from_model) exactly as under the
-    in-session one: (total_micrologp, n_tokens, n_backoff) compare
-    null-safe over a full outer join, mismatches = 0. Both artifact
-    checksums hash-check against the oracle's replay of the two
-    training aggregates — the model that scores next month's corpus is
-    byte-stable, not just row-count-stable. Ref: parity N/A (§2.12);
-    persistence protocol via archive.py commit."""
+    """LM-MODEL persistence: the order-n model's entire persistable
+    state is its count tables (llm/bigram.py model_tables, trained on
+    the even doc_ids), so each commits through the archive's versioned
+    protocol and reloads from parquet; EVERY document must re-score
+    under the loaded model exactly as under the in-session one
+    (null-safe full-outer compare of every score column), and the
+    reloaded tables' checksums hash-check against the oracle's replay
+    of the training aggregates."""
     ensure_utc(spark)
     from .archive import Archive
 
     d = _t(spark, sf_dir, "documents")
     # tokenize the corpus ONCE for training + both scoring passes, and
-    # materialize the two model tables once for save + in-session
-    # scoring — without this the gate runs ~7 independent text-scan/
+    # materialize the model tables once for save + in-session scoring
+    # — without this the gate runs ~7-10 independent text-scan/
     # train-aggregate subtrees (llm/bigram.py tok_frame). A/B-measured:
-    # eager localCheckpoints win here (3.73 → 3.15 s) because the
-    # tables are consumed by the archive write AND several scorer
-    # subtrees; a lazy persist was slower than either form
+    # eager localCheckpoints win here (3.73 → 3.15 s at order 2)
+    # because the tables are consumed by the archive write AND several
+    # scorer subtrees; a lazy persist was slower than either form
     tok = llm_bigram.tok_frame(d, "doc_id", "text").localCheckpoint(
         eager=True
     )
-    uni, big = llm_bigram.bigram_model_tables(
-        d, "doc_id", "text", train_pred=F.col("id") % 2 == 0, tok=tok
-    )
-    uni = uni.localCheckpoint(eager=True)
-    big = big.localCheckpoint(eager=True)
-    ar = Archive(spark, scratch_dir("sg_lmart_bigram_"))
-    v_uni = ar.commit("bigram_uni", uni)
-    v_big = ar.commit("bigram_big", big)
-    uni_l, big_l = ar.table("bigram_uni"), ar.table("bigram_big")
+    model = [
+        t.localCheckpoint(eager=True)
+        for t in llm_bigram.model_tables(
+            d, "doc_id", "text", order, F.col("id") % 2 == 0, tok=tok
+        )
+    ]
+    ar = Archive(spark, scratch_dir(f"sg_lmart_{order}_"))
+    names = [f"lm{order}_{t}" for t in _LM_TABLES[:order]]
+    version = max(ar.commit(n, t) for n, t in zip(names, model))
+    loaded = [ar.table(n) for n in names]
     mism = _score_mismatch(
-        llm_bigram.bigram_doc_scores_from_model(
-            d, "doc_id", "text", uni, big, tok=tok
-        ),
-        llm_bigram.bigram_doc_scores_from_model(
-            d, "doc_id", "text", uni_l, big_l, tok=tok
-        ),
+        *[
+            llm_bigram.doc_scores_from_model(d, "doc_id", "text", m, tok=tok)
+            for m in (model, loaded)
+        ]
     )
     nsc = d.agg(F.count(F.lit(1)).cast("long").alias("n_docs_scored"))
+    ck = _lm_checksums(loaded)
     return (
-        _lm_checksums(uni_l, big_l)
-        .crossJoin(nsc)
+        ck.crossJoin(nsc)
         .crossJoin(mism)
         .select(
-            "uni_rows",
-            "uni_checksum",
-            "big_rows",
-            "big_checksum",
-            F.lit(max(v_uni, v_big)).cast("int").alias("artifact_version"),
+            *ck.columns,
+            F.lit(version).cast("int").alias("artifact_version"),
             "n_docs_scored",
             "n_score_mismatch",
             (F.col("n_score_mismatch") == 0).alias("roundtrip_ok"),
@@ -10381,108 +10303,56 @@ def bigram_model_artifact_roundtrip(
     )
 
 
-def _incremental_bigram_sql() -> str:
-    """Oracle for the incremental LM fold: the folded model equals the
-    union-retrained model exactly (integer-sum mergeability), so the
-    replay just trains on the FULL corpus and checksums that — the
-    engine computes its checksums over the FOLDED tables, making the
-    hash match itself the mergeability proof."""
-    uc = _artifact_checksum_sql("w || ':' || CAST(c AS VARCHAR)")
-    bc = _artifact_checksum_sql(
-        "a || ':' || b || ':' || CAST(c2 AS VARCHAR)"
-    )
-    return f"""
-    WITH {_TOK_CTE},
-    uni AS (
-      SELECT w, CAST(COUNT(*) AS BIGINT) AS c
-      FROM (SELECT unnest(t) AS w FROM tok) GROUP BY w
-    ),
-    big AS (
-      SELECT a, b, CAST(COUNT(*) AS BIGINT) AS c2 FROM (
-        SELECT t[k] AS a, t[k + 1] AS b
-        FROM tok, LATERAL unnest(range(1, len(t))) q(k)
-      ) GROUP BY a, b
-    )
-    SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM uni) AS uni_rows,
-           (SELECT {uc} FROM uni) AS uni_checksum,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM big) AS big_rows,
-           (SELECT {bc} FROM big) AS big_checksum,
-           TRUE AS merge_consistent,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM documents)
-             AS n_docs_scored,
-           CAST(0 AS BIGINT) AS n_score_mismatch,
-           TRUE AS fold_ok
-    """
-
-
-@spec(
-    "incremental_bigram_model_equiv",
-    "EXT-bigram EXT-incr-rollup EXT-sketch-merge",
-    oracle=_incremental_bigram_sql(),
-)
-def incremental_bigram_model_equiv(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """INCREMENTAL LM maintenance — completing the fold trilogy
-    (sketches merge cell-wise, ANN indexes fold row-wise, LM models
-    fold COUNT-wise): a new document batch (doc_id%5=4) trains its own
-    tiny model, folds into the base model by sum-merge
-    (llm/bigram.py merge_model_tables — one vocabulary-sized full-outer
-    join, no corpus re-scan), and the folded model must equal the
-    union-retrained model EXACTLY: both checksums are computed over the
-    FOLDED tables and hash-checked against the oracle's union-train
-    replay (the hash match IS the mergeability proof), the cell-wise
-    sym-diff witnesses ride along, and every document scores
-    identically under folded vs retrained
-    (bigram_doc_scores_from_model, null-safe full-outer compare)."""
+def _lm_fold_equiv(spark: SparkSession, sf_dir: str, order: int) -> DataFrame:
+    """INCREMENTAL LM maintenance — sketches merge cell-wise, ANN
+    indexes fold row-wise, LM models fold COUNT-wise: a new document
+    batch (doc_id%5=4) trains its own order-n model, folds into the
+    base model by sum-merge (llm/bigram.py merge_models — type-sized
+    full-outer joins, no corpus re-scan), and the folded model must
+    equal the union-retrained model EXACTLY: the checksums are computed
+    over the FOLDED tables and hash-checked against the oracle's
+    union-train replay (the hash match IS the mergeability proof), the
+    cell-wise sym-diff witness rides along (``merge_consistent``), and
+    every document scores identically under folded vs retrained."""
     ensure_utc(spark)
     d = _t(spark, sf_dir, "documents")
     # one tokenize pass serves the base/batch/full trainings and both
-    # scoring passes (at 100 TB the old shape was ~17 independent
-    # text-scan subtrees). Only the token frame is materialized: the
+    # scoring passes. Only the token frame is materialized: the
     # model-table recomputes left in the plan all read the checkpointed
     # tokens and overlap inside the one final job — A/B showed eagerly
-    # checkpointing all six tables serializes more than it saves, and
+    # checkpointing all the tables serializes more than it saves, and
     # a lazy persist was slower than either form
     tok = llm_bigram.tok_frame(d, "doc_id", "text").localCheckpoint(
         eager=True
     )
-    ub, bb = llm_bigram.bigram_model_tables(
-        d, "doc_id", "text", train_pred=F.col("id") % 5 != 4, tok=tok
-    )
-    un, bn = llm_bigram.bigram_model_tables(
-        d, "doc_id", "text", train_pred=F.col("id") % 5 == 4, tok=tok
-    )
-    uf, bf = llm_bigram.merge_model_tables(ub, bb, un, bn)
-    ud, bd = llm_bigram.bigram_model_tables(d, "doc_id", "text", tok=tok)
-    diff = (
-        _msdiff_rows(uf, ud)
-        .select(F.lit(1).alias("one"))
-        .unionByName(
-            _msdiff_rows(bf, bd)
-            .select(F.lit(1).alias("one"))
+
+    def train(pred: Column | None = None) -> tuple[DataFrame, ...]:
+        return llm_bigram.model_tables(
+            d, "doc_id", "text", order, pred, tok=tok
         )
-        .agg((F.count(F.lit(1)) == 0).alias("merge_consistent"))
+
+    folded = llm_bigram.merge_models(
+        train(F.col("id") % 5 != 4), train(F.col("id") % 5 == 4)
     )
+    direct = train()
+    diff = functools.reduce(
+        DataFrame.unionByName,
+        [_msdiff_rows(f, r) for f, r in zip(folded, direct)],
+    ).agg((F.count(F.lit(1)) == 0).alias("merge_consistent"))
     mism = _score_mismatch(
-        llm_bigram.bigram_doc_scores_from_model(
-            d, "doc_id", "text", uf, bf, tok=tok
-        ),
-        llm_bigram.bigram_doc_scores_from_model(
-            d, "doc_id", "text", ud, bd, tok=tok
-        ),
+        *[
+            llm_bigram.doc_scores_from_model(d, "doc_id", "text", m, tok=tok)
+            for m in (folded, direct)
+        ]
     )
     nsc = d.agg(F.count(F.lit(1)).cast("long").alias("n_docs_scored"))
+    ck = _lm_checksums(folded)
     return (
-        _lm_checksums(uf, bf)
-        .crossJoin(diff)
+        ck.crossJoin(diff)
         .crossJoin(nsc)
         .crossJoin(mism)
         .select(
-            "uni_rows",
-            "uni_checksum",
-            "big_rows",
-            "big_checksum",
+            *ck.columns,
             "merge_consistent",
             "n_docs_scored",
             "n_score_mismatch",
@@ -10491,6 +10361,33 @@ def incremental_bigram_model_equiv(
             ).alias("fold_ok"),
         )
     )
+
+
+@spec(
+    "bigram_model_artifact_roundtrip",
+    "EXT-bigram EXT-artifact S14 S16",
+    oracle=_lm_tables_sql(2, "doc_id % 2 = 0"),
+)
+def bigram_model_artifact_roundtrip(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """LM-MODEL persistence — the tokenizer-artifact story applied to
+    the statistical LM family, at order 2 (``_lm_artifact_roundtrip``).
+    Ref: parity N/A (§2.12); persistence protocol via archive.py
+    commit."""
+    return _lm_artifact_roundtrip(spark, sf_dir, 2)
+
+
+@spec(
+    "incremental_bigram_model_equiv",
+    "EXT-bigram EXT-incr-rollup EXT-sketch-merge",
+    oracle=_lm_tables_sql(2),
+)
+def incremental_bigram_model_equiv(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """INCREMENTAL LM maintenance at order 2 (``_lm_fold_equiv``)."""
+    return _lm_fold_equiv(spark, sf_dir, 2)
 
 
 # ----------------------------------------------------------------------
@@ -11617,280 +11514,31 @@ def incremental_cc_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).crossJoin(diff)
 
 
-def _trigram_model_artifact_sql() -> str:
-    """Oracle for the trigram-LM persistence gate: replay the THREE
-    model aggregates (the order-3 LM's entire persistable state) over
-    the even-doc_id training slice, checksum their canonical rows, and
-    pin the engine-side equality witnesses to their only correct
-    values — the ``_bigram_model_artifact_sql`` device with one more
-    table."""
-    uc = _artifact_checksum_sql("w || ':' || CAST(c AS VARCHAR)")
-    bc = _artifact_checksum_sql(
-        "a || ':' || b || ':' || CAST(c2 AS VARCHAR)"
-    )
-    tc = _artifact_checksum_sql(
-        "a || ':' || b || ':' || c || ':' || CAST(c3 AS VARCHAR)"
-    )
-    return f"""
-    WITH {_TOK_CTE},
-    tr AS (SELECT doc_id, t FROM tok WHERE doc_id % 2 = 0),
-    uni AS (
-      SELECT w, CAST(COUNT(*) AS BIGINT) AS c
-      FROM (SELECT unnest(t) AS w FROM tr) GROUP BY w
-    ),
-    big AS (
-      SELECT a, b, CAST(COUNT(*) AS BIGINT) AS c2 FROM (
-        SELECT t[k] AS a, t[k + 1] AS b
-        FROM tr, LATERAL unnest(range(1, len(t))) q(k)
-      ) GROUP BY a, b
-    ),
-    tri AS (
-      SELECT a, b, c, CAST(COUNT(*) AS BIGINT) AS c3 FROM (
-        SELECT t[k] AS a, t[k + 1] AS b, t[k + 2] AS c
-        FROM tr, LATERAL unnest(range(1, len(t) - 1)) q(k)
-      ) GROUP BY a, b, c
-    )
-    SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM uni) AS uni_rows,
-           (SELECT {uc} FROM uni) AS uni_checksum,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM big) AS big_rows,
-           (SELECT {bc} FROM big) AS big_checksum,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM tri) AS tri_rows,
-           (SELECT {tc} FROM tri) AS tri_checksum,
-           CAST(1 AS INT) AS artifact_version,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM documents)
-             AS n_docs_scored,
-           CAST(0 AS BIGINT) AS n_score_mismatch,
-           TRUE AS roundtrip_ok
-    """
-
-
 @spec(
     "trigram_model_artifact_roundtrip",
     "EXT-trigram EXT-artifact S14 S16",
-    oracle=_trigram_model_artifact_sql(),
+    oracle=_lm_tables_sql(3, "doc_id % 2 = 0"),
 )
 def trigram_model_artifact_roundtrip(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """ORDER-3 LM persistence (r08 verdict item 7) — closes the LM
-    artifact family's symmetry gap: the trigram model's entire
-    persistable state is its three count tables (llm/bigram.py
-    trigram_model_tables — T, the micro-log scores and BOTH context
-    totals are pure derivations), so all three commit through the
-    archive's versioned protocol, reload from parquet, and EVERY
-    document re-scores under the loaded model
-    (trigram_doc_scores_from_model) exactly as under the in-session
-    one — (total_micrologp, n_tokens, n_backoff2, n_backoff1) compare
-    null-safe over a full outer join, mismatches = 0. All three
-    artifact checksums hash-check against the oracle's replay of the
-    training aggregates. Ref: parity N/A (§2.12)."""
-    ensure_utc(spark)
-    from .archive import Archive
-    from .functions.portable_hash import md5_halves
-
-    d = _t(spark, sf_dir, "documents")
-    # tokenize ONCE for training + both scoring passes; materialize
-    # the three model tables once for save + in-session scoring (the
-    # bigram_model_artifact_roundtrip trade, measured the same way)
-    tok = llm_bigram.tok_frame(d, "doc_id", "text").localCheckpoint(
-        eager=True
-    )
-    uni, big, tri = llm_bigram.trigram_model_tables(
-        d, "doc_id", "text", train_pred=F.col("id") % 2 == 0, tok=tok
-    )
-    uni = uni.localCheckpoint(eager=True)
-    big = big.localCheckpoint(eager=True)
-    tri = tri.localCheckpoint(eager=True)
-    ar = Archive(spark, scratch_dir("sg_lmart_trigram_"))
-    v1 = ar.commit("trigram_uni", uni)
-    v2 = ar.commit("trigram_big", big)
-    v3 = ar.commit("trigram_tri", tri)
-    uni_l = ar.table("trigram_uni")
-    big_l = ar.table("trigram_big")
-    tri_l = ar.table("trigram_tri")
-    mism = _score_mismatch(
-        llm_bigram.trigram_doc_scores_from_model(
-            d, "doc_id", "text", uni, big, tri, tok=tok
-        ),
-        llm_bigram.trigram_doc_scores_from_model(
-            d, "doc_id", "text", uni_l, big_l, tri_l, tok=tok
-        ),
-        cols=("total_micrologp", "n_tokens", "n_backoff2", "n_backoff1"),
-    )
-    th, _ = md5_halves(
-        F.concat_ws(
-            ":",
-            F.col("a"),
-            F.col("b"),
-            F.col("c"),
-            F.col("c3").cast("string"),
-        )
-    )
-    tstats = tri_l.agg(
-        F.count(F.lit(1)).cast("long").alias("tri_rows"),
-        F.sum(th % F.lit(_ART_CHECK_MOD)).cast("long").alias("tri_checksum"),
-    )
-    nsc = d.agg(F.count(F.lit(1)).cast("long").alias("n_docs_scored"))
-    return (
-        _lm_checksums(uni_l, big_l)
-        .crossJoin(tstats)
-        .crossJoin(nsc)
-        .crossJoin(mism)
-        .select(
-            "uni_rows",
-            "uni_checksum",
-            "big_rows",
-            "big_checksum",
-            "tri_rows",
-            "tri_checksum",
-            F.lit(max(v1, v2, v3)).cast("int").alias("artifact_version"),
-            "n_docs_scored",
-            "n_score_mismatch",
-            (F.col("n_score_mismatch") == 0).alias("roundtrip_ok"),
-        )
-    )
-
-
-def _incremental_trigram_sql() -> str:
-    """Oracle for the incremental trigram fold: the folded model equals
-    the union-retrained model exactly (integer-sum mergeability at all
-    three orders), so the replay trains on the FULL corpus and
-    checksums that — the engine computes its checksums over the FOLDED
-    tables, making the hash match itself the mergeability proof (the
-    ``_incremental_bigram_sql`` device, one table deeper)."""
-    uc = _artifact_checksum_sql("w || ':' || CAST(c AS VARCHAR)")
-    bc = _artifact_checksum_sql(
-        "a || ':' || b || ':' || CAST(c2 AS VARCHAR)"
-    )
-    tc = _artifact_checksum_sql(
-        "a || ':' || b || ':' || c || ':' || CAST(c3 AS VARCHAR)"
-    )
-    return f"""
-    WITH {_TOK_CTE},
-    uni AS (
-      SELECT w, CAST(COUNT(*) AS BIGINT) AS c
-      FROM (SELECT unnest(t) AS w FROM tok) GROUP BY w
-    ),
-    big AS (
-      SELECT a, b, CAST(COUNT(*) AS BIGINT) AS c2 FROM (
-        SELECT t[k] AS a, t[k + 1] AS b
-        FROM tok, LATERAL unnest(range(1, len(t))) q(k)
-      ) GROUP BY a, b
-    ),
-    tri AS (
-      SELECT a, b, c, CAST(COUNT(*) AS BIGINT) AS c3 FROM (
-        SELECT t[k] AS a, t[k + 1] AS b, t[k + 2] AS c
-        FROM tok, LATERAL unnest(range(1, len(t) - 1)) q(k)
-      ) GROUP BY a, b, c
-    )
-    SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM uni) AS uni_rows,
-           (SELECT {uc} FROM uni) AS uni_checksum,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM big) AS big_rows,
-           (SELECT {bc} FROM big) AS big_checksum,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM tri) AS tri_rows,
-           (SELECT {tc} FROM tri) AS tri_checksum,
-           TRUE AS merge_consistent,
-           (SELECT CAST(COUNT(*) AS BIGINT) FROM documents)
-             AS n_docs_scored,
-           CAST(0 AS BIGINT) AS n_score_mismatch,
-           TRUE AS fold_ok
-    """
+    artifact family's symmetry gap (``_lm_artifact_roundtrip``). Ref:
+    parity N/A (§2.12)."""
+    return _lm_artifact_roundtrip(spark, sf_dir, 3)
 
 
 @spec(
     "incremental_trigram_model_equiv",
     "EXT-trigram EXT-incr-rollup EXT-sketch-merge",
-    oracle=_incremental_trigram_sql(),
+    oracle=_lm_tables_sql(3),
 )
 def incremental_trigram_model_equiv(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """INCREMENTAL order-3 LM maintenance — the fold family at trigram
-    depth: a new document batch (doc_id%5=4) trains its own tiny
-    model, folds into the base model by sum-merge at all three orders
-    (llm/bigram.py merge_trigram_model_tables — three type-table-sized
-    full-outer joins, no corpus re-scan), and the folded model must
-    equal the union-retrained model EXACTLY: all three checksums are
-    computed over the FOLDED tables and hash-checked against the
-    oracle's union-train replay, the cell-wise sym-diff witnesses ride
-    along (``merge_consistent``), and every document scores identically
-    under folded vs retrained (trigram_doc_scores_from_model, null-safe
-    full-outer compare over both backoff hops)."""
-    ensure_utc(spark)
-    from .functions.portable_hash import md5_halves
-
-    d = _t(spark, sf_dir, "documents")
-    # one tokenize pass for base/batch/full trainings + both scoring
-    # passes; only the token frame is materialized (the
-    # incremental_bigram_model_equiv trade, measured the same way)
-    tok = llm_bigram.tok_frame(d, "doc_id", "text").localCheckpoint(
-        eager=True
-    )
-    mb = llm_bigram.trigram_model_tables(
-        d, "doc_id", "text", train_pred=F.col("id") % 5 != 4, tok=tok
-    )
-    mn = llm_bigram.trigram_model_tables(
-        d, "doc_id", "text", train_pred=F.col("id") % 5 == 4, tok=tok
-    )
-    uf, bf, tf = llm_bigram.merge_trigram_model_tables(mb, mn)
-    ud, bd, td = llm_bigram.trigram_model_tables(
-        d, "doc_id", "text", tok=tok
-    )
-    diff = (
-        _msdiff_rows(uf, ud)
-        .select(F.lit(1).alias("one"))
-        .unionByName(
-            _msdiff_rows(bf, bd)
-            .select(F.lit(1).alias("one"))
-        )
-        .unionByName(
-            _msdiff_rows(tf, td)
-            .select(F.lit(1).alias("one"))
-        )
-        .agg((F.count(F.lit(1)) == 0).alias("merge_consistent"))
-    )
-    mism = _score_mismatch(
-        llm_bigram.trigram_doc_scores_from_model(
-            d, "doc_id", "text", uf, bf, tf, tok=tok
-        ),
-        llm_bigram.trigram_doc_scores_from_model(
-            d, "doc_id", "text", ud, bd, td, tok=tok
-        ),
-        cols=("total_micrologp", "n_tokens", "n_backoff2", "n_backoff1"),
-    )
-    th, _ = md5_halves(
-        F.concat_ws(
-            ":",
-            F.col("a"),
-            F.col("b"),
-            F.col("c"),
-            F.col("c3").cast("string"),
-        )
-    )
-    tstats = tf.agg(
-        F.count(F.lit(1)).cast("long").alias("tri_rows"),
-        F.sum(th % F.lit(_ART_CHECK_MOD)).cast("long").alias("tri_checksum"),
-    )
-    nsc = d.agg(F.count(F.lit(1)).cast("long").alias("n_docs_scored"))
-    return (
-        _lm_checksums(uf, bf)
-        .crossJoin(tstats)
-        .crossJoin(diff)
-        .crossJoin(nsc)
-        .crossJoin(mism)
-        .select(
-            "uni_rows",
-            "uni_checksum",
-            "big_rows",
-            "big_checksum",
-            "tri_rows",
-            "tri_checksum",
-            "merge_consistent",
-            "n_docs_scored",
-            "n_score_mismatch",
-            (F.col("n_score_mismatch") == 0).alias("fold_ok"),
-        )
-    )
+    """INCREMENTAL LM maintenance at order 3: the fold at all three
+    orders (``_lm_fold_equiv``)."""
+    return _lm_fold_equiv(spark, sf_dir, 3)
 
 
 @spec(
