@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import hashlib
 
+import pytest
 from pyspark.sql import functions as F
 
 from youtube_scraper_db_spark.functions.portable_hash import km_mix
@@ -457,3 +458,61 @@ def test_grouped_histogram_equals_scalar_per_group(spark):
         for tag in ("p5", "p9", "p99"):
             assert report[f"{tag}_est"] == scalar[f"{tag}_est"]
             assert report[f"{tag}_in_bin"]
+
+
+_REGS = "bucket long, rho long"
+
+
+@pytest.mark.parametrize(
+    "schema, keys, a, b, n_diff, same_estimate",
+    [
+        (_REGS, ["bucket"], [(0, 2), (1, 5)], [(0, 2), (1, 5)], 0, True),
+        # few registers set: linear counting reads only how many are set
+        (_REGS, ["bucket"], [(0, 2), (1, 5)], [(0, 2), (1, 6)], 1, True),
+        (_REGS, ["bucket"], [(0, 2), (1, 5)], [(0, 2)], 1, False),
+        (_REGS, ["bucket"], [(0, 2)], [(0, 2), (1, 5)], 1, False),
+        (_REGS, ["bucket"], [(0, 2), (1, None)], [(0, 2), (1, 0)], 1, None),
+        (_REGS, ["bucket"], [(0, 2), (1, 5)], [(0, 5), (1, 2)], 2, True),
+        (
+            "row int, slot long, cnt long",
+            ["row", "slot"],
+            [(0, 7, 3), (1, 7, 3)],
+            [(0, 7, 3), (1, 7, 4)],
+            1,
+            None,
+        ),
+        ("pos long", ["pos"], [(3,), (9,)], [(3,), (9,)], 0, None),
+        ("pos long", ["pos"], [(3,), (9,)], [(3,)], 1, None),
+        ("h long", ["h"], [(3,)], [(3,), (9,)], 1, None),
+        ("h long", ["h"], [(None,), (3,)], [(None,), (3,)], 0, None),
+    ],
+    ids=[
+        "identical",
+        "changed_cell",
+        "dropped_row",
+        "extra_row",
+        "null_vs_zero",
+        "hll_buckets_swapped",
+        "cms_changed_cell",
+        "bloom_identical",
+        "bloom_dropped_pos",
+        "kmv_extra_hash",
+        "null_key_matches_null_key",
+    ],
+)
+def test_table_diff_witness(spark, schema, keys, a, b, n_diff, same_estimate):
+    """The merge witness counts the rows two sketch tables differ in,
+    in both directions. For HLL register tables ``same_estimate`` says
+    whether the two estimates agree: with two buckets' ``rho`` swapped
+    (or, in the linear-counting range, one register changed) they do,
+    so an estimate compare calls that merge consistent, while the
+    register compare reports the differing buckets."""
+    da, db = spark.createDataFrame(a, schema), spark.createDataFrame(b, schema)
+    assert S.table_diff(da, db, keys).first()["n_diff"] == n_diff
+    assert S.table_diff(db, da, keys).first()["n_diff"] == n_diff
+    if same_estimate is not None:
+        ea, eb = (
+            S.hll_estimate_from_registers(d, 9).first()["estimate"]
+            for d in (da, db)
+        )
+        assert (ea == eb) == same_estimate

@@ -1,11 +1,14 @@
 """Scratch directories and the staged-stream drain (streaming/drain.py):
 the per-process scratch root is gone after the process exits (also on an
-uncaught exception, and a forked child cannot remove its parent's root);
+uncaught exception, and a forked child cannot remove its parent's root),
+and a killed process's root is swept by the next process while live
+processes keep theirs;
 a staged stream replays one file per micro-batch and its staging and
 checkpoint dirs are gone after the ``with``; gates that return
 driver-side rows leave no dirs behind; no other module in the package
-creates temp dirs that nothing removes; and the commit marker and the
-index-store log protocol each have one owning module."""
+creates temp dirs that nothing removes; and the commit marker, the
+index-store log protocol and the Spark artifact checksum each have one
+owning module."""
 
 from __future__ import annotations
 
@@ -28,19 +31,42 @@ REPO = pathlib.Path(__file__).resolve().parents[1]
 PKG = REPO / "youtube_scraper_db_spark"
 
 
-def _run_child(tmp_path, body: str) -> subprocess.CompletedProcess:
+def _child(tmp_path, body: str) -> dict:
+    """``subprocess`` arguments of a Python child with ``TMPDIR=tmp_path``
+    that imports ``scratch_dir`` and runs ``body``."""
     env = dict(os.environ, TMPDIR=str(tmp_path))
     env["PYTHONPATH"] = os.pathsep.join(
         p for p in (str(REPO), env.get("PYTHONPATH")) if p
     )
     code = "from youtube_scraper_db_spark.streaming.drain import scratch_dir\n"
-    return subprocess.run(
-        [sys.executable, "-c", code + textwrap.dedent(body)],
+    return dict(
+        args=[sys.executable, "-c", code + textwrap.dedent(body)],
         env=env,
-        capture_output=True,
         text=True,
-        timeout=120,
     )
+
+
+def _run_child(tmp_path, body: str) -> subprocess.CompletedProcess:
+    return subprocess.run(
+        **_child(tmp_path, body), capture_output=True, timeout=120
+    )
+
+
+#: a child that prints its scratch root, then waits for a line on stdin
+_WAITING_CHILD = """
+import os, sys
+print(os.path.dirname(scratch_dir("sg_a_")), flush=True)
+sys.stdin.readline()
+"""
+
+
+def _start_waiting_child(tmp_path) -> tuple[subprocess.Popen, str]:
+    proc = subprocess.Popen(
+        **_child(tmp_path, _WAITING_CHILD),
+        stdin=subprocess.PIPE,
+        stdout=subprocess.PIPE,
+    )
+    return proc, proc.stdout.readline().strip()
 
 
 def _sg_entries(path) -> list[str]:
@@ -97,6 +123,39 @@ def test_forked_child_keeps_parent_root(tmp_path):
     )
     assert res.returncode == 0, res.stderr
     assert res.stdout.strip() == "True"
+    assert _sg_entries(tmp_path) == []
+
+
+def test_killed_process_root_swept_by_next_process(tmp_path):
+    """A SIGKILLed process runs no exit hook; the next process's first
+    ``scratch_dir`` call removes its root, and leaves a root whose name
+    holds no owner record alone."""
+    legacy = tmp_path / "sg_x1y2z3w4"
+    legacy.mkdir()
+    proc, root = _start_waiting_child(tmp_path)
+    assert os.path.isdir(root)
+    proc.kill()
+    proc.wait(timeout=60)
+    assert os.path.isdir(root)
+    res = _run_child(tmp_path, 'print(scratch_dir("sg_b_"))')
+    assert res.returncode == 0, res.stderr
+    assert not os.path.exists(root)
+    assert _sg_entries(tmp_path) == [legacy.name]
+
+
+def test_live_processes_keep_each_others_roots(tmp_path):
+    """Two live processes, and a third that starts and sweeps while
+    both run: no root of a live process is removed."""
+    (a, root_a), (b, root_b) = (
+        _start_waiting_child(tmp_path), _start_waiting_child(tmp_path)
+    )
+    try:
+        res = _run_child(tmp_path, 'print(scratch_dir("sg_c_"))')
+        assert res.returncode == 0, res.stderr
+        assert os.path.isdir(root_a) and os.path.isdir(root_b)
+    finally:
+        for proc in (a, b):
+            proc.communicate("\n", timeout=60)
     assert _sg_entries(tmp_path) == []
 
 
@@ -205,6 +264,22 @@ def test_md5_half_sql_owned_by_portable_hash():
         str(p.relative_to(REPO))
         for p in PKG.rglob("*.py")
         if p != owner and tail.search(p.read_text())
+    ]
+    assert offenders == []
+
+
+def test_artifact_checksum_owned_by_sketches_module():
+    """The Spark artifact checksum (row count and the summed first md5
+    half mod ``_ART_CHECK_MOD``) is built once, by
+    ``operators/sketches.py`` ``artifact_stats``/``artifact_tail``, the
+    twin of the oracle's ``_ck_sql``: no other package module reduces
+    by the checksum modulus by hand."""
+    owner = PKG / "operators" / "sketches.py"
+    mod = re.compile(r"%\s*F\.lit\(\s*\w*CHECK_MOD\b")
+    offenders = [
+        str(p.relative_to(REPO))
+        for p in PKG.rglob("*.py")
+        if p != owner and mod.search(p.read_text())
     ]
     assert offenders == []
 

@@ -63,6 +63,7 @@ from pyspark.sql import functions as F
 
 from ..functions.portable_hash import md5_halves, md5_halves_sql
 from . import sliding
+from .sketches import _ck_sql
 
 #: Hash-space size: hashes are uniform 60-bit integers (md5 half).
 KMV_SPACE = float(1 << 60)
@@ -397,8 +398,7 @@ def kmv_artifact_oracle_sql(
     ),
     art AS (
       SELECT CAST(COUNT(*) AS BIGINT) AS saved_size,
-             CAST(SUM({_h_sql("h")} % {check_mod}) AS BIGINT)
-               AS saved_checksum
+             {_ck_sql("CAST(h AS VARCHAR)", check_mod)} AS saved_checksum
       FROM base
     )
     SELECT art.saved_size, art.saved_checksum,

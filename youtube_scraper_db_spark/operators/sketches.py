@@ -43,6 +43,7 @@ one-line change per sketch that keeps every plan identical.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -140,10 +141,10 @@ def _halves_cte(name: str, table: str, key: str, where: str = "", cols: str = ""
 
 
 def _ck_sql(canon: str, mod: int) -> str:
-    """Artifact-checksum SQL over canonical strings — the registry's
-    ``_artifact_checksum_sql`` formula (first md5 half, summed mod
-    ``mod``); kept in lockstep with the engine's ``md5_halves``-based
-    sums."""
+    """Artifact-checksum SQL over canonical strings (first md5 half,
+    reduced mod ``mod``, summed) — the one SQL form, used through the
+    registry's ``_artifact_checksum_sql`` too; ``artifact_stats`` is its
+    Spark twin."""
     h1, _ = md5_halves_sql(canon)
     return f"CAST(SUM(({h1}) % {mod}) AS BIGINT)"
 
@@ -171,6 +172,80 @@ def _union_sql(
            (SELECT saved_checksum FROM art) AS saved_checksum, {cols},
            CAST(1 AS INT) AS artifact_version
     FROM {rels}"""
+
+
+def _diff_sql(a: str, b: str, keys: By, val: str) -> str:
+    """SQL twin of ``table_diff`` for one value column: the count of
+    keys whose ``val`` differs between relations ``a`` and ``b``, a key
+    missing on one side included."""
+    on = " AND ".join(f"x.{k} IS NOT DISTINCT FROM y.{k}" for k in keys)
+    return f"""(SELECT COUNT(*) FROM {a} x FULL OUTER JOIN {b} y ON {on}
+            WHERE x.{val} IS DISTINCT FROM y.{val})"""
+
+
+# --- the Spark twins: merge witness and artifact tail -----------------
+
+
+def table_diff(a: DataFrame, b: DataFrame, keys: By) -> DataFrame:
+    """One row ``(n_diff)``: how many rows of sketch table ``a`` and
+    sketch table ``b`` differ, under a null-safe full-outer compare on
+    ``keys``. A row differs when its key is on one side only or when
+    any value column (``a``'s columns outside ``keys``) differs,
+    null-safe. ``n_diff = 0`` is every family's merge law: the merged
+    table equals the directly built table, cell for cell. Tables with
+    keys only (Bloom ``pos``, KMV ``h``) differ by key set alone. Keys
+    must identify a row on each side, as they do in every sketch
+    table."""
+    cols = list(a.columns)
+    vals = [c for c in cols if c not in keys]
+
+    def side(df: DataFrame, s: str) -> DataFrame:
+        return df.select(
+            *[F.col(c).alias(f"__{s}_{c}") for c in cols], F.lit(True).alias(f"__{s}")
+        )
+
+    def eq(c: str) -> Column:
+        return F.col(f"__a_{c}").eqNullSafe(F.col(f"__b_{c}"))
+
+    on = functools.reduce(Column.__and__, map(eq, keys))
+    both = F.col("__a").isNotNull() & F.col("__b").isNotNull()
+    same = functools.reduce(Column.__and__, map(eq, vals), both)
+    return (
+        side(a, "a")
+        .join(side(b, "b"), on, "full_outer")
+        .where(~same)
+        .agg(F.count(F.lit(1)).alias("n_diff"))
+    )
+
+
+def artifact_stats(
+    saved: DataFrame, cols: By, mod: int, rows: str, checksum: str = "saved_checksum"
+) -> DataFrame:
+    """One row (``rows``, ``checksum``) over a saved artifact table: its
+    row count and the Spark twin of ``_ck_sql`` — the first md5 half of
+    each row's canonical string (the string forms of ``cols`` joined by
+    ``:``), reduced mod ``mod`` and summed, so the checksum is
+    independent of row order."""
+    parts = [F.col(c).cast("string") for c in cols]
+    h1, _ = md5_halves(parts[0] if len(parts) == 1 else F.concat_ws(":", *parts))
+    return saved.agg(
+        F.count(F.lit(1)).cast("long").alias(rows),
+        F.sum(h1 % F.lit(mod)).cast("long").alias(checksum),
+    )
+
+
+def artifact_tail(
+    saved: DataFrame, cols: By, mod: int, rows: str, body: DataFrame, version: int
+) -> DataFrame:
+    """Spark twin of ``_union_sql``'s ``art`` tail: the saved table's
+    row count and ``saved_checksum`` (``artifact_stats``), then the
+    one-row ``body``, then ``artifact_version`` — the column order the
+    oracle emits."""
+    return (
+        artifact_stats(saved, cols, mod, rows)
+        .crossJoin(body)
+        .withColumn("artifact_version", F.lit(version).cast("int"))
+    )
 
 
 # --- HyperLogLog ------------------------------------------------------
@@ -249,7 +324,10 @@ def hll_merge(a: DataFrame, b: DataFrame) -> DataFrame:
     commutative, so merged registers are IDENTICAL to the registers of
     the combined input — the mergeability property that lets sketches
     roll up across partitions, days, and datasets without re-scanning
-    (the gate asserts this equality exactly)."""
+    (the ``hll_union_merge`` gate compares the merged and direct
+    register tables bucket for bucket with ``table_diff``; the
+    estimates alone could not show it, since they depend only on the
+    multiset of ``rho`` values)."""
     aa = a.select("bucket", F.col("rho").alias("ra"))
     bb = b.select("bucket", F.col("rho").alias("rb"))
     return aa.join(bb, "bucket", "full_outer").select(
@@ -351,8 +429,9 @@ def hll_union_oracle_sql(
 ) -> str:
     """DuckDB replay of the merge gate: sketch two disjoint halves
     (``split`` / NOT ``split``), merge via full-join greatest, estimate
-    the merged registers AND the directly-sketched full input — the
-    exact mergeability identity the engine asserts. With
+    the merged registers AND the directly-sketched full input, and
+    compare the two register tables bucket for bucket — the exact
+    mergeability identity the engine asserts. With
     ``checksum_mod`` it replays the persistence+fold gate: the
     ``split`` half's register table is the SAVED artifact."""
     ctes = f"""{_hll_regs_sql('ha', 'ra', table, key, f' AND ({split})', p)},
@@ -367,7 +446,7 @@ def hll_union_oracle_sql(
     {_hll_est_sql('rf', 'ef', p)}"""
     cols = f"""ROUND(em.e, 4) AS union_estimate,
            ROUND(ef.e, 4) AS direct_estimate,
-           ROUND(em.e, 4) = ROUND(ef.e, 4) AS merge_consistent,
+           {_diff_sql('merged', 'rf', ('bucket',), 'rho')} = 0 AS merge_consistent,
            (SELECT CAST(count(DISTINCT {key}) AS BIGINT)
             FROM {table} WHERE {key} IS NOT NULL) AS exact_union"""
     art = None
@@ -518,9 +597,8 @@ def cms_oracle_sql(
 def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
     """Union two Count-Min counter tables: element-wise SUM (outer join
     on (row, slot)). Sum is associative/commutative, so merged counters
-    equal the counters of the combined input exactly — pinned in
-    tests/test_sketches.py (the HLL gate carries the driver-checked
-    mergeability witness for the family)."""
+    equal the counters of the combined input exactly — the
+    ``cms_union_merge`` gate asserts it cell for cell (``table_diff``)."""
     aa = a.select("row", "slot", F.col("cnt").alias("ca"))
     bb = b.select("row", "slot", F.col("cnt").alias("cb"))
     return aa.join(bb, ["row", "slot"], "full_outer").select(
@@ -541,10 +619,11 @@ def cms_union_oracle_sql(
     """DuckDB replay of the CMS merge gate: per-key counts of two
     disjoint row-halves (``split`` / NOT ``split``) → two counter
     tables → element-wise-sum merge → point estimates through the
-    MERGED counters, compared cell-for-cell and estimate-for-estimate
-    against the directly-built sketch. Because integer sum is
-    associative, both comparisons must come back exact — and the oracle
-    hash-checks the actual sums/estimates, not just the booleans. With
+    MERGED counters, whose cells are compared against the
+    directly-built counters (equal cells give equal estimates). Because
+    integer sum is associative, the comparison must come back exact —
+    and the oracle hash-checks the actual sums/estimates, not just the
+    boolean. With
     ``checksum_mod`` it replays the persistence+fold gate: the
     ``split`` half's counter table is the SAVED artifact."""
     h1, h2 = md5_halves_sql("CAST(k AS VARCHAR)")
@@ -580,22 +659,17 @@ def cms_union_oracle_sql(
       SELECT COALESCE(a.row, b.row) AS row, COALESCE(a.slot, b.slot) AS slot,
              COALESCE(a.cnt, 0) + COALESCE(b.cnt, 0) AS cnt
       FROM ca a FULL OUTER JOIN cb b ON a.row = b.row AND a.slot = b.slot
-    ),
-    cells AS (
-      SELECT SUM(CASE WHEN m.cnt = d.cnt THEN 0 ELSE 1 END) AS n_diff
-      FROM cm m FULL OUTER JOIN cd d ON m.row = d.row AND m.slot = d.slot
     ),{ests('em', 'cm')},{ests('ed', 'cd')},
     ests AS (
       SELECT COUNT(*) AS keys,
              CAST(SUM(em.est) AS BIGINT) AS sum_est_merged,
              CAST(SUM(ed.est) AS BIGINT) AS sum_est_direct,
-             SUM(CASE WHEN em.est = ed.est THEN 0 ELSE 1 END) AS n_est_diff,
              SUM(CASE WHEN em.est >= kf.c THEN 0 ELSE 1 END) AS n_underest
       FROM em JOIN ed ON em.k = ed.k JOIN kf ON em.k = kf.k
     )"""
-    cols = """CAST(e.keys AS BIGINT) AS keys,
+    cols = f"""CAST(e.keys AS BIGINT) AS keys,
            e.sum_est_merged, e.sum_est_direct,
-           (c.n_diff = 0 AND e.n_est_diff = 0) AS merge_consistent,
+           {_diff_sql('cm', 'cd', ('row', 'slot'), 'cnt')} = 0 AS merge_consistent,
            e.n_underest = 0 AS overestimate_ok,
            (SELECT CAST(SUM(c) AS BIGINT) FROM kf) AS exact_total"""
     art = None
@@ -605,7 +679,7 @@ def cms_union_oracle_sql(
             " || ':' || CAST(cnt AS VARCHAR)"
         )
         art = ("ca", "saved_cells", canon, checksum_mod)
-    return _union_sql(ctes, cols, "ests e, cells c", art)
+    return _union_sql(ctes, cols, "ests e", art)
 
 
 # --- Bloom ------------------------------------------------------------
@@ -616,7 +690,8 @@ def bloom_merge(a: DataFrame, b: DataFrame) -> DataFrame:
     bits are IDENTICAL to the bits of the filter built over the
     combined input — the mergeability property that lets per-partition
     / per-day filters roll up without re-scanning (the
-    ``bloom_union_merge`` gate asserts the equality exactly)."""
+    ``bloom_union_merge`` gate asserts the equality exactly, with
+    ``table_diff``)."""
     return a.select("pos").union(b.select("pos")).distinct()
 
 
@@ -1058,7 +1133,7 @@ def histogram_counters(
     )
     merged = ba.join(bb, "bin", "full_outer").select(
         "bin",
-        (F.coalesce("ca", F.lit(0)) + F.coalesce("cb", F.lit(0))).alias("cm"),
+        (F.coalesce("ca", F.lit(0)) + F.coalesce("cb", F.lit(0))).alias("cnt"),
     )
     return direct, merged
 
@@ -1075,18 +1150,13 @@ def histogram_report_from_counters(
     """Build the quantile report from an EXPLICIT ``(bin, cnt)`` counter
     table — the entry point for counters maintained elsewhere (the
     streaming twin drains its incrementally-summed bins into this), with
-    ``merged`` a second counter table (``(bin, cm)``) whose
-    cell-for-cell equality with ``direct`` is the mergeability witness.
+    ``merged`` a second counter table (``(bin, cnt)``) whose
+    cell-for-cell equality with ``direct`` (``table_diff``) is the
+    mergeability witness.
     ``stats`` is the one-row (lo, hi, n) frame the bins were built
     against; ``exact_src[col]`` supplies the exact-percentile twins."""
-    cells = (
-        merged.join(direct, "bin", "full_outer")
-        .agg(
-            F.sum(
-                F.when(F.col("cm").eqNullSafe(F.col("cnt")), 0).otherwise(1)
-            ).alias("n_diff")
-        )
-        .select((F.col("n_diff") == 0).alias("merge_consistent"))
+    cells = table_diff(merged, direct, ["bin"]).select(
+        (F.col("n_diff") == 0).alias("merge_consistent")
     )
     exact = exact_src.where(F.col(col).isNotNull()).agg(
         *[F.percentile(col, F.lit(q)).alias(f"{_tag(q)}_exact_raw") for q in qs]
@@ -1239,13 +1309,12 @@ def histogram_quantile_oracle_sql(
     bb AS (SELECT bin, CAST(COUNT(*) AS BIGINT) AS cb FROM binned WHERE NOT half GROUP BY bin),
     merged AS (
       SELECT COALESCE(a.bin, b.bin) AS bin,
-             COALESCE(a.ca, 0) + COALESCE(b.cb, 0) AS cm
+             COALESCE(a.ca, 0) + COALESCE(b.cb, 0) AS cnt
       FROM ba a FULL OUTER JOIN bb b ON a.bin = b.bin
     ),
     cells AS (
-      SELECT SUM(CASE WHEN m.cm = d.cnt THEN 0 ELSE 1 END) = 0
+      SELECT {_diff_sql('merged', 'direct', ('bin',), 'cnt')} = 0
                AS merge_consistent
-      FROM merged m FULL OUTER JOIN direct d ON m.bin = d.bin
     ),
     exact AS (SELECT {exact_block} FROM src),{_quantile_picks_sql('direct', 'stats', bins, qs)}
     SELECT CAST(s.n AS BIGINT) AS n,
@@ -1289,15 +1358,11 @@ def histogram_artifact_oracle_sql(
       SELECT COALESCE(a.bin, b.bin) AS bin,
              COALESCE(a.cnt, 0) + COALESCE(b.cnt, 0) AS cnt
       FROM bb a FULL OUTER JOIN bn b ON a.bin = b.bin
-    ),
-    cmp AS (
-      SELECT SUM(CASE WHEN f.cnt = d.cnt THEN 0 ELSE 1 END) AS n_diff
-      FROM folded f FULL OUTER JOIN direct d ON f.bin = d.bin
     )"""
     cols = f"""{_half_up2_sql('lo')} AS lo_edge,
            {_half_up2_sql('hi')} AS hi_edge,
            (SELECT CAST(SUM(cnt) AS BIGINT) FROM folded) AS n_total,
-           (SELECT n_diff = 0 FROM cmp) AS fold_consistent"""
+           {_diff_sql('folded', 'direct', ('bin',), 'cnt')} = 0 AS fold_consistent"""
     canon = "CAST(bin AS VARCHAR) || ':' || CAST(cnt AS VARCHAR)"
     return _union_sql(ctes, cols, "edges", ("bb", "saved_bins", canon, checksum_mod))
 

@@ -9848,7 +9848,7 @@ _ART_CHECK_MOD = 1_000_000_007
 
 def _artifact_report(
     loaded: DataFrame,
-    canon,
+    cols: tuple[str, ...],
     version: int,
     held: DataFrame,
     applied_trained: DataFrame,
@@ -9861,14 +9861,8 @@ def _artifact_report(
     held-out apply count, and the apply-from-loaded ≡ apply-from-trained
     mismatch count (full outer join, null-safe — a dropped or extra doc
     counts as a mismatch)."""
-    from .functions.portable_hash import md5_halves
-
-    h1, _ = md5_halves(canon)
-    stats = loaded.agg(
-        F.count(F.lit(1)).cast("long").alias("n_artifact_rows"),
-        F.sum(h1 % F.lit(_ART_CHECK_MOD))
-        .cast("long")
-        .alias("artifact_checksum"),
+    stats = op_sketches.artifact_stats(
+        loaded, cols, _ART_CHECK_MOD, "n_artifact_rows", "artifact_checksum"
     )
     napp = held.agg(F.count(F.lit(1)).cast("long").alias("n_docs_applied"))
     a = applied_trained.select("id", F.col("token_text").alias("__ta"))
@@ -9978,15 +9972,9 @@ def bpe_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     applied_l = _tokens_text(
         llm_bpe.bpe_apply(held, "doc_id", "text", loaded_merges)
     )
-    canon = F.concat_ws(
-        ":",
-        F.col("merge_rank").cast("string"),
-        F.col("lhs"),
-        F.col("rhs"),
-        F.col("pair_count").cast("string"),
-    )
     return _artifact_report(
-        loaded, canon, version, held, applied_t, applied_l
+        loaded, ("merge_rank", "lhs", "rhs", "pair_count"), version, held,
+        applied_t, applied_l,
     )
 
 
@@ -10034,11 +10022,8 @@ def unigram_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             held, "doc_id", "text", llm_unigram.quantlog_scores(cnts_l)
         )
     )
-    canon = F.concat_ws(
-        ":", F.col("piece"), F.col("piece_count").cast("string")
-    )
     return _artifact_report(
-        loaded, canon, version, held, applied_t, applied_l
+        loaded, ("piece", "piece_count"), version, held, applied_t, applied_l
     )
 
 
@@ -10131,7 +10116,7 @@ def wordpiece_artifact_roundtrip(
         llm_wordpiece.wordpiece_apply(held, "doc_id", "text", vocab_loaded)
     )
     return _artifact_report(
-        loaded, F.col("piece"), version, held, applied_t, applied_l
+        loaded, ("piece",), version, held, applied_t, applied_l
     )
 
 
@@ -10139,23 +10124,12 @@ def _lm_checksums(model: tuple[DataFrame, ...]) -> DataFrame:
     """One row of ({t}_rows, {t}_checksum) per count table t of an LM
     model — the md5 canonical strings (``w:c``, ``a:b:c2``,
     ``a:b:c:c3``) stay in lockstep with ``_lm_tables_sql``."""
-    from .functions.portable_hash import md5_halves
-
     stats = []
     for k, (name, t) in enumerate(zip(_LM_TABLES, model), 1):
-        h, _ = md5_halves(
-            F.concat_ws(
-                ":",
-                *llm_bigram.gram_keys(k),
-                F.col(llm_bigram.gram_count(k)).cast("string"),
-            )
-        )
+        cols = (*llm_bigram.gram_keys(k), llm_bigram.gram_count(k))
         stats.append(
-            t.agg(
-                F.count(F.lit(1)).cast("long").alias(f"{name}_rows"),
-                F.sum(h % F.lit(_ART_CHECK_MOD))
-                .cast("long")
-                .alias(f"{name}_checksum"),
+            op_sketches.artifact_stats(
+                t, cols, _ART_CHECK_MOD, f"{name}_rows", f"{name}_checksum"
             )
         )
     return functools.reduce(DataFrame.crossJoin, stats)
@@ -10673,6 +10647,97 @@ def hll_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     return op_sketches.hll_estimate(ev, "user_id", p=9)
 
 
+def _distinct_users(ev: DataFrame, name: str) -> DataFrame:
+    """One row: the exact count of distinct non-null ``user_id``."""
+    return ev.where(F.col("user_id").isNotNull()).agg(
+        F.countDistinct("user_id").cast("long").alias(name)
+    )
+
+
+def _hll_merge_report(
+    ev: DataFrame, merged: DataFrame, direct: DataFrame
+) -> DataFrame:
+    """``hll_union_oracle_sql``'s columns over ``events.user_id``: both
+    register tables' estimates, ``merge_consistent`` (the register
+    tables equal bucket for bucket) and the exact union count."""
+
+    def est(regs: DataFrame, name: str) -> DataFrame:
+        return op_sketches.hll_estimate_from_registers(regs, 9).select(
+            F.col("estimate").alias(name)
+        )
+
+    return (
+        est(merged, "union_estimate")
+        .crossJoin(est(direct, "direct_estimate"))
+        .crossJoin(op_sketches.table_diff(merged, direct, ["bucket"]))
+        .select(
+            "union_estimate",
+            "direct_estimate",
+            (F.col("n_diff") == 0).alias("merge_consistent"),
+        )
+        .crossJoin(_distinct_users(ev, "exact_union"))
+    )
+
+
+def _cms_merge_report(
+    ev: DataFrame, merged: DataFrame, direct: DataFrame
+) -> DataFrame:
+    """``cms_union_oracle_sql``'s columns over ``events.user_id``: every
+    key probed through both counter tables (key count and estimate
+    sums), ``merge_consistent`` (the counter tables equal cell for
+    cell, so the estimates are equal too), the est ≥ exact guarantee
+    through the merged counters and the exact total."""
+
+    def est(cnt: DataFrame, *cols) -> DataFrame:
+        return op_sketches.cms_point_estimates_from_counters(
+            ev, "user_id", cnt
+        ).select("k", *cols)
+
+    ests = (
+        est(merged, F.col("est").alias("est_m"), "exact", "overestimate_ok")
+        .join(est(direct, F.col("est").alias("est_d")), "k")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("keys"),
+            F.sum("est_m").cast("long").alias("sum_est_merged"),
+            F.sum("est_d").cast("long").alias("sum_est_direct"),
+            F.bool_and("overestimate_ok").alias("overestimate_ok"),
+            F.sum("exact").cast("long").alias("exact_total"),
+        )
+    )
+    return ests.crossJoin(
+        op_sketches.table_diff(merged, direct, ["row", "slot"])
+    ).select(
+        "keys",
+        "sum_est_merged",
+        "sum_est_direct",
+        (F.col("n_diff") == 0).alias("merge_consistent"),
+        "overestimate_ok",
+        "exact_total",
+    )
+
+
+def _bloom_merge_report(
+    merged: DataFrame, direct: DataFrame, orders: DataFrame, customer: DataFrame
+) -> DataFrame:
+    """The Bloom merge gates' columns: every customer probed through the
+    ``merged`` filter over order custkeys (the probe report), the merged
+    bit count and ``merge_consistent`` (the bit sets equal)."""
+    report = op_sketches.bloom_probe_report_from_bits(
+        merged, orders, "o_custkey", customer, "c_custkey"
+    )
+    return (
+        report.crossJoin(
+            merged.agg(F.count(F.lit(1)).cast("long").alias("nbits_merged"))
+        )
+        .crossJoin(op_sketches.table_diff(merged, direct, ["pos"]))
+        .select(
+            *report.columns,
+            "nbits_merged",
+            (F.col("n_diff") == 0).alias("merge_consistent"),
+        )
+    )
+
+
 @spec(
     "hll_union_merge",
     "EXT-sketch-hll EXT-sketch-merge",
@@ -10687,9 +10752,10 @@ def hll_union_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     half is sketched independently, and the merged sketch (full-outer
     join + element-wise max — operators/sketches.py hll_merge) must
     estimate the union. Because max is associative/commutative, merged
-    registers are IDENTICAL to sketching the combined input — emitted
-    as the exact ``merge_consistent`` witness next to both estimates
-    and the exact union count, all replayed by the oracle.
+    registers are IDENTICAL to sketching the combined input:
+    ``merge_consistent`` compares the two register tables bucket for
+    bucket (``table_diff``), next to both estimates and the exact union
+    count, all replayed by the oracle.
 
     Plan shape (r09 watch-list fix): ONE events scan hashes each row
     once and aggregates all THREE register tables (half a / half b /
@@ -10716,32 +10782,14 @@ def hll_union_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .localCheckpoint(eager=True)  # O(2^p) rows, reused three ways
     )
-    a = regs3.where(F.col("rho_a").isNotNull()).select(
-        "bucket", F.col("rho_a").alias("rho")
-    )
-    b = regs3.where(F.col("rho_b").isNotNull()).select(
-        "bucket", F.col("rho_b").alias("rho")
-    )
-    merged = op_sketches.hll_estimate_from_registers(
-        op_sketches.hll_merge(a, b), 9
-    ).select(F.col("estimate").alias("union_estimate"))
-    direct = op_sketches.hll_estimate_from_registers(
-        regs3.select("bucket", F.col("rho_d").alias("rho")), 9
-    ).select(F.col("estimate").alias("direct_estimate"))
-    exact = ev.where(F.col("user_id").isNotNull()).agg(
-        F.countDistinct("user_id").alias("exact_union")
-    )
-    return (
-        merged.crossJoin(direct)
-        .select(
-            "union_estimate",
-            "direct_estimate",
-            (F.col("union_estimate") == F.col("direct_estimate")).alias(
-                "merge_consistent"
-            ),
+
+    def regs(c: str) -> DataFrame:
+        return regs3.where(F.col(c).isNotNull()).select(
+            "bucket", F.col(c).alias("rho")
         )
-        .crossJoin(exact)
-    )
+
+    merged = op_sketches.hll_merge(regs("rho_a"), regs("rho_b"))
+    return _hll_merge_report(ev, merged, regs("rho_d"))
 
 
 @spec(
@@ -10802,68 +10850,23 @@ def cms_union_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch's entire reason to exist at 100 TB. The gate probes every
     key through the MERGED counters and emits one row: key count, the
     estimate sums through merged vs direct counters, the exact
-    merge-consistency witness (cells AND estimates), the CMS
-    overestimate guarantee, and the exact total. All hashing is the
-    shared portable md5 family, so the oracle replays the counters,
-    the merge, and the estimates value-for-value."""
+    cell-for-cell merge witness, the CMS overestimate guarantee, and
+    the exact total. All hashing is the shared portable md5 family, so
+    the oracle replays the counters, the merge, and the estimates
+    value-for-value."""
     ensure_utc(spark)
     ev = _t(spark, sf_dir, "events")
-    half_a = ev.filter(F.col("event_id") % 2 == 0)
-    half_b = ev.filter(F.col("event_id") % 2 != 0)
+    half = F.col("event_id") % 2 == 0
     # both 16k-cell counter tables feed two consumers each (estimates +
-    # the cell-wise compare), and each lazy consumption re-ran the
-    # half/full event scans — cached (lazy persist: an EAGER checkpoint
-    # here serializes two extra jobs and measured ~2x slower at bench
-    # scale) so each scan runs once (r13 opt round)
+    # the witness): checkpoint so each event scan runs once. Eager
+    # checkpoint and lazy persist() measured within 2% of each other
+    # (same-session A/B, 4 cores, sf0.1); both CMS gates use the former.
     merged = op_sketches.cms_merge(
-        op_sketches.cms_counters(half_a, "user_id"),
-        op_sketches.cms_counters(half_b, "user_id"),
-    ).persist()
-    est_m = op_sketches.cms_point_estimates_from_counters(
-        ev, "user_id", merged
-    ).select(F.col("k"), F.col("est").alias("est_m"), "exact")
-    # build the direct counter table ONCE — it feeds both the estimate
-    # twin and the cell-wise compare
-    direct = op_sketches.cms_counters(ev, "user_id").persist()
-    est_d = op_sketches.cms_point_estimates_from_counters(
-        ev, "user_id", direct
-    ).select(F.col("k"), F.col("est").alias("est_d"))
-    cells = (
-        merged.withColumnRenamed("cnt", "cm")
-        .join(direct.withColumnRenamed("cnt", "cd"), ["row", "slot"], "full_outer")
-        .agg(
-            F.sum(
-                F.when(F.col("cm").eqNullSafe(F.col("cd")), 0).otherwise(1)
-            ).alias("n_cell_diff")
-        )
-    )
-    ests = est_m.join(est_d, "k").agg(
-        F.count(F.lit(1)).cast("long").alias("keys"),
-        F.sum("est_m").cast("long").alias("sum_est_merged"),
-        F.sum("est_d").cast("long").alias("sum_est_direct"),
-        F.sum(F.when(F.col("est_m") == F.col("est_d"), 0).otherwise(1)).alias(
-            "n_est_diff"
-        ),
-        F.sum(F.when(F.col("est_m") >= F.col("exact"), 0).otherwise(1)).alias(
-            "n_underest"
-        ),
-    )
-    exact_total = ev.where(F.col("user_id").isNotNull()).agg(
-        F.count(F.lit(1)).cast("long").alias("exact_total")
-    )
-    return (
-        ests.crossJoin(cells)
-        .select(
-            "keys",
-            "sum_est_merged",
-            "sum_est_direct",
-            ((F.col("n_cell_diff") == 0) & (F.col("n_est_diff") == 0)).alias(
-                "merge_consistent"
-            ),
-            (F.col("n_underest") == 0).alias("overestimate_ok"),
-        )
-        .crossJoin(exact_total)
-    )
+        op_sketches.cms_counters(ev.filter(half), "user_id"),
+        op_sketches.cms_counters(ev.filter(~half), "user_id"),
+    ).localCheckpoint(eager=True)
+    direct = op_sketches.cms_counters(ev, "user_id").localCheckpoint(eager=True)
+    return _cms_merge_report(ev, merged, direct)
 
 
 @spec(
@@ -10887,25 +10890,17 @@ def bloom_union_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_utc(spark)
     orders = _t(spark, sf_dir, "orders")
     customer = _t(spark, sf_dir, "customer")
-    bits_a = op_sketches.bloom_bits(
-        orders.filter(F.col("o_orderkey") % 2 == 0), "o_custkey"
+    half = F.col("o_orderkey") % 2 == 0
+    merged = op_sketches.bloom_merge(
+        op_sketches.bloom_bits(orders.filter(half), "o_custkey"),
+        op_sketches.bloom_bits(orders.filter(~half), "o_custkey"),
     )
-    bits_b = op_sketches.bloom_bits(
-        orders.filter(F.col("o_orderkey") % 2 != 0), "o_custkey"
-    )
-    merged = op_sketches.bloom_merge(bits_a, bits_b)
     direct = op_sketches.bloom_bits(orders, "o_custkey")
-    report = op_sketches.bloom_probe_report_from_bits(
-        merged, orders, "o_custkey", customer, "c_custkey"
-    )
-    nbm = merged.agg(F.count(F.lit(1)).cast("long").alias("nbits_merged"))
+    out = _bloom_merge_report(merged, direct, orders, customer)
     nbd = direct.agg(F.count(F.lit(1)).cast("long").alias("nbits_direct"))
-    sym_diff = (
-        _msdiff_rows(merged, direct)
-        .agg(F.count(F.lit(1)).alias("n_diff"))
-        .select((F.col("n_diff") == 0).alias("merge_consistent"))
+    return out.crossJoin(nbd).select(
+        *out.columns[:-1], "nbits_direct", "merge_consistent"
     )
-    return report.crossJoin(nbm).crossJoin(nbd).crossJoin(sym_diff)
 
 
 @spec(
@@ -11270,7 +11265,6 @@ def ivf_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     persistence via archive.py commit."""
     ensure_utc(spark)
     from .archive import Archive
-    from .functions.portable_hash import md5_halves
 
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select(
@@ -11294,19 +11288,11 @@ def ivf_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         _msdiff_rows(topk_l, topk_b)
         .agg((F.count(F.lit(1)) == 0).alias("search_consistent"))
     )
-    ch_c, _ = md5_halves(F.col("cid").cast("string"))
-    cstat = cdf_l.agg(
-        F.count(F.lit(1)).cast("long").alias("cent_rows"),
-        F.sum(ch_c % F.lit(_ART_CHECK_MOD)).cast("long").alias("cent_checksum"),
+    cstat = op_sketches.artifact_stats(
+        cdf_l, ("cid",), _ART_CHECK_MOD, "cent_rows", "cent_checksum"
     )
-    ch_l, _ = md5_halves(
-        F.concat_ws(
-            ":", F.col("vec_id").cast("string"), F.col("cluster").cast("string")
-        )
-    )
-    lstat = idx_l.agg(
-        F.count(F.lit(1)).cast("long").alias("list_rows"),
-        F.sum(ch_l % F.lit(_ART_CHECK_MOD)).cast("long").alias("list_checksum"),
+    lstat = op_sketches.artifact_stats(
+        idx_l, ("vec_id", "cluster"), _ART_CHECK_MOD, "list_rows", "list_checksum"
     )
     exact10 = llm_similarity.cosine_topk(e, q, k=10).select("vec_id")
     hits = (
@@ -11554,62 +11540,28 @@ def hll_artifact_fold_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch's persistable state IS its register table, so yesterday's
     HLL commits through the archive's versioned protocol, reloads from
     parquet, and today's batch FOLDS into the LOADED registers by
-    greatest-merge (operators/sketches.py hll_merge) — the estimate
-    through the folded sketch must equal sketching the full input
-    directly (max is associative: ``merge_consistent`` exact), the
-    saved table's canonical checksum replays in the oracle, and the
-    exact union rides along. This is the daily-rollup loop a 100 TB
+    greatest-merge (operators/sketches.py hll_merge) — the folded
+    registers must equal sketching the full input directly (max is
+    associative: ``merge_consistent`` exact), the saved table's
+    canonical checksum replays in the oracle, and both estimates and
+    the exact union ride along. This is the daily-rollup loop a 100 TB
     metrics store actually runs: load last month's 2^9-row sketch,
     fold today, save back — never a re-scan."""
     ensure_utc(spark)
-    from .archive import Archive
-    from .functions.portable_hash import md5_halves
-
     ev = _t(spark, sf_dir, "events")
-    base_regs = op_sketches.hll_registers(
-        ev.filter(F.col("event_id") % 2 == 0), "user_id", 9
-    )
+    half = F.col("event_id") % 2 == 0
     ar = Archive(spark, scratch_dir("sg_skart_hll_"))
-    v = ar.commit("hll_user_regs", base_regs)
+    v = ar.commit(
+        "hll_user_regs", op_sketches.hll_registers(ev.filter(half), "user_id", 9)
+    )
     regs_l = ar.table("hll_user_regs")
     folded = op_sketches.hll_merge(
-        regs_l,
-        op_sketches.hll_registers(
-            ev.filter(F.col("event_id") % 2 != 0), "user_id", 9
-        ),
+        regs_l, op_sketches.hll_registers(ev.filter(~half), "user_id", 9)
     )
-    union_est = op_sketches.hll_estimate_from_registers(folded, 9).select(
-        F.col("estimate").alias("union_estimate")
-    )
-    direct_est = op_sketches.hll_estimate_from_registers(
-        op_sketches.hll_registers(ev, "user_id", 9), 9
-    ).select(F.col("estimate").alias("direct_estimate"))
-    h, _ = md5_halves(
-        F.concat_ws(
-            ":", F.col("bucket").cast("string"), F.col("rho").cast("string")
-        )
-    )
-    art = regs_l.agg(
-        F.count(F.lit(1)).cast("long").alias("saved_registers"),
-        F.sum(h % F.lit(_ART_CHECK_MOD)).cast("long").alias("saved_checksum"),
-    )
-    exact = ev.where(F.col("user_id").isNotNull()).agg(
-        F.countDistinct("user_id").alias("exact_union")
-    )
-    return (
-        art.crossJoin(union_est)
-        .crossJoin(direct_est)
-        .select(
-            "saved_registers",
-            "saved_checksum",
-            "union_estimate",
-            "direct_estimate",
-            (F.col("union_estimate") == F.col("direct_estimate")).alias(
-                "merge_consistent"
-            ),
-        )
-        .crossJoin(exact)
-        .withColumn("artifact_version", F.lit(v).cast("int"))
+    direct = op_sketches.hll_registers(ev, "user_id", 9)
+    return op_sketches.artifact_tail(
+        regs_l, ("bucket", "rho"), _ART_CHECK_MOD, "saved_registers",
+        _hll_merge_report(ev, folded, direct), v,
     )
 
 
@@ -11625,95 +11577,27 @@ def cms_artifact_fold_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the counter table; the new batch's counters FOLD into the LOADED
     table by cell-wise sum (operators/sketches.py cms_merge), every key
     probes through the folded counters, and the result must be
-    cell-for-cell and estimate-for-estimate identical to sketching the
-    full input directly (integer sum is associative). The saved table's
-    canonical checksum replays in the oracle; the CMS overestimate
-    guarantee rides along over the folded counters."""
+    cell-for-cell identical to sketching the full input directly
+    (integer sum is associative). The saved table's canonical checksum
+    replays in the oracle; the CMS overestimate guarantee rides along
+    over the folded counters."""
     ensure_utc(spark)
-    from .archive import Archive
-    from .functions.portable_hash import md5_halves
-
     ev = _t(spark, sf_dir, "events")
-    base_cnt = op_sketches.cms_counters(
-        ev.filter(F.col("event_id") % 2 == 0), "user_id"
-    )
+    half = F.col("event_id") % 2 == 0
     ar = Archive(spark, scratch_dir("sg_skart_cms_"))
-    v = ar.commit("cms_user_counters", base_cnt)
+    v = ar.commit(
+        "cms_user_counters", op_sketches.cms_counters(ev.filter(half), "user_id")
+    )
     cnt_l = ar.table("cms_user_counters")
-    # both counter tables are 16k cells and feed two consumers each
-    # (estimates + the cell-wise compare): checkpoint so the batch and
-    # direct counter builds — each a full event scan — run once
+    # both 16k-cell counter tables feed two consumers each (estimates +
+    # the witness): checkpoint so each event scan runs once
     folded = op_sketches.cms_merge(
-        cnt_l,
-        op_sketches.cms_counters(
-            ev.filter(F.col("event_id") % 2 != 0), "user_id"
-        ),
+        cnt_l, op_sketches.cms_counters(ev.filter(~half), "user_id")
     ).localCheckpoint(eager=True)
-    est_m = op_sketches.cms_point_estimates_from_counters(
-        ev, "user_id", folded
-    ).select(F.col("k"), F.col("est").alias("est_m"), "exact")
-    # build the direct counter table ONCE — it feeds both the estimate
-    # twin and the cell-wise compare (review catch: the previous
-    # cms_point_estimates call rebuilt the identical table internally)
-    direct = op_sketches.cms_counters(ev, "user_id").localCheckpoint(
-        eager=True
-    )
-    est_d = op_sketches.cms_point_estimates_from_counters(
-        ev, "user_id", direct
-    ).select(F.col("k"), F.col("est").alias("est_d"))
-    cells = (
-        folded.withColumnRenamed("cnt", "cm")
-        .join(
-            direct.withColumnRenamed("cnt", "cd"), ["row", "slot"], "full_outer"
-        )
-        .agg(
-            F.sum(
-                F.when(F.col("cm").eqNullSafe(F.col("cd")), 0).otherwise(1)
-            ).alias("n_cell_diff")
-        )
-    )
-    ests = est_m.join(est_d, "k").agg(
-        F.count(F.lit(1)).cast("long").alias("keys"),
-        F.sum("est_m").cast("long").alias("sum_est_merged"),
-        F.sum("est_d").cast("long").alias("sum_est_direct"),
-        F.sum(F.when(F.col("est_m") == F.col("est_d"), 0).otherwise(1)).alias(
-            "n_est_diff"
-        ),
-        F.sum(F.when(F.col("est_m") >= F.col("exact"), 0).otherwise(1)).alias(
-            "n_underest"
-        ),
-    )
-    h, _ = md5_halves(
-        F.concat_ws(
-            ":",
-            F.col("row").cast("string"),
-            F.col("slot").cast("string"),
-            F.col("cnt").cast("string"),
-        )
-    )
-    art = cnt_l.agg(
-        F.count(F.lit(1)).cast("long").alias("saved_cells"),
-        F.sum(h % F.lit(_ART_CHECK_MOD)).cast("long").alias("saved_checksum"),
-    )
-    exact_total = ev.where(F.col("user_id").isNotNull()).agg(
-        F.count(F.lit(1)).cast("long").alias("exact_total")
-    )
-    return (
-        art.crossJoin(ests)
-        .crossJoin(cells)
-        .select(
-            "saved_cells",
-            "saved_checksum",
-            "keys",
-            "sum_est_merged",
-            "sum_est_direct",
-            ((F.col("n_cell_diff") == 0) & (F.col("n_est_diff") == 0)).alias(
-                "merge_consistent"
-            ),
-            (F.col("n_underest") == 0).alias("overestimate_ok"),
-        )
-        .crossJoin(exact_total)
-        .withColumn("artifact_version", F.lit(v).cast("int"))
+    direct = op_sketches.cms_counters(ev, "user_id").localCheckpoint(eager=True)
+    return op_sketches.artifact_tail(
+        cnt_l, ("row", "slot", "cnt"), _ART_CHECK_MOD, "saved_cells",
+        _cms_merge_report(ev, folded, direct), v,
     )
 
 
@@ -11741,59 +11625,21 @@ def bloom_artifact_fold_roundtrip(
     sketch's whole error surface, false positives included — and the
     saved table's canonical checksum all replay in the oracle."""
     ensure_utc(spark)
-    from .archive import Archive
-    from .functions.portable_hash import md5_halves
-
     orders = _t(spark, sf_dir, "orders")
     customer = _t(spark, sf_dir, "customer")
-    bits_a = op_sketches.bloom_bits(
-        orders.filter(F.col("o_orderkey") % 2 == 0), "o_custkey"
-    )
+    half = F.col("o_orderkey") % 2 == 0
     ar = Archive(spark, scratch_dir("sg_skart_bloom_"))
-    v = ar.commit("bloom_cust_bits", bits_a)
+    v = ar.commit(
+        "bloom_cust_bits", op_sketches.bloom_bits(orders.filter(half), "o_custkey")
+    )
     bits_l = ar.table("bloom_cust_bits")
     folded = op_sketches.bloom_merge(
-        bits_l,
-        op_sketches.bloom_bits(
-            orders.filter(F.col("o_orderkey") % 2 != 0), "o_custkey"
-        ),
+        bits_l, op_sketches.bloom_bits(orders.filter(~half), "o_custkey")
     ).localCheckpoint(eager=True)
-    report = op_sketches.bloom_probe_report_from_bits(
-        folded, orders, "o_custkey", customer, "c_custkey"
-    )
     direct = op_sketches.bloom_bits(orders, "o_custkey")
-    bitcmp = (
-        folded.join(direct, "pos", "full_outer")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_union"))
-        .crossJoin(folded.agg(F.count(F.lit(1)).cast("long").alias("nbits_merged")))
-        .crossJoin(direct.agg(F.count(F.lit(1)).cast("long").alias("nd")))
-        .select(
-            "nbits_merged",
-            (
-                (F.col("n_union") == F.col("nbits_merged"))
-                & (F.col("n_union") == F.col("nd"))
-            ).alias("merge_consistent"),
-        )
-    )
-    h, _ = md5_halves(F.col("pos").cast("string"))
-    art = bits_l.agg(
-        F.count(F.lit(1)).cast("long").alias("saved_bits"),
-        F.sum(h % F.lit(_ART_CHECK_MOD)).cast("long").alias("saved_checksum"),
-    )
-    return (
-        art.crossJoin(report)
-        .crossJoin(bitcmp)
-        .select(
-            "saved_bits",
-            "saved_checksum",
-            "probed",
-            "maybe_present",
-            "true_present",
-            "false_positives",
-            "nbits_merged",
-            "merge_consistent",
-        )
-        .withColumn("artifact_version", F.lit(v).cast("int"))
+    return op_sketches.artifact_tail(
+        bits_l, ("pos",), _ART_CHECK_MOD, "saved_bits",
+        _bloom_merge_report(folded, direct, orders, customer), v,
     )
 
 
@@ -11822,37 +11668,12 @@ def histogram_artifact_frozen_fold(
     range-dependence that kept the histogram out of the plain fold trio
     is exactly what freezing the edges resolves."""
     ensure_utc(spark)
-    from .archive import Archive
-    from .functions.portable_hash import md5_halves
-
     bins = 64
     ev = _t(spark, sf_dir, "events")
-    base = ev.filter(
-        (F.col("event_id") % 2 == 0) & F.col("value").isNotNull()
-    ).select(F.col("value").cast("double").alias("v"))
-    batch = ev.filter(
-        (F.col("event_id") % 2 != 0) & F.col("value").isNotNull()
-    ).select(F.col("value").cast("double").alias("v"))
-    edges = base.agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
-    bins_base = (
-        base.crossJoin(F.broadcast(edges))
-        .select(
-            op_sketches.histogram_bin_expr_frozen(
-                F.col("v"), F.col("lo"), F.col("hi"), bins
-            ).alias("bin")
-        )
-        .groupBy("bin")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
-    ar = Archive(spark, scratch_dir("sg_skart_hist_"))
-    v1 = ar.commit("hist_edges", edges)
-    v2 = ar.commit("hist_bins", bins_base)
-    edges_l = ar.table("hist_edges")
-    bins_l = ar.table("hist_bins")
 
-    def _binned(src):
+    def binned(src: DataFrame, edges: DataFrame) -> DataFrame:
         return (
-            src.crossJoin(F.broadcast(edges_l))
+            src.crossJoin(F.broadcast(edges))
             .select(
                 op_sketches.histogram_bin_expr_frozen(
                     F.col("v"), F.col("lo"), F.col("hi"), bins
@@ -11862,64 +11683,41 @@ def histogram_artifact_frozen_fold(
             .agg(F.count(F.lit(1)).alias("cnt"))
         )
 
-    folded = (
-        bins_l.withColumnRenamed("cnt", "ca")
-        .join(_binned(batch).withColumnRenamed("cnt", "cb"), "bin", "full_outer")
-        .select(
-            "bin",
-            (F.coalesce("ca", F.lit(0)) + F.coalesce("cb", F.lit(0))).alias(
-                "cnt"
-            ),
+    half = F.col("event_id") % 2 == 0
+    base, batch = (
+        ev.filter(p & F.col("value").isNotNull()).select(
+            F.col("value").cast("double").alias("v")
         )
+        for p in (half, ~half)
+    )
+    edges = base.agg(F.min("v").alias("lo"), F.max("v").alias("hi"))
+    ar = Archive(spark, scratch_dir("sg_skart_hist_"))
+    v1 = ar.commit("hist_edges", edges)
+    v2 = ar.commit("hist_bins", binned(base, edges))
+    edges_l, bins_l = ar.table("hist_edges"), ar.table("hist_bins")
+    folded = (
+        bins_l.unionByName(binned(batch, edges_l))
+        .groupBy("bin")
+        .agg(F.sum("cnt").alias("cnt"))
         .localCheckpoint(eager=True)
     )
-    direct = _binned(base.unionAll(batch))
-    cmp_ = (
-        folded.withColumnRenamed("cnt", "cf")
-        .join(direct.withColumnRenamed("cnt", "cd"), "bin", "full_outer")
-        .agg(
-            F.sum(
-                F.when(F.col("cf").eqNullSafe(F.col("cd")), 0).otherwise(1)
-            ).alias("n_diff")
+    direct = binned(base.unionAll(batch), edges_l)
+    body = (
+        edges_l.select(
+            op_sketches._half_up2(F.col("lo")).alias("lo_edge"),
+            op_sketches._half_up2(F.col("hi")).alias("hi_edge"),
         )
-        .select((F.col("n_diff") == 0).alias("fold_consistent"))
-    )
-    h, _ = md5_halves(
-        F.concat_ws(
-            ":", F.col("bin").cast("string"), F.col("cnt").cast("string")
-        )
-    )
-    art = bins_l.agg(
-        F.count(F.lit(1)).cast("long").alias("saved_bins"),
-        F.sum(h % F.lit(_ART_CHECK_MOD)).cast("long").alias("saved_checksum"),
-    )
-
-    def half_up2(c):
-        return F.floor(c * 100 + F.lit(0.5)) / 100.0
-
-    return (
-        art.crossJoin(
-            edges_l.select(
-                half_up2(F.col("lo")).alias("lo_edge"),
-                half_up2(F.col("hi")).alias("hi_edge"),
-            )
-        )
-        .crossJoin(
-            folded.agg(F.sum("cnt").cast("long").alias("n_total"))
-        )
-        .crossJoin(cmp_)
-        .withColumn(
-            "artifact_version", F.lit(max(v1, v2)).cast("int")
-        )
+        .crossJoin(folded.agg(F.sum("cnt").cast("long").alias("n_total")))
+        .crossJoin(op_sketches.table_diff(folded, direct, ["bin"]))
         .select(
-            "saved_bins",
-            "saved_checksum",
             "lo_edge",
             "hi_edge",
             "n_total",
-            "fold_consistent",
-            "artifact_version",
+            (F.col("n_diff") == 0).alias("fold_consistent"),
         )
+    )
+    return op_sketches.artifact_tail(
+        bins_l, ("bin", "cnt"), _ART_CHECK_MOD, "saved_bins", body, max(v1, v2)
     )
 
 
@@ -12531,6 +12329,33 @@ def kmv_distinct_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     return op_kmv.kmv_estimate(sk, 32, ("g",)).join(exact, "g")
 
 
+def _kmv_merge_report(
+    ev: DataFrame, merged: DataFrame, direct: DataFrame, k: int, names: tuple
+) -> DataFrame:
+    """The KMV merge gates' columns over ``events.user_id``: both
+    sketches' estimates, the merged sketch's size, the set-identity
+    witness (the sketches hold the same hashes) and the exact distinct
+    count. ``names`` names the merged and direct estimates and the
+    witness."""
+    merged_est, direct_est, consistent = names
+
+    def est(sk: DataFrame, name: str) -> DataFrame:
+        return op_kmv.kmv_estimate(sk, k).select(
+            F.col("estimate").alias(name), "sketch_size"
+        )
+
+    return (
+        est(merged, merged_est)
+        .crossJoin(est(direct, direct_est).drop("sketch_size"))
+        .crossJoin(op_sketches.table_diff(merged, direct, ["h"]))
+        .crossJoin(_distinct_users(ev, "exact_distinct"))
+        .select(
+            merged_est, direct_est, "sketch_size",
+            (F.col("n_diff") == 0).alias(consistent), "exact_distinct",
+        )
+    )
+
+
 @spec(
     "kmv_union_merge",
     "EXT-sketch-kmv EXT-sketch-merge",
@@ -12552,40 +12377,14 @@ def kmv_union_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_utc(spark)
     ev = _t(spark, sf_dir, "events")
     half = F.col("event_id") % 2 == 0
-    sa = op_kmv.kmv_sketch(ev.filter(half), "user_id", 64)
-    sb = op_kmv.kmv_sketch(ev.filter(~half), "user_id", 64)
-    merged = op_kmv.kmv_merge(sa, sb, 64).localCheckpoint(eager=True)
+    merged = op_kmv.kmv_merge(
+        op_kmv.kmv_sketch(ev.filter(half), "user_id", 64),
+        op_kmv.kmv_sketch(ev.filter(~half), "user_id", 64),
+        64,
+    ).localCheckpoint(eager=True)
     direct = op_kmv.kmv_sketch(ev, "user_id", 64).localCheckpoint(eager=True)
-    est_m = op_kmv.kmv_estimate(merged, 64).select(
-        F.col("estimate").alias("est_merged"), "sketch_size"
-    )
-    est_d = op_kmv.kmv_estimate(direct, 64).select(
-        F.col("estimate").alias("est_direct")
-    )
-    cmp = (
-        merged.join(direct, "h")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-        .crossJoin(merged.agg(F.count(F.lit(1)).alias("nm")))
-        .crossJoin(direct.agg(F.count(F.lit(1)).alias("nd")))
-        .select(
-            (
-                (F.col("n_common") == F.col("nm"))
-                & (F.col("n_common") == F.col("nd"))
-            ).alias("merge_consistent")
-        )
-    )
-    exact = ev.where(F.col("user_id").isNotNull()).agg(
-        F.countDistinct("user_id").cast("long").alias("exact_distinct")
-    )
-    return (
-        est_m.crossJoin(est_d)
-        .crossJoin(cmp)
-        .crossJoin(exact)
-        .select(
-            "est_merged", "est_direct", "sketch_size",
-            "merge_consistent", "exact_distinct",
-        )
-    )
+    names = ("est_merged", "est_direct", "merge_consistent")
+    return _kmv_merge_report(ev, merged, direct, 64, names)
 
 
 @spec(
@@ -12688,52 +12487,22 @@ def kmv_artifact_fold_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     both estimates, the identity witness, and the exact count all
     replay in the oracle."""
     ensure_utc(spark)
-    from .archive import Archive
-    from .functions.portable_hash import md5_halves
-
     k = 64
     ev = _t(spark, sf_dir, "events")
     batch = F.col("event_id") % 4 == 0
-    base_sk = op_kmv.kmv_sketch(ev.filter(~batch), "user_id", k)
     ar = Archive(spark, scratch_dir("sg_skart_kmv_"))
-    v = ar.commit("kmv_user_sketch", base_sk)
+    v = ar.commit(
+        "kmv_user_sketch", op_kmv.kmv_sketch(ev.filter(~batch), "user_id", k)
+    )
     loaded = ar.table("kmv_user_sketch")
     folded = op_kmv.kmv_merge(
         loaded, op_kmv.kmv_sketch(ev.filter(batch), "user_id", k), k
     ).localCheckpoint(eager=True)
     direct = op_kmv.kmv_sketch(ev, "user_id", k).localCheckpoint(eager=True)
-    est_f = op_kmv.kmv_estimate(folded, k).select(
-        F.col("estimate").alias("folded_estimate")
-    )
-    est_d = op_kmv.kmv_estimate(direct, k).select(
-        F.col("estimate").alias("direct_estimate")
-    )
-    cmp = (
-        folded.join(direct, "h")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-        .crossJoin(folded.agg(F.count(F.lit(1)).alias("nf")))
-        .crossJoin(direct.agg(F.count(F.lit(1)).alias("nd")))
-        .select(
-            (
-                (F.col("n_common") == F.col("nf"))
-                & (F.col("n_common") == F.col("nd"))
-            ).alias("fold_consistent")
-        )
-    )
-    h1, _ = md5_halves(F.col("h").cast("string"))
-    art = loaded.agg(
-        F.count(F.lit(1)).cast("long").alias("saved_size"),
-        F.sum(h1 % F.lit(_ART_CHECK_MOD)).cast("long").alias("saved_checksum"),
-    )
-    exact = ev.where(F.col("user_id").isNotNull()).agg(
-        F.countDistinct("user_id").cast("long").alias("exact_distinct")
-    )
-    return (
-        art.crossJoin(est_f)
-        .crossJoin(est_d)
-        .crossJoin(cmp)
-        .crossJoin(exact)
-        .withColumn("artifact_version", F.lit(v).cast("int"))
+    names = ("folded_estimate", "direct_estimate", "fold_consistent")
+    body = _kmv_merge_report(ev, folded, direct, k, names).drop("sketch_size")
+    return op_sketches.artifact_tail(
+        loaded, ("h",), _ART_CHECK_MOD, "saved_size", body, v
     )
 
 
@@ -13608,7 +13377,6 @@ def trigram_index_artifact_roundtrip(
     checksum, posting count, match count all replay in the oracle."""
     ensure_utc(spark)
     from .archive import Archive
-    from .functions.portable_hash import md5_halves
     from .operators.search_index import trigram_postings
 
     d = _t(spark, sf_dir, "documents")
@@ -13647,19 +13415,9 @@ def trigram_index_artifact_roundtrip(
         .where(F.contains(F.col("text"), F.lit(literal)))
         .agg(F.count(F.lit(1)).cast("long").alias("n_matches"))
     )
-    h1, _ = md5_halves(
-        F.concat_ws(":", F.col("gram"), F.col("id").cast("string"))
-    )
-    art = loaded.agg(
-        F.count(F.lit(1)).cast("long").alias("saved_postings"),
-        F.sum(h1 % F.lit(_ART_CHECK_MOD)).cast("long").alias("saved_checksum"),
-    )
-    return (
-        art.crossJoin(matches)
-        .crossJoin(diff)
-        .select("saved_postings", "saved_checksum", "n_matches",
-                "fold_consistent")
-        .withColumn("artifact_version", F.lit(v).cast("int"))
+    return op_sketches.artifact_tail(
+        loaded, ("gram", "id"), _ART_CHECK_MOD, "saved_postings",
+        matches.crossJoin(diff), v,
     )
 
 
@@ -14214,7 +13972,6 @@ def bm25_index_artifact_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus counts, and the matched-doc count replay in the oracle."""
     ensure_utc(spark)
     from .archive import Archive
-    from .functions.portable_hash import md5_halves
 
     terms = ["vector", "merge"]
     k1, b = 1.2, 0.75
@@ -14332,28 +14089,20 @@ def bm25_index_artifact_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("n_mismatch") == 0).alias("score_consistent"), "n_scored"
         )
     )
-    h1, _ = md5_halves(
-        F.concat_ws(":", F.col("w"), F.col("df").cast("string"))
-    )
-    art = df_l.agg(
-        F.count(F.lit(1)).cast("long").alias("saved_terms"),
-        F.sum(h1 % F.lit(_ART_CHECK_MOD)).cast("long").alias("saved_checksum"),
-    )
-    n_docs = st_f.select(F.col("n").cast("long").alias("n_docs_folded"))
-    return (
-        art.crossJoin(n_docs)
+    body = (
+        st_f.select(F.col("n").cast("long").alias("n_docs_folded"))
         .crossJoin(sc_cmp)
         .crossJoin(df_diff)
         .crossJoin(st_diff)
         .select(
-            "saved_terms",
-            "saved_checksum",
             "n_docs_folded",
             "n_scored",
             (F.col("df_same") & F.col("st_same")).alias("fold_consistent"),
             "score_consistent",
         )
-        .withColumn("artifact_version", F.lit(v).cast("int"))
+    )
+    return op_sketches.artifact_tail(
+        df_l, ("w", "df"), _ART_CHECK_MOD, "saved_terms", body, v
     )
 
 
@@ -14649,17 +14398,10 @@ def hll_sliding_distinct_users(
     "bloom_mask_union_merge",
     "EXT-sketch-bloom EXT-sketch-merge EXT-runtime-filter",
     oracle=f"""
-    WITH dh AS (
-      SELECT DISTINCT
-             {md5_halves_sql("CAST(o_orderkey AS VARCHAR)")[0]} AS h1,
-             {md5_halves_sql("CAST(o_orderkey AS VARCHAR)")[1]} AS h2
-      FROM orders
-      WHERE o_orderpriority = '1-URGENT' AND o_orderkey IS NOT NULL
-    ),
-    bits AS (SELECT DISTINCT pos FROM ({" UNION ALL ".join(
-        f"SELECT ({op_bloom_join.km_mix_sql(i)}) % {1 << 20} AS pos FROM dh"
-        for i in range(5)
-    )}))
+    WITH {op_sketches._halves_cte(
+        "dh", "orders", "o_orderkey", " AND o_orderpriority = '1-URGENT'"
+    )},
+    bits AS (SELECT DISTINCT pos FROM ({op_sketches._km_sql("dh", "", 5, 1 << 20)}))
     SELECT CAST({(1 << 20) // 64} AS BIGINT) AS mask_words,
            (SELECT CAST(COUNT(*) AS BIGINT) FROM bits) AS set_bits,
            TRUE AS merge_consistent,
@@ -14679,55 +14421,35 @@ def bloom_mask_union_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     packed word-array carrier): the urgent-order dim splits into
     disjoint key-parity halves, each half builds its own packed mask,
     and the element-wise word-OR merge must equal the directly-built
-    mask WORD-FOR-WORD (bit-union is associative) — per-day / per-
-    partition runtime filters roll up without re-hashing any key. The
-    gate probes lineitem through the MERGED mask, so the pass count —
-    replayed exactly by the oracle through the portable md5 family —
-    checks the merged filter's actual pruning behavior, not just its
-    bits; set_bits (Σ bit_count over words) replays as the distinct
-    position count."""
+    mask WORD-FOR-WORD (bit-union is associative; the two arrays are
+    compared directly) — per-day / per-partition runtime filters roll
+    up without re-hashing any key. The gate probes lineitem through the
+    MERGED mask, so the pass count — replayed exactly by the oracle
+    through the portable md5 family — checks the merged filter's actual
+    pruning behavior, not just its bits; set_bits (Σ bit_count over
+    words) replays as the distinct position count."""
     li = _t(spark, sf_dir, "lineitem")
     orders = _t(spark, sf_dir, "orders")
     dim = orders.where(F.col("o_orderpriority") == "1-URGENT").select(
         "o_orderkey"
     )
-    ma = op_bloom_join.bloom_pos_mask(
-        dim.where(F.col("o_orderkey") % 2 == 0), "o_orderkey"
-    )
-    mb = op_bloom_join.bloom_pos_mask(
-        dim.where(F.col("o_orderkey") % 2 != 0), "o_orderkey"
-    )
-    merged = op_bloom_join.bloom_mask_merge(ma, mb).localCheckpoint(
-        eager=True
-    )
+    half = F.col("o_orderkey") % 2 == 0
+    merged = op_bloom_join.bloom_mask_merge(
+        op_bloom_join.bloom_pos_mask(dim.where(half), "o_orderkey"),
+        op_bloom_join.bloom_pos_mask(dim.where(~half), "o_orderkey"),
+    ).localCheckpoint(eager=True)
     direct = op_bloom_join.bloom_pos_mask(dim, "o_orderkey")
-    consistent = (
-        merged.select(F.col("mask").alias("__mm"))
-        .crossJoin(direct.select(F.col("mask").alias("__md")))
-        .select(
-            F.expr(
-                "aggregate(zip_with(__mm, __md, (x, y) ->"
-                " CASE WHEN x = y THEN 0 ELSE 1 END), 0,"
-                " (acc, d) -> acc + d) = 0"
-            ).alias("merge_consistent")
-        )
-    )
-    stats = merged.select(
+    stats = merged.crossJoin(direct.select(F.col("mask").alias("__md"))).select(
         F.size("mask").cast("long").alias("mask_words"),
         F.expr(
-            "aggregate(mask, CAST(0 AS BIGINT),"
-            " (acc, w) -> acc + bit_count(w))"
+            "aggregate(mask, CAST(0 AS BIGINT), (acc, w) -> acc + bit_count(w))"
         ).alias("set_bits"),
+        (F.col("mask") == F.col("__md")).alias("merge_consistent"),
     )
-    bloom_pass = (
-        op_bloom_join.bloom_prune(li, "l_orderkey", merged)
-        .agg(F.count(F.lit(1)).cast("long").alias("bloom_pass"))
+    bloom_pass = op_bloom_join.bloom_prune(li, "l_orderkey", merged).agg(
+        F.count(F.lit(1)).cast("long").alias("bloom_pass")
     )
-    return (
-        stats.crossJoin(consistent)
-        .crossJoin(bloom_pass)
-        .select("mask_words", "set_bits", "merge_consistent", "bloom_pass")
-    )
+    return stats.crossJoin(bloom_pass)
 
 
 @spec(
@@ -15115,7 +14837,6 @@ def nsw_index_artifact_roundtrip(
     N/A (§2.12); persistence via archive.py commit."""
     ensure_utc(spark)
     from .archive import Archive
-    from .functions.portable_hash import md5_halves as _md5h
 
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select(
@@ -15139,14 +14860,8 @@ def nsw_index_artifact_roundtrip(
         _msdiff_rows(topk_l, topk_direct)
         .agg((F.count(F.lit(1)) == 0).alias("search_consistent"))
     )
-    ck, _ = _md5h(
-        F.concat_ws(
-            ":", F.col("src").cast("string"), F.col("dst").cast("string")
-        )
-    )
-    stat = edges_l.agg(
-        F.count(F.lit(1)).cast("long").alias("n_edges"),
-        F.sum(ck % F.lit(_ART_CHECK_MOD)).cast("long").alias("edge_checksum"),
+    stat = op_sketches.artifact_stats(
+        edges_l, ("src", "dst"), _ART_CHECK_MOD, "n_edges", "edge_checksum"
     )
     exact10 = llm_similarity.cosine_topk(e, q, k=10).select("vec_id")
     hits = (

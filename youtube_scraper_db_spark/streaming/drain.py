@@ -6,12 +6,22 @@ Staging and checkpoint dirs die with the ``staged_stream`` or
 table and index roots, output dirs) lives under one per-process root
 that is removed when the process exits, because returned plans may read
 their roots lazily after the query function has returned.
+
+A killed process never runs its exit hook, so the root's name records
+its owner, ``sg_{pid}_{start}_…`` with ``start`` the kernel's start time
+of that pid (pids get reused). The first ``scratch_dir`` call of a
+process removes every such root in ``TMPDIR`` whose owner is gone, is a
+zombie, or whose pid now belongs to a process that started at another
+time. It never touches a live owner's root or a root whose name holds
+no owner record, and it sweeps nothing where start times cannot be read
+(no ``/proc``). Owners are looked up in this process's pid namespace.
 """
 
 from __future__ import annotations
 
 import atexit
 import os
+import re
 import shutil
 import tempfile
 from collections.abc import Callable, Iterator
@@ -20,6 +30,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 
 _root: str | None = None
+_OWNED_ROOT = re.compile(r"sg_(\d+)_(\d+)_[a-z0-9_]{8}")
 
 
 def _remove_root(root: str, owner_pid: int) -> None:
@@ -28,13 +39,45 @@ def _remove_root(root: str, owner_pid: int) -> None:
         shutil.rmtree(root, ignore_errors=True)
 
 
+def _start_time(pid: int) -> str | None:
+    """The kernel's start time of ``pid`` (clock ticks after boot); ""
+    when no such process runs (gone, or a zombie); None when it cannot
+    be read."""
+    try:
+        with open(f"/proc/{pid}/stat") as fh:
+            # the command name may hold spaces and parens: split after it
+            fields = fh.read().rsplit(")", 1)[1].split()
+    except FileNotFoundError:
+        return ""
+    except (OSError, IndexError):
+        return None
+    if len(fields) < 20:
+        return None
+    return "" if fields[0] in ("Z", "X") else fields[19]
+
+
+def _sweep_dead_roots(tmp: str) -> None:
+    """Remove the ``sg_`` roots in ``tmp`` whose owner process is gone."""
+    for name in os.listdir(tmp):
+        m = _OWNED_ROOT.fullmatch(name)
+        if m is None:
+            continue
+        start = _start_time(int(m[1]))
+        if start is not None and start != m[2]:
+            shutil.rmtree(os.path.join(tmp, name), ignore_errors=True)
+
+
 def scratch_dir(prefix: str) -> str:
     """A fresh directory under this process's scratch root, which is
-    created on first use and removed at process exit."""
+    created on first use (after sweeping dead processes' roots) and
+    removed at process exit."""
     global _root
     if _root is None:
-        _root = tempfile.mkdtemp(prefix="sg_")
-        atexit.register(_remove_root, _root, os.getpid())
+        pid, start = os.getpid(), _start_time(os.getpid())
+        if start:
+            _sweep_dead_roots(tempfile.gettempdir())
+        _root = tempfile.mkdtemp(prefix=f"sg_{pid}_{start}_" if start else "sg_")
+        atexit.register(_remove_root, _root, pid)
     return tempfile.mkdtemp(prefix=prefix, dir=_root)
 
 
