@@ -464,27 +464,27 @@ _REGS = "bucket long, rho long"
 
 
 @pytest.mark.parametrize(
-    "schema, keys, a, b, n_diff, same_estimate",
+    "schema, a, b, equal, same_estimate",
     [
-        (_REGS, ["bucket"], [(0, 2), (1, 5)], [(0, 2), (1, 5)], 0, True),
+        (_REGS, [(0, 2), (1, 5)], [(1, 5), (0, 2)], True, True),
         # few registers set: linear counting reads only how many are set
-        (_REGS, ["bucket"], [(0, 2), (1, 5)], [(0, 2), (1, 6)], 1, True),
-        (_REGS, ["bucket"], [(0, 2), (1, 5)], [(0, 2)], 1, False),
-        (_REGS, ["bucket"], [(0, 2)], [(0, 2), (1, 5)], 1, False),
-        (_REGS, ["bucket"], [(0, 2), (1, None)], [(0, 2), (1, 0)], 1, None),
-        (_REGS, ["bucket"], [(0, 2), (1, 5)], [(0, 5), (1, 2)], 2, True),
+        (_REGS, [(0, 2), (1, 5)], [(0, 2), (1, 6)], False, True),
+        (_REGS, [(0, 2), (1, 5)], [(0, 2)], False, False),
+        (_REGS, [(0, 2)], [(0, 2), (1, 5)], False, False),
+        (_REGS, [(0, 2), (1, None)], [(0, 2), (1, 0)], False, None),
+        (_REGS, [(0, 2), (1, 5)], [(0, 5), (1, 2)], False, True),
         (
             "row int, slot long, cnt long",
-            ["row", "slot"],
             [(0, 7, 3), (1, 7, 3)],
             [(0, 7, 3), (1, 7, 4)],
-            1,
+            False,
             None,
         ),
-        ("pos long", ["pos"], [(3,), (9,)], [(3,), (9,)], 0, None),
-        ("pos long", ["pos"], [(3,), (9,)], [(3,)], 1, None),
-        ("h long", ["h"], [(3,)], [(3,), (9,)], 1, None),
-        ("h long", ["h"], [(None,), (3,)], [(None,), (3,)], 0, None),
+        ("pos long", [(3,), (9,)], [(3,), (9,)], True, None),
+        ("pos long", [(3,), (9,)], [(3,)], False, None),
+        ("pos long", [(3,), (3,)], [(3,)], False, None),
+        ("h long", [(3,)], [(3,), (9,)], False, None),
+        ("h long", [(None,), (3,)], [(None,), (3,)], True, None),
     ],
     ids=[
         "identical",
@@ -496,20 +496,37 @@ _REGS = "bucket long, rho long"
         "cms_changed_cell",
         "bloom_identical",
         "bloom_dropped_pos",
+        "duplicate_row",
         "kmv_extra_hash",
         "null_key_matches_null_key",
     ],
 )
-def test_table_diff_witness(spark, schema, keys, a, b, n_diff, same_estimate):
-    """The merge witness counts the rows two sketch tables differ in,
-    in both directions. For HLL register tables ``same_estimate`` says
-    whether the two estimates agree: with two buckets' ``rho`` swapped
-    (or, in the linear-counting range, one register changed) they do,
-    so an estimate compare calls that merge consistent, while the
-    register compare reports the differing buckets."""
+def test_merge_witness(spark, schema, a, b, equal, same_estimate):
+    """The merge witness (``msdiff_rows``, as ``same_rows``) and its
+    DuckDB twin ``_same_sql`` report equality exactly when two sketch
+    tables hold the same rows, in both directions. For HLL register
+    tables ``same_estimate`` says whether the two estimates agree: with
+    two buckets' ``rho`` swapped (or, in the linear-counting range, one
+    register changed) they do, so an estimate compare calls that merge
+    consistent, while the register compare does not."""
+    import duckdb
+
     da, db = spark.createDataFrame(a, schema), spark.createDataFrame(b, schema)
-    assert S.table_diff(da, db, keys).first()["n_diff"] == n_diff
-    assert S.table_diff(db, da, keys).first()["n_diff"] == n_diff
+    assert S.same_rows(da, db, "eq").first()["eq"] is equal
+    assert S.same_rows(db, da, "eq").first()["eq"] is equal
+    assert (S.msdiff_rows(da, db).count() == 0) is equal
+
+    ddl = schema.replace("long", "BIGINT").replace("int", "INTEGER")
+    cols = ", ".join(c.split()[0] for c in schema.split(", "))
+    con = duckdb.connect()
+    for name, rows in (("ta", a), ("tb", b)):
+        con.execute(f"CREATE TABLE {name} ({ddl})")
+        marks = ", ".join("?" * len(rows[0]))
+        con.executemany(f"INSERT INTO {name} VALUES ({marks})", rows)
+    for x, y in (("ta", "tb"), ("tb", "ta")):
+        got = con.execute(f"SELECT {S._same_sql(x, y, cols)}").fetchone()[0]
+        assert got is equal
+
     if same_estimate is not None:
         ea, eb = (
             S.hll_estimate_from_registers(d, 9).first()["estimate"]

@@ -128,8 +128,10 @@ def test_forked_child_keeps_parent_root(tmp_path):
 
 def test_killed_process_root_swept_by_next_process(tmp_path):
     """A SIGKILLed process runs no exit hook; the next process's first
-    ``scratch_dir`` call removes its root, and leaves a root whose name
-    holds no owner record alone."""
+    ``scratch_dir`` call removes its root. It leaves alone a root whose
+    name holds no owner record, and a root of another pid namespace
+    whose owner pid is dead here (a process sharing ``TMPDIR`` from
+    another container may still be using it)."""
     legacy = tmp_path / "sg_x1y2z3w4"
     legacy.mkdir()
     proc, root = _start_waiting_child(tmp_path)
@@ -137,10 +139,13 @@ def test_killed_process_root_swept_by_next_process(tmp_path):
     proc.kill()
     proc.wait(timeout=60)
     assert os.path.isdir(root)
+    ns, owner = os.path.basename(root)[len("sg_"):].split("_", 1)
+    foreign = tmp_path / f"sg_{int(ns) + 1}_{owner}"
+    foreign.mkdir()
     res = _run_child(tmp_path, 'print(scratch_dir("sg_b_"))')
     assert res.returncode == 0, res.stderr
     assert not os.path.exists(root)
-    assert _sg_entries(tmp_path) == [legacy.name]
+    assert sorted(_sg_entries(tmp_path)) == sorted([legacy.name, foreign.name])
 
 
 def test_live_processes_keep_each_others_roots(tmp_path):

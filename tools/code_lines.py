@@ -81,9 +81,9 @@ def count(item: str) -> int:
 
 
 def main(argv: list[str]) -> int:
-    if not argv:
+    if not argv or argv[0] in ("-h", "--help"):
         print(__doc__, file=sys.stderr)
-        return 2
+        return 0 if argv else 2
     total = 0
     for item in argv:
         n = count(item)

@@ -63,7 +63,7 @@ from pyspark.sql import functions as F
 
 from ..functions.portable_hash import md5_halves, md5_halves_sql
 from . import sliding
-from .sketches import _ck_sql
+from .sketches import _same_sql, _union_sql
 
 #: Hash-space size: hashes are uniform 60-bit integers (md5 half).
 KMV_SPACE = float(1 << 60)
@@ -306,20 +306,14 @@ def kmv_union_merge_oracle_sql(table: str, key: str, half: str, k: int) -> str:
     ),
     {kmv_bottomk_cte("direct", table, key, "", k)},
     mst AS (SELECT COUNT(*) AS n, MAX(h) AS kth FROM merged),
-    dst AS (SELECT COUNT(*) AS n, MAX(h) AS kth FROM direct),
-    cmp AS (
-      SELECT (SELECT COUNT(*) FROM merged m JOIN direct d ON m.h = d.h)
-               AS n_common,
-             (SELECT n FROM mst) AS nm, (SELECT n FROM dst) AS nd
-    )
+    dst AS (SELECT COUNT(*) AS n, MAX(h) AS kth FROM direct)
     SELECT {_est_sql("mst.n", "mst.kth", k)} AS est_merged,
            {_est_sql("dst.n", "dst.kth", k)} AS est_direct,
            CAST(mst.n AS BIGINT) AS sketch_size,
-           (cmp.n_common = cmp.nm AND cmp.n_common = cmp.nd)
-             AS merge_consistent,
+           {_same_sql("merged", "direct", "h")} AS merge_consistent,
            (SELECT CAST(count(DISTINCT {key}) AS BIGINT)
             FROM {table} WHERE {key} IS NOT NULL) AS exact_distinct
-    FROM mst, dst, cmp
+    FROM mst, dst
     """
 
 
@@ -380,8 +374,7 @@ def kmv_artifact_oracle_sql(
     RELOADED table by kmv_merge, and the folded sketch must equal the
     directly-built full sketch hash-for-hash (bottom-k mergeability is
     exact). The saved table's canonical checksum replays too."""
-    return f"""
-    WITH {kmv_bottomk_cte("base", table, key, f"NOT ({batch})", k)},
+    ctes = f"""{kmv_bottomk_cte("base", table, key, f"NOT ({batch})", k)},
     {kmv_bottomk_cte("nb", table, key, batch, k)},
     folded AS (
       SELECT h FROM (
@@ -390,27 +383,14 @@ def kmv_artifact_oracle_sql(
     ),
     {kmv_bottomk_cte("direct", table, key, "", k)},
     fst AS (SELECT COUNT(*) AS n, MAX(h) AS kth FROM folded),
-    dst AS (SELECT COUNT(*) AS n, MAX(h) AS kth FROM direct),
-    cmp AS (
-      SELECT (SELECT COUNT(*) FROM folded f JOIN direct d ON f.h = d.h)
-               AS n_common,
-             (SELECT n FROM fst) AS nf, (SELECT n FROM dst) AS nd
-    ),
-    art AS (
-      SELECT CAST(COUNT(*) AS BIGINT) AS saved_size,
-             {_ck_sql("CAST(h AS VARCHAR)", check_mod)} AS saved_checksum
-      FROM base
-    )
-    SELECT art.saved_size, art.saved_checksum,
-           {_est_sql("fst.n", "fst.kth", k)} AS folded_estimate,
+    dst AS (SELECT COUNT(*) AS n, MAX(h) AS kth FROM direct)"""
+    cols = f"""{_est_sql("fst.n", "fst.kth", k)} AS folded_estimate,
            {_est_sql("dst.n", "dst.kth", k)} AS direct_estimate,
-           (cmp.n_common = cmp.nf AND cmp.n_common = cmp.nd)
-             AS fold_consistent,
+           {_same_sql("folded", "direct", "h")} AS fold_consistent,
            (SELECT CAST(count(DISTINCT {key}) AS BIGINT)
-            FROM {table} WHERE {key} IS NOT NULL) AS exact_distinct,
-           CAST(1 AS INT) AS artifact_version
-    FROM art, fst, dst, cmp
-    """
+            FROM {table} WHERE {key} IS NOT NULL) AS exact_distinct"""
+    art = ("base", "saved_size", "CAST(h AS VARCHAR)", check_mod)
+    return _union_sql(ctes, cols, "fst, dst", art)
 
 
 # --- Sliding windows over leaf sketches --------------------------------

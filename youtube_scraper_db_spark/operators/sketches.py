@@ -43,7 +43,6 @@ one-line change per sketch that keeps every plan identical.
 
 from __future__ import annotations
 
-import functools
 from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -174,48 +173,58 @@ def _union_sql(
     FROM {rels}"""
 
 
-def _diff_sql(a: str, b: str, keys: By, val: str) -> str:
-    """SQL twin of ``table_diff`` for one value column: the count of
-    keys whose ``val`` differs between relations ``a`` and ``b``, a key
-    missing on one side included."""
-    on = " AND ".join(f"x.{k} IS NOT DISTINCT FROM y.{k}" for k in keys)
-    return f"""(SELECT COUNT(*) FROM {a} x FULL OUTER JOIN {b} y ON {on}
-            WHERE x.{val} IS DISTINCT FROM y.{val})"""
+def _same_sql(a: str, b: str, cols: str) -> str:
+    """SQL twin of ``same_rows``: TRUE when relations ``a`` and ``b``
+    hold the same ``cols`` rows with the same multiplicities
+    (``EXCEPT ALL`` both ways; set operations compare NULLs as equal,
+    as Spark's grouping does)."""
+    return f"""NOT EXISTS (
+             (SELECT {cols} FROM {a} EXCEPT ALL SELECT {cols} FROM {b})
+             UNION ALL
+             (SELECT {cols} FROM {b} EXCEPT ALL SELECT {cols} FROM {a}))"""
 
 
 # --- the Spark twins: merge witness and artifact tail -----------------
 
 
-def table_diff(a: DataFrame, b: DataFrame, keys: By) -> DataFrame:
-    """One row ``(n_diff)``: how many rows of sketch table ``a`` and
-    sketch table ``b`` differ, under a null-safe full-outer compare on
-    ``keys``. A row differs when its key is on one side only or when
-    any value column (``a``'s columns outside ``keys``) differs,
-    null-safe. ``n_diff = 0`` is every family's merge law: the merged
-    table equals the directly built table, cell for cell. Tables with
-    keys only (Bloom ``pos``, KMV ``h``) differ by key set alone. Keys
-    must identify a row on each side, as they do in every sketch
-    table."""
+def msdiff_rows(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Multiset-difference witness: one ``one``-column row per distinct
+    row-value whose multiplicity differs between two frames with the
+    same column names (``a``'s columns are compared). Its emptiness is
+    every sketch family's merge law — the merged table equals the
+    directly built table, cell for cell — and the equality witness of
+    the registry's rebuild and fold gates.
+
+    Emptiness is exactly that of ``a.exceptAll(b).union(b.exceptAll(a))``,
+    but the exceptAll shape executes BOTH input plans twice inside the
+    final job (the left/right roles differ, so ReuseExchange never
+    fires; confirmed in the r13 before-plans), while this shape
+    aggregates each side once and joins the counts. groupBy and the
+    null-safe count compare share Spark's NULL==NULL / NaN==NaN /
+    -0.0==0.0 grouping semantics with exceptAll (all three are
+    hash-aggregate keyings). The right side's columns are renamed
+    before the join so common-lineage inputs cannot trip self-join
+    ambiguity."""
     cols = list(a.columns)
-    vals = [c for c in cols if c not in keys]
-
-    def side(df: DataFrame, s: str) -> DataFrame:
-        return df.select(
-            *[F.col(c).alias(f"__{s}_{c}") for c in cols], F.lit(True).alias(f"__{s}")
-        )
-
-    def eq(c: str) -> Column:
-        return F.col(f"__a_{c}").eqNullSafe(F.col(f"__b_{c}"))
-
-    on = functools.reduce(Column.__and__, map(eq, keys))
-    both = F.col("__a").isNotNull() & F.col("__b").isNotNull()
-    same = functools.reduce(Column.__and__, map(eq, vals), both)
-    return (
-        side(a, "a")
-        .join(side(b, "b"), on, "full_outer")
-        .where(~same)
-        .agg(F.count(F.lit(1)).alias("n_diff"))
+    ca = a.groupBy(*cols).agg(F.count(F.lit(1)).alias("__ca"))
+    cb = b.groupBy(*cols).agg(F.count(F.lit(1)).alias("__cb")).select(
+        *[F.col(c).alias(f"__b_{c}") for c in cols], "__cb"
     )
+    cond = None
+    for c in cols:
+        eq = F.col(c).eqNullSafe(F.col(f"__b_{c}"))
+        cond = eq if cond is None else (cond & eq)
+    return (
+        ca.join(cb, cond, "full_outer")
+        .where(~F.col("__ca").eqNullSafe(F.col("__cb")))
+        .select(F.lit(1).alias("one"))
+    )
+
+
+def same_rows(a: DataFrame, b: DataFrame, name: str) -> DataFrame:
+    """One row, one boolean column ``name``: ``msdiff_rows(a, b)`` is
+    empty."""
+    return msdiff_rows(a, b).agg((F.count(F.lit(1)) == 0).alias(name))
 
 
 def artifact_stats(
@@ -325,7 +334,7 @@ def hll_merge(a: DataFrame, b: DataFrame) -> DataFrame:
     the combined input — the mergeability property that lets sketches
     roll up across partitions, days, and datasets without re-scanning
     (the ``hll_union_merge`` gate compares the merged and direct
-    register tables bucket for bucket with ``table_diff``; the
+    register tables bucket for bucket with ``msdiff_rows``; the
     estimates alone could not show it, since they depend only on the
     multiset of ``rho`` values)."""
     aa = a.select("bucket", F.col("rho").alias("ra"))
@@ -446,7 +455,7 @@ def hll_union_oracle_sql(
     {_hll_est_sql('rf', 'ef', p)}"""
     cols = f"""ROUND(em.e, 4) AS union_estimate,
            ROUND(ef.e, 4) AS direct_estimate,
-           {_diff_sql('merged', 'rf', ('bucket',), 'rho')} = 0 AS merge_consistent,
+           {_same_sql('merged', 'rf', 'bucket, rho')} AS merge_consistent,
            (SELECT CAST(count(DISTINCT {key}) AS BIGINT)
             FROM {table} WHERE {key} IS NOT NULL) AS exact_union"""
     art = None
@@ -598,7 +607,7 @@ def cms_merge(a: DataFrame, b: DataFrame) -> DataFrame:
     """Union two Count-Min counter tables: element-wise SUM (outer join
     on (row, slot)). Sum is associative/commutative, so merged counters
     equal the counters of the combined input exactly — the
-    ``cms_union_merge`` gate asserts it cell for cell (``table_diff``)."""
+    ``cms_union_merge`` gate asserts it cell for cell (``msdiff_rows``)."""
     aa = a.select("row", "slot", F.col("cnt").alias("ca"))
     bb = b.select("row", "slot", F.col("cnt").alias("cb"))
     return aa.join(bb, ["row", "slot"], "full_outer").select(
@@ -669,7 +678,7 @@ def cms_union_oracle_sql(
     )"""
     cols = f"""CAST(e.keys AS BIGINT) AS keys,
            e.sum_est_merged, e.sum_est_direct,
-           {_diff_sql('cm', 'cd', ('row', 'slot'), 'cnt')} = 0 AS merge_consistent,
+           {_same_sql('cm', 'cd', 'row, slot, cnt')} AS merge_consistent,
            e.n_underest = 0 AS overestimate_ok,
            (SELECT CAST(SUM(c) AS BIGINT) FROM kf) AS exact_total"""
     art = None
@@ -691,7 +700,7 @@ def bloom_merge(a: DataFrame, b: DataFrame) -> DataFrame:
     combined input — the mergeability property that lets per-partition
     / per-day filters roll up without re-scanning (the
     ``bloom_union_merge`` gate asserts the equality exactly, with
-    ``table_diff``)."""
+    ``msdiff_rows``)."""
     return a.select("pos").union(b.select("pos")).distinct()
 
 
@@ -912,12 +921,7 @@ def bloom_union_oracle_sql(
     ),
     bitcmp AS (
       SELECT (SELECT COUNT(*) FROM bits_m) AS nbits_merged,
-             (SELECT COUNT(*) FROM bits_d) AS nbits_direct,
-             (SELECT COUNT(*) FROM (
-                SELECT pos FROM bits_m EXCEPT SELECT pos FROM bits_d
-                UNION ALL
-                SELECT pos FROM bits_d EXCEPT SELECT pos FROM bits_m
-             )) AS n_diff
+             (SELECT COUNT(*) FROM bits_d) AS nbits_direct
     ),
     {_bloom_probe_sql('bits_m', build_table, build_key, probe_table, probe_key, k, m_bits)}"""
     direct = "" if checksum_mod is not None else (
@@ -925,7 +929,7 @@ def bloom_union_oracle_sql(
     )
     cols = f"""{_BLOOM_REPORT_SQL},
            (SELECT CAST(nbits_merged AS BIGINT) FROM bitcmp) AS nbits_merged,
-           {direct}(SELECT n_diff = 0 FROM bitcmp) AS merge_consistent"""
+           {direct}{_same_sql('bits_m', 'bits_d', 'pos')} AS merge_consistent"""
     art = None
     if checksum_mod is not None:
         art = ("bits_a", "saved_bits", "CAST(pos AS VARCHAR)", checksum_mod)
@@ -1151,13 +1155,11 @@ def histogram_report_from_counters(
     table — the entry point for counters maintained elsewhere (the
     streaming twin drains its incrementally-summed bins into this), with
     ``merged`` a second counter table (``(bin, cnt)``) whose
-    cell-for-cell equality with ``direct`` (``table_diff``) is the
+    cell-for-cell equality with ``direct`` (``msdiff_rows``) is the
     mergeability witness.
     ``stats`` is the one-row (lo, hi, n) frame the bins were built
     against; ``exact_src[col]`` supplies the exact-percentile twins."""
-    cells = table_diff(merged, direct, ["bin"]).select(
-        (F.col("n_diff") == 0).alias("merge_consistent")
-    )
+    cells = same_rows(merged, direct, "merge_consistent")
     exact = exact_src.where(F.col(col).isNotNull()).agg(
         *[F.percentile(col, F.lit(q)).alias(f"{_tag(q)}_exact_raw") for q in qs]
     )
@@ -1313,8 +1315,7 @@ def histogram_quantile_oracle_sql(
       FROM ba a FULL OUTER JOIN bb b ON a.bin = b.bin
     ),
     cells AS (
-      SELECT {_diff_sql('merged', 'direct', ('bin',), 'cnt')} = 0
-               AS merge_consistent
+      SELECT {_same_sql('merged', 'direct', 'bin, cnt')} AS merge_consistent
     ),
     exact AS (SELECT {exact_block} FROM src),{_quantile_picks_sql('direct', 'stats', bins, qs)}
     SELECT CAST(s.n AS BIGINT) AS n,
@@ -1362,7 +1363,7 @@ def histogram_artifact_oracle_sql(
     cols = f"""{_half_up2_sql('lo')} AS lo_edge,
            {_half_up2_sql('hi')} AS hi_edge,
            (SELECT CAST(SUM(cnt) AS BIGINT) FROM folded) AS n_total,
-           {_diff_sql('folded', 'direct', ('bin',), 'cnt')} = 0 AS fold_consistent"""
+           {_same_sql('folded', 'direct', 'bin, cnt')} AS fold_consistent"""
     canon = "CAST(bin AS VARCHAR) || ':' || CAST(cnt AS VARCHAR)"
     return _union_sql(ctes, cols, "edges", ("bb", "saved_bins", canon, checksum_mod))
 

@@ -52,6 +52,7 @@ from .operators import bloom_join as op_bloom_join
 from .operators import bucketing
 from .operators import kmv as op_kmv
 from .operators import sketches as op_sketches
+from .operators.sketches import msdiff_rows, same_rows
 from .operators.dedup import dedup_first_seen
 from .operators.diffsync import diff_keys_single_shuffle
 from .operators import skyline as op_skyline
@@ -2049,7 +2050,7 @@ def incremental_ivf_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         idx_full, cdf, q, nprobe=4, k=10
     )
     diff = (
-        _msdiff_rows(topk_inc, topk_full)
+        msdiff_rows(topk_inc, topk_full)
         .agg((F.count(F.lit(1)) == 0).alias("equiv_consistent"))
     )
     exact10 = llm_similarity.cosine_topk(e, q, k=10).select("vec_id")
@@ -2105,7 +2106,7 @@ def incremental_pq_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     codes_full = llm_similarity.pq_encode(e, books).localCheckpoint()
     code_diff = (
-        _msdiff_rows(_codes_str(codes_inc), _codes_str(codes_full))
+        msdiff_rows(_codes_str(codes_inc), _codes_str(codes_full))
         .agg((F.count(F.lit(1)) == 0).alias("code_consistent"))
     )
     topk_inc = llm_similarity.pq_topk_from_codes(
@@ -2115,7 +2116,7 @@ def incremental_pq_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         codes_full, e, q, books, k=10, pool=400
     )
     topk_diff = (
-        _msdiff_rows(topk_inc, topk_full)
+        msdiff_rows(topk_inc, topk_full)
         .agg((F.count(F.lit(1)) == 0).alias("topk_consistent"))
     )
     exact10 = llm_similarity.cosine_topk(e, q, k=10).select("vec_id")
@@ -10153,37 +10154,6 @@ def _score_mismatch(scored_a: DataFrame, scored_b: DataFrame) -> DataFrame:
     )
 
 
-def _msdiff_rows(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Multiset-difference witness: one ``one``-column row per distinct
-    row-value whose multiplicity differs between two same-schema frames.
-
-    Every sym-diff gate in this registry consumes only EMPTINESS of
-    ``a.exceptAll(b).union(b.exceptAll(a))``, and an empty sym-diff is
-    exactly "equal per-row-value counts" — but the exceptAll shape
-    executes BOTH input plans twice inside the final job (the left/right
-    roles differ, so ReuseExchange never fires; confirmed in the r13
-    before-plans), while this shape aggregates each side once and joins
-    the counts. groupBy and the null-safe count compare share Spark's
-    NULL==NULL / NaN==NaN / -0.0==0.0 grouping semantics with exceptAll
-    (all three are hash-aggregate keyings), so the emptiness answer is
-    identical. The right side's key columns are renamed before the join
-    so common-lineage inputs cannot trip self-join ambiguity."""
-    cols = list(a.columns)
-    ca = a.groupBy(*cols).agg(F.count(F.lit(1)).alias("__ca"))
-    cb = b.groupBy(*cols).agg(F.count(F.lit(1)).alias("__cb")).select(
-        *[F.col(c).alias(f"__b_{c}") for c in cols], "__cb"
-    )
-    cond = None
-    for c in cols:
-        eq = F.col(c).eqNullSafe(F.col(f"__b_{c}"))
-        cond = eq if cond is None else (cond & eq)
-    return (
-        ca.join(cb, cond, "full_outer")
-        .where(~F.col("__ca").eqNullSafe(F.col("__cb")))
-        .select(F.lit(1).alias("one"))
-    )
-
-
 def _lm_tables_sql(order: int, train: str | None = None) -> str:
     """Oracle of the LM artifact gates (model trained on ``train``) and
     fold gates (``train`` None: the union-retrained model the fold must
@@ -10311,7 +10281,7 @@ def _lm_fold_equiv(spark: SparkSession, sf_dir: str, order: int) -> DataFrame:
     direct = train()
     diff = functools.reduce(
         DataFrame.unionByName,
-        [_msdiff_rows(f, r) for f, r in zip(folded, direct)],
+        [msdiff_rows(f, r) for f, r in zip(folded, direct)],
     ).agg((F.count(F.lit(1)) == 0).alias("merge_consistent"))
     mism = _score_mismatch(
         *[
@@ -10669,12 +10639,7 @@ def _hll_merge_report(
     return (
         est(merged, "union_estimate")
         .crossJoin(est(direct, "direct_estimate"))
-        .crossJoin(op_sketches.table_diff(merged, direct, ["bucket"]))
-        .select(
-            "union_estimate",
-            "direct_estimate",
-            (F.col("n_diff") == 0).alias("merge_consistent"),
-        )
+        .crossJoin(same_rows(merged, direct, "merge_consistent"))
         .crossJoin(_distinct_users(ev, "exact_union"))
     )
 
@@ -10704,38 +10669,25 @@ def _cms_merge_report(
             F.sum("exact").cast("long").alias("exact_total"),
         )
     )
-    return ests.crossJoin(
-        op_sketches.table_diff(merged, direct, ["row", "slot"])
-    ).select(
+    return ests.crossJoin(same_rows(merged, direct, "merge_consistent")).select(
         "keys",
         "sum_est_merged",
         "sum_est_direct",
-        (F.col("n_diff") == 0).alias("merge_consistent"),
+        "merge_consistent",
         "overestimate_ok",
         "exact_total",
     )
 
 
-def _bloom_merge_report(
-    merged: DataFrame, direct: DataFrame, orders: DataFrame, customer: DataFrame
+def _bloom_probe_merged(
+    merged: DataFrame, orders: DataFrame, customer: DataFrame
 ) -> DataFrame:
-    """The Bloom merge gates' columns: every customer probed through the
-    ``merged`` filter over order custkeys (the probe report), the merged
-    bit count and ``merge_consistent`` (the bit sets equal)."""
-    report = op_sketches.bloom_probe_report_from_bits(
+    """The Bloom merge gates' shared columns: every customer probed
+    through the ``merged`` filter over order custkeys (the probe
+    report), then the merged bit count ``nbits_merged``."""
+    return op_sketches.bloom_probe_report_from_bits(
         merged, orders, "o_custkey", customer, "c_custkey"
-    )
-    return (
-        report.crossJoin(
-            merged.agg(F.count(F.lit(1)).cast("long").alias("nbits_merged"))
-        )
-        .crossJoin(op_sketches.table_diff(merged, direct, ["pos"]))
-        .select(
-            *report.columns,
-            "nbits_merged",
-            (F.col("n_diff") == 0).alias("merge_consistent"),
-        )
-    )
+    ).crossJoin(merged.agg(F.count(F.lit(1)).cast("long").alias("nbits_merged")))
 
 
 @spec(
@@ -10754,7 +10706,7 @@ def hll_union_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimate the union. Because max is associative/commutative, merged
     registers are IDENTICAL to sketching the combined input:
     ``merge_consistent`` compares the two register tables bucket for
-    bucket (``table_diff``), next to both estimates and the exact union
+    bucket (``same_rows``), next to both estimates and the exact union
     count, all replayed by the oracle.
 
     Plan shape (r09 watch-list fix): ONE events scan hashes each row
@@ -10896,10 +10848,10 @@ def bloom_union_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         op_sketches.bloom_bits(orders.filter(~half), "o_custkey"),
     )
     direct = op_sketches.bloom_bits(orders, "o_custkey")
-    out = _bloom_merge_report(merged, direct, orders, customer)
-    nbd = direct.agg(F.count(F.lit(1)).cast("long").alias("nbits_direct"))
-    return out.crossJoin(nbd).select(
-        *out.columns[:-1], "nbits_direct", "merge_consistent"
+    return (
+        _bloom_probe_merged(merged, orders, customer)
+        .crossJoin(direct.agg(F.count(F.lit(1)).cast("long").alias("nbits_direct")))
+        .crossJoin(same_rows(merged, direct, "merge_consistent"))
     )
 
 
@@ -11285,7 +11237,7 @@ def ivf_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint()
     topk_b = llm_similarity.ivf_search_index(idx, cdf, q, nprobe=4, k=10)
     diff = (
-        _msdiff_rows(topk_l, topk_b)
+        msdiff_rows(topk_l, topk_b)
         .agg((F.count(F.lit(1)) == 0).alias("search_consistent"))
     )
     cstat = op_sketches.artifact_stats(
@@ -11373,7 +11325,7 @@ def pq_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     reenc = llm_similarity.pq_encode(e, books_l)
     code_diff = (
-        _msdiff_rows(_codes_str(codes_l), _codes_str(reenc))
+        msdiff_rows(_codes_str(codes_l), _codes_str(reenc))
         .agg((F.count(F.lit(1)) == 0).alias("code_consistent"))
     )
     topk_l = llm_similarity.pq_topk_from_codes(
@@ -11383,7 +11335,7 @@ def pq_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         codes, e, q, books, k=10, pool=400
     )
     topk_diff = (
-        _msdiff_rows(topk_l, topk_b)
+        msdiff_rows(topk_l, topk_b)
         .agg((F.count(F.lit(1)) == 0).alias("topk_consistent"))
     )
     exact10 = llm_similarity.cosine_topk(e, q, k=10).select("vec_id")
@@ -11491,7 +11443,7 @@ def incremental_cc_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=True)
     full = llm_cluster.connected_components(pairs, "doc_a", "doc_b")
     diff = (
-        _msdiff_rows(folded, full)
+        msdiff_rows(folded, full)
         .agg((F.count(F.lit(1)) == 0).alias("fold_consistent"))
     )
     return folded.select(
@@ -11637,9 +11589,11 @@ def bloom_artifact_fold_roundtrip(
         bits_l, op_sketches.bloom_bits(orders.filter(~half), "o_custkey")
     ).localCheckpoint(eager=True)
     direct = op_sketches.bloom_bits(orders, "o_custkey")
+    body = _bloom_probe_merged(folded, orders, customer).crossJoin(
+        same_rows(folded, direct, "merge_consistent")
+    )
     return op_sketches.artifact_tail(
-        bits_l, ("pos",), _ART_CHECK_MOD, "saved_bits",
-        _bloom_merge_report(folded, direct, orders, customer), v,
+        bits_l, ("pos",), _ART_CHECK_MOD, "saved_bits", body, v
     )
 
 
@@ -11708,13 +11662,7 @@ def histogram_artifact_frozen_fold(
             op_sketches._half_up2(F.col("hi")).alias("hi_edge"),
         )
         .crossJoin(folded.agg(F.sum("cnt").cast("long").alias("n_total")))
-        .crossJoin(op_sketches.table_diff(folded, direct, ["bin"]))
-        .select(
-            "lo_edge",
-            "hi_edge",
-            "n_total",
-            (F.col("n_diff") == 0).alias("fold_consistent"),
-        )
+        .crossJoin(same_rows(folded, direct, "fold_consistent"))
     )
     return op_sketches.artifact_tail(
         bins_l, ("bin", "cnt"), _ART_CHECK_MOD, "saved_bins", body, max(v1, v2)
@@ -11964,11 +11912,11 @@ def minhash_index_artifact_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
         )
 
     sig_diff = (
-        _msdiff_rows(_sig_str(sig_l), _sig_str(sig))
+        msdiff_rows(_sig_str(sig_l), _sig_str(sig))
         .agg((F.count(F.lit(1)) == 0).alias("sig_consistent"))
     )
     band_diff = (
-        _msdiff_rows(bands_l, bands)
+        msdiff_rows(bands_l, bands)
         .agg((F.count(F.lit(1)) == 0).alias("band_consistent"))
     )
     pairs = llm_dedup.lsh_pairs_from_index(bands_l, sig_l, 32).filter(
@@ -12064,7 +12012,7 @@ def incremental_minhash_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         32,
     )
     diff = (
-        _msdiff_rows(pairs_f, pairs_r)
+        msdiff_rows(pairs_f, pairs_r)
         .agg((F.count(F.lit(1)) == 0).alias("fold_consistent"))
     )
     return pairs_f.filter(F.col("est_jaccard") >= 0.25).crossJoin(diff)
@@ -12112,7 +12060,7 @@ def stream_cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint(eager=True)
     full = llm_cluster.connected_components(pairs, "doc_a", "doc_b")
     diff = (
-        _msdiff_rows(drained, full)
+        msdiff_rows(drained, full)
         .agg((F.count(F.lit(1)) == 0).alias("stream_consistent"))
     )
     return drained.select(
@@ -12167,7 +12115,7 @@ def weighted_sample_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     direct = llm_sampling.weighted_sample(d, "doc_id", "n_chars", 64)
     diff = (
-        _msdiff_rows(merged, direct)
+        msdiff_rows(merged, direct)
         .agg((F.count(F.lit(1)) == 0).alias("merge_consistent"))
     )
     return merged.select("doc_id", "n_chars", "priority").crossJoin(diff)
@@ -12219,7 +12167,7 @@ def stream_lsh_ingest_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus, "doc", "text", num_hashes=32, bands=16, portable=True
     )
     diff = (
-        _msdiff_rows(pairs, batch_pairs)
+        msdiff_rows(pairs, batch_pairs)
         .agg((F.count(F.lit(1)) == 0).alias("stream_consistent"))
     )
     return pairs.filter(F.col("est_jaccard") >= 0.5).crossJoin(diff)
@@ -12330,29 +12278,22 @@ def kmv_distinct_users_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kmv_merge_report(
-    ev: DataFrame, merged: DataFrame, direct: DataFrame, k: int, names: tuple
+    ev: DataFrame, merged: DataFrame, direct: DataFrame, k: int
 ) -> DataFrame:
-    """The KMV merge gates' columns over ``events.user_id``: both
-    sketches' estimates, the merged sketch's size, the set-identity
-    witness (the sketches hold the same hashes) and the exact distinct
-    count. ``names`` names the merged and direct estimates and the
-    witness."""
-    merged_est, direct_est, consistent = names
-
-    def est(sk: DataFrame, name: str) -> DataFrame:
-        return op_kmv.kmv_estimate(sk, k).select(
-            F.col("estimate").alias(name), "sketch_size"
-        )
-
+    """The KMV merge gates' columns over ``events.user_id``:
+    ``merged_estimate`` and ``merged_size`` of the merged sketch,
+    ``direct_estimate``, ``consistent`` (the sketches hold the same
+    hashes) and ``exact_distinct``; each gate selects and names its
+    own."""
+    est = op_kmv.kmv_estimate
     return (
-        est(merged, merged_est)
-        .crossJoin(est(direct, direct_est).drop("sketch_size"))
-        .crossJoin(op_sketches.table_diff(merged, direct, ["h"]))
-        .crossJoin(_distinct_users(ev, "exact_distinct"))
-        .select(
-            merged_est, direct_est, "sketch_size",
-            (F.col("n_diff") == 0).alias(consistent), "exact_distinct",
+        est(merged, k).select(
+            F.col("estimate").alias("merged_estimate"),
+            F.col("sketch_size").alias("merged_size"),
         )
+        .crossJoin(est(direct, k).select(F.col("estimate").alias("direct_estimate")))
+        .crossJoin(same_rows(merged, direct, "consistent"))
+        .crossJoin(_distinct_users(ev, "exact_distinct"))
     )
 
 
@@ -12383,8 +12324,13 @@ def kmv_union_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         64,
     ).localCheckpoint(eager=True)
     direct = op_kmv.kmv_sketch(ev, "user_id", 64).localCheckpoint(eager=True)
-    names = ("est_merged", "est_direct", "merge_consistent")
-    return _kmv_merge_report(ev, merged, direct, 64, names)
+    return _kmv_merge_report(ev, merged, direct, 64).select(
+        F.col("merged_estimate").alias("est_merged"),
+        F.col("direct_estimate").alias("est_direct"),
+        F.col("merged_size").alias("sketch_size"),
+        F.col("consistent").alias("merge_consistent"),
+        "exact_distinct",
+    )
 
 
 @spec(
@@ -12499,8 +12445,12 @@ def kmv_artifact_fold_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         loaded, op_kmv.kmv_sketch(ev.filter(batch), "user_id", k), k
     ).localCheckpoint(eager=True)
     direct = op_kmv.kmv_sketch(ev, "user_id", k).localCheckpoint(eager=True)
-    names = ("folded_estimate", "direct_estimate", "fold_consistent")
-    body = _kmv_merge_report(ev, folded, direct, k, names).drop("sketch_size")
+    body = _kmv_merge_report(ev, folded, direct, k).select(
+        F.col("merged_estimate").alias("folded_estimate"),
+        "direct_estimate",
+        F.col("consistent").alias("fold_consistent"),
+        "exact_distinct",
+    )
     return op_sketches.artifact_tail(
         loaded, ("h",), _ART_CHECK_MOD, "saved_size", body, v
     )
@@ -12963,7 +12913,7 @@ def stream_kmv_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint(eager=True)
     direct = op_kmv.kmv_sketch(ev, "user_id", k)
     diff = (
-        _msdiff_rows(drained, direct)
+        msdiff_rows(drained, direct)
         .agg((F.count(F.lit(1)) == 0).alias("stream_consistent"))
     )
     exact = ev.where(F.col("user_id").isNotNull()).agg(
@@ -13015,7 +12965,7 @@ def kmv_rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         ev.where(F.col("event_type").isNotNull()), "user_id", k
     ).localCheckpoint(eager=True)
     diff = (
-        _msdiff_rows(rollup, direct)
+        msdiff_rows(rollup, direct)
         .agg((F.count(F.lit(1)) == 0).alias("rollup_consistent"))
     )
     est_r = op_kmv.kmv_estimate(rollup, k).select(
@@ -13398,7 +13348,7 @@ def trigram_index_artifact_roundtrip(
     )
     direct = trigram_postings(d, "doc_id", "text")
     diff = (
-        _msdiff_rows(folded, direct)
+        msdiff_rows(folded, direct)
         .agg((F.count(F.lit(1)) == 0).alias("fold_consistent"))
     )
     literal = "slow vector"
@@ -13921,7 +13871,7 @@ def stream_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint(eager=True)
     direct = op_skyline.pareto_frontier(part, "p_retailprice", "p_size")
     diff = (
-        _msdiff_rows(drained, direct)
+        msdiff_rows(drained, direct)
         .agg((F.count(F.lit(1)) == 0).alias("stream_consistent"))
     )
     return drained.crossJoin(diff)
@@ -14037,7 +13987,7 @@ def bm25_index_artifact_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     df_dir = df_of(tf_dir).localCheckpoint(eager=True)
     st_dir = stats_of(dl_dir)
     df_diff = (
-        _msdiff_rows(df_f, df_dir)
+        msdiff_rows(df_f, df_dir)
         .agg((F.count(F.lit(1)) == 0).alias("df_same"))
     )
     st_diff = st_f.crossJoin(
@@ -14189,7 +14139,7 @@ def stream_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint(eager=True)
     direct = llm_sampling.weighted_sample(d, "doc_id", "n_chars", 64)
     diff = (
-        _msdiff_rows(drained, direct)
+        msdiff_rows(drained, direct)
         .agg((F.count(F.lit(1)) == 0).alias("stream_consistent"))
     )
     return drained.select("doc_id", "n_chars", "priority").crossJoin(diff)
@@ -14553,7 +14503,7 @@ def bloom_pruned_anti_join_gate(
         eager=True
     )
     tagged = op_bloom_join.bloom_tag(li, "l_orderkey", mask).persist()
-    # the anti result feeds the stats agg AND the _msdiff_rows witness:
+    # the anti result feeds the stats agg AND the msdiff_rows witness:
     # checkpoint so the probe + anti-join pipeline runs once, not twice
     anti = op_bloom_join.bloom_anti_from_tagged(
         tagged, "l_orderkey", dim, "o_orderkey"
@@ -14573,7 +14523,7 @@ def bloom_pruned_anti_join_gate(
         dim, li["l_orderkey"] == dim["o_orderkey"], "left_anti"
     )
     diff = (
-        _msdiff_rows(anti, plain)
+        msdiff_rows(anti, plain)
         .agg((F.count(F.lit(1)) == 0).alias("anti_consistent"))
     )
     return (
@@ -14685,7 +14635,7 @@ def stream_ivf_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         llm_similarity.ivf_index(e, cdf), cdf, q, nprobe=4, k=10
     )
     diff = (
-        _msdiff_rows(topk_stream, topk_batch)
+        msdiff_rows(topk_stream, topk_batch)
         .agg((F.count(F.lit(1)) == 0).alias("stream_consistent"))
     )
     return topk_stream.crossJoin(diff)
@@ -14745,7 +14695,7 @@ def sliding_spine_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     ke = op_sliding.window_ends(kleaves)
     he = op_sliding.window_ends(hleaves)
     ends_ok = (
-        _msdiff_rows(ke, he)
+        msdiff_rows(ke, he)
         .agg((F.count(F.lit(1)) == 0).alias("ends_consistent"))
     )
     return kest.join(hest, "wend").join(exact, "wend").crossJoin(ends_ok)
@@ -14794,7 +14744,7 @@ def incremental_nsw_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         llm_graph_ann.nsw_bucketed(e), m_neighbors=12
     )
     equiv = (
-        _msdiff_rows(d_inc, d_full)
+        msdiff_rows(d_inc, d_full)
         .agg((F.count(F.lit(1)) == 0).alias("equiv_consistent"))
     )
     edges = llm_graph_ann.nsw_symmetrize(d_inc).localCheckpoint(eager=True)
@@ -14857,7 +14807,7 @@ def nsw_index_artifact_roundtrip(
     topk_l = llm_graph_ann.nsw_search(edges_l, e, q, beam=32, hops=4)
     topk_direct = llm_graph_ann.nsw_search(edges, e, q, beam=32, hops=4)
     diff = (
-        _msdiff_rows(topk_l, topk_direct)
+        msdiff_rows(topk_l, topk_direct)
         .agg((F.count(F.lit(1)) == 0).alias("search_consistent"))
     )
     stat = op_sketches.artifact_stats(
@@ -14927,7 +14877,7 @@ def stream_nsw_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         llm_graph_ann.nsw_bucketed(e), m_neighbors=12
     )
     consistent = (
-        _msdiff_rows(drained, batch_built)
+        msdiff_rows(drained, batch_built)
         .agg((F.count(F.lit(1)) == 0).alias("stream_consistent"))
     )
     edges = llm_graph_ann.nsw_symmetrize(drained).localCheckpoint(eager=True)
@@ -14995,7 +14945,7 @@ def stream_ivf_delete_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "cluster", F.round("vn", 9).alias("vn9")
     )
     diff = (
-        _msdiff_rows(key(drained), key(rebuilt))
+        msdiff_rows(key(drained), key(rebuilt))
         .agg((F.count(F.lit(1)) == 0).alias("delete_consistent"))
     )
     topk = llm_similarity.ivf_search_index(drained, cdf, q, nprobe=4, k=10)
@@ -15053,7 +15003,7 @@ def stream_nsw_delete_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         llm_graph_ann.nsw_bucketed(remaining), m_neighbors=12
     )
     consistent = (
-        _msdiff_rows(drained, rebuilt)
+        msdiff_rows(drained, rebuilt)
         .agg((F.count(F.lit(1)) == 0).alias("delete_consistent"))
     )
     edges = llm_graph_ann.nsw_symmetrize(drained).localCheckpoint(eager=True)
@@ -15127,11 +15077,11 @@ def stream_lsh_delete_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         want_sigs, 32, 16, portable=True
     )
     sig_diff = (
-        _msdiff_rows(sigs, want_sigs)
+        msdiff_rows(sigs, want_sigs)
         .select(F.lit(1).alias("one"))
     )
     band_diff = (
-        _msdiff_rows(bands, want_bands)
+        msdiff_rows(bands, want_bands)
         .select(F.lit(1).alias("one"))
     )
     consistent = sig_diff.unionByName(band_diff).agg(
@@ -15204,7 +15154,7 @@ def store_compaction_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "cluster", F.round("vn", 9).alias("vn9")
     )
     diff = (
-        _msdiff_rows(key(compacted), key(rebuilt))
+        msdiff_rows(key(compacted), key(rebuilt))
         .agg(
             ((F.count(F.lit(1)) == 0) & F.lit(logs_gone)).alias(
                 "compaction_consistent"
@@ -15260,8 +15210,8 @@ def bloom_sliding_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
         op_sketches.hll_leaf_registers(ev, "ts", "user_id", "day")
     )
     ends_ok = (
-        _msdiff_rows(be, ke)
-        .union(_msdiff_rows(be, he))
+        msdiff_rows(be, ke)
+        .union(msdiff_rows(be, he))
         .agg((F.count(F.lit(1)) == 0).alias("ends_consistent_3way"))
     )
     return report.crossJoin(ends_ok)

@@ -8,13 +8,16 @@ that is removed when the process exits, because returned plans may read
 their roots lazily after the query function has returned.
 
 A killed process never runs its exit hook, so the root's name records
-its owner, ``sg_{pid}_{start}_…`` with ``start`` the kernel's start time
-of that pid (pids get reused). The first ``scratch_dir`` call of a
-process removes every such root in ``TMPDIR`` whose owner is gone, is a
-zombie, or whose pid now belongs to a process that started at another
-time. It never touches a live owner's root or a root whose name holds
-no owner record, and it sweeps nothing where start times cannot be read
-(no ``/proc``). Owners are looked up in this process's pid namespace.
+its owner, ``sg_{ns}_{pid}_{start}_…``: ``ns`` the owner's pid
+namespace (the inode of ``/proc/self/ns/pid``), ``start`` the kernel's
+start time of that pid (pids get reused). The first ``scratch_dir``
+call of a process removes every such root in ``TMPDIR`` of its own pid
+namespace whose owner is gone, is a zombie, or whose pid now belongs to
+a process that started at another time. A root of another pid
+namespace (a container or executor sharing the ``TMPDIR`` mount, whose
+pids mean nothing here), a live owner's root and a root whose name
+holds no owner record are never touched, and nothing is swept where
+the namespace or start times cannot be read (no ``/proc``).
 """
 
 from __future__ import annotations
@@ -30,7 +33,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 
 _root: str | None = None
-_OWNED_ROOT = re.compile(r"sg_(\d+)_(\d+)_[a-z0-9_]{8}")
+_OWNED_ROOT = re.compile(r"sg_(\d+)_(\d+)_(\d+)_[a-z0-9_]{8}")
 
 
 def _remove_root(root: str, owner_pid: int) -> None:
@@ -56,14 +59,24 @@ def _start_time(pid: int) -> str | None:
     return "" if fields[0] in ("Z", "X") else fields[19]
 
 
-def _sweep_dead_roots(tmp: str) -> None:
-    """Remove the ``sg_`` roots in ``tmp`` whose owner process is gone."""
+def _pid_namespace() -> str | None:
+    """The inode of this process's pid namespace, None when unreadable."""
+    try:
+        m = re.fullmatch(r"pid:\[(\d+)\]", os.readlink("/proc/self/ns/pid"))
+    except OSError:
+        return None
+    return m[1] if m else None
+
+
+def _sweep_dead_roots(tmp: str, ns: str) -> None:
+    """Remove the ``sg_`` roots in ``tmp`` of pid namespace ``ns`` whose
+    owner process is gone."""
     for name in os.listdir(tmp):
         m = _OWNED_ROOT.fullmatch(name)
-        if m is None:
+        if m is None or m[1] != ns:
             continue
-        start = _start_time(int(m[1]))
-        if start is not None and start != m[2]:
+        start = _start_time(int(m[2]))
+        if start is not None and start != m[3]:
             shutil.rmtree(os.path.join(tmp, name), ignore_errors=True)
 
 
@@ -73,10 +86,12 @@ def scratch_dir(prefix: str) -> str:
     removed at process exit."""
     global _root
     if _root is None:
-        pid, start = os.getpid(), _start_time(os.getpid())
-        if start:
-            _sweep_dead_roots(tempfile.gettempdir())
-        _root = tempfile.mkdtemp(prefix=f"sg_{pid}_{start}_" if start else "sg_")
+        pid, ns = os.getpid(), _pid_namespace()
+        start = _start_time(pid)
+        owner = f"{ns}_{pid}_{start}_" if ns and start else ""
+        if owner:
+            _sweep_dead_roots(tempfile.gettempdir(), ns)
+        _root = tempfile.mkdtemp(prefix=f"sg_{owner}")
         atexit.register(_remove_root, _root, pid)
     return tempfile.mkdtemp(prefix=prefix, dir=_root)
 
